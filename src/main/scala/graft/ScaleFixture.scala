@@ -18,6 +18,9 @@ object ScaleFixture {
   def main(args: Array[String]): Unit = {
     val Array(src, out, kStr) = args
     val k = kStr.toInt
+    // replica r > 0 suffixes its words with the letter 'a' + r, which
+    // leaves [a-z] past 26 replicas
+    require(k >= 1 && k <= 26, s"k=$k: replica word suffixes stay in [a-z] only for k in 1..26")
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
       "graft-scale-fixture")
     new java.io.File(out).mkdirs()

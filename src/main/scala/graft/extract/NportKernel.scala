@@ -71,20 +71,17 @@ object NportKernel {
 
   /** X1 — scalar reporting-date extraction (ref :66-82): first Part A
     * section whose A.3 table carries the date label wins; `break`. */
-  def reportingDate(doc: Doc): Option[String] = {
-    val sections = doc.findAll("h1", contains(PartA))
-    val it = sections.iterator
-    while (it.hasNext) {
-      val section = it.next()
+  def reportingDate(doc: Doc): Option[String] =
+    // a lazy iterator stops at the first section that yields a date — the
+    // ref :77 `break`, without a non-local `return` thrown per document
+    doc.findAll("h1", contains(PartA)).iterator.flatMap { section =>
       for {
         a3 <- doc.findNext(section, "h4", contains(ItemA3))
         table <- doc.findNext(a3, "table")
         label <- doc.findDescendant(table, "td", contains(DateLabel))
         date <- siblingValue(doc, label)
-      } return Some(date) // ref :77 `break`
-    }
-    None
-  }
+      } yield date
+    }.nextOption()
 
   /** X2 — holdings-table extraction, one doc → N rows (ref :84-131). */
   def holdings(doc: Doc): Seq[Holding] = {

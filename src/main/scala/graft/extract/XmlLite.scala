@@ -73,8 +73,15 @@ object XmlLite {
         (pred == null || elemString(n).exists(pred))
 
     /** bs4 `soup.find_all(tag, string=pred)` — whole document, pre-order. */
-    def findAll(tag: String, pred: String => Boolean = null): Seq[Node] =
-      nodes.iterator.filter(matches(_, tag, pred)).toSeq
+    def findAll(tag: String, pred: String => Boolean = null): Seq[Node] = {
+      val out = ArrayBuffer.empty[Node]
+      var i = 0
+      while (i < nodes.length) {
+        if (matches(nodes(i), tag, pred)) out += nodes(i)
+        i += 1
+      }
+      out.toSeq
+    }
 
     /** bs4 `node.find_next(tag, string=pred)`: first match strictly after
       * `from` in document order, at any depth, unscoped — deliberately able
@@ -114,7 +121,14 @@ object XmlLite {
     }
   }
 
-  private val VoidTags = Set("br", "hr", "img", "meta", "link", "input", "col", "area", "base", "embed", "source", "track", "wbr")
+  // initial open-element stack depth; deeper documents grow it
+  private val InitialDepth = 32
+
+  private def isVoid(tag: String): Boolean = tag match {
+    case "br" | "hr" | "img" | "meta" | "link" | "input" | "col" | "area" | "base" |
+        "embed" | "source" | "track" | "wbr" => true
+    case _ => false
+  }
 
   def decodeEntities(s: String): String = {
     if (s.indexOf('&') < 0) return s
@@ -152,88 +166,118 @@ object XmlLite {
   /** Parse to a pre-order node table. Lenient: unknown constructs are
     * skipped, a mismatched `</tag>` pops to the nearest open `tag` (or is
     * ignored), unclosed tags are closed at EOF. */
-  def parse(input: String): Doc = {
-    val nodes = ArrayBuffer.empty[Node]
-    // stack of open element node indices; -1 sentinel = virtual root
-    var stack = List(-1)
-    var lastChild = Map(-1 -> -1) // parentIdx -> last child idx seen
-    def addNode(tag: String, text: String): Int = {
-      val parent = stack.head
+  def parse(input: String): Doc = new Parser(input).run()
+
+  /** One parse: the node table plus the open-element stack, indexed by
+    * depth. open(k) is the element open at depth k (open(0) = -1, the
+    * virtual root) and last(k) the last child added under it so far
+    * (-1 = none yet). */
+  private final class Parser(input: String) {
+    private val nodes = ArrayBuffer.empty[Node]
+    private var open = new Array[Int](InitialDepth)
+    private var last = new Array[Int](InitialDepth)
+    private var depth = 0
+    open(0) = -1
+    last(0) = -1
+
+    private def addNode(tag: String, text: String): Int = {
+      val parent = open(depth)
       val idx = nodes.length
-      val n = new Node(idx, tag, text, parent, -1, -1, idx + 1)
-      nodes += n
-      lastChild.get(parent).filter(_ >= 0) match {
-        case Some(prev) => nodes(prev).nextSibling = idx
-        case None => if (parent >= 0) nodes(parent).firstChild = idx
-      }
-      lastChild += parent -> idx
+      nodes += new Node(idx, tag, text, parent, -1, -1, idx + 1)
+      val prev = last(depth)
+      if (prev >= 0) nodes(prev).nextSibling = idx
+      else if (parent >= 0) nodes(parent).firstChild = idx
+      last(depth) = idx
       idx
     }
-    def closeTo(idx: Int): Unit = {
-      // pop stack until idx popped; set subtreeEnd for each popped element
-      while (stack.head != -1) {
-        val top = stack.head
-        stack = stack.tail
-        nodes(top).subtreeEnd = nodes.length
-        if (top == idx) return
+
+    private def push(idx: Int): Unit = {
+      depth += 1
+      if (depth == open.length) {
+        open = java.util.Arrays.copyOf(open, depth * 2)
+        last = java.util.Arrays.copyOf(last, depth * 2)
+      }
+      open(depth) = idx
+      last(depth) = -1
+    }
+
+    /** Pops down to and including depth `k`, ending each popped subtree. */
+    private def popTo(k: Int): Unit = {
+      val end = nodes.length
+      while (depth >= k) {
+        nodes(open(depth)).subtreeEnd = end
+        depth -= 1
       }
     }
-    var i = 0
-    val len = input.length
-    while (i < len) {
-      val lt = input.indexOf('<', i)
-      if (lt < 0) {
-        val t = input.substring(i)
-        if (t.exists(!_.isWhitespace)) addNode(null, decodeEntities(t)): Unit
-        i = len
-      } else {
-        if (lt > i) {
-          val t = input.substring(i, lt)
-          if (t.exists(!_.isWhitespace)) addNode(null, decodeEntities(t)): Unit
-        }
-        if (input.startsWith("<!--", lt)) {
-          val end = input.indexOf("-->", lt + 4)
-          i = if (end < 0) len else end + 3
-        } else if (input.startsWith("<!", lt) || input.startsWith("<?", lt)) {
-          val end = input.indexOf('>', lt)
-          i = if (end < 0) len else end + 1
+
+    /** A text node for input[from, until), unless it is all whitespace. */
+    private def addText(from: Int, until: Int): Unit = {
+      var k = from
+      while (k < until && Character.isWhitespace(input.charAt(k))) k += 1
+      if (k < until) addNode(null, decodeEntities(input.substring(from, until))): Unit
+    }
+
+    /** The tag spanning input[lt, gt] (`<` to `>`). */
+    private def tag(lt: Int, gt: Int): Unit = {
+      // the name runs to the first whitespace, after a leading `/`
+      // (close) and before a trailing `/` (self-close)
+      var from = lt + 1
+      var until = gt
+      val isClose = from < until && input.charAt(from) == '/'
+      if (isClose) from += 1
+      val selfClose = from < until && input.charAt(until - 1) == '/'
+      if (selfClose) until -= 1
+      var end = from
+      var lower = true // ASCII without A-Z needs no toLowerCase
+      while (end < until && !Character.isWhitespace(input.charAt(end))) {
+        val c = input.charAt(end)
+        if (c >= 0x80 || (c >= 'A' && c <= 'Z')) lower = false
+        end += 1
+      }
+      if (end > from) {
+        val raw = input.substring(from, end)
+        val name = if (lower) raw else raw.toLowerCase
+        if (isClose) {
+          // pop to the nearest open element with this name; a stray
+          // close (no such element open) is ignored
+          var k = depth
+          while (k > 0 && nodes(open(k)).tag != name) k -= 1
+          if (k > 0) popTo(k)
         } else {
-          val gt = input.indexOf('>', lt)
-          if (gt < 0) { i = len } // truncated tag: drop
-          else {
-            var inner = input.substring(lt + 1, gt)
-            val isClose = inner.startsWith("/")
-            if (isClose) inner = inner.substring(1)
-            val selfClose = inner.endsWith("/")
-            if (selfClose) inner = inner.dropRight(1)
-            val sp = inner.indexWhere(_.isWhitespace)
-            val tag = (if (sp < 0) inner else inner.substring(0, sp)).toLowerCase
-            if (tag.nonEmpty) {
-              if (isClose) {
-                // find nearest open element with this tag
-                stack.find(ix => ix >= 0 && nodes(ix).tag == tag) match {
-                  case Some(ix) => closeTo(ix)
-                  case None => // stray close: ignore
-                }
-              } else {
-                val idx = addNode(tag, null)
-                if (!selfClose && !VoidTags.contains(tag)) {
-                  stack = idx :: stack
-                  lastChild += idx -> -1
-                }
-              }
+          val idx = addNode(name, null)
+          if (!selfClose && !isVoid(name)) push(idx)
+        }
+      }
+    }
+
+    def run(): Doc = {
+      var i = 0
+      val len = input.length
+      while (i < len) {
+        val lt = input.indexOf('<', i)
+        if (lt < 0) {
+          addText(i, len)
+          i = len
+        } else {
+          addText(i, lt)
+          if (input.startsWith("<!--", lt)) {
+            val end = input.indexOf("-->", lt + 4)
+            i = if (end < 0) len else end + 3
+          } else if (input.startsWith("<!", lt) || input.startsWith("<?", lt)) {
+            val end = input.indexOf('>', lt)
+            i = if (end < 0) len else end + 1
+          } else {
+            val gt = input.indexOf('>', lt)
+            if (gt < 0) i = len // truncated tag: drop
+            else {
+              tag(lt, gt)
+              i = gt + 1
             }
-            i = gt + 1
           }
         }
       }
+      popTo(1) // close any still-open elements at EOF
+      new Doc(nodes.toArray)
     }
-    // close any still-open elements at EOF
-    while (stack.head != -1) {
-      val top = stack.head
-      stack = stack.tail
-      nodes(top).subtreeEnd = nodes.length
-    }
-    new Doc(nodes.toArray)
   }
 }

@@ -105,8 +105,7 @@ object Extraction {
     * pins the frame, which hides the scan behind an RDD). */
   private[graft] def docSourceCompactedRaw(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val path = DocStage.ensureCompacted(s, d)
-    s.read.parquet(path)
+    DocStage.compactedDocs(s, d)
       .select(col("value"))
       .as[String]
       .flatMap(NportKernel.extractRows)
@@ -209,7 +208,7 @@ object Extraction {
     * end-to-end with the engine's training-data stages, in ONE query:
     *
     *  1. S1 — the staged submissions index names WHICH funds to fetch
-    *     (the reference's fetch list): distinct NPORT-P ciks, broadcast.
+    *     (the reference's fetch list): the NPORT-P ciks, broadcast.
     *  2. S2 — the staged doc corpus stands in for the per-doc HTTP
     *     fetch (HttpFetchSpec proves fetch+extract over loopback HTTP ≡
     *     this corpus scan row-for-row); doc identity parses from the
@@ -229,19 +228,22 @@ object Extraction {
     *     is one row per chunk with the per-date ledger attached.
     *
     * Every stage is SQL-expressible, so the WHOLE chain is one
-    * hash-checked oracle. Scale shape: broadcast semi-join on the fetch
-    * list, one kernel pass, one exact-dedup shuffle on the natural key,
-    * one window per date — no driver data, no corpus re-scan. */
-  def pipelineE2e(s: SparkSession, d: String): DataFrame = {
+    * hash-checked oracle. Scale shape: a broadcast semi-join on the fetch
+    * list, ONE kernel pass, then ONE hash exchange on `reporting_date`.
+    * Every later key holds the date (the dedup key, the ledger window,
+    * the pack window, the chunk aggregate), so nothing after the kernel
+    * shuffles again: the retry self-union's second leg reuses the first
+    * leg's exchange, and the only other exchange is the final range
+    * sort over the chunk rows. Past the kernel, parallelism is the number
+    * of distinct dates, which the per-date pack window needed anyway.
+    * Nothing is cached and nothing reaches the driver but the chunks. */
+  def pipelineE2e(s: SparkSession, d: String): DataFrame =
     // the pipeline COMPOSES the layout fix: it reads the compacted
     // corpus (4 parquet files, doc_id carried as a column), not the
     // one-file-per-doc layout whose tax x_doc_source exists to
     // demonstrate — production never leaves a crawl in per-doc small
     // files before a full-corpus pass
-    val path = DocStage.ensureCompacted(s, d)
-    pipelineE2eFromDocs(s, d,
-      s.read.parquet(path).select(col("doc_id"), col("value")))
-  }
+    pipelineE2eFromDocs(s, d, DocStage.compactedDocs(s, d))
 
   /** Stages 1 + 3-6 of [[pipelineE2e]] over an explicit (doc_id, value)
     * document set — the seam HttpFetchSpec uses to prove the ONLINE form
@@ -250,24 +252,23 @@ object Extraction {
   private[graft] def pipelineE2eFromDocs(
       s: SparkSession, d: String, docs: DataFrame): DataFrame = {
     import s.implicits._
+    // no distinct: a left-semi join keeps each doc once however often
+    // its cik repeats in the fetch list
     val nportCiks = FilingIndex.filingIndex(s, d)
-      .select(col("cik").cast("long").as("doc_id")).distinct()
+      .select(col("cik").cast("long").as("doc_id"))
     val fetched = docs.join(broadcast(nportCiks), Seq("doc_id"), "leftsemi")
-    // persisted: the retry-union reads it twice and re-extraction is the
-    // pipeline's expensive stage — without the pin the kernel ran 4×
-    // (the self-union doubled the extract subtree and the ledger join
-    // re-executed the double; caught by plan audit). O(holdings) rows.
+    // the pipeline's one shuffle: every key below contains reporting_date
     val extracted = fetched.as[(Long, String)]
       .flatMap { case (id, doc) =>
         NportKernel.extractRows(doc).map(h =>
           (id, h.reporting_date, h.issuer, h.shares, h.value_usd, h.pct_net_assets))
       }
       .toDF("doc_id", "reporting_date", "issuer", "shares", "value_usd", "pct_net_assets")
-      .persist()
+      .repartition(col("reporting_date"))
     val keyCols = Seq("doc_id", "reporting_date", "issuer", "shares",
       "value_usd", "pct_net_assets")
-    // retry traffic in, exact dedup out — n_copies is the fold ledger.
-    // Persisted too: the ledger and the pack both consume it.
+    val byDate = Window.partitionBy(col("reporting_date"))
+    // retry traffic in, exact dedup out — n_copies is the fold ledger
     val deduped = extracted.unionByName(extracted)
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("n_copies"))
@@ -275,25 +276,26 @@ object Extraction {
         Seq("issuer", "shares", "value_usd", "pct_net_assets")
           .map(c => when(col(c).isNotNull, 1).otherwise(0))
           .reduce(_ + _))
-      .persist()
-    val ledger = deduped.groupBy(col("reporting_date")).agg(
-      sum(col("n_copies")).as("n_source_rows"),
-      sum(col("n_copies") - 1).as("n_dup_folded"),
-      sum(when(col("quality") < 2, 1L).otherwise(0L)).as("n_lowq_dropped"))
-    val packW = Window.partitionBy(col("reporting_date"))
+    // the per-date ledger as window sums over the existing date
+    // partitioning (a groupBy + join would plan the extract branch twice)
+    val ledgered = deduped.select(col("*"),
+      sum(col("n_copies")).over(byDate).as("n_source_rows"),
+      sum(col("n_copies") - 1).over(byDate).as("n_dup_folded"),
+      sum(when(col("quality") < 2, 1L).otherwise(0L)).over(byDate).as("n_lowq_dropped"))
+    val packW = byDate
       .orderBy(col("issuer").asc_nulls_first, col("shares").asc_nulls_first,
         col("value_usd").asc_nulls_first, col("pct_net_assets").asc_nulls_first,
         col("doc_id").asc)
-    deduped.filter(col("quality") >= 2)
+    ledgered.filter(col("quality") >= 2)
       .withColumn("rn", row_number().over(packW))
       // floor, not `/`: Column./ is fractional divide on any input type
       .withColumn("chunk_id", floor((col("rn") - 1) / PackCap).cast("long"))
       .groupBy(col("reporting_date"), col("chunk_id"))
-      .agg(count(lit(1)).as("n_holdings"), sum(col("quality")).as("sum_quality"))
-      .join(ledger, Seq("reporting_date"))
-      .select(col("reporting_date"), col("chunk_id"), col("n_holdings"),
-        col("sum_quality"), col("n_source_rows"), col("n_dup_folded"),
-        col("n_lowq_dropped"))
+      // the ledger columns are constant per date: max carries them through
+      .agg(count(lit(1)).as("n_holdings"), sum(col("quality")).as("sum_quality"),
+        max(col("n_source_rows")).as("n_source_rows"),
+        max(col("n_dup_folded")).as("n_dup_folded"),
+        max(col("n_lowq_dropped")).as("n_lowq_dropped"))
       .orderBy("reporting_date", "chunk_id")
   }
 

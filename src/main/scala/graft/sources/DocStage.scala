@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** S2 — the document-directory source pattern: a corpus laid out as one
   * file per document, read back with `spark.read.option("wholetext", true)`
@@ -99,4 +99,10 @@ object DocStage {
     }: Unit
     path
   }
+
+  /** The compacted corpus as a `(doc_id, value)` frame, read with the
+    * schema [[ensureCompacted]] writes: a given schema skips the parquet
+    * footer-inference job a schemaless read runs on every call. */
+  def compactedDocs(s: SparkSession, sfDir: String): DataFrame =
+    s.read.schema("doc_id BIGINT, value STRING").parquet(ensureCompacted(s, sfDir))
 }

@@ -162,6 +162,26 @@ class NportKernelSpec extends AnyFunSuite {
     assert(hs == Seq(Holding(Some("Acme& Co"), Some("1,234.00"), Some("55,000"), Some("2.5"))))
   }
 
+  test("parser node table: 45-deep nesting, a stray close, a close popping five levels") {
+    // d0..d44 nest 45 deep; </x> closes nothing that is open (ignored);
+    // </d40> while d44 is innermost pops d44..d40 at once, so <P> (read
+    // as p) becomes d39's child and d40's next sibling; <z/> follows d0
+    // at top level
+    val xml = (0 until 45).map(i => s"<d$i>").mkString + "leaf</x></d40><P>tail</p>" +
+      (0 until 40).reverse.map(i => s"</d$i>").mkString + "<z/>"
+    val nodes = XmlLite.parse(xml).nodes
+    // (tag or text, parent, firstChild, nextSibling, subtreeEnd) per pre-order index
+    val got = nodes.toSeq.map(n =>
+      (Option(n.tag).getOrElse(n.text), n.parent, n.firstChild, n.nextSibling, n.subtreeEnd))
+    val want =
+      (0 until 45).map(k => (s"d$k", k - 1, k + 1,
+        if (k == 0) 48 else if (k == 40) 46 else -1,
+        if (k >= 40) 46 else 48)) ++
+      Seq(("leaf", 44, -1, -1, 46), ("p", 39, 47, -1, 48), ("tail", 46, -1, -1, 48),
+        ("z", -1, -1, -1, 49))
+    assert(got == want)
+  }
+
   test("empty document and garbage input do not crash") {
     assert(NportKernel.extract("") == (None, Nil))
     assert(NportKernel.extract("<<<>>>&&& not html <td>") == (None, Nil))

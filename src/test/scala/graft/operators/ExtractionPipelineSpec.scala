@@ -94,4 +94,42 @@ class ExtractionPipelineSpec extends AnyFunSuite {
     }.sum
     assert(totalDataRows.toLong == extracted.count())
   }
+
+  test("flagship: one kernel pass, one hash exchange after it, no cached RDDs left") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+
+    val cachedBefore = s.sparkContext.getPersistentRDDs.keySet
+    val runs = (1 to 3).map { _ =>
+      val df = Extraction.pipelineE2e(s, sf)
+      assert(df.collect().nonEmpty)
+      df
+    }
+    assert(s.sparkContext.getPersistentRDDs.keySet == cachedBefore,
+      "x_pipeline_e2e left cached RDDs behind")
+
+    // every executed node with its ancestors (innermost first), through
+    // AQE stages and cached relations, but not into a reused exchange:
+    // that subtree ran once, under the exchange it reuses
+    def walk(p: SparkPlan, up: List[SparkPlan]): Seq[(SparkPlan, List[SparkPlan])] = {
+      val kids = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case _: ReusedExchangeExec => Nil
+        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+        case _ => p.children
+      }
+      (p, up) +: kids.flatMap(walk(_, p :: up))
+    }
+    val plan = runs.last.queryExecution.executedPlan
+    val kernels = walk(plan, Nil).collect { case (_: MapPartitionsExec, up) => up }
+    assert(kernels.size == 1, s"expected one kernel pass in:\n$plan")
+    val hashExchanges = kernels.head.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashExchanges.size == 1, s"expected one hash exchange above the kernel in:\n$plan")
+  }
 }
