@@ -60,24 +60,40 @@ object QueryDsl {
       case _ => !isLocalMaster
     }
 
+  /** The checkpoint dir a reliable pin must set, or None when the
+    * context already has one. `spark.graft.checkpoint.dir` wins; a local
+    * master falls back to a per-app /tmp dir. A cluster has NO fallback:
+    * node-local /tmp is not shared storage, so checkpoint files written
+    * by one executor would be unreadable from another node — the pin
+    * fails fast instead, naming the conf to set. Pure so PinModeSpec can
+    * pin the decision table. */
+  private[graft] def pinCheckpointDir(isLocalMaster: Boolean, confDir: Option[String],
+      contextDir: Option[String], appId: String): Option[String] =
+    if (contextDir.nonEmpty) None
+    else confDir.orElse {
+      if (!isLocalMaster) throw new IllegalStateException(
+        "a reliable pin on a cluster needs a shared checkpoint dir: set " +
+          "spark.graft.checkpoint.dir (or SparkContext.setCheckpointDir) to durable storage")
+      Some("/tmp/graft_checkpoints/" + appId)
+    }
+
   /** MODE-AWARE execution pin (r22, r21 verdict item 5): every hot-path
     * pin routes through here. Under `local[*]` this is `localCheckpoint`
     * (executor-local blocks — fastest, and executor loss cannot happen in
     * one JVM). On a cluster it is a reliable `checkpoint` into
-    * `spark.graft.checkpoint.dir` (set it to durable storage in a real
-    * deployment; the default is only a placeholder), which survives
-    * executor loss — the lost-executor-unsafe bare `localCheckpoint` was
-    * the r21 verdict's one scale caveat on the sortedPinned family.
-    * Override with `spark.graft.pin.mode` = `local` | `reliable`. Both
-    * modes materialize the same rows; only fault tolerance differs. */
+    * `spark.graft.checkpoint.dir` (required there, see
+    * [[pinCheckpointDir]]), which survives executor loss — the
+    * lost-executor-unsafe bare `localCheckpoint` was the r21 verdict's
+    * one scale caveat on the sortedPinned family. Override with
+    * `spark.graft.pin.mode` = `local` | `reliable`. Both modes
+    * materialize the same rows; only fault tolerance differs. */
   def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val s = df.sparkSession
+    val sc = s.sparkContext
     val mode = s.conf.get("spark.graft.pin.mode", "auto")
-    if (pinReliable(mode, s.sparkContext.isLocal)) {
-      if (s.sparkContext.getCheckpointDir.isEmpty)
-        s.sparkContext.setCheckpointDir(
-          s.conf.get("spark.graft.checkpoint.dir",
-            "/tmp/graft_checkpoints/" + s.sparkContext.applicationId))
+    if (pinReliable(mode, sc.isLocal)) {
+      pinCheckpointDir(sc.isLocal, s.conf.getOption("spark.graft.checkpoint.dir"),
+        sc.getCheckpointDir, sc.applicationId).foreach(sc.setCheckpointDir)
       df.checkpoint()
     } else df.localCheckpoint()
   }

@@ -46,7 +46,12 @@ object Staging {
 
   private val buildsLog = new java.util.concurrent.ConcurrentLinkedQueue[BuildRecord]()
 
-  /** Every build that ran in this JVM since the last [[resetBuildLog]]. */
+  /** Every build that ran in this JVM since the last [[resetBuildLog]].
+    * The log's scope is this JVM only: a build finished by another
+    * process (the cross-process file-lock path), or one that landed
+    * between the marker pre-check and the lock, returns false here and
+    * is not recorded, so `staging_total` counts only the staging this
+    * process paid for. */
   def buildsSnapshot: Seq[BuildRecord] = {
     import scala.jdk.CollectionConverters._
     buildsLog.iterator().asScala.toVector

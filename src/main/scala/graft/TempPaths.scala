@@ -28,6 +28,14 @@ object TempPaths {
     register(s"$base/graft_${name}_${s.sparkContext.applicationId}")
   }
 
+  private val runs = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** A fresh directory under [[scratch]] for one call of a query: a
+    * bench run overlapping a test suite must never interleave its
+    * overwrite writes with another call's reads of the same files. */
+  def runDir(s: SparkSession, name: String): String =
+    scratch(s, name) + "/run" + runs.incrementAndGet()
+
   private def register(path: String): String = {
     if (registered.add(path)) {
       val dir = new File(path)
@@ -36,7 +44,7 @@ object TempPaths {
     path
   }
 
-  private def deleteRecursively(f: File): Unit = {
+  private[graft] def deleteRecursively(f: File): Unit = {
     val children = f.listFiles()
     if (children != null) children.foreach(deleteRecursively)
     f.delete(): Unit

@@ -186,7 +186,11 @@ object Dedup {
     * minimum, the sampler reads materialized rows, and the explode — a
     * narrow, order-preserving Generate emitting perms 0..N−1 in array
     * order — reproduces exactly the old (doc_id, perm) total order, so
-    * the rows AND their order are unchanged (hash gate proves it). */
+    * the rows AND their order are unchanged (hash gate proves it).
+    * Spark only promises output order when the sort is the final
+    * operator, so this rests on the current optimizer: if a Spark
+    * upgrade breaks the hash gate, the fix is an explicit final
+    * `orderBy("doc_id", "perm")`, not a pin of the exploded frame. */
   // slope pin: ~5 at 10x input, drifting toward 10 (shingles x perms is
   // linear in corpus bytes) — see SLOPES.md
   def minhashSignatures(s: SparkSession, d: String): DataFrame =

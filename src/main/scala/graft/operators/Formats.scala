@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.QueryDsl.{dsum, sqlDsum}
-import graft.Tables
+import graft.{Tables, TempPaths}
+import graft.sources.{CommitResult, ManifestLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,7 +27,7 @@ object Formats {
     val slice = Tables.lineitem(s, d)
       .filter(col("l_orderkey") % 100 === 0)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"), col("l_quantity"))
-    val base = graft.TempPaths.scratch(s, "fmt")
+    val base = TempPaths.scratch(s, "fmt")
     slice.write.mode("overwrite").orc(s"$base/orc")
     slice.write.mode("overwrite").json(s"$base/json")
     val orc = s.read.orc(s"$base/orc")
@@ -51,7 +52,7 @@ object Formats {
     * relationally from the source table, so the merged read must neither
     * lose a generation nor misalign a column. */
   def schemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val base = graft.TempPaths.scratch(s, "schema_evo")
+    val base = TempPaths.scratch(s, "schema_evo")
     val o = Tables.orders(s, d).filter(col("o_orderkey") % 50 === 0)
     o.filter(col("o_orderkey") % 100 === 0)
       .select(col("o_orderkey"), col("o_totalprice").as("old_metric"))
@@ -116,7 +117,7 @@ object Formats {
     * The quarantine side at scale is written to a dead-letter table for
     * replay — here it feeds the same one-row aggregate. */
   def quarantineRead(s: SparkSession, d: String): DataFrame = {
-    val base = graft.TempPaths.scratch(s, "quarantine")
+    val base = TempPaths.scratch(s, "quarantine")
     val o = Tables.orders(s, d).filter(col("o_orderkey") % 20 === 0)
     o.select(
         when(col("o_orderkey") % 50 === 0,
@@ -140,8 +141,6 @@ object Formats {
       .orderBy("bucket")
   }
 
-  private val csvqRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_csv_quoting` — RFC-4180 TORTURE ROUND TRIP, the CSV edge-path
     * contract [[quarantineRead]]'s malformed-feed split doesn't touch:
     * real 100 TB text feeds carry embedded DELIMITERS, QUOTES, and
@@ -163,7 +162,7 @@ object Formats {
     * are read whole — the reason binary-safe formats beat CSV at scale,
     * stated here as a measured contract rather than folklore. */
   def csvQuoting(s: SparkSession, d: String): DataFrame = {
-    val base = graft.TempPaths.scratch(s, "csvq") + "/run" + csvqRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "csvq")
     val torture = concat(
       lit("a,"), col("o_orderkey").cast("string"),
       lit(",\"q\" mid\nline2 "), col("o_orderpriority"), lit(" tail\""))
@@ -300,36 +299,28 @@ object Formats {
     * files across versions (or loses one) diverges. The manifest is a
     * driver-written metadata text file — metadata plane, not data
     * plane; the data files are cluster-written parquet. */
-  private val timetravelRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   def timeTravel(s: SparkSession, d: String): DataFrame = {
     // per-run suffix: a bench run overlapping sbt test must not
     // interleave overwrite writes with another invocation's manifest reads
-    val staged = ensureM3SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "timetravel") + "/run" + timetravelRuns.incrementAndGet()
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/data/$name")
-    val fA = stagedFile("m0", "A")
-    val fB = stagedFile("m1", "B")
-    val fC = stagedFile("m12", "C") // B's rows + the % 3 == 2 arrivals
-    def commit(version: Int, files: Seq[String]): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/manifest-v$version.txt"),
-        files.mkString("\n").getBytes("UTF-8")): Unit
-    commit(1, Seq(fA, fB))
-    commit(2, Seq(fA, fC))
-    def readVersion(version: Int): DataFrame = {
-      val files = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base/manifest-v$version.txt")), "UTF-8").split("\n")
-      s.read.parquet(files.toIndexedSeq: _*).withColumn("version", lit(version))
-    }
-    readVersion(1).unionByName(readVersion(2))
+    val base = TempPaths.runDir(s, "timetravel")
+    val link = stagedLinker(ensureM3SlicesStaged(s, d), base)
+    val fA = link("m0", "A")
+    val fC = link("m12", "C") // B's rows + the % 3 == 2 arrivals
+    publishVersions(base, Seq(fA, link("m1", "B")), Seq(fA, fC))
+    Seq(1, 2).map(v => s.read.parquet(ManifestLog.read(base, v): _*).withColumn("version", lit(v)))
+      .reduce(_ unionByName _)
       .groupBy(col("version"))
       .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
       .orderBy("version")
   }
 
-  private val ttSqlRuns = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** The SQL time-travel pair's log: v1 = A ∪ B, v2 = A ∪ C (the
+    * compaction: B's rows + arrivals), over the staged TSV slices. */
+  private def publishT3Versions(s: SparkSession, d: String, base: String): Unit = {
+    val link = stagedLinker(ensureT3SlicesStaged(s, d), base)
+    val fA = link("t0", "A")
+    publishVersions(base, Seq(fA, link("t1", "B")), Seq(fA, link("t12", "C")))
+  }
 
   /** `k_timetravel_sql` — SQL-native TIME TRAVEL (`VERSION AS OF`)
     * through the catalog plugin: the [[timeTravel]] manifest scenario,
@@ -349,19 +340,8 @@ object Formats {
     * part file is one scan partition; a version read touches only its
     * manifest's files — never a directory listing of the table. */
   def timeTravelSql(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureT3SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "ttsql") + "/run" + ttSqlRuns.incrementAndGet()
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/data/$name")
-    val fA = stagedFile("t0", "A")
-    val fB = stagedFile("t1", "B")
-    val fC = stagedFile("t12", "C") // compaction: B's rows + arrivals
-    def commit(version: Int, files: Seq[String]): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/manifest-v$version.txt"),
-        files.mkString("\n").getBytes("UTF-8")): Unit
-    commit(1, Seq(fA, fB))
-    commit(2, Seq(fA, fC))
+    val base = TempPaths.runDir(s, "ttsql")
+    publishT3Versions(s, d, base)
     // catalog name encodes the run dir: catalog instances are cached per
     // session after first resolution, and two runs must not share one
     val cat = "gtt" + base.replaceAll("[^A-Za-z0-9]", "_")
@@ -378,8 +358,6 @@ object Formats {
          |FROM $cat.orders_tt VERSION AS OF 2
          |ORDER BY version""".stripMargin)
   }
-
-  private val dynOvwRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** `k_dynamic_overwrite` — DYNAMIC PARTITION OVERWRITE: an overwrite
     * batch replaces ONLY the partitions it carries rows for (Spark's
@@ -412,7 +390,7 @@ object Formats {
 
   def dynamicOverwrite(s: SparkSession, d: String): DataFrame = {
     val staged = ensureDynOvwStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "dynovw") + "/run" + dynOvwRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "dynovw")
     val path = linkDir(s"$staged/data/table", s"$base/table")
     val o = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
       (col("o_totalprice").cast("decimal(28,4)") * 100).cast("long").as("cents"))
@@ -452,8 +430,6 @@ object Formats {
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
       .orderBy("o_orderstatus")
   }
-
-  private val txnRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** `k_multi_table_txn` — ATOMIC MULTI-TABLE COMMITS through a
     * transaction log, the coordination single-table formats
@@ -499,28 +475,20 @@ object Formats {
 
   private[operators] def multiTableTxnBuild(
       s: SparkSession, d: String): (String, DataFrame) = {
-    val staged = ensureTxnSlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "txn") + "/run" + txnRuns.incrementAndGet()
-    def stagedFile(name: String): String =
-      linkDir(s"$staged/data/$name", s"$base/data/$name")
-    def commitTable(table: String, v: Int, files: Seq[String]): Unit = {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/$table"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/$table/manifest-v$v.txt"),
-        files.mkString("\n").getBytes("UTF-8")): Unit
-    }
-    def commitTxn(n: Int, vector: Seq[(String, Int)]): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/txn-v$n.txt"),
-        vector.map { case (t, v) => s"$t\t$v" }.mkString("\n").getBytes("UTF-8")): Unit
-    val f1 = stagedFile("fact1")
-    val s1 = stagedFile("sum1")
-    commitTable("fact", 1, Seq(f1)); commitTable("summary", 1, Seq(s1))
-    commitTxn(1, Seq("fact" -> 1, "summary" -> 1))
-    val f2 = stagedFile("fact2") // append
-    val s2 = stagedFile("sum2")  // rewrite
-    commitTable("fact", 2, Seq(f1, f2)); commitTable("summary", 2, Seq(s2))
-    commitTxn(2, Seq("fact" -> 2, "summary" -> 2))
+    val base = TempPaths.runDir(s, "txn")
+    val link = stagedLinker(ensureTxnSlicesStaged(s, d), base)
+    val f1 = link("fact1", "fact1")
+    Seq(
+      1 -> Seq("fact" -> Seq(f1), "summary" -> Seq(link("sum1", "sum1"))),
+      2 -> Seq("fact" -> Seq(f1, link("fact2", "fact2")), // append
+        "summary" -> Seq(link("sum2", "sum2"))))          // rewrite
+      .foreach { case (n, tables) =>
+        // every table's manifest lands first; the txn record publishes them
+        tables.foreach { case (t, files) =>
+          require(ManifestLog.publish(s"$base/$t", n, files), s"$t v$n exists under $base")
+        }
+        ManifestLog.commitTxn(base, n, tables.map(_._1 -> n))
+      }
     (1 to 2).map { n =>
       val (fact, summary) = readTxnSnapshot(s, base, n)
       val joined = fact.groupBy(col("o_orderstatus"))
@@ -547,20 +515,10 @@ object Formats {
   private[operators] def readTxnSnapshot(
       s: SparkSession, base: String, n: Int,
       tornSummaryTxn: Option[Int] = None): (DataFrame, DataFrame) = {
-    def vector(txn: Int): Map[String, Int] =
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base/txn-v$txn.txt")), "UTF-8")
-        .split("\n").toIndexedSeq.filter(_.nonEmpty)
-        .map { line => val Array(t, v) = line.split("\t"); (t, v.toInt) }.toMap
-    def tableAt(t: String, txn: Int) = {
-      val files = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base/$t/manifest-v${vector(txn)(t)}.txt")), "UTF-8")
-        .split("\n").toIndexedSeq.filter(_.nonEmpty)
-      s.read.parquet(files: _*)
-    }
+    def tableAt(t: String, txn: Int) =
+      s.read.parquet(ManifestLog.read(s"$base/$t", ManifestLog.readTxn(base, txn)(t)): _*)
     (tableAt("fact", n), tableAt("summary", tornSummaryTxn.getOrElse(n)))
   }
-
 
   /** `k_row_tracking` — STABLE ROW IDENTITY across file rewrites (Delta
     * row tracking): every row receives a synthetic `row_id` at INGEST
@@ -636,8 +594,6 @@ object Formats {
       .orderBy("change")
   }
 
-  private val cloneRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_clone` — SHALLOW CLONE on the manifest format (Delta's
     * zero-copy clone): a new TABLE whose first manifest lists the
     * SOURCE's data files BY PATH — no byte is copied, creation cost is
@@ -651,54 +607,34 @@ object Formats {
     * this enables (clone prod, experiment, throw away) only works at
     * 100 TB because nothing is copied. */
   def cloneTable(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureQCSlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "clone") + "/run" + cloneRuns.incrementAndGet()
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/src_data/$name")
-    val fA = stagedFile("q0", "A")
-    val fB = stagedFile("q1", "B")
-    val fC = stagedFile("q2", "C")
-    val fD = stagedFile("q3", "D")
-    def commit(table: String, v: Int, files: Seq[String]): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/$table/manifest-v$v.txt"),
-        files.mkString("\n").getBytes("UTF-8")): Unit
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/clone"))
-    commit("src", 1, Seq(fA))
-    commit("src", 2, Seq(fA, fB))
+    val base = TempPaths.runDir(s, "clone")
+    val link = stagedLinker(ensureQCSlicesStaged(s, d), base, "src_data")
+    val fA = link("q0", "A")
+    val fB = link("q1", "B")
+    val (src, clone) = (s"$base/src", s"$base/clone")
+    publishVersions(src, Seq(fA), Seq(fA, fB))
     // SHALLOW CLONE at src v2: copy the MANIFEST CONTENT, not the data
-    val srcV2 = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$base/src/manifest-v2.txt")), "UTF-8")
-      .split("\n").toIndexedSeq.filter(_.nonEmpty)
-    commit("clone", 1, srcV2)
+    val srcV2 = ManifestLog.read(src, 2)
+    require(ManifestLog.publish(clone, 1, srcV2), "clone v1 exists")
     // divergence: each table appends its own file
-    commit("src", 3, Seq(fA, fB, fC))
-    commit("clone", 2, srcV2 :+ fD)
+    require(ManifestLog.commit(src, Set.empty, Seq(link("q2", "C"))).version == 3)
+    require(ManifestLog.commit(clone, Set.empty, Seq(link("q3", "D"))).version == 2)
     // zero-copy witness: the clone dir carries manifests only, and every
     // clone manifest line resolves into the SOURCE's data dir
-    val cloneFiles = Option(new java.io.File(s"$base/clone").listFiles())
+    val cloneFiles = Option(new java.io.File(clone).listFiles())
       .getOrElse(Array.empty).map(_.getName).toSeq
-    require(cloneFiles.nonEmpty && cloneFiles.forall(_.startsWith("manifest-v")),
+    require(cloneFiles.nonEmpty && cloneFiles.length == ManifestLog.versions(clone).length,
       s"clone dir must hold only manifests, got $cloneFiles")
     require(srcV2.forall(_.contains("/src_data/")),
       "clone manifest must reference the source's data files by path")
-    def readVersion(table: String, v: Int): DataFrame = {
-      val files = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base/$table/manifest-v$v.txt")), "UTF-8")
-        .split("\n").toIndexedSeq.filter(_.nonEmpty)
-      s.read.parquet(files: _*)
+    Seq("src" -> 2, "src" -> 3, "clone" -> 1, "clone" -> 2).map { case (table, v) =>
+      s.read.parquet(ManifestLog.read(s"$base/$table", v): _*)
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
         .select(lit(table).as("tbl"), lit(v).as("version"),
           col("n_rows"), col("total_cents"))
-    }
-    Seq(readVersion("src", 2), readVersion("src", 3),
-      readVersion("clone", 1), readVersion("clone", 2))
-      .reduce(_ unionByName _)
+    }.reduce(_ unionByName _)
       .orderBy("tbl", "version")
   }
-
-  private val deepCloneRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** `k_deep_clone` — DEEP CLONE, the physical-copy complement of
     * [[cloneTable]]: data files byte-copy to the clone's own storage
@@ -711,19 +647,11 @@ object Formats {
     * deep = O(data) creation and full isolation — DR replicas and
     * cross-environment promotion pay for deep. */
   def deepClone(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureQCSlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "deepclone") + "/run" + deepCloneRuns.incrementAndGet()
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/src_data/$name")
-    val fA = stagedFile("h0", "A")
-    val fB = stagedFile("h1", "B")
-    def commit(table: String, v: Int, files: Seq[String]): Unit = {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/$table"))
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/$table/manifest-v$v.txt"),
-        files.mkString("\n").getBytes("UTF-8")): Unit
-    }
-    commit("src", 1, Seq(fA, fB))
+    val base = TempPaths.runDir(s, "deepclone")
+    val link = stagedLinker(ensureQCSlicesStaged(s, d), base, "src_data")
+    val fA = link("h0", "A")
+    val fB = link("h1", "B")
+    require(ManifestLog.publish(s"$base/src", 1, Seq(fA, fB)), "src v1 exists")
     // the deep copy: byte-for-byte file copies into the clone's storage
     def copyDir(from: String, name: String): String = {
       val toDir = java.nio.file.Paths.get(s"$base/clone_data/$name")
@@ -740,11 +668,11 @@ object Formats {
     }
     val cA = copyDir(fA, "A")
     val cB = copyDir(fB, "B")
-    commit("clone", 1, Seq(cA, cB))
+    require(ManifestLog.publish(s"$base/clone", 1, Seq(cA, cB)), "clone v1 exists")
     require(Seq(cA, cB).forall(_.contains("/clone_data/")),
       "deep clone must reference its own copies, never the source")
     // the source-side catastrophe the clone must survive
-    deleteRecursively(new java.io.File(s"$base/src_data"))
+    TempPaths.deleteRecursively(new java.io.File(s"$base/src_data"))
     require(scala.util.Try(s.read.parquet(fA).count()).isFailure,
       "fixture error: the source data must really be gone")
     s.read.parquet(cA, cB)
@@ -752,8 +680,6 @@ object Formats {
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
       .orderBy("slice")
   }
-
-  private val restoreRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** `k_restore` — RESTORE TABLE TO VERSION as a ROLL-FORWARD commit
     * (Delta's RESTORE): recovering from a bad commit writes a NEW
@@ -766,40 +692,25 @@ object Formats {
     * restore and the preserved history. Metadata-plane only — the
     * restore commit is O(files) text, no data movement. */
   def restoreTable(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureQCSlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "restore") + "/run" + restoreRuns.incrementAndGet()
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/data/$name")
-    val fA = stagedFile("q0", "A")
-    val fB = stagedFile("q1", "B")
-    val fC = stagedFile("q2", "C")
-    def commit(v: Int, files: Seq[String]): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/manifest-v$v.txt"),
-        files.mkString("\n").getBytes("UTF-8")): Unit
-    def readManifest(v: Int): Seq[String] =
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(s"$base/manifest-v$v.txt")), "UTF-8")
-        .split("\n").toIndexedSeq.filter(_.nonEmpty)
-    commit(1, Seq(fA))
-    commit(2, Seq(fA, fB))
-    commit(3, Seq(fA, fB, fC)) // the "bad" commit being recovered from
-    commit(4, readManifest(1)) // RESTORE TO v1 = roll-forward with v1's list
-    require(readManifest(4) == readManifest(1),
+    val base = TempPaths.runDir(s, "restore")
+    val link = stagedLinker(ensureQCSlicesStaged(s, d), base)
+    val fA = link("q0", "A")
+    val fB = link("q1", "B")
+    publishVersions(base, Seq(fA), Seq(fA, fB),
+      Seq(fA, fB, link("q2", "C"))) // v3: the "bad" commit being recovered from
+    // RESTORE TO v1 = roll-forward with v1's list
+    require(ManifestLog.publish(base, 4, ManifestLog.read(base, 1)), "v4 exists")
+    require(ManifestLog.read(base, 4) == ManifestLog.read(base, 1),
       "restore must reproduce the target version's file list exactly")
     (1 to 3).foreach { v =>
-      require(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$base/manifest-v$v.txt")),
-        s"history must survive the restore: manifest-v$v missing")
+      require(ManifestLog.exists(base, v), s"history must survive the restore: v$v missing")
     }
     (1 to 4).map { v =>
-      s.read.parquet(readManifest(v): _*)
+      s.read.parquet(ManifestLog.read(base, v): _*)
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
         .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
     }.reduce(_ unionByName _).orderBy("version")
   }
-
-  private val mvRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Applies a signed per-key delta to a materialized aggregate: `mv1`
     * carries (key, n_rows, total_cents), `deltas` carries one row per
@@ -854,14 +765,8 @@ object Formats {
     }
 
   def mvRefresh(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureMvSlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "mvrefresh") + "/run" + mvRuns.incrementAndGet()
-    def stagedFile(name: String): String =
-      linkDir(s"$staged/data/$name", s"$base/data/$name")
-    val fB = stagedFile("B")
-    val fB2 = stagedFile("B2")
-    val fC = stagedFile("C")
-    val mv1Path = stagedFile("mv1")
+    val link = stagedLinker(ensureMvSlicesStaged(s, d), TempPaths.runDir(s, "mvrefresh"))
+    val Seq(fB, fB2, fC, mv1Path) = Seq("B", "B2", "C", "mv1").map(n => link(n, n))
     // CDF v1→v2: removed file B → deletes; added B2, C → inserts
     val deltas = s.read.parquet(fB)
       .select(col("o_orderstatus"), col("cents"), lit(-1L).as("w"))
@@ -874,8 +779,6 @@ object Formats {
     applyMvDelta(s.read.parquet(mv1Path), deltas)
   }
 
-  private val ttTsRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_timetravel_ts` — `TIMESTAMP AS OF` through the catalog: commits
     * record timestamps (deterministic fixture seconds — production uses
     * the commit wall clock) and the catalog resolves a queried time to
@@ -886,19 +789,8 @@ object Formats {
     * session makes the literal timezone-proof. Completes the time-travel
     * SQL surface next to [[timeTravelSql]]'s VERSION AS OF. */
   def timeTravelTs(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureT3SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "ttts") + "/run" + ttTsRuns.incrementAndGet()
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/data/$name")
-    val fA = stagedFile("t0", "A")
-    val fB = stagedFile("t1", "B")
-    val fC = stagedFile("t12", "C")
-    def commit(version: Int, files: Seq[String]): Unit =
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(s"$base/manifest-v$version.txt"),
-        files.mkString("\n").getBytes("UTF-8")): Unit
-    commit(1, Seq(fA, fB))
-    commit(2, Seq(fA, fC))
+    val base = TempPaths.runDir(s, "ttts")
+    publishT3Versions(s, d, base)
     graft.sources.VersionedLinesV2.writeTimestamps(base, Seq(1 -> 1000L, 2 -> 2000L))
     val cat = "gts" + base.replaceAll("[^A-Za-z0-9]", "_")
     s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
@@ -912,8 +804,24 @@ object Formats {
          |ORDER BY pick""".stripMargin)
   }
 
-  private val ckptRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val CkptEvery = 3
+  /** The 7-commit script of the action-log trio over run-owned links of
+    * the staged %4 slices ([[ensureQ4SlicesStaged]]): four appends, a
+    * compaction (A, B → AB) and two rewrites (D → D2, C → C2);
+    * checkpoints land at v3 and v6. `stamp` supplies each commit's
+    * timestamp action. Returns the linked files by slice name. */
+  private def q4ActionLog(staged: String, base: String,
+      stamp: Int => Option[Long] = _ => None): Map[String, String] = {
+    val link = stagedLinker(staged, base)
+    val f = Seq("A", "B", "C", "D", "AB", "D2", "C2").map(n => n -> link(n, n)).toMap
+    Seq(Nil -> Seq("A"), Nil -> Seq("B"), Nil -> Seq("C"), Nil -> Seq("D"),
+      Seq("A", "B") -> Seq("AB"), // compaction
+      Seq("D") -> Seq("D2"),      // rewrite
+      Seq("C") -> Seq("C2"))      // rewrite
+      .zip(LazyList.from(1)).foreach { case ((remove, add), v) =>
+        ManifestLog.commitActions(base, v, remove.map(f), add.map(f), stamp(v))
+      }
+    f
+  }
 
   /** `k_log_checkpoint` — ACTION LOG + CHECKPOINTING, the missing third
     * leg of the transaction-log family: [[timeTravel]]'s manifests store
@@ -939,57 +847,13 @@ object Formats {
     * O(files-at-checkpoint + actions-since) — never O(history); data
     * files are immutable parquet, the reader unions only live files. */
   def logCheckpoint(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureQ4SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "logckpt") + "/run" + ckptRuns.incrementAndGet()
-    def stagedFile(name: String): String =
-      linkDir(s"$staged/data/$name", s"$base/data/$name")
-    val fA = stagedFile("A")
-    val fB = stagedFile("B")
-    val fC = stagedFile("C")
-    val fD = stagedFile("D")
-    val fAB = stagedFile("AB")
-    val fD2 = stagedFile("D2")
-    val fC2 = stagedFile("C2")
-    def write(p: String, lines: Seq[String]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        lines.mkString("\n").getBytes("UTF-8")): Unit
-    def readLines(p: String): Seq[String] =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-        .split("\n").toIndexedSeq.filter(_.nonEmpty)
-    // the writer: action commits, checkpoint every CkptEvery commits
-    var state = Vector.empty[String]
-    def commit(v: Int, remove: Seq[String], add: Seq[String]): Unit = {
-      write(s"$base/commit-v$v.txt",
-        remove.map("remove\t" + _) ++ add.map("add\t" + _))
-      state = state.filterNot(remove.contains) ++ add
-      if (v % CkptEvery == 0) {
-        write(s"$base/checkpoint-v$v.txt", state)
-        write(s"$base/_last_checkpoint", Seq(v.toString))
-      }
-    }
-    commit(1, Nil, Seq(fA)); commit(2, Nil, Seq(fB)); commit(3, Nil, Seq(fC))
-    commit(4, Nil, Seq(fD))
-    commit(5, Seq(fA, fB), Seq(fAB)) // compaction
-    commit(6, Seq(fD), Seq(fD2))     // rewrite
-    commit(7, Seq(fC), Seq(fC2))     // rewrite
+    val base = TempPaths.runDir(s, "logckpt")
+    q4ActionLog(ensureQ4SlicesStaged(s, d), base)
     // the reader: nearest checkpoint at-or-below + action suffix
-    def resolve(v: Int): (Seq[String], Int) = {
-      val ck = (v to 1 by -1).find(i => i % CkptEvery == 0 &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/checkpoint-v$i.txt")))
-        .getOrElse(0)
-      var files = if (ck > 0) readLines(s"$base/checkpoint-v$ck.txt") else Seq.empty[String]
-      ((ck + 1) to v).foreach { i =>
-        readLines(s"$base/commit-v$i.txt").foreach { line =>
-          val Array(op, p) = line.split("\t")
-          files = if (op == "remove") files.filterNot(_ == p) else files :+ p
-        }
-      }
-      (files, v - ck)
-    }
-    val latest = readLines(s"$base/_last_checkpoint").head.toInt // pointer → O(1) start
+    val latest = ManifestLog.lastCheckpoint(base) // pointer → O(1) start
     val reads = Seq(3 -> 0, 5 -> 2, 7 -> (7 - latest))
     reads.map { case (v, expectReplay) =>
-      val (files, replayed) = resolve(v)
+      val (files, replayed) = ManifestLog.resolve(base, v)
       require(replayed == expectReplay,
         s"v$v replayed $replayed actions, expected $expectReplay — checkpoint not consulted")
       s.read.parquet(files: _*)
@@ -1077,8 +941,6 @@ object Formats {
       .orderBy("column", "rule")
   }
 
-  private val histRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_log_history` — the DESCRIBE-HISTORY metadata table over the
     * action log (every table format ships one; it is how an operator
     * answers "what happened to this table and when" without reading a
@@ -1091,150 +953,22 @@ object Formats {
     * reader that miscounted an action or missed a checkpoint diverges.
     */
   def logHistory(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureQ4SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "loghist") + "/run" + histRuns.incrementAndGet()
-    def stagedFile(name: String): String =
-      linkDir(s"$staged/data/$name", s"$base/data/$name")
-    val fA = stagedFile("A")
-    val fB = stagedFile("B")
-    val fC = stagedFile("C")
-    val fD = stagedFile("D")
-    val fAB = stagedFile("AB")
-    val fD2 = stagedFile("D2")
-    val fC2 = stagedFile("C2")
-    def write(p: String, lines: Seq[String]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        lines.mkString("\n").getBytes("UTF-8")): Unit
-    var state = Vector.empty[String]
-    def commit(v: Int, remove: Seq[String], add: Seq[String]): Unit = {
-      write(s"$base/commit-v$v.txt",
-        remove.map("remove\t" + _) ++ add.map("add\t" + _))
-      state = state.filterNot(remove.contains) ++ add
-      if (v % CkptEvery == 0) write(s"$base/checkpoint-v$v.txt", state)
-    }
-    commit(1, Nil, Seq(fA)); commit(2, Nil, Seq(fB)); commit(3, Nil, Seq(fC))
-    commit(4, Nil, Seq(fD))
-    commit(5, Seq(fA, fB), Seq(fAB))
-    commit(6, Seq(fD), Seq(fD2))
-    commit(7, Seq(fC), Seq(fC2))
+    val base = TempPaths.runDir(s, "loghist")
+    q4ActionLog(ensureQ4SlicesStaged(s, d), base)
     // the reader: metadata-plane only — walk the action files once,
     // folding live-file counts; checkpoints detected by existence
     import s.implicits._
-    def readLines(p: String): Seq[String] =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-        .split("\n").toIndexedSeq.filter(_.nonEmpty)
     var live = 0
     val rows = (1 to 7).map { v =>
-      val acts = readLines(s"$base/commit-v$v.txt")
-      val nAdd = acts.count(_.startsWith("add\t"))
-      val nRemove = acts.count(_.startsWith("remove\t"))
+      val ops = ManifestLog.actions(base, v).map(_._1)
+      val nAdd = ops.count(_ == "add")
+      val nRemove = ops.count(_ == "remove")
       live += nAdd - nRemove
-      val ckpt = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$base/checkpoint-v$v.txt"))
-      (v, nAdd, nRemove, live, if (ckpt) 1 else 0)
+      (v, nAdd, nRemove, live, if (ManifestLog.hasCheckpoint(base, v)) 1 else 0)
     }
     rows.toDF("version", "n_add", "n_remove", "n_live_files", "is_checkpoint")
       .orderBy("version")
   }
-
-  // ---- OPTIMISTIC CONCURRENCY on the manifest log: the transaction
-  // protocol every modern table format (Delta/Iceberg/Hudi) layers on
-  // the manifest core [[timeTravel]] builds. A commit is an ATOMIC
-  // CREATE of `manifest-v{N+1}` (create-if-absent — the object-store
-  // putIfAbsent publish); losers of the race re-read the new latest,
-  // VALIDATE their read set (files they intend to remove must still be
-  // live — a compactor whose input another compactor already rewrote
-  // must abort, not clobber), rebase their file list, and retry.
-  // Readers keep snapshot isolation throughout: a version, once
-  // published, is immutable. ----
-
-  final case class CommitResult(version: Int, attempts: Int)
-
-  /** Manifest-log primitives. Metadata plane only — pure JVM file ops,
-    * safe to race from writer threads; the data files are cluster-written
-    * parquet as in [[timeTravel]]. */
-  object ManifestLog {
-    private def path(dir: String, v: Int) =
-      java.nio.file.Paths.get(s"$dir/manifest-v$v.txt")
-
-    /** Atomic create-if-absent publish with FULL-CONTENT visibility: the
-      * manifest is written to a writer-private temp file first and made
-      * visible via `createLink` — link creation is atomic and exclusive
-      * on POSIX, so a concurrent reader either sees no manifest or the
-      * complete one, never a half-written file list (a `CREATE_NEW` +
-      * write sequence has exactly that window, and a loser rebasing off
-      * a truncated winner manifest would silently lose files). On an
-      * object store the same role is played by a conditional PUT. */
-    def publish(dir: String, v: Int, files: Seq[String]): Boolean = {
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-      val tmp = java.nio.file.Paths.get(
-        s"$dir/.tmp-v$v-${Thread.currentThread().getId}-${System.identityHashCode(files)}")
-      java.nio.file.Files.write(tmp, files.mkString("\n").getBytes("UTF-8"))
-      try {
-        java.nio.file.Files.createLink(path(dir, v), tmp)
-        true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException => false
-      } finally {
-        java.nio.file.Files.deleteIfExists(tmp): Unit
-      }
-    }
-
-    /** Resolves the newest version by listing the MANIFEST directory —
-      * metadata-plane and O(versions), the same move Delta's log replay
-      * makes (the no-listing discipline is about DATA files). A walk
-      * from v1 would break after [[Formats.vacuum]] drops the oldest
-      * manifests and the chain no longer starts at 1. */
-    def latest(dir: String): (Int, Seq[String]) = {
-      val names = Option(new java.io.File(dir).listFiles())
-        .getOrElse(Array.empty).map(_.getName)
-      val vs = names.collect {
-        case n if n.startsWith("manifest-v") && n.endsWith(".txt") =>
-          n.stripPrefix("manifest-v").stripSuffix(".txt").toInt
-      }
-      require(vs.nonEmpty, s"no manifest published under $dir")
-      val v = vs.max
-      (v, read(dir, v))
-    }
-
-    def read(dir: String, v: Int): Seq[String] =
-      new String(java.nio.file.Files.readAllBytes(path(dir, v)), "UTF-8")
-        .split("\n").toIndexedSeq.filter(_.nonEmpty)
-
-    /** Optimistic commit: replace `remove` with `add` atop the current
-      * latest. Retries on a lost race after validating that every file
-      * in `remove` is still live (read-set validation — the conflict
-      * detection on overlapping file sets); throws
-      * ConcurrentModificationException if not. Blind appends
-      * (`remove` empty) always rebase cleanly.
-      *
-      * `snapshot` pins the FIRST attempt to a version the caller read
-      * earlier (a real writer plans its commit against the snapshot it
-      * scanned, not a fresh read at publish time); retries rebase onto
-      * the live latest. Without it, two latch-synchronized racers are
-      * only *probably* in conflict — the loser's internal latest() can
-      * run after the winner's publish and land cleanly, making the
-      * observed conflict count scheduling-dependent. */
-    def commit(dir: String, remove: Set[String], add: Seq[String],
-               snapshot: Option[(Int, Seq[String])] = None): CommitResult = {
-      var attempts = 0
-      var pinned = snapshot
-      while (true) {
-        attempts += 1
-        if (attempts > 10) throw new IllegalStateException("commit retry budget exhausted")
-        val (v, files) = pinned.getOrElse(latest(dir))
-        pinned = None
-        if (!remove.subsetOf(files.toSet))
-          throw new java.util.ConcurrentModificationException(
-            s"read set invalidated: ${remove.diff(files.toSet).mkString(",")} no longer live in v$v")
-        val next = files.filterNot(remove) ++ add
-        if (publish(dir, v + 1, next)) return CommitResult(v + 1, attempts)
-      }
-      sys.error("unreachable")
-    }
-  }
-
-  private val occRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** `k_timetravel_occ` — the concurrent-writer scenario, made
     * deterministic without weakening the race: two appenders both
@@ -1246,16 +980,14 @@ object Formats {
     * final version holds base ∪ X ∪ Y. Every output column is
     * symmetric in WHICH writer won, so the query is hash-checkable. */
   def timeTravelOcc(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureM3SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "timetravel_occ") + "/run" + occRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "timetravel_occ")
     // data files staged BEFORE the metadata race (a real writer stages
     // its parquet first too — only the manifest publish races); each
     // run hard-links the pure-corpus slices into its own scratch
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/data/$name")
-    val f0 = stagedFile("m0", "base")
-    val fX = stagedFile("m1", "X")
-    val fY = stagedFile("m2", "Y")
+    val link = stagedLinker(ensureM3SlicesStaged(s, d), base)
+    val f0 = link("m0", "base")
+    val fX = link("m1", "X")
+    val fY = link("m2", "Y")
     require(ManifestLog.publish(base, 1, Seq(f0)), s"v1 already exists under $base")
     val v1Before = ManifestLog.read(base, 1)
 
@@ -1283,8 +1015,6 @@ object Formats {
         col("v1_rows"), col("final_rows"), col("final_total"))
   }
 
-  private val occCompRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_occ_compaction` — COMPACTION UNDER A CONCURRENT APPEND, the
     * conflict pair [[timeTravelOcc]]'s two-appender race does not
     * cover: a background OPTIMIZE (remove the small files A,B; add the
@@ -1301,14 +1031,12 @@ object Formats {
     * hash-checkable. This is what lets OPTIMIZE run continuously under
     * live ingest at 100 TB instead of in a maintenance window. */
   def occCompaction(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureM3SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "occ_comp") + "/run" + occCompRuns.incrementAndGet()
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/data/$name")
-    val fA = stagedFile("m0", "A")
-    val fB = stagedFile("m1", "B")
-    val fC = stagedFile("m01", "C")   // A∪B compacted
-    val fNew = stagedFile("m2", "NEW") // the arriving batch
+    val base = TempPaths.runDir(s, "occ_comp")
+    val link = stagedLinker(ensureM3SlicesStaged(s, d), base)
+    val fA = link("m0", "A")
+    val fB = link("m1", "B")
+    val fC = link("m01", "C")   // A∪B compacted
+    val fNew = link("m2", "NEW") // the arriving batch
     require(ManifestLog.publish(base, 1, Seq(fA, fB)), s"v1 already exists under $base")
     val v1Before = ManifestLog.read(base, 1)
     val ready = new java.util.concurrent.CountDownLatch(2)
@@ -1336,8 +1064,6 @@ object Formats {
       .select(lit(lastV).as("n_versions"), lit(conflicts).as("n_conflicts"),
         col("v1_rows"), col("final_rows"), col("final_total"))
   }
-
-  private val occGdprRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private[operators] def occGdprStageBuildCount =
     sliceStageBuildCounts.computeIfAbsent("occ_gdpr_k3s7v1",
@@ -1388,24 +1114,24 @@ object Formats {
     * final aggregate = A∪B minus the subject — all deterministic, so the
     * whole workflow is a correctness row, not a log line. */
   def occGdprAbort(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureOccGdprStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "occ_gdpr") + "/run" + occGdprRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "occ_gdpr")
     // each participant's file set is a staged pure-corpus slice; the run
     // hard-links it at the protocol step where the participant would
     // finish writing it — the OCC race itself runs live every time
-    def stagedFile(name: String): String = linkDir(s"$staged/data/$name", s"$base/data/$name")
-    val fA = stagedFile("A")
-    val fB = stagedFile("B")
+    val linker = stagedLinker(ensureOccGdprStaged(s, d), base)
+    def link(name: String): String = linker(name, name)
+    val fA = link("A")
+    val fB = link("B")
     // the compactor's output, planned against v1 — STALE: contains the
     // subject's rows, and must never reach the log
-    val fC = stagedFile("C")
+    val fC = link("C")
     require(ManifestLog.publish(base, 1, Seq(fA, fB)), s"v1 already exists under $base")
     val v1Before = ManifestLog.read(base, 1)
     // compactor pins its snapshot BEFORE erasure lands (it is mid-flight)
     val compactorSnap = ManifestLog.latest(base)
     // GDPR erasure: rewrite every file holding subject rows, publish v2
-    val fA2 = stagedFile("A_erased")
-    val fB2 = stagedFile("B_erased")
+    val fA2 = link("A_erased")
+    val fB2 = link("B_erased")
     require(ManifestLog.commit(base, Set(fA, fB), Seq(fA2, fB2)).version == 2,
       "erasure must land v2")
     // the stale compactor commits against its v1 snapshot: MUST abort
@@ -1417,7 +1143,7 @@ object Formats {
     require(liveV == 2 && liveFiles.toSet == Set(fA2, fB2),
       "failed commit must leave the erased state untouched")
     // re-plan against the live snapshot and compact the erased files
-    val fC2 = stagedFile("C_replanned")
+    val fC2 = link("C_replanned")
     val replanned = ManifestLog.commit(base, Set(fA2, fB2), Seq(fC2))
     require(replanned.version == 3 && replanned.attempts == 1,
       "re-planned compaction must land v3 cleanly")
@@ -1436,8 +1162,6 @@ object Formats {
         col("final_rows"), col("subject_rows_final"), col("final_total"))
   }
 
-  private val pevRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_partition_evolution` — PARTITION-SPEC EVOLUTION on the manifest
     * core: the table starts life UNPARTITIONED (v1 — one file, the
     * "just land the data" phase) and a later commit rewrites it
@@ -1452,7 +1176,7 @@ object Formats {
     * spec forever. Output = the same filtered aggregate computed
     * through BOTH versions — layout changes plans, never answers. */
   def partitionEvolution(s: SparkSession, d: String): DataFrame = {
-    val base = graft.TempPaths.scratch(s, "part_evolution") + "/run" + pevRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "part_evolution")
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("value"), to_date(col("ts")).as("day"))
     // v1: one unpartitioned file set
@@ -1462,14 +1186,10 @@ object Formats {
     ev.repartition(col("day"))
       .write.partitionBy("day").mode("overwrite").parquet(s"$base/data/v2bydays")
     require(ManifestLog.publish(base, 2, Seq(s"$base/data/v2bydays|spec=day")), "v2 exists")
-    def readVersion(v: Int): (DataFrame, String) = {
-      val Array(path, spec) = ManifestLog.read(base, v).head.split("\\|")
-      (s.read.parquet(path), spec)
-    }
     val targetDay = ev.agg(min(col("day"))).head().getDate(0).toString
     def filtered(v: Int): DataFrame = {
-      val (df, spec) = readVersion(v)
-      val agg = df.filter(col("day") === lit(targetDay))
+      val Array(path, spec) = ManifestLog.read(base, v).head.split("\\|")
+      val agg = s.read.parquet(path).filter(col("day") === lit(targetDay))
         .groupBy().agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
         .select(lit(v).as("version"), col("n"), col("total"))
       val rows = agg.collect()
@@ -1487,8 +1207,6 @@ object Formats {
     filtered(1).unionByName(filtered(2)).orderBy("version")
   }
 
-  private val driftRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_schema_drift` — the INGEST CONTRACT GUARD that runs before
     * anyone trusts `mergeSchema` (`k_schema_evolution` proves the merge
     * mechanics; this is the gate that decides whether merging is even
@@ -1500,7 +1218,7 @@ object Formats {
     * data a pipeline can alert on, not a stack trace at 3am. The diff
     * logic reads only footers — metadata plane, O(columns). */
   def schemaDrift(s: SparkSession, d: String): DataFrame = {
-    val base = graft.TempPaths.scratch(s, "schema_drift") + "/run" + driftRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "schema_drift")
     val o = Tables.orders(s, d).filter(col("o_orderkey") % 200 === 0)
     o.select(col("o_orderkey"), col("o_custkey").cast("int").as("o_custkey"),
         col("o_orderstatus"), col("o_totalprice"))
@@ -1531,8 +1249,6 @@ object Formats {
       .orderBy("col_name")
   }
 
-  private val fwRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_fixedwidth_roundtrip` — FIXED-WIDTH text, the mainframe/COBOL
     * interchange format still feeding enterprise lakes (no delimiters,
     * no schema line — positions ARE the schema): an orders slice is
@@ -1545,7 +1261,7 @@ object Formats {
     * the pattern that makes a 100 TB fixed-width backfill an ordinary
     * scan. */
   def fixedwidthRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val base = graft.TempPaths.scratch(s, "fixedwidth") + "/run" + fwRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "fixedwidth")
     Tables.orders(s, d)
       .filter(col("o_orderkey") % 50 === 0)
       .select(concat(
@@ -1566,8 +1282,6 @@ object Formats {
       .orderBy("o_orderstatus", "o_orderpriority")
   }
 
-  private val cdfRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_manifest_cdf` — CHANGE DATA FEED between two manifest versions,
     * computed from the MANIFEST DIFF alone: the files shared by v1 and
     * v2 cannot contribute changes (data files are immutable), so the
@@ -1583,15 +1297,10 @@ object Formats {
     * the ≡2 keys, deletes = none. ManifestCdfSpec asserts the shared
     * file A is never opened. */
   def manifestCdf(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureM3SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "manifest_cdf") + "/run" + cdfRuns.incrementAndGet()
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/data/$name")
-    val fA = stagedFile("m0", "A")
-    val fB = stagedFile("m1", "B")
-    val fC = stagedFile("m12", "C")
-    require(ManifestLog.publish(base, 1, Seq(fA, fB)), s"v1 exists under $base")
-    require(ManifestLog.publish(base, 2, Seq(fA, fC)), s"v2 exists under $base")
+    val base = TempPaths.runDir(s, "manifest_cdf")
+    val link = stagedLinker(ensureM3SlicesStaged(s, d), base)
+    val fA = link("m0", "A")
+    publishVersions(base, Seq(fA, link("m1", "B")), Seq(fA, link("m12", "C")))
     val v1 = ManifestLog.read(base, 1).toSet
     val v2 = ManifestLog.read(base, 2).toSet
     val removedFiles = (v1 -- v2).toSeq.sorted
@@ -1611,13 +1320,6 @@ object Formats {
       .orderBy("op")
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  private val vacuumRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_vacuum` — SNAPSHOT RETENTION / GC, the op that makes time travel
     * affordable: old versions are only free until their files are — a
     * 100 TB table that never vacuums keeps every compacted-away file
@@ -1631,31 +1333,19 @@ object Formats {
     * directory-listing-driven: the same walk works when the directory
     * listing is eventually consistent. */
   def vacuum(s: SparkSession, d: String): DataFrame = {
-    val staged = ensureM3SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "vacuum") + "/run" + vacuumRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "vacuum")
     // run-owned hard links: the vacuum below DELETES data files, which
     // must only ever unlink run-local names, never the shared staging
-    def stagedFile(slice: String, name: String): String =
-      linkDir(s"$staged/data/$slice", s"$base/data/$name")
-    val fA = stagedFile("m0", "A")
-    val fB = stagedFile("m1", "B")
-    val fC = stagedFile("m2", "C")
-    val fD = stagedFile("m12", "D") // compaction of B∪C
-    val fE = stagedFile("e5", "E")  // later arrivals
-    require(ManifestLog.publish(base, 1, Seq(fA, fB)), "v1 exists")
-    require(ManifestLog.publish(base, 2, Seq(fA, fB, fC)), "v2 exists")
-    require(ManifestLog.publish(base, 3, Seq(fA, fD)), "v3 exists")
-    require(ManifestLog.publish(base, 4, Seq(fA, fD, fE)), "v4 exists")
+    val link = stagedLinker(ensureM3SlicesStaged(s, d), base)
+    val fA = link("m0", "A")
+    val fB = link("m1", "B")
+    val fC = link("m2", "C")
+    val fD = link("m12", "D") // compaction of B∪C
+    val fE = link("e5", "E")  // later arrivals
+    publishVersions(base, Seq(fA, fB), Seq(fA, fB, fC), Seq(fA, fD), Seq(fA, fD, fE))
     // vacuum: retain the last 2 versions, delete everything they don't reference
+    val (deadFiles, dropped) = ManifestLog.gcVersions(base, retain = 2)
     val (latest, _) = ManifestLog.latest(base)
-    val retained = Seq(latest - 1, latest)
-    val live = retained.flatMap(v => ManifestLog.read(base, v)).toSet
-    val dropped = (1 until latest - 1)
-    val deadFiles = dropped.flatMap(v => ManifestLog.read(base, v)).distinct
-      .filterNot(live)
-    deadFiles.foreach(f => deleteRecursively(new java.io.File(f)))
-    dropped.foreach(v => java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$base/manifest-v$v.txt")))
     require(new java.io.File(fA).exists(), "vacuum deleted a still-referenced file")
     require(!new java.io.File(fB).exists() && !new java.io.File(fC).exists(),
       "vacuum left unreferenced files behind")
@@ -1668,35 +1358,9 @@ object Formats {
     audit(latest - 1).unionByName(audit(latest)).orderBy("version")
   }
 
-  private val vacuumTtlRuns = new java.util.concurrent.atomic.AtomicInteger(0)
   private val TtlT0Micros = 1767225600000000L // 2026-01-01T00:00:00Z, fixture epoch
   private val TtlHourMicros = 3600000000L
   private val TtlRetainMicros = 3500L * 3600000L // 3.5 h
-
-  /** Commit timestamp line (`ts\t<epoch_micros>`) — the action log's
-    * time axis. Fixture commits are stamped deterministically
-    * (T0 + v hours) so TTL retention is oracle-checkable; a production
-    * writer stamps wall clock at publish. */
-  private def ttlCommitPath(base: String, v: Int) = s"$base/commit-v$v.txt"
-  private def ttlCkptPath(base: String, v: Int) = s"$base/checkpoint-v$v.txt"
-
-  private[operators] def ttlResolve(base: String, v: Int): (Seq[String], Int) = {
-    def readLines(p: String): Seq[String] =
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)), "UTF-8")
-        .split("\n").toIndexedSeq.filter(_.nonEmpty)
-    val ck = (v to 1 by -1).find(i => i % CkptEvery == 0 &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(ttlCkptPath(base, i))))
-      .getOrElse(0)
-    var files = if (ck > 0) readLines(ttlCkptPath(base, ck)) else Seq.empty[String]
-    ((ck + 1) to v).foreach { i =>
-      readLines(ttlCommitPath(base, i)).foreach { line =>
-        val Array(op, p) = line.split("\t")
-        if (op != "ts")
-          files = if (op == "remove") files.filterNot(_ == p) else files :+ p
-      }
-    }
-    (files, v - ck)
-  }
 
   /** `k_vacuum_ttl` — TIME-BASED RETENTION on the action log (the Delta
     * `VACUUM … RETAIN n HOURS` / logRetentionDuration pair), the age
@@ -1723,69 +1387,37 @@ object Formats {
   /** (log base dir, audit) — the dir is exposed so VacuumTtlSpec can
     * prove aged-version resolution fails post-vacuum. */
   private[operators] def vacuumTtlBuild(s: SparkSession, d: String): (String, DataFrame) = {
-    val staged = ensureQ4SlicesStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "vacuum_ttl") + "/run" + vacuumTtlRuns.incrementAndGet()
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+    val base = TempPaths.runDir(s, "vacuum_ttl")
     // run-owned hard links of the staged slices: the TTL vacuum below
-    // DELETES data files, which must only ever unlink run-local names
-    def stagedFile(name: String): String =
-      linkDir(s"$staged/data/$name", s"$base/data/$name")
-    val fA = stagedFile("A")
-    val fB = stagedFile("B")
-    val fC = stagedFile("C")
-    val fD = stagedFile("D")
-    val fAB = stagedFile("AB")
-    val fD2 = stagedFile("D2")
-    val fC2 = stagedFile("C2")
-    val fE = stagedFile("E")
-    def write(p: String, lines: Seq[String]): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(p),
-        lines.mkString("\n").getBytes("UTF-8")): Unit
-    var state = Vector.empty[String]
-    def commit(v: Int, remove: Seq[String], add: Seq[String]): Unit = {
-      write(ttlCommitPath(base, v),
-        s"ts\t${TtlT0Micros + v * TtlHourMicros}" +:
-          (remove.map("remove\t" + _) ++ add.map("add\t" + _)))
-      state = state.filterNot(remove.contains) ++ add
-      if (v % CkptEvery == 0) write(ttlCkptPath(base, v), state)
-    }
-    commit(1, Nil, Seq(fA)); commit(2, Nil, Seq(fB)); commit(3, Nil, Seq(fC))
-    commit(4, Nil, Seq(fD))
-    commit(5, Seq(fA, fB), Seq(fAB)) // compaction
-    commit(6, Seq(fD), Seq(fD2))     // rewrite
-    commit(7, Seq(fC), Seq(fC2))     // rewrite
-    commit(8, Nil, Seq(fE))          // late arrivals
+    // DELETES data files, which must only ever unlink run-local names.
+    // Fixture commits are stamped deterministically (T0 + v hours) so
+    // TTL retention is oracle-checkable; a production writer stamps
+    // wall clock at publish.
+    def stamp(v: Int) = Some(TtlT0Micros + v * TtlHourMicros)
+    val staged = ensureQ4SlicesStaged(s, d)
+    val f = q4ActionLog(staged, base, stamp)
+    val fE = stagedLinker(staged, base)("E", "E")
+    ManifestLog.commitActions(base, 8, Nil, Seq(fE), stamp(8)) // late arrivals
     val lastV = 8
-    def commitTs(v: Int): Long = {
-      val first = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(ttlCommitPath(base, v))), "UTF-8").linesIterator.next()
-      require(first.startsWith("ts\t"), s"commit v$v missing timestamp action")
-      first.split("\t")(1).toLong
-    }
+    def commitTs(v: Int): Long = ManifestLog.commitTs(base, v)
     val cutoff = commitTs(lastV) - TtlRetainMicros
     val retained = (1 to lastV).filter(commitTs(_) >= cutoff) // 5..8
     // checkpoint awareness: the oldest retained version's anchor and
     // every commit on a retained version's replay path must survive
-    def anchorOf(v: Int): Int = (v to 1 by -1)
-      .find(i => i % CkptEvery == 0 &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(ttlCkptPath(base, i))))
-      .getOrElse(0)
-    val neededCkpts = retained.map(anchorOf).filter(_ > 0).toSet
-    val neededCommits = retained.flatMap(v => (anchorOf(v) + 1) to v).toSet
-    val resolvedRetained = retained.map(v => v -> ttlResolve(base, v)).toMap
+    val resolvedRetained = retained.map(v => v -> ManifestLog.resolve(base, v)).toMap
+    val anchors = retained.map(v => v -> (v - resolvedRetained(v)._2))
+    val neededCkpts = anchors.map(_._2).filter(_ > 0).toSet
+    val neededCommits = anchors.flatMap { case (v, anchor) => (anchor + 1) to v }.toSet
     val live = resolvedRetained.values.flatMap(_._1).toSet
     val deadCommits = (1 to lastV)
       .filter(v => commitTs(v) < cutoff && !neededCommits.contains(v))
     val deadCkpts = (1 to lastV).filter(v =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(ttlCkptPath(base, v))) &&
-        !neededCkpts.contains(v))
-    val deadData = Seq(fA, fB, fC, fD, fAB, fD2, fC2, fE).filterNot(live)
-    deadCommits.foreach(v => java.nio.file.Files.delete(
-      java.nio.file.Paths.get(ttlCommitPath(base, v))))
-    deadCkpts.foreach(v => java.nio.file.Files.delete(
-      java.nio.file.Paths.get(ttlCkptPath(base, v))))
-    deadData.foreach(f => deleteRecursively(new java.io.File(f)))
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(ttlCkptPath(base, 3))),
+      ManifestLog.hasCheckpoint(base, v) && !neededCkpts.contains(v))
+    val deadData = (f.values.toSeq :+ fE).filterNot(live)
+    deadCommits.foreach(ManifestLog.dropCommit(base, _))
+    deadCkpts.foreach(ManifestLog.dropCheckpoint(base, _))
+    deadData.foreach(p => TempPaths.deleteRecursively(new java.io.File(p)))
+    require(ManifestLog.hasCheckpoint(base, 3),
       "vacuum deleted the checkpoint the oldest retained version resolves through")
     val out = retained.map { v =>
       val (files, replayed) = resolvedRetained(v)
@@ -1800,7 +1432,6 @@ object Formats {
     (base, out)
   }
 
-  private val gdprRuns = new java.util.concurrent.atomic.AtomicInteger(0)
   private val GdprBuckets = 8
 
   private[operators] def gdprStageBuildCount =
@@ -1900,6 +1531,20 @@ object Formats {
     } finally stream.close()
     dst
   }
+
+  /** A run's linker over a staged slice set: `link(slice, name)`
+    * hard-links `<staged>/data/<slice>` to `<run>/<sub>/<name>` and
+    * returns the run-local path, so the run owns every name its log
+    * references. */
+  private def stagedLinker(staged: String, run: String,
+      sub: String = "data"): (String, String) => String =
+    (slice, name) => linkDir(s"$staged/data/$slice", s"$run/$sub/$name")
+
+  /** Publishes `versions` as v1..vN of a fresh manifest log. */
+  private def publishVersions(dir: String, versions: Seq[String]*): Unit =
+    versions.zip(LazyList.from(1)).foreach { case (files, v) =>
+      require(ManifestLog.publish(dir, v, files), s"v$v exists under $dir")
+    }
 
   // ---- STAGE-ONCE SLICE SETS for the transaction-log demo family: the
   // data files each log/commit/GC query manipulates are PURE CORPUS
@@ -2020,7 +1665,7 @@ object Formats {
     * the rewrite count, every column closed-form for the oracle. */
   def gdprDelete(s: SparkSession, d: String): DataFrame = {
     val staged = ensureGdprStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "gdpr_delete") + "/run" + gdprRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "gdpr_delete")
     // v1 = the staged bucketed base, hard-linked into run-owned paths
     val files = cloneStagedBuckets(staged, base)
     require(ManifestLog.publish(base, 1, files), s"v1 exists under $base")
@@ -2047,13 +1692,6 @@ object Formats {
     audit(1).unionByName(audit(2)).orderBy("version")
   }
 
-  private val dvRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** A manifest entry is `dataPath` or `dataPath|dv=bitmapPath`; every
-    * path the entry references (for GC liveness walks). */
-  private[operators] def entryPaths(entry: String): Seq[String] =
-    entry.split("\\|dv=", 2).toIndexedSeq
-
   /** Read one manifest entry, applying its deletion vector if present:
     * rows whose (file, position) appear in the bitmap are filtered out at
     * read time. The bitmap is keyed by the PHYSICAL position
@@ -2062,7 +1700,7 @@ object Formats {
     * build side is the bitmap (bounded by deletes, broadcast), never the
     * data. */
   private[operators] def readEntry(s: SparkSession, entry: String): DataFrame =
-    entryPaths(entry) match {
+    ManifestLog.entryPaths(entry) match {
       case Seq(p) => s.read.parquet(p)
       case Seq(p, dv) =>
         s.read.parquet(p)
@@ -2075,25 +1713,6 @@ object Formats {
 
   private[operators] def readWithDv(s: SparkSession, base: String, v: Int): DataFrame =
     ManifestLog.read(base, v).map(readEntry(s, _)).reduce(_.unionByName(_))
-
-  /** Manifest-driven, DV-AWARE GC: keep the newest `retain` versions,
-    * delete every data file AND deletion-vector bitmap referenced only by
-    * the dropped versions, then drop their manifests. A bitmap superseded
-    * by compaction dies here exactly like a compacted-away data file.
-    * Returns (deleted paths, dropped versions). */
-  private[operators] def gcVersions(base: String, retain: Int): (Seq[String], Seq[Int]) = {
-    val (latest, _) = ManifestLog.latest(base)
-    val all = (1 to latest).filter(v =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/manifest-v$v.txt")))
-    val (drop, keep) = all.splitAt(math.max(0, all.length - retain))
-    val live = keep.flatMap(v => ManifestLog.read(base, v)).flatMap(entryPaths).toSet
-    val dead = drop.flatMap(v => ManifestLog.read(base, v)).flatMap(entryPaths)
-      .distinct.filterNot(live)
-    dead.foreach(f => deleteRecursively(new java.io.File(f)))
-    drop.foreach(v => java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$base/manifest-v$v.txt")))
-    (dead, drop)
-  }
 
   /** `k_delete_vectors` — RIGHT-TO-ERASURE, MERGE-ON-READ: the erasure
     * path used when even [[gdprDelete]]'s one-bucket rewrite is
@@ -2110,7 +1729,7 @@ object Formats {
     * GCs the superseded bitmap — DeleteVectorsSpec drives that leg. */
   def deleteVectors(s: SparkSession, d: String): DataFrame = {
     val staged = ensureGdprStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "delete_vectors") + "/run" + dvRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "delete_vectors")
     val files = cloneStagedBuckets(staged, base)
     require(ManifestLog.publish(base, 1, files), s"v1 exists under $base")
     val target = stagedSubjects(staged).head
@@ -2145,10 +1764,8 @@ object Formats {
     audit(1).unionByName(audit(2)).orderBy("version")
   }
 
-  private val dvCdfRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def parseEntry(e: String): (String, Option[String]) =
-    entryPaths(e) match {
+    ManifestLog.entryPaths(e) match {
       case Seq(p)     => (p, None)
       case Seq(p, dv) => (p, Some(dv))
     }
@@ -2168,7 +1785,7 @@ object Formats {
     * bucket and the v3 bitmap contains both. */
   def dvCdf(s: SparkSession, d: String): DataFrame = {
     val staged = ensureGdprStaged(s, d)
-    val base = graft.TempPaths.scratch(s, "dv_cdf") + "/run" + dvCdfRuns.incrementAndGet()
+    val base = TempPaths.runDir(s, "dv_cdf")
     val files = cloneStagedBuckets(staged, base)
     require(ManifestLog.publish(base, 1, files), s"v1 exists under $base")
     val subjects = stagedSubjects(staged) // 2 ids — the erasure queue, staged sidecar
@@ -2215,8 +1832,6 @@ object Formats {
     changes(v1e, v2e, 1).unionByName(changes(v2e, v3e, 2)).orderBy("from_v")
   }
 
-  private val dsv2Runs = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `k_dsv2_write` — a distributed write through the engine's
     * DataSource V2 SINK ([[graft.sources.FixedWidthV2]], the write half
     * of the connector story): 4 writer tasks stream fixed-width records
@@ -2228,7 +1843,7 @@ object Formats {
     * original table, so the connector's render → commit → read-back loop
     * is verified by data end to end. */
   def dsv2Write(s: SparkSession, d: String): DataFrame = {
-    val base = graft.TempPaths.scratch(s, "dsv2_write") + "/run" + dsv2Runs.incrementAndGet()
+    val base = TempPaths.runDir(s, "dsv2_write")
     val target = s"$base/fw"
     val slice = Tables.orders(s, d)
       .filter(col("o_orderkey") % 20 === 0)

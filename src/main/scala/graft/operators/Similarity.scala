@@ -1086,12 +1086,14 @@ object Similarity {
           (v, c) => v.cast("double") - c).as("qr"))
     // The probed subplan (queries × centroids scoring + window) feeds
     // BOTH consumers — the literal label filter below and the LUT build.
-    // persist() computes it once and keeps it cluster-side (queries ×
+    // The pin computes it once and keeps it cluster-side (queries ×
     // NProbe rows — tiny, but the residual arrays should not transit
     // the driver); the ONE driver sync is the LABEL LIST only (≤ nlist
     // values), which must be a literal so the list-partitioned code
-    // table prunes directories before the scan.
-    val probedDf = probed.persist()
+    // table prunes directories before the scan. A pin, not persist():
+    // nothing here could ever unpersist the returned lazy plan's input,
+    // so a CacheManager entry would outlive every call.
+    val probedDf = graft.QueryDsl.pin(probed)
     val probedLabels = probedDf.select(col("c_label")).distinct()
       .collect().map(_.get(0)).toSeq
     val lut = probedDf.crossJoin(broadcast(rb))

@@ -9,9 +9,9 @@ import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A VERSIONED table behind the catalog's TIME-TRAVEL surface: the
-  * snapshot-manifest discipline (`operators/Formats.scala`'s
-  * `k_timetravel` — a version is an immutable manifest listing data
-  * dirs; readers resolve a version by reading ONLY its manifest) served
+  * snapshot-manifest discipline ([[ManifestLog]] — a version is an
+  * immutable manifest listing data dirs; readers resolve a version by
+  * reading ONLY its manifest) served
   * as a DataSource V2 `Table`, so `GraftCatalog.loadTable(ident,
   * version)` can hand Spark's native `VERSION AS OF` resolution a
   * snapshot-pinned table and plain SQL text gets time travel with no
@@ -32,9 +32,6 @@ object VersionedLinesV2 {
   val Schema: StructType = new StructType()
     .add("o_orderkey", LongType, nullable = false)
     .add("price_cents", LongType, nullable = false)
-
-  /** Data dirs named by manifest-v<version>.txt, one line per dir. */
-  private def manifestPath(base: String, v: Int) = s"$base/manifest-v$v.txt"
 
   /** Commit timestamps (seconds since epoch) recorded by the writer —
     * the metadata TIMESTAMP AS OF resolves through. One tsv, atomic
@@ -62,25 +59,15 @@ object VersionedLinesV2 {
     at.maxBy(_._2)._1
   }
 
-  def latestVersion(base: String): Int = {
-    val vs = Option(new File(base).listFiles()).getOrElse(Array.empty)
-      .map(_.getName).collect {
-        case n if n.startsWith("manifest-v") && n.endsWith(".txt") =>
-          n.stripPrefix("manifest-v").stripSuffix(".txt").toInt
-      }
-    require(vs.nonEmpty, s"no manifests under $base")
-    vs.max
-  }
+  def latestVersion(base: String): Int = ManifestLog.latest(base)._1
 
-  /** The version's part files: manifest → data dirs → regular part
-    * files (hidden/marker files skipped), deterministically ordered. */
+  /** The version's part files: manifest (one data dir per line) → data
+    * dirs → regular part files (hidden/marker files skipped),
+    * deterministically ordered. */
   private[sources] def resolve(base: String, v: Int): Seq[String] = {
-    val mf = new File(manifestPath(base, v))
-    if (!mf.exists()) throw new IllegalArgumentException(
-      s"version $v of $base does not exist (no ${mf.getName})")
-    val dirs = new String(java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
-      .split("\n").toIndexedSeq.filter(_.nonEmpty)
-    dirs.flatMap { d =>
+    if (!ManifestLog.exists(base, v)) throw new IllegalArgumentException(
+      s"version $v of $base does not exist")
+    ManifestLog.read(base, v).flatMap { d =>
       Option(new File(d).listFiles()).getOrElse(Array.empty)
         .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
         .map(_.getPath).sorted

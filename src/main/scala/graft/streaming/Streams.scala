@@ -409,8 +409,6 @@ object Streams {
       .orderBy("ws_us", "event_type", "rank")
   }
 
-  private val filingStreamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `e_filing_stream` — the engine's CUSTOM V2 STREAMING SOURCE
     * ([[graft.sources.FilingIndexStream]], file-count offsets over an
     * append-only arrivals directory) replayed end to end: the staged
@@ -446,8 +444,7 @@ object Streams {
     * (same oracle): a trigger changes scheduling, never answers. */
   def filingStreamBackfill(s: SparkSession, d: String): DataFrame = {
     val staged = graft.sources.FilingIndex.ensureStaged(s, d)
-    val arrivals = graft.TempPaths.scratch(s, "filing_stream") +
-      "/run" + filingStreamRuns.incrementAndGet()
+    val arrivals = graft.TempPaths.runDir(s, "filing_stream")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(arrivals))
     val files = new java.io.File(staged).listFiles()
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
@@ -484,8 +481,7 @@ object Streams {
   private def filingStreamReplayWith(
       s: SparkSession, d: String, maxFilesPerTrigger: Option[Int]): DataFrame = {
     val staged = graft.sources.FilingIndex.ensureStaged(s, d)
-    val arrivals = graft.TempPaths.scratch(s, "filing_stream") +
-      "/run" + filingStreamRuns.incrementAndGet()
+    val arrivals = graft.TempPaths.runDir(s, "filing_stream")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(arrivals))
     val files = new java.io.File(staged).listFiles()
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
@@ -525,8 +521,6 @@ object Streams {
       .orderBy("form_type")
   }
 
-  private val dsv2StreamRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `e_dsv2_stream_sink` — the CONNECTOR-LAYER exactly-once sink: the
     * events-shaped order slice replayed through the engine's DataSource
     * V2 streaming write ([[graft.sources.FixedWidthV2]] with
@@ -545,8 +539,7 @@ object Streams {
       .as[(Long, String, Double, String)]
       .collect()
       .sortBy(_._1)
-    val target = graft.TempPaths.scratch(s, "dsv2_stream") +
-      "/run" + dsv2StreamRuns.incrementAndGet()
+    val target = graft.TempPaths.runDir(s, "dsv2_stream")
     val in = MemoryStream[(Long, String, Double, String)]
     withReplayShuffle(s) {
       val q = in.toDF()
@@ -1725,8 +1718,6 @@ object Streams {
       .orderBy("batch_no", "rule")
   }
 
-  private val mergeRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `e_stream_merge` — STREAMING CDC APPLY, the unbounded twin of
     * `k_merge_upsert`'s batch MERGE: a Debezium-shape op feed (explicit
     * Insert / Update / Delete codes) lands in micro-batches, and each
@@ -1764,7 +1755,7 @@ object Streams {
             .cast("binary"))).as("digest"))
       .as[(String, Long, String)]
       .collect().sortBy(_._2)
-    val scratch = graft.TempPaths.scratch(s, "stream_merge") + "/run" + mergeRuns.incrementAndGet()
+    val scratch = graft.TempPaths.runDir(s, "stream_merge")
     base.write.mode("overwrite").parquet(s"$scratch/gen_base")
     @volatile var current: String = s"$scratch/gen_base"
     val in = MemoryStream[(String, Long, String)]
@@ -1794,23 +1785,6 @@ object Streams {
     s.read.parquet(current).orderBy("k")
   }
 
-  private val upsertRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** `e_stream_upsert` — keyed LAST-WRITE-WINS upsert through
-    * `foreachBatch`, the remaining production sink shape (memory/parquet
-    * appends are covered elsewhere): each micro-batch MERGES into the
-    * accumulated key→latest table instead of appending — what writing to
-    * any upsert-capable store (Delta MERGE, an RDB, a KV store) looks
-    * like, done here with plain parquet GENERATIONS (read gen N, union
-    * the batch, keep the per-key argmax by (us, event_id), write gen
-    * N+1). The argmax is order-independent, so the result is identical
-    * however events split across micro-batches — no watermark or
-    * event-order contract needed, which is exactly why LWW merge is the
-    * robust sink discipline for out-of-order upserts. State lives in the
-    * STORE (one row per key), not in executors: streaming state here is
-    * zero. */
-  private val idemRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** `e_idempotent_sink` — EXACTLY-ONCE output from an at-least-once
     * sink contract: `foreachBatch` re-runs a batch WITH THE SAME
     * batchId after a crashed commit, so exactly-once output is the
@@ -1827,7 +1801,7 @@ object Streams {
   def idempotentSinkReplay(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val base = graft.TempPaths.scratch(s, "idem_sink") + "/run" + idemRuns.incrementAndGet()
+    val base = graft.TempPaths.runDir(s, "idem_sink")
     val committed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     def commitBatch(df: org.apache.spark.sql.DataFrame, id: Long): Boolean = {
       val dest = java.nio.file.Paths.get(s"$base/out/batch=$id")
@@ -1870,6 +1844,19 @@ object Streams {
       .orderBy("user_id")
   }
 
+  /** `e_stream_upsert` — keyed LAST-WRITE-WINS upsert through
+    * `foreachBatch`, the remaining production sink shape (memory/parquet
+    * appends are covered elsewhere): each micro-batch MERGES into the
+    * accumulated key→latest table instead of appending — what writing to
+    * any upsert-capable store (Delta MERGE, an RDB, a KV store) looks
+    * like, done here with plain parquet GENERATIONS (read gen N, union
+    * the batch, keep the per-key argmax by (us, event_id), write gen
+    * N+1). The argmax is order-independent, so the result is identical
+    * however events split across micro-batches — no watermark or
+    * event-order contract needed, which is exactly why LWW merge is the
+    * robust sink discipline for out-of-order upserts. State lives in the
+    * STORE (one row per key), not in executors: streaming state here is
+    * zero. */
   def streamUpsertReplay(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import s.implicits._
@@ -1879,7 +1866,7 @@ object Streams {
       .as[(Long, Long, Long, Double)]
       .collect()
     // fresh generation chain per invocation: bench runs each replay twice
-    val base = graft.TempPaths.scratch(s, "stream_upsert") + "/run" + upsertRuns.incrementAndGet()
+    val base = graft.TempPaths.runDir(s, "stream_upsert")
     val in = MemoryStream[(Long, Long, Long, Double)]
     @volatile var current: Option[String] = None
     withReplayShuffle(s) {
@@ -1915,8 +1902,6 @@ object Streams {
         col("us").as("last_us"), col("value").as("last_value"))
       .orderBy("user_id")
   }
-
-  private val enrichRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** `e_stream_enrich` — the two STATELESS streaming shapes the stateful
     * five don't cover: a STREAM-STATIC enrichment join (the batch dim is
@@ -2005,7 +1990,7 @@ object Streams {
     val rows = graft.Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"))
       .as[(Long, Long, String)].collect().sortBy(_._1)
-    val base = graft.TempPaths.scratch(s, "stream_enrich") + "/run" + enrichRuns.incrementAndGet()
+    val base = graft.TempPaths.runDir(s, "stream_enrich")
     val in = MemoryStream[(Long, Long, String)]
     withReplayShuffle(s) {
       val q = in.toDS().toDF("event_id", "user_id", "event_type")
@@ -2044,7 +2029,7 @@ object Streams {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val users = graft.Tables.events(s, d).select(col("user_id")).distinct()
-    val base = graft.TempPaths.scratch(s, "stream_enrich_scd") + "/run" + enrichRuns.incrementAndGet()
+    val base = graft.TempPaths.runDir(s, "stream_enrich_scd")
     users.select(col("user_id"), (col("user_id") % 5).as("tier"), lit(1L).as("dim_ver"))
       .write.mode("overwrite").parquet(s"$base/dim/v1")
     users.select(col("user_id"), ((col("user_id") + 1) % 5).as("tier"), lit(2L).as("dim_ver"))

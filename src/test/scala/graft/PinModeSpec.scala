@@ -21,6 +21,22 @@ class PinModeSpec extends AnyFunSuite {
     assert(!QueryDsl.pinReliable("local", isLocalMaster = false))
   }
 
+  test("checkpoint dir: conf wins; a local master falls back to /tmp; a cluster fails fast") {
+    assert(QueryDsl.pinCheckpointDir(isLocalMaster = true, None, None, "app-1")
+      .contains("/tmp/graft_checkpoints/app-1"),
+      "explicit reliable mode on a local master keeps the per-app /tmp default")
+    assert(QueryDsl.pinCheckpointDir(isLocalMaster = false, Some("hdfs:///ck"), None, "app-1")
+      .contains("hdfs:///ck"))
+    assert(QueryDsl.pinCheckpointDir(isLocalMaster = false, None, Some("hdfs:///ctx"), "app-1")
+      .isEmpty, "an existing context checkpoint dir is kept")
+    // auto mode on a cluster pins reliably, and with no shared dir
+    // configured it must refuse rather than write to node-local /tmp
+    assert(QueryDsl.pinReliable("auto", isLocalMaster = false))
+    val e = intercept[IllegalStateException](
+      QueryDsl.pinCheckpointDir(isLocalMaster = false, None, None, "app-1"))
+    assert(e.getMessage.contains("spark.graft.checkpoint.dir"))
+  }
+
   test("reliable pin materializes through the checkpoint dir, rows identical") {
     val s = TestSpark.spark
     val df = s.range(0L, 1000L, 1L, 4).toDF("id")

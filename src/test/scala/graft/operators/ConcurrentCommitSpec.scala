@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
-import graft.operators.Formats.ManifestLog
+import graft.sources.{CommitResult, ManifestLog}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Optimistic-concurrency contract on the manifest log: atomic
@@ -45,7 +45,7 @@ class ConcurrentCommitSpec extends AnyFunSuite {
   test("latched append race: one winner, one clean rebase retry, no lost update") {
     val dir = freshLog("base")
     val ready = new java.util.concurrent.CountDownLatch(2)
-    val results = new java.util.concurrent.ConcurrentHashMap[String, Formats.CommitResult]()
+    val results = new java.util.concurrent.ConcurrentHashMap[String, CommitResult]()
     def appender(name: String) = new Thread(() => {
       // pin both commits to the v1 snapshot: without it the loser's fresh
       // read inside commit() can observe v2 and land cleanly (attempts=2),

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.sources.ManifestLog
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -20,7 +21,7 @@ class DeleteVectorsSpec extends AnyFunSuite {
     val rows = (0L until 200L).map(i => (i, i * 3))
     val fA = write("A", rows.take(100).toDF("id", "v").repartition(3))
     val fB = write("B", rows.drop(100).toDF("id", "v").repartition(3))
-    require(Formats.ManifestLog.publish(base, 1, Seq(fA, fB)))
+    require(ManifestLog.publish(base, 1, Seq(fA, fB)))
     def fp(p: String) = new java.io.File(p).listFiles().toSeq
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       .map(f => (f.getName, f.length(), f.lastModified()))
@@ -32,7 +33,7 @@ class DeleteVectorsSpec extends AnyFunSuite {
         col("_metadata.row_index").as("__dv_pos"), col("id"))
       .filter(col("id") % 7 === 0).drop("id")
       .write.mode("overwrite").parquet(dv)
-    require(Formats.ManifestLog.publish(base, 2, Seq(fA, s"$fB|dv=$dv")))
+    require(ManifestLog.publish(base, 2, Seq(fA, s"$fB|dv=$dv")))
     assert((fp(fA), fp(fB)) == before, "publishing a DV must not touch data files")
     val expect2 = (0L until 200L).filter(i => i < 100 || i % 7 != 0)
     val v2 = Formats.readWithDv(s, base, 2).select("id").as[Long].collect().sorted
@@ -49,8 +50,8 @@ class DeleteVectorsSpec extends AnyFunSuite {
     // compaction folds the bitmap into a clean rewrite; vacuum then GCs
     // the superseded bitmap and the pre-compaction file, nothing else
     val fBc = write("B_compact", Formats.readEntry(s, s"$fB|dv=$dv"))
-    require(Formats.ManifestLog.publish(base, 3, Seq(fA, fBc)))
-    val (dead, droppedVs) = Formats.gcVersions(base, retain = 1)
+    require(ManifestLog.publish(base, 3, Seq(fA, fBc)))
+    val (dead, droppedVs) = ManifestLog.gcVersions(base, retain = 1)
     assert(droppedVs == Seq(1, 2))
     assert(dead.toSet == Set(fB, dv),
       s"vacuum should GC exactly the superseded file + bitmap, got $dead")

@@ -164,4 +164,13 @@ class IvfPqSpec extends AnyFunSuite {
     assert(diverged == 0, s"$diverged staged codes are not the argmin encode")
     assert(staged.count() == expected.count(), "code cardinality mismatch")
   }
+
+  test("probes leave no CacheManager entry behind") {
+    s.catalog.clearCache()
+    val cache = s.sharedState.cacheManager
+    assert(cache.isEmpty)
+    Seq.fill(2)(Similarity.annIvfPq(s, sf).collect())
+    Seq.fill(2)(Similarity.incrementalIvfPq(s, sf).collect())
+    assert(cache.isEmpty, "an IVF-PQ probe left a cached plan in the session's CacheManager")
+  }
 }

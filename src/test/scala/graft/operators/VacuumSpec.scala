@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
+import graft.sources.ManifestLog
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Retention contract: vacuumed history is GONE (a read of a dropped
@@ -21,10 +22,10 @@ class VacuumSpec extends AnyFunSuite {
     val base = graft.TempPaths.scratch(s, "vacuum")
     val run = new java.io.File(base).listFiles().filter(_.getName.startsWith("run"))
       .maxBy(_.getName.stripPrefix("run").toInt).toString
-    intercept[Exception](Formats.ManifestLog.read(run, 1))
-    intercept[Exception](Formats.ManifestLog.read(run, 2))
-    assert(Formats.ManifestLog.read(run, 3).nonEmpty)
-    assert(Formats.ManifestLog.latest(run)._1 == 4)
+    intercept[Exception](ManifestLog.read(run, 1))
+    intercept[Exception](ManifestLog.read(run, 2))
+    assert(ManifestLog.read(run, 3).nonEmpty)
+    assert(ManifestLog.latest(run)._1 == 4)
   }
 
   test("action-log checkpoint reads are deterministic; rewrites preserve rows") {

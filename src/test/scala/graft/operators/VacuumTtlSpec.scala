@@ -3,6 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.sources.ManifestLog
 
 /** Time-based retention on the action log: aged versions below the
   * resolution anchor must FAIL at the manifest layer post-vacuum, while
@@ -23,16 +24,16 @@ class VacuumTtlSpec extends AnyFunSuite {
     // v1/v2 predate the anchor checkpoint: their replay chain is gone —
     // resolution must fail at the manifest (missing commit file)
     Seq(1, 2).foreach { v =>
-      intercept[java.nio.file.NoSuchFileException](Formats.ttlResolve(base, v))
+      intercept[java.nio.file.NoSuchFileException](ManifestLog.resolve(base, v))
     }
     // v3 is the anchor checkpoint itself: resolvable by definition
     // (the checkpoint IS its state), replaying zero actions
-    val (v3files, v3replayed) = Formats.ttlResolve(base, 3)
+    val (v3files, v3replayed) = ManifestLog.resolve(base, 3)
     assert(v3replayed == 0 && v3files.nonEmpty)
     // v4 resolves at the manifest (its commit survives as v5's replay
     // suffix) but its file set references vacuumed data — the honest
     // time-travel-past-retention failure mode
-    val (v4files, _) = Formats.ttlResolve(base, 4)
+    val (v4files, _) = ManifestLog.resolve(base, 4)
     assert(v4files.exists(f => !new java.io.File(f).exists()),
       "v4 should reference at least one vacuumed data file")
     // the anchor checkpoint survived the age cut
