@@ -7,16 +7,11 @@ import java.nio.file.{Files, Paths}
   * the driver's DuckDB compare. Cleans outDir first so a newly-failing
   * query can't be masked by stale parquet from an earlier run. */
 object Verify {
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus, "graft-verify")
-    deleteRecursively(new java.io.File(outDir))
+    TempPaths.deleteRecursively(new java.io.File(outDir))
     new java.io.File(outDir).mkdirs()
     // Local-iteration dial (never set by the driver): regex over query
     // names to dump a subset against tools/check.py while developing.

@@ -822,11 +822,6 @@ object Dedup {
   private[operators] def baseBandsTable(sfDir: String): String =
     ("graft_dedup_base_bands_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   /** Ensures the base-corpus dedup index is staged; returns
     * (sigsPath, bandsPath). One signature pass over the base (pinned)
     * feeds both halves: a plain parquet (doc_id, sig) table for scoring
@@ -848,7 +843,7 @@ object Dedup {
       // bucketed external table: DROP forgets metadata only, so clear any
       // half-built files by hand first (the ensureAnnStaged pattern)
       s.sql(s"DROP TABLE IF EXISTS $table")
-      deleteRecursively(new java.io.File(bandsPath))
+      graft.TempPaths.deleteRecursively(new java.io.File(bandsPath))
       bandsFrom(baseSig).write
         .bucketBy(BaseBandBuckets, "band", "bkey").sortBy("band", "bkey")
         .option("path", bandsPath)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Tables, TempPaths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -8,16 +8,27 @@ import org.apache.spark.sql.functions._
 /** Similarity search over the `embeddings` table (64-dim float vectors) —
   * the north-star ANN family (BASELINE.md).
   *
-  * Scale design:
-  *   - The query set is small and BROADCAST; the corpus is scanned once.
-  *     No shuffle of the corpus for scoring.
-  *   - Exact top-k uses a two-phase window (per-salt partial top-k, then
-  *     global top-k over ≤ salts×k survivors) so no single reducer ever
-  *     sees the whole corpus — the window-partition skew a naive
-  *     `row_number over (partition by q_id)` would create at 100 TB.
-  *   - The ANN path is IVF: per-label centroids (the label column is the
-  *     coarse quantizer), probe the 2 nearest centroids, exact re-rank
-  *     only within probed partitions — corpus touched ∝ nprobe/nlist.
+  * Every ANN variant is CANDIDATES, THEN EXACT REFINE. A variant decides
+  * only how it finds candidate (query, vector) pairs — IVF lists, LSH
+  * buckets, PQ/ADC codes, an NSW beam, an int8 scan — and the rest is one
+  * shared core:
+  *   - [[refine]] / [[refineCandidates]]: attach the raw vectors, score
+  *     the exact cosine, keep rank ≤ k per query with the
+  *     (cosine desc, vec_id asc) tie-break — the one result-list contract;
+  *   - [[probe]]: the IVF coarse quantizer step, each query's NProbe
+  *     nearest centroids by cosine (label asc on ties); corpus touched
+  *     ∝ nprobe/nlist;
+  *   - [[saltedTopK]]: exact top-k over a scan-sized scored set in two
+  *     phases (per-salt partial top-k, then global top-k over ≤ salts×k
+  *     survivors) so no single reducer ever sees the whole corpus — the
+  *     window-partition skew a naive `row_number over (partition by q_id)`
+  *     would create at 100 TB;
+  *   - [[stage]]: build-once index staging, fingerprinted on the corpus
+  *     parquet (graft.Staging) — probes read the index, never rebuild it;
+  *   - [[lloyd]]: the integer Lloyd's loop behind both trained quantizers.
+  * The query set is small and BROADCAST; the corpus is scanned once per
+  * refine. Variants are plain functions: no caller picks an index at
+  * run time.
   *
   * Cross-engine determinism: every dot product is a sequential left fold
   * over index-ordered double products (Spark `aggregate`, DuckDB
@@ -52,6 +63,103 @@ object Similarity {
     emb(s, d).filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
 
+  // ---- The probe→refine core (see the object comment). ----
+
+  /** Keeps rank ≤ k within each `keys` group, ranked (cosine desc,
+    * vec_id asc) into column `rank`. */
+  private def topKBy(scored: DataFrame, k: Int, keys: String*): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
+
+  /** [[topKBy]] over a scan-sized scored set: a per-salt partial top-k
+    * first, so the global window sees ≤ Salts×k rows per group. */
+  private def saltedTopK(scored: DataFrame, k: Int, keys: String*): DataFrame = {
+    val w1 = Window.partitionBy(keys.map(col) :+ pmod(col("vec_id"), lit(Salts)): _*)
+      .orderBy(col("cosine").desc, col("vec_id").asc)
+    topKBy(scored.withColumn("r1", row_number().over(w1)).filter(col("r1") <= k), k, keys: _*)
+  }
+
+  /** The exact score of rows carrying (q_id, vec_id, embedding, q_emb);
+    * `carry` columns ride along. */
+  private def scoreExact(rows: DataFrame, carry: String*): DataFrame =
+    rows.select((carry ++ Seq("q_id", "vec_id")).map(col) :+
+      cosineF(col("embedding"), col("q_emb")).as("cosine"): _*)
+
+  private def asResults(ranked: DataFrame): DataFrame =
+    ranked.select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
+      .orderBy("q_id", "rank")
+
+  /** The exact refine every ANN leg ends in: score `rows` (q_id, vec_id,
+    * embedding, q_emb; self-matches already dropped), keep the rows
+    * passing `keep`, rank ≤ k per query. */
+  private def refine(rows: DataFrame, k: Int = K, keep: Column = lit(true)): DataFrame =
+    asResults(topKBy(scoreExact(rows).filter(keep), k, "q_id"))
+
+  /** [[refine]] over candidate (q_id, vec_id) pairs: one corpus scan
+    * attaches the vectors, the broadcast queries theirs. The candidate
+    * join carries no hint: the pairs are small, so the planner
+    * broadcasts them (statically or through AQE), and a forced broadcast
+    * measured one more Spark job per probe on the PQ-refine and IVF-PQ
+    * paths, whose pairs come out of a window. */
+  private def refineCandidates(s: SparkSession, d: String, cand: DataFrame,
+      k: Int = K, keep: Column = lit(true)): DataFrame =
+    refine(emb(s, d).select(col("vec_id"), col("embedding"))
+      .join(cand.filter(col("vec_id") =!= col("q_id")), "vec_id")
+      .join(broadcast(queriesDf(s, d)), "q_id"), k, keep)
+
+  /** The `n` nearest centroids by cosine (label asc on ties) for each
+    * `id` row of `rows`, scoring its vector column `v`; rank in `pr`.
+    * Shared by the query probe and the ingest assignment. */
+  private def nearestCentroids(rows: DataFrame, id: String, v: String,
+      cents: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(col(id)).orderBy(col("c_cos").desc, col("c_label").asc)
+    rows.crossJoin(broadcast(cents))
+      .withColumn("c_cos", cosine(col(v), col("centroid")))
+      .withColumn("pr", row_number().over(w)).filter(col("pr") <= n)
+  }
+
+  /** The coarse probe: each query's `n` nearest centroids, as rows
+    * (q_id, q_emb, c_label, centroid, c_cos, pr). */
+  private def probe(s: SparkSession, d: String, cents: DataFrame, n: Int = NProbe): DataFrame =
+    nearestCentroids(queriesDf(s, d), "q_id", "q_emb", cents, n)
+
+  /** Each query paired with the postings (vec_id, embedding, c_label) of
+    * its probed lists; self-matches dropped. Like the candidate join, the
+    * queries × NProbe probed rows are left to the planner to broadcast. */
+  private def inProbedLists(postings: DataFrame, probed: DataFrame): DataFrame =
+    postings.join(probed, "c_label").filter(col("vec_id") =!= col("q_id"))
+
+  /** IVF: probe `cents`, exact refine within the probed lists only. */
+  private def ivfProbe(s: SparkSession, d: String,
+      cents: DataFrame, postings: DataFrame): DataFrame =
+    refine(inProbedLists(postings, probe(s, d, cents)))
+
+  /** The corpus as IVF postings: its label column is the list. */
+  private def corpusPostings(s: SparkSession, d: String): DataFrame =
+    emb(s, d).select(col("vec_id"), col("embedding"), col("label").as("c_label"))
+
+  private def stageDir(name: String, sfDir: String): String =
+    s"/tmp/graft_stage/${name}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** Build-once staging of one index under the stage dir `name`
+    * (graft.Staging: fingerprinted marker, cross-process lock, atomic
+    * publish), fingerprinted on the corpus parquet, so a regenerated
+    * fixture rebuilds it. `build` writes the `parts` paths under the dir;
+    * `builds` counts the builds that ran (the specs' build-once
+    * evidence). Returns the part paths. The Staging marker fingerprints
+    * only the SOURCES, so every constant a build depends on is spelled in
+    * `name`: a changed constant can never reuse a stale index. */
+  private def stage(d: String, name: String, builds: java.util.concurrent.atomic.AtomicInteger,
+      parts: String*)(build: Seq[String] => Unit): Seq[String] = {
+    val dir = stageDir(name, d)
+    val paths = parts.map(p => s"$dir/$p")
+    if (graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet"))(build(paths)))
+      builds.incrementAndGet(): Unit
+    paths
+  }
+
   /** Exact cosine top-k per query: broadcast queries, one corpus scan,
     * two-phase windowed top-k. */
   def cosineTopK(s: SparkSession, d: String): DataFrame =
@@ -61,22 +169,10 @@ object Similarity {
     * the `v_cosine_topk` query; the deeper instance feeds the staged
     * ground-truth table so recall overlays can grade at K > the serving
     * depth. */
-  private[operators] def cosineTopKAt(s: SparkSession, d: String, k: Int): DataFrame = {
-    val scored = emb(s, d)
+  private[operators] def cosineTopKAt(s: SparkSession, d: String, k: Int): DataFrame =
+    asResults(saltedTopK(scoreExact(emb(s, d)
       .crossJoin(broadcast(queriesDf(s, d)))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-    val w1 = Window.partitionBy(col("q_id"), pmod(col("vec_id"), lit(Salts)))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val w2 = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    scored
-      .withColumn("r1", row_number().over(w1)).filter(col("r1") <= k)
-      .withColumn("rank", row_number().over(w2)).filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
-  }
+      .filter(col("vec_id") =!= col("q_id"))), k, "q_id"))
 
   // ---- Staged exact ground truth for the eval harnesses. The exact
   // top-K table is a pure function of the corpus (one fixed probe set,
@@ -84,10 +180,9 @@ object Similarity {
   // (recall@K, MRR, the nprobe sweep) re-ran the O(corpus × queries)
   // brute-force scan PER METHOD LEG — the cost of adding an 8th ANN
   // method grew with the exact recompute, not with the method. Stage it
-  // once per corpus fingerprint (graft.Staging, the postings-index
-  // pattern) and every harness reads a K×queries-row parquet instead.
-  // Longs round-trip parquet exactly; the cosine column is staged but
-  // the overlays join on (q_id, vec_id) only — hashes unchanged. ----
+  // once per corpus fingerprint and every harness reads a K×queries-row
+  // parquet instead. Longs round-trip parquet exactly; the cosine column
+  // is staged but the overlays join on (q_id, vec_id) only. ----
 
   private[operators] val annTruthBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
@@ -100,18 +195,10 @@ object Similarity {
     * bit-identical to a depth-K build. */
   private[operators] val AnnTruthDepth = 25
 
-  // k25 = truth-depth constant baked into the dir name (stage-dir discipline)
-  def annTruthStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/anntruth_k${AnnTruthDepth}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  def ensureAnnTruthStaged(s: SparkSession, d: String): String = {
-    val dir = annTruthStageDir(d)
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      annTruthBuildCount.incrementAndGet()
-      cosineTopKAt(s, d, AnnTruthDepth).write.mode("overwrite").parquet(dir + "/topk")
-    }: Unit
-    dir + "/topk"
-  }
+  def ensureAnnTruthStaged(s: SparkSession, d: String): String =
+    stage(d, s"anntruth_k$AnnTruthDepth", annTruthBuildCount, "topk") { ps =>
+      cosineTopKAt(s, d, AnnTruthDepth).write.mode("overwrite").parquet(ps.head)
+    }.head
 
   /** The full depth-[[AnnTruthDepth]] truth table (q_id, rank, vec_id, cosine). */
   private[operators] def stagedExactTopKDeep(s: SparkSession, d: String): DataFrame =
@@ -120,44 +207,61 @@ object Similarity {
   private[operators] def stagedExactTopK(s: SparkSession, d: String): DataFrame =
     stagedExactTopKDeep(s, d).filter(col("rank") <= K)
 
+  /** The true top-k (q_id, vec_id) pairs an overlay grades against. */
+  private def truthAt(s: SparkSession, d: String, k: Int): DataFrame =
+    stagedExactTopKDeep(s, d).filter(col("rank") <= k).select(col("q_id"), col("vec_id"))
+
   // The per-METHOD result tables are pure corpus functions too: an eval
   // harness runs each ANN method once and grades the stored results —
   // it never re-runs the methods per overlay (recall and MRR grading
   // the same run is precisely what makes their numbers comparable).
-  // Staged the same way; each method's own bench query still measures
-  // the live probe. Adding an 8th method = one more union leg here, at
-  // its own cost, with ZERO added cost in the overlays.
+  // Each method's own bench query still measures the live probe. Adding
+  // a method = one more entry in [[evalProbes]], at its own cost, with
+  // ZERO added cost in the overlays.
 
   private[operators] val annEvalBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private[operators] val evalMethods = Seq(
-    "ivf", "ivf_kmeans", "ivfpq", "lsh", "nsw", "pq", "pq_kmeans", "quant")
+  /** The graded methods, in method order, each with its probe. */
+  private val evalProbes: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
+    "ivf" -> (annIvf _), "ivf_kmeans" -> (annIvfTrained _), "ivfpq" -> (annIvfPq _),
+    "lsh" -> (annLsh _), "nsw" -> (annNsw _), "pq" -> (annPq _),
+    "pq_kmeans" -> (annPqTrained _), "quant" -> (annQuantized _))
+
+  private[operators] val evalMethods = evalProbes.map(_._1)
 
   // v2 = ivfpq joined the method set; v3 = the nsw probe gained its
   // layer-2 entry (staged rows are a function of each method's probe
   // DEFINITION, so a probe change must version the dir)
-  def annEvalStageDir(sfDir: String): String =
-    "/tmp/graft_stage/anneval_v3_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  def ensureAnnEvalStaged(s: SparkSession, d: String): String = {
-    val dir = annEvalStageDir(d)
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      annEvalBuildCount.incrementAndGet()
-      val legs = Map[String, DataFrame](
-        "ivf" -> annIvf(s, d), "ivf_kmeans" -> annIvfTrained(s, d),
-        "ivfpq" -> annIvfPq(s, d),
-        "lsh" -> annLsh(s, d), "nsw" -> annNsw(s, d), "pq" -> annPq(s, d),
-        "pq_kmeans" -> annPqTrained(s, d), "quant" -> annQuantized(s, d))
-      evalMethods.map(m => legs(m)
-          .select(lit(m).as("method"), col("q_id"), col("rank"), col("vec_id")))
-        .reduce(_.unionByName(_))
-        .write.mode("overwrite").parquet(dir + "/results")
-    }: Unit
-    dir + "/results"
-  }
+  def ensureAnnEvalStaged(s: SparkSession, d: String): String =
+    stage(d, "anneval_v3", annEvalBuildCount, "results") { ps =>
+      evalProbes.map { case (m, run) =>
+        run(s, d).select(lit(m).as("method"), col("q_id"), col("rank"), col("vec_id"))
+      }.reduce(_.unionByName(_))
+        .write.mode("overwrite").parquet(ps.head)
+    }.head
 
   private[operators] def stagedEvalResults(s: SparkSession, d: String): DataFrame =
     s.read.parquet(ensureAnnEvalStaged(s, d))
+
+  /** Recall of ranked lists `res` (q_id, vec_id, plus the leg column of
+    * the one-column `legs`) against `truth`: per (leg, query) the hit
+    * count and hits / k. Every (leg, query) pair is kept through the left
+    * join — a harness that silently drops 0-hit queries overstates
+    * recall. */
+  private def recallOf(res: DataFrame, truth: DataFrame, legs: DataFrame, k: Int): DataFrame = {
+    val leg = legs.columns.head
+    val hits = res.join(truth, Seq("q_id", "vec_id"))
+      .groupBy(col(leg), col("q_id")).agg(count(lit(1)).as("n_hit"))
+    legs.crossJoin(truth.select(col("q_id")).distinct())
+      .join(hits, Seq(leg, "q_id"), "left")
+      .select(col(leg), col("q_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
+      .withColumn("recall", col("n_hit").cast("double") / lit(k.toDouble))
+  }
+
+  private def methodsDf(s: SparkSession): DataFrame = {
+    import s.implicits._
+    evalMethods.toDF("method")
+  }
 
   private[operators] val Dim = 64
   private[operators] val CentroidScale = 1e6
@@ -181,17 +285,20 @@ object Similarity {
   def centroidArrays(s: SparkSession, d: String): DataFrame =
     centroidArraysOf(emb(s, d))
 
-  private def centroidArraysOf(vecs: DataFrame): DataFrame = {
-    val sums = (0 until Dim).map(i =>
-      sum(floor(col("embedding").getItem(i).cast("double") * lit(CentroidScale))).as(s"s$i"))
-    vecs
-      .groupBy(col("label"))
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("label").as("c_label"),
-        array((0 until Dim).map(i =>
-          col(s"s$i").cast("double") / (col("n").cast("double") * lit(CentroidScale))): _*)
-          .as("centroid"))
-  }
+  private def centroidArraysOf(vecs: DataFrame): DataFrame =
+    vecs.groupBy(col("label"))
+      .agg(count(lit(1)).as("n"), scaledSums(i => col("embedding").getItem(i).cast("double")): _*)
+      .select(col("label").as("c_label"), scaledMean.as("centroid"))
+
+  /** The per-dimension sums s0..s63 of `component(i)` mapped to
+    * `floor(v * 1e6)` longs — exact and order-independent; aggregate them
+    * next to `count(lit(1)).as("n")` and divide once with [[scaledMean]]. */
+  private def scaledSums(component: Int => Column): Seq[Column] =
+    (0 until Dim).map(i => sum(floor(component(i) * lit(CentroidScale))).as(s"s$i"))
+
+  private def scaledMean: Column =
+    array((0 until Dim).map(i =>
+      col(s"s$i").cast("double") / (col("n").cast("double") * lit(CentroidScale))): _*)
 
   // ---- ANN index staging: build once per corpus, probe many times. ----
   // A real ANN service amortizes the index build (centroid training, band
@@ -202,11 +309,8 @@ object Similarity {
   //   centroids/  (c_label, centroid)   — the IVF coarse quantizer
   //   bands/      (vec_id, band, bkey)  — the SRP band keys of every
   //                                        corpus vector (LshBands × n rows)
-  // Persisted once per sf dir (marker file, same pattern as
-  // DocStage.ensureStaged) so every later query — and every later JVM —
-  // starts from a scan of the index, never from the embeddings
-  // aggregation. Parquet round-trips doubles and longs bit-exactly, so the
-  // staged path is hash-identical to the inline build (oracle unchanged).
+  // Parquet round-trips doubles and longs bit-exactly, so the staged path
+  // is hash-identical to the inline build (oracle unchanged).
   //
   // The bands table is written BUCKETED by (band, bkey) — the probe-join
   // key — so repeated probe joins (and band-bucket self-joins) start
@@ -227,8 +331,7 @@ object Similarity {
   // "ann2": the v2 layout (bucketed bands). The bumped prefix makes a
   // stale v1 staging (plain parquet, non-bucket file names) invisible —
   // registering bucket metadata over non-bucketed files would fail reads.
-  def annStageDir(sfDir: String): String =
-    "/tmp/graft_stage/ann2_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def annStageDir(sfDir: String): String = stageDir("ann2", sfDir)
 
   private[operators] def annBandsTable(sfDir: String): String =
     ("graft_ann_bands_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
@@ -245,24 +348,19 @@ object Similarity {
     * queries AND across JVM runs (marker file); SimilaritySpec asserts the
     * second call is a no-op and that probe plans scan the staged parquet. */
   def ensureAnnStaged(s: SparkSession, d: String): (String, String) = {
-    val dir = annStageDir(d)
-    val centroidsPath = dir + "/centroids"
-    val bandsPath = dir + "/bands"
     val bandsTable = annBandsTable(d)
-    // fingerprinted marker + atomic publish + cross-process lock
-    // (graft.Staging): a regenerated embeddings fixture rebuilds the index
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      annBuildCount.incrementAndGet()
-      centroidArrays(s, d).write.mode("overwrite").parquet(centroidsPath)
-      // bucketed external table: DROP forgets metadata only (external
-      // location), so clear any half-built files by hand first
-      s.sql(s"DROP TABLE IF EXISTS $bandsTable")
-      deleteRecursively(new java.io.File(bandsPath))
-      corpusBandsInline(s, d).write
-        .bucketBy(BandBuckets, "band", "bkey").sortBy("band", "bkey")
-        .option("path", bandsPath)
-        .saveAsTable(bandsTable)
-    }: Unit
+    val Seq(centroidsPath, bandsPath) =
+      stage(d, "ann2", annBuildCount, "centroids", "bands") { case Seq(centroidsPath, bandsPath) =>
+        centroidArrays(s, d).write.mode("overwrite").parquet(centroidsPath)
+        // bucketed external table: DROP forgets metadata only (external
+        // location), so clear any half-built files by hand first
+        s.sql(s"DROP TABLE IF EXISTS $bandsTable")
+        TempPaths.deleteRecursively(new java.io.File(bandsPath))
+        corpusBandsInline(s, d).write
+          .bucketBy(BandBuckets, "band", "bkey").sortBy("band", "bkey")
+          .option("path", bandsPath)
+          .saveAsTable(bandsTable)
+      }
     // marker present but table unknown = a fresh JVM over a prior JVM's
     // staging: restore the bucket metadata over the existing files
     if (!s.catalog.tableExists(bandsTable)) synchronized {
@@ -275,11 +373,6 @@ object Similarity {
       }
     }
     (centroidsPath, bandsPath)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   private[operators] def stagedCentroids(s: SparkSession, d: String): DataFrame =
@@ -304,26 +397,8 @@ object Similarity {
   /** The IVF probe with a candidate predicate applied at the POSTING
     * level (shared by [[annIvf]] — predicate `true` — and
     * [[annFiltered]]). */
-  private def annIvfWith(s: SparkSession, d: String, cand: Column): DataFrame = {
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_label").asc)
-    val probed = queriesDf(s, d)
-      .crossJoin(broadcast(stagedCentroids(s, d)))
-      .select(col("q_id"), col("q_emb"), col("c_label"),
-        cosine(col("q_emb"), col("centroid")).as("c_cos"))
-      .withColumn("pr", row_number().over(probeW)).filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("q_emb"), col("c_label"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    probed
-      .join(emb(s, d).filter(cand),
-        col("label") === col("c_label") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
-  }
+  private def annIvfWith(s: SparkSession, d: String, cand: Column): DataFrame =
+    ivfProbe(s, d, stagedCentroids(s, d), corpusPostings(s, d).filter(cand))
 
   /** `v_ann_filtered` — FILTERED vector search (the predicate+ANN hybrid
     * every vector store ships: "nearest documents WHERE lang = en"): the
@@ -363,7 +438,7 @@ object Similarity {
     require(stillThere > 0,
       "staged postings no longer contain tombstoned ids — index was rewritten")
     val live = staged.join(broadcast(tombs), Seq("vec_id"), "left_anti")
-    incAnnProbe(s, d, s.read.parquet(cPath), live)
+    ivfProbe(s, d, s.read.parquet(cPath), live)
   }
 
   // ---- LSH-bucketed ANN: signed random projections (SRP / SimHash for
@@ -438,11 +513,6 @@ object Similarity {
       .orderBy("a", "b")
   }
 
-  /** LSH ANN: candidates ONLY from (band, bkey) equi-buckets — corpus
-    * touched ∝ bucket collision rate, never all-pairs — then exact
-    * re-rank. Query side is broadcast twice (band probe + re-rank); the
-    * only corpus shuffles are the candidate distinct and the vec_id
-    * fetch join. */
   /** Candidate (q_id, vec_id) pairs from shared (band, bkey) buckets —
     * ONE definition, used by both the query and the pruning spec, so the
     * spec always measures the pipeline the query actually runs. */
@@ -457,19 +527,11 @@ object Similarity {
       .select("q_id", "vec_id").distinct()
   }
 
-  def annLsh(s: SparkSession, d: String): DataFrame = {
-    val cand = lshCandidates(s, d)
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    emb(s, d).select(col("vec_id"), col("embedding"))
-      .join(broadcast(cand), "vec_id") // candidates ≪ corpus: never shuffle the corpus
-      .join(broadcast(queriesDf(s, d)), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
-  }
+  /** LSH ANN: candidates ONLY from (band, bkey) equi-buckets — corpus
+    * touched ∝ bucket collision rate, never all-pairs — then exact
+    * re-rank. */
+  def annLsh(s: SparkSession, d: String): DataFrame =
+    refineCandidates(s, d, lshCandidates(s, d))
 
   /** Exposed for SimilaritySpec's pruning assertion. */
   private[operators] def lshCandidateCount(s: SparkSession, d: String): Long =
@@ -482,23 +544,13 @@ object Similarity {
     * harness itself is one O(methods × queries × K) join over two small
     * parquet tables — at any corpus size the expensive work happens once
     * in the stagers, and grading never touches the corpus; adding a
-    * method adds nothing to this overlay's cost. 0-hit queries are kept
-    * via the left join (a recall harness that silently drops them
-    * overstates recall). */
-  def annRecall(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val exact = stagedExactTopK(s, d).select(col("q_id"), col("vec_id"))
-    val qs = exact.select(col("q_id")).distinct()
-    val hits = stagedEvalResults(s, d)
-      .join(exact, Seq("q_id", "vec_id"))
-      .groupBy(col("method"), col("q_id")).agg(count(lit(1)).as("n_hit"))
-    evalMethods.toDF("method").crossJoin(qs)
-      .join(hits, Seq("method", "q_id"), "left")
-      .select(col("method"), col("q_id"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-      .withColumn("recall", col("n_hit").cast("double") / lit(K.toDouble))
-      .orderBy("method", "q_id")
-  }
+    * method adds nothing to this overlay's cost. The k = [[K]] leg of
+    * [[annRecallAtK]]. */
+  def annRecall(s: SparkSession, d: String): DataFrame =
+    recallAt(s, d, K).orderBy("method", "q_id")
+
+  private def recallAt(s: SparkSession, d: String, k: Int): DataFrame =
+    recallOf(stagedEvalResults(s, d), truthAt(s, d, k), methodsDf(s), k)
 
   private val IvfSweep = Seq(1, 2, 4, 10)
 
@@ -522,36 +574,15 @@ object Similarity {
     * recall overlay joins two O(queries × K) sets. */
   def ivfSweep(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val exact = stagedExactTopK(s, d).select(col("q_id"), col("vec_id"))
-    val qs = exact.select(col("q_id")).distinct()
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_label").asc)
-    val probed = queriesDf(s, d)
-      .crossJoin(broadcast(stagedCentroids(s, d)))
-      .select(col("q_id"), col("q_emb"), col("c_label"),
-        cosine(col("q_emb"), col("centroid")).as("c_cos"))
-      .withColumn("pr", row_number().over(probeW))
-      .filter(col("pr") <= IvfSweep.max)
-    val scored = probed
-      .join(emb(s, d), col("label") === col("c_label") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("pr"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
+    val scored = scoreExact(inProbedLists(corpusPostings(s, d),
+      probe(s, d, stagedCentroids(s, d), IvfSweep.max)), "pr")
     val legs = IvfSweep.toDF("nprobe")
     val cand = scored.crossJoin(broadcast(legs)).filter(col("pr") <= col("nprobe"))
-    val rankW = Window.partitionBy(col("nprobe"), col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val topk = cand
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
     val nCand = cand.groupBy(col("nprobe"), col("q_id")).agg(count(lit(1)).as("n_cand"))
-    val hits = topk.join(exact, Seq("q_id", "vec_id"))
-      .groupBy(col("nprobe"), col("q_id")).agg(count(lit(1)).as("n_hit"))
-    legs.crossJoin(qs)
+    recallOf(topKBy(cand, K, "nprobe", "q_id"), truthAt(s, d, K), legs, K)
       .join(nCand, Seq("nprobe", "q_id"), "left")
-      .join(hits, Seq("nprobe", "q_id"), "left")
       .select(col("nprobe"), col("q_id"),
-        coalesce(col("n_cand"), lit(0L)).as("n_cand"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-      .withColumn("recall", col("n_hit").cast("double") / lit(K.toDouble))
+        coalesce(col("n_cand"), lit(0L)).as("n_cand"), col("n_hit"), col("recall"))
       .orderBy("nprobe", "q_id")
   }
 
@@ -647,13 +678,10 @@ object Similarity {
     *
     * Scale shape: ONE corpus scan scores all four widths (the prefix
     * cosines ride the same crossJoin row and explode 4×), then the
-    * [[cosineTopK]] two-phase salted top-K per (width, query) — no
-    * reducer holds a corpus partition; the recall overlay joins two
-    * O(queries × K) sets. Zero-hit queries kept via the left join. */
+    * [[saltedTopK]] per (width, query) — no reducer holds a corpus
+    * partition; the recall overlay joins two O(queries × K) sets. */
   def matryoshka(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val exact = stagedExactTopK(s, d).select(col("q_id"), col("vec_id"))
-    val qs = exact.select(col("q_id")).distinct()
     val scored = emb(s, d)
       .crossJoin(broadcast(queriesDf(s, d)))
       .filter(col("vec_id") =!= col("q_id"))
@@ -664,20 +692,9 @@ object Similarity {
               .as("cosine"))): _*)).as("e"))
       .select(col("q_id"), col("vec_id"),
         col("e.dims").as("dims"), col("e.cosine").as("cosine"))
-    val w1 = Window.partitionBy(col("dims"), col("q_id"), pmod(col("vec_id"), lit(Salts)))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val w2 = Window.partitionBy(col("dims"), col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val topk = scored
-      .withColumn("r1", row_number().over(w1)).filter(col("r1") <= K)
-      .withColumn("rank", row_number().over(w2)).filter(col("rank") <= K)
+    val topk = saltedTopK(scored, K, "dims", "q_id")
       .select(col("dims"), col("q_id"), col("vec_id"))
-    val hits = topk.join(exact, Seq("q_id", "vec_id"))
-      .groupBy(col("dims"), col("q_id")).agg(count(lit(1)).as("n_hit"))
-    MrlDims.toDF("dims").crossJoin(qs)
-      .join(hits, Seq("dims", "q_id"), "left")
-      .select(col("dims"), col("q_id"), coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-      .withColumn("recall", col("n_hit").cast("double") / lit(K.toDouble))
+    recallOf(topk, truthAt(s, d, K), MrlDims.toDF("dims"), K)
       .orderBy("dims", "q_id")
   }
 
@@ -707,33 +724,14 @@ object Similarity {
     val matching = Tables.documents(s, d)
       .filter(array_contains(split(col("text"), " "), HybridKeyword))
       .select(col("doc_id").as("vec_id"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    emb(s, d)
+    refine(emb(s, d)
       .join(matching, "vec_id") // keyword-pruned corpus: rerank postings only
       .crossJoin(broadcast(queriesDf(s, d)))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
+      .filter(col("vec_id") =!= col("q_id")))
   }
 
-  def hardNegatives(s: SparkSession, d: String): DataFrame = {
-    val cand = lshCandidates(s, d)
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    emb(s, d).select(col("vec_id"), col("embedding"))
-      .join(broadcast(cand), "vec_id")
-      .join(broadcast(queriesDf(s, d)), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .filter(col("cosine") < HardNegCut)
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= HardNegK)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
-  }
+  def hardNegatives(s: SparkSession, d: String): DataFrame =
+    refineCandidates(s, d, lshCandidates(s, d), HardNegK, col("cosine") < HardNegCut)
 
   // ---- Int8-quantized ANN: scalar quantization (per-vector max-abs
   // scale, 127 levels) shrinks the scored representation 4× — the
@@ -764,9 +762,8 @@ object Similarity {
         x => floor(x.cast("double") / sc * 127).cast("float")).as("qemb"))
   }
 
-  /** Quantized brute-force top-`QCand` per query (the cheap int8 scan),
-    * then exact float re-rank to top-K. Same two-phase salted window as
-    * [[cosineTopK]] so no reducer ever holds a full corpus partition. */
+  /** Quantized brute-force top-`QCand` per query (the cheap int8 scan,
+    * through [[saltedTopK]]), then the exact float refine to top-K. */
   def annQuantized(s: SparkSession, d: String): DataFrame = {
     val q = quantized(s, d)
     val qQueries = q.filter(col("vec_id") < 8)
@@ -774,25 +771,9 @@ object Similarity {
     val scored = q.crossJoin(broadcast(qQueries))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"),
-        cosineF(col("qemb"), col("q_qemb")).as("qcos"))
-    val w1 = Window.partitionBy(col("q_id"), pmod(col("vec_id"), lit(Salts)))
-      .orderBy(col("qcos").desc, col("vec_id").asc)
-    val w2 = Window.partitionBy(col("q_id"))
-      .orderBy(col("qcos").desc, col("vec_id").asc)
-    val cand = scored
-      .withColumn("r1", row_number().over(w1)).filter(col("r1") <= QCand)
-      .withColumn("r2", row_number().over(w2)).filter(col("r2") <= QCand)
-      .select(col("q_id"), col("vec_id"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    emb(s, d).select(col("vec_id"), col("embedding"))
-      .join(broadcast(cand), "vec_id") // rerank pool ≪ corpus: never shuffle the corpus
-      .join(broadcast(queriesDf(s, d)), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
+        cosineF(col("qemb"), col("q_qemb")).as("cosine"))
+    refineCandidates(s, d,
+      saltedTopK(scored, QCand, "q_id").select(col("q_id"), col("vec_id")))
   }
 
   /** POISONED-corpus band keys: the NaN/Inf/null gate query. Derives a
@@ -881,37 +862,56 @@ object Similarity {
       dv * dv
     }.reduce(_ + _)
 
-  private def subDists(v: Column): Column = explode(array((0 until PqSub).map(m =>
-    struct(lit(m).as("m"), subL2(m, v, col("centroid")).as("dist"))): _*))
+  /** Per-subspace distances of vector `v` to codeword `cw`, one row per
+    * subspace (m, dist). */
+  private def subDists(v: Column, cw: Column): Column =
+    explode(array((0 until PqSub).map(m =>
+      struct(lit(m).as("m"), subL2(m, v, cw).as("dist"))): _*))
 
-  /** ENCODE: nearest codeword per (vector, subspace); ties on label asc.
-    * One corpus × broadcast-codebook pass — the build-time cost the
-    * staged table amortizes across probes. */
-  private[operators] def pqCodesInline(s: SparkSession, d: String): DataFrame = {
+  /** PQ ENCODE: per (vector, subspace) the nearest codeword of the
+    * broadcast `book` (codeword id column `id`, vector `cw`) to the
+    * vector column `v`, ties on id asc; rows (vec_id, m, code, carry…).
+    * One vectors × broadcast-codebook pass. */
+  private def encodePq(vecs: DataFrame, v: String, book: DataFrame, id: String, cw: String,
+      carry: String*): DataFrame = {
     val codeW = Window.partitionBy(col("vec_id"), col("m"))
-      .orderBy(col("dist").asc, col("c_label").asc)
-    emb(s, d).filter(col("embedding").isNotNull)
-      .crossJoin(broadcast(stagedCentroids(s, d)))
-      .select(col("vec_id"), col("c_label"), subDists(col("embedding")).as("sd"))
-      .select(col("vec_id"), col("c_label"), col("sd.m").as("m"), col("sd.dist").as("dist"))
+      .orderBy(col("dist").asc, col(id).asc)
+    val keep = (Seq("vec_id", id) ++ carry).map(col)
+    vecs.crossJoin(broadcast(book))
+      .select(keep :+ subDists(col(v), col(cw)).as("sd"): _*)
+      .select(keep ++ Seq(col("sd.m").as("m"), col("sd.dist").as("dist")): _*)
       .withColumn("rn", row_number().over(codeW)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("m"), col("c_label").as("code"))
+      .select(Seq(col("vec_id"), col("m"), col(id).as("code")) ++ carry.map(col): _*)
   }
 
-  def pqStageDir(sfDir: String): String =
-    "/tmp/graft_stage/pqcodes_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  /** The label-codebook encode of the corpus — the build-time cost the
+    * staged table amortizes across probes. */
+  private[operators] def pqCodesInline(s: SparkSession, d: String): DataFrame =
+    encodePq(emb(s, d).filter(col("embedding").isNotNull), "embedding",
+      stagedCentroids(s, d), "c_label", "centroid")
 
   private[operators] val pqBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The staged code table IS the compressed index: PqSub codes per
-    * vector, no floats — built once per sf dir (Staging marker). */
-  private[operators] def stagedPqCodes(s: SparkSession, d: String): DataFrame = {
-    val dir = pqStageDir(d)
-    val built = graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      pqCodesInline(s, d).write.mode("overwrite").parquet(dir + "/codes")
-    }
-    if (built) pqBuildCount.incrementAndGet()
-    s.read.parquet(dir + "/codes")
+    * vector, no floats — built once per sf dir. */
+  private[operators] def stagedPqCodes(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(stage(d, "pqcodes", pqBuildCount, "codes") { ps =>
+      pqCodesInline(s, d).write.mode("overwrite").parquet(ps.head)
+    }.head)
+
+  /** ADC ranking: code rows joined to the broadcast query LUT
+    * (q_id, lut_d, and the `keys`), self-matches dropped, per (query,
+    * vector) the distance `total(lut_d)`, ranked (approx_d asc, vec_id
+    * asc) into `rank`. */
+  private def adcRanked(codes: DataFrame, lut: DataFrame, keys: Seq[String],
+      total: Column => Column): DataFrame = {
+    val rankW = Window.partitionBy(col("q_id"))
+      .orderBy(col("approx_d").asc, col("vec_id").asc)
+    codes.join(broadcast(lut), keys)
+      .filter(col("vec_id") =!= col("q_id"))
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(total(col("lut_d")).as("approx_d"))
+      .withColumn("rank", row_number().over(rankW))
   }
 
   /** The ADC ranking shared by [[annPq]] (top-K directly) and
@@ -919,15 +919,9 @@ object Similarity {
   private def pqAdcRanked(s: SparkSession, d: String): DataFrame = {
     // ADC LUT: query → codeword distance per subspace (8q × labels × 8m)
     val lut = queriesDf(s, d).crossJoin(broadcast(stagedCentroids(s, d)))
-      .select(col("q_id"), col("c_label").as("code"), subDists(col("q_emb")).as("sd"))
+      .select(col("q_id"), col("c_label").as("code"), subDists(col("q_emb"), col("centroid")).as("sd"))
       .select(col("q_id"), col("code"), col("sd.m").as("m"), col("sd.dist").as("lut_d"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_d").asc, col("vec_id").asc)
-    stagedPqCodes(s, d).join(broadcast(lut), Seq("m", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(graft.QueryDsl.dsum(col("lut_d")).as("approx_d"))
-      .withColumn("rank", row_number().over(rankW))
+    adcRanked(stagedPqCodes(s, d), lut, Seq("m", "code"), graft.QueryDsl.dsum)
   }
 
   def annPq(s: SparkSession, d: String): DataFrame =
@@ -946,20 +940,9 @@ object Similarity {
     * honestly); the refine stage is what turns the compression into a
     * usable index — recall asserted against the exact path in
     * PqSpec. */
-  def annPqRefine(s: SparkSession, d: String): DataFrame = {
-    val cand = pqAdcRanked(s, d).filter(col("rank") <= PqRefineCand)
-      .select(col("q_id"), col("vec_id"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    cand
-      .join(emb(s, d), "vec_id")
-      .join(broadcast(queriesDf(s, d)), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
-  }
+  def annPqRefine(s: SparkSession, d: String): DataFrame =
+    refineCandidates(s, d, pqAdcRanked(s, d).filter(col("rank") <= PqRefineCand)
+      .select(col("q_id"), col("vec_id")))
 
   // ---- IVF-PQ with RESIDUAL encoding — the production composite index
   // (the FAISS IndexIVFPQ shape; Jégou et al., "Product Quantization
@@ -983,7 +966,7 @@ object Similarity {
   // makes residual PQ work); ADC ranks only the probed lists' codes —
   // the staged code table is PARTITIONED BY list and the probe filters
   // on the collected ≤nlist probed labels, so partition pruning drops
-  // the other lists before the scan; the top-IvfPqCand survivors
+  // the other lists before the scan; the top-PqRefineCand survivors
   // re-rank exact, and only that bounded set ever loads raw vectors.
   // At 100 TB: index build is one corpus pass (amortized, staged), a
   // probe reads nprobe/nlist of a 1-byte-per-subspace code table plus
@@ -994,17 +977,8 @@ object Similarity {
   private[operators] val ivfPqBuildCount =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  // rb/cand constants baked into the dir name (stage-dir discipline)
-  def ivfPqStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/ivfpq_m${PqSub}_rb${IvfPqRb}_v1_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  /** Residuals of every vector against its OWN list centroid:
-    * (vec_id, c_label = the list, r = v − centroid, componentwise). */
-  private def residualsOf(s: SparkSession, d: String): DataFrame =
-    residualsOver(emb(s, d), stagedCentroids(s, d))
-
   /** The residual frame over explicit (vectors, centroids) inputs —
+    * (vec_id, c_label = the list, r = v − centroid, componentwise);
     * shared by the build-once index and the incremental ingest (which
     * takes residuals of the DELTA against the FROZEN base centroids). */
   private def residualsOver(vecs: DataFrame, cents: DataFrame): DataFrame =
@@ -1017,73 +991,46 @@ object Similarity {
   /** The residual codebook: per rb_label, the integer-exact mean
     * residual ([[centroidArraysOf]]'s accumulate-floor-longs scheme on
     * residual components — order-independent, cross-engine exact). */
-  private def residualCodebook(resid: DataFrame): DataFrame = {
-    val sums = (0 until Dim).map(i =>
-      sum(floor(col("r").getItem(i) * lit(CentroidScale))).as(s"s$i"))
-    resid
-      .groupBy(pmod(col("vec_id"), lit(IvfPqRb)).as("rb_label"))
-      .agg(count(lit(1)).as("n"), sums: _*)
-      .select(col("rb_label"),
-        array((0 until Dim).map(i =>
-          col(s"s$i").cast("double") / (col("n").cast("double") * lit(CentroidScale))): _*)
-          .as("rcent"))
-  }
-
-  /** [[subDists]] over an explicit (vector, codeword) column pair. */
-  private def subDistsOn(v: Column, cw: Column): Column =
-    explode(array((0 until PqSub).map(m =>
-      struct(lit(m).as("m"), subL2(m, v, cw).as("dist"))): _*))
+  private def residualCodebook(resid: DataFrame): DataFrame =
+    resid.groupBy(pmod(col("vec_id"), lit(IvfPqRb)).as("rb_label"))
+      .agg(count(lit(1)).as("n"), scaledSums(i => col("r").getItem(i)): _*)
+      .select(col("rb_label"), scaledMean.as("rcent"))
 
   /** Per-(vector, subspace) argmin encode of residuals against a
     * residual codebook — shared by the staged build and the delta
     * ingest. Ties on rb_label asc. */
-  private def encodeResiduals(resid: DataFrame, rb: DataFrame): DataFrame = {
-    val codeW = Window.partitionBy(col("vec_id"), col("m"))
-      .orderBy(col("dist").asc, col("rb_label").asc)
-    resid.crossJoin(broadcast(rb))
-      .select(col("vec_id"), col("c_label"), col("rb_label"),
-        subDistsOn(col("r"), col("rcent")).as("sd"))
-      .select(col("vec_id"), col("c_label"), col("rb_label"),
-        col("sd.m").as("m"), col("sd.dist").as("dist"))
-      .withColumn("rn", row_number().over(codeW)).filter(col("rn") === 1)
-      .select(col("vec_id"), col("m"), col("rb_label").as("code"), col("c_label"))
+  private def encodeResiduals(resid: DataFrame, rb: DataFrame): DataFrame =
+    encodePq(resid, "r", rb, "rb_label", "rcent", "c_label")
+
+  /** Writes a residual IVF-PQ index of `vecs` over the lists `cents`: the
+    * residual codebook, then the code table partitioned by list label so
+    * probes prune to nprobe/nlist directories. */
+  private def writeIvfPq(vecs: DataFrame, cents: DataFrame,
+      rbPath: String, codesPath: String): Unit = {
+    val resid = residualsOver(vecs, cents)
+    residualCodebook(resid).write.mode("overwrite").parquet(rbPath)
+    encodeResiduals(resid, vecs.sparkSession.read.parquet(rbPath))
+      .write.mode("overwrite").partitionBy("c_label").parquet(codesPath)
   }
 
-  /** Stage the residual codebook + the per-list code table (codes
-    * partitioned by list label so probes prune to nprobe/nlist
-    * directories). Built once per corpus fingerprint. */
+  /** Stages the residual codebook + the per-list code table over the
+    * staged label centroids. */
   def ensureIvfPqStaged(s: SparkSession, d: String): (String, String) = {
-    val dir = ivfPqStageDir(d)
-    val rbPath = dir + "/rcodebook"
-    val codesPath = dir + "/codes"
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      ivfPqBuildCount.incrementAndGet()
-      val resid = residualsOf(s, d)
-      residualCodebook(resid).write.mode("overwrite").parquet(rbPath)
-      encodeResiduals(resid, s.read.parquet(rbPath))
-        .write.mode("overwrite").partitionBy("c_label").parquet(codesPath)
-    }: Unit
+    val Seq(rbPath, codesPath) = stage(d, s"ivfpq_m${PqSub}_rb${IvfPqRb}_v1",
+        ivfPqBuildCount, "rcodebook", "codes") { case Seq(rbPath, codesPath) =>
+      writeIvfPq(emb(s, d), stagedCentroids(s, d), rbPath, codesPath)
+    }
     (rbPath, codesPath)
   }
 
   /** The shared IVF-PQ probe over explicit (centroids, residual
     * codebook, codes) inputs: coarse probe → per-probed-list query
     * residual → broadcast LUT → ADC over the probed lists' codes →
-    * bounded exact re-rank. The probed-list set is a bounded driver
+    * bounded exact refine. The probed-list set is a bounded driver
     * sync (≤ nlist labels) applied as a LITERAL filter, so a
     * list-partitioned code table prunes directories before the scan. */
   private def ivfPqProbe(s: SparkSession, d: String, cents: DataFrame,
       rb: DataFrame, codes: DataFrame): DataFrame = {
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_label").asc)
-    val probed = queriesDf(s, d)
-      .crossJoin(broadcast(cents))
-      .select(col("q_id"), col("q_emb"), col("c_label"), col("centroid"),
-        cosine(col("q_emb"), col("centroid")).as("c_cos"))
-      .withColumn("pr", row_number().over(probeW)).filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("c_label"),
-        zip_with(col("q_emb"), col("centroid"),
-          (v, c) => v.cast("double") - c).as("qr"))
     // The probed subplan (queries × centroids scoring + window) feeds
     // BOTH consumers — the literal label filter below and the LUT build.
     // The pin computes it once and keeps it cluster-side (queries ×
@@ -1093,34 +1040,21 @@ object Similarity {
     // table prunes directories before the scan. A pin, not persist():
     // nothing here could ever unpersist the returned lazy plan's input,
     // so a CacheManager entry would outlive every call.
-    val probedDf = graft.QueryDsl.pin(probed)
-    val probedLabels = probedDf.select(col("c_label")).distinct()
+    val probed = graft.QueryDsl.pin(probe(s, d, cents)
+      .select(col("q_id"), col("c_label"),
+        zip_with(col("q_emb"), col("centroid"), (v, c) => v.cast("double") - c).as("qr")))
+    val probedLabels = probed.select(col("c_label")).distinct()
       .collect().map(_.get(0)).toSeq
-    val lut = probedDf.crossJoin(broadcast(rb))
+    val lut = probed.crossJoin(broadcast(rb))
       .select(col("q_id"), col("c_label"), col("rb_label").as("code"),
-        subDistsOn(col("qr"), col("rcent")).as("sd"))
+        subDists(col("qr"), col("rcent")).as("sd"))
       .select(col("q_id"), col("c_label"), col("code"),
         col("sd.m").as("m"), col("sd.dist").as("lut_d"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_d").asc, col("vec_id").asc)
-    val cand = codes
-      .filter(col("c_label").isin(probedLabels: _*))
-      .join(broadcast(lut), Seq("c_label", "m", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(graft.QueryDsl.dsum(col("lut_d")).as("approx_d"))
-      .withColumn("rn", row_number().over(rankW)).filter(col("rn") <= PqRefineCand)
+    val cand = adcRanked(codes.filter(col("c_label").isin(probedLabels: _*)),
+        lut, Seq("c_label", "m", "code"), graft.QueryDsl.dsum)
+      .filter(col("rank") <= PqRefineCand)
       .select(col("q_id"), col("vec_id"))
-    val rankW2 = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    cand
-      .join(emb(s, d), "vec_id")
-      .join(broadcast(queriesDf(s, d)), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW2)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
+    refineCandidates(s, d, cand)
   }
 
   /** `v_ann_ivfpq` — the residual IVF-PQ probe: coarse probe → per-list
@@ -1150,27 +1084,16 @@ object Similarity {
   private[operators] val incIvfPqBuildCount =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def incIvfPqStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/incivfpq_m${PqSub}_rb${IvfPqRb}_v1_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** Stages the BASE half: base-only coarse centroids, base-only
-    * residual codebook, base code table (list-partitioned). Built once
-    * per corpus fingerprint. */
+    * residual codebook, base code table (list-partitioned). */
   def ensureIncIvfPqStaged(s: SparkSession, d: String): (String, String, String) = {
-    val dir = incIvfPqStageDir(d)
-    val centsPath = dir + "/centroids"
-    val rbPath = dir + "/rcodebook"
-    val codesPath = dir + "/codes"
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      incIvfPqBuildCount.incrementAndGet()
-      val base = emb(s, d).filter(!isDeltaVec)
-      centroidArraysOf(base).write.mode("overwrite").parquet(centsPath)
-      val resid = residualsOver(base, s.read.parquet(centsPath))
-      residualCodebook(resid).write.mode("overwrite").parquet(rbPath)
-      encodeResiduals(resid, s.read.parquet(rbPath))
-        .write.mode("overwrite").partitionBy("c_label").parquet(codesPath)
-    }: Unit
+    val Seq(centsPath, rbPath, codesPath) = stage(d, s"incivfpq_m${PqSub}_rb${IvfPqRb}_v1",
+        incIvfPqBuildCount, "centroids", "rcodebook", "codes") {
+      case Seq(centsPath, rbPath, codesPath) =>
+        val base = emb(s, d).filter(!isDeltaVec)
+        centroidArraysOf(base).write.mode("overwrite").parquet(centsPath)
+        writeIvfPq(base, s.read.parquet(centsPath), rbPath, codesPath)
+    }
     (centsPath, rbPath, codesPath)
   }
 
@@ -1187,9 +1110,8 @@ object Similarity {
     val rb = s.read.parquet(rbPath)
     // the ingest: delta-only residual + encode, pinned (it feeds a code
     // table the probe scans once per ADC join leg)
-    val dCodes = encodeResiduals(
-        residualsOver(emb(s, d).filter(isDeltaVec), cents), rb)
-      .localCheckpoint()
+    val dCodes = graft.QueryDsl.pin(encodeResiduals(
+      residualsOver(emb(s, d).filter(isDeltaVec), cents), rb))
     require(incIvfPqBuildCount.get() == builds,
       "the ingest must not rebuild the staged base index")
     val codes = s.read.parquet(codesPath)
@@ -1229,6 +1151,14 @@ object Similarity {
     out
   }
 
+  /** Exact integer squared L2 of two equal-length scaled vectors. */
+  private def sqL2(a: Array[Long], b: Array[Long]): Long = {
+    var d2 = 0L
+    var i = 0
+    while (i < a.length) { val df = a(i) - b(i); d2 += df * df; i += 1 }
+    d2
+  }
+
   /** Exact integer squared-L2 argmin; strict `<` keeps the smallest
     * cluster id on ties — the same (dist, id) order the oracle ranks. */
   private[operators] def assignCluster(cents: Array[Array[Long]], e: Array[Long]): Int = {
@@ -1236,10 +1166,7 @@ object Similarity {
     var bestD = Long.MaxValue
     var j = 0
     while (j < cents.length) {
-      val c = cents(j)
-      var d2 = 0L
-      var i = 0
-      while (i < e.length) { val df = e(i) - c(i); d2 += df * df; i += 1 }
+      val d2 = sqL2(e, cents(j))
       if (d2 < bestD) { bestD = d2; best = j }
       j += 1
     }
@@ -1248,18 +1175,20 @@ object Similarity {
 
   /** The `pr` nearest trained centroids, ranked by (exact d2, id). */
   private def topClusters(cents: Array[Array[Long]], e: Array[Long], pr: Int): Seq[Int] =
-    cents.indices.map { j =>
-      val c = cents(j)
-      var d2 = 0L
-      var i = 0
-      while (i < e.length) { val df = e(i) - c(i); d2 += df * df; i += 1 }
-      (d2, j)
-    }.sorted.take(pr).map(_._2)
+    cents.indices.map(j => (sqL2(e, cents(j)), j)).sorted.take(pr).map(_._2)
 
-  /** Lloyd's over the scaled sample: KmIterations fixed rounds of
-    * assign (distributed map) + update (k-bounded reduceGroups with
-    * map-side partial combine; the collect is k rows, never data). */
-  private def trainKmeans(s: SparkSession, d: String): (Array[Array[Long]], Array[Long]) = {
+  /** Lloyd's over the scaled 1-in-[[KmSampleMod]] sample, run
+    * independently in each of `groups` subspaces — `split(e)(g)` is
+    * vector e's point in subspace g (one group for the coarse
+    * quantizer, one per PQ subspace for the PQ codebooks). Init = the k
+    * smallest sample vec_ids' points; then KmIterations fixed rounds of
+    * assign (distributed map) + update (a groups×k-bounded reduceGroups
+    * with map-side partial combine — the collect is the codebook sync,
+    * never data). Returns the trained tables: the codebook (m = group,
+    * codeword, dim, c_val, n_members) and the one-pass corpus code table
+    * (vec_id, m, code). */
+  private def lloyd(s: SparkSession, d: String, k: Int, groups: Int)(
+      split: Array[Long] => Array[Array[Long]]): (DataFrame, DataFrame) = {
     import s.implicits._
     val sample = emb(s, d).filter(col("vec_id") % KmSampleMod === 0)
       .select(col("vec_id"), col("embedding"))
@@ -1267,14 +1196,18 @@ object Similarity {
       .map { case (id, v) => (id, scaledVec(v)) }
       .persist()
     try {
-      var centroids: Array[Array[Long]] =
-        sample.orderBy(col("_1")).limit(KmClusters).collect().map(_._2)
-      var counts = Array.fill(KmClusters)(0L)
+      val init = sample.orderBy(col("_1")).limit(k).collect().map(r => split(r._2))
+      var cents: Array[Array[Array[Long]]] = Array.tabulate(groups)(g => init.map(_(g)))
+      var counts: Array[Array[Long]] = Array.fill(groups, k)(0L)
       var t = 0
       while (t < KmIterations) {
-        val cents = centroids
+        val cs = cents
         val agg = sample
-          .map { case (_, e) => (assignCluster(cents, e), (1L, e)) }
+          .flatMap { case (_, e) =>
+            split(e).iterator.zipWithIndex.map { case (p, g) =>
+              ((g, assignCluster(cs(g), p)), (1L, p))
+            }
+          }
           .groupByKey(_._1)
           .mapValues(_._2)
           .reduceGroups { (a: (Long, Array[Long]), b: (Long, Array[Long])) =>
@@ -1283,51 +1216,50 @@ object Similarity {
             while (i < sums.length) { sums(i) = a._2(i) + b._2(i); i += 1 }
             (a._1 + b._1, sums)
           }
-          .collect() // ≤ k rows — the codebook sync, not a data collect
-        val next = centroids.map(_.clone()) // empty clusters keep previous
-        val cnt = Array.fill(KmClusters)(0L)
-        agg.foreach { case (c, (n, sums)) =>
-          cnt(c) = n
-          next(c) = sums.map(_ / n) // truncating division — DuckDB `//`
+          .collect() // ≤ groups × k rows — the codebook sync
+        val next = cents.map(_.map(_.clone())) // empty clusters keep previous
+        val cnt = Array.fill(groups, k)(0L)
+        agg.foreach { case ((g, j), (n, sums)) =>
+          cnt(g)(j) = n
+          next(g)(j) = sums.map(_ / n) // truncating division — DuckDB `//`
         }
-        centroids = next
+        cents = next
         counts = cnt
         t += 1
       }
-      (centroids, counts)
+      val (cs, ns) = (cents, counts)
+      val book = (for { g <- 0 until groups; j <- 0 until k; i <- cs(g)(j).indices }
+        yield (g, j, i, cs(g)(j)(i), ns(g)(j)))
+        .toDF("m", "codeword", "dim", "c_val", "n_members")
+      val codes = emb(s, d).select(col("vec_id"), col("embedding"))
+        .as[(Long, Array[Float])]
+        .flatMap { case (id, v) =>
+          split(scaledVec(v)).iterator.zipWithIndex.map { case (p, g) =>
+            (id, g, assignCluster(cs(g), p))
+          }
+        }
+        .toDF("vec_id", "m", "code")
+      (book, codes)
     } finally { sample.unpersist(); () }
   }
 
   private[operators] val kmeansBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  // every training constant is baked into the stage-dir name, so changing
-  // k / iterations / sample mod can never silently reuse a stale codebook
-  // (the Staging marker only fingerprints the input parquet)
-  def kmeansStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/kmeans_k${KmClusters}_it${KmIterations}_m${KmSampleMod}_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  private def kmeansStage = s"kmeans_k${KmClusters}_it${KmIterations}_m${KmSampleMod}"
+
+  def kmeansStageDir(sfDir: String): String = stageDir(kmeansStage, sfDir)
 
   /** Stages the trained index: the k×dim codebook (with member counts)
-    * and the one-pass corpus assignment table. Build-once per sf dir
-    * across queries and JVMs (graft.Staging marker + lock). */
+    * and the one-pass corpus assignment table. */
   def ensureKmeansStaged(s: SparkSession, d: String): (String, String) = {
-    val dir = kmeansStageDir(d)
-    val centroidsPath = dir + "/centroids"
-    val assignPath = dir + "/assign"
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      kmeansBuildCount.incrementAndGet()
-      val (cents, counts) = trainKmeans(s, d)
-      import s.implicits._
-      val codebook = for { c <- 0 until KmClusters; i <- 0 until Dim }
-        yield (c, i, cents(c)(i), counts(c))
-      codebook.toDF("cluster_id", "dim", "c_val", "n_members")
+    val Seq(centroidsPath, assignPath) = stage(d, kmeansStage, kmeansBuildCount,
+        "centroids", "assign") { case Seq(centroidsPath, assignPath) =>
+      val (book, codes) = lloyd(s, d, KmClusters, 1)(e => Array(e))
+      book.select(col("codeword").as("cluster_id"), col("dim"), col("c_val"), col("n_members"))
         .coalesce(1).write.mode("overwrite").parquet(centroidsPath)
-      emb(s, d).select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .map { case (id, v) => (id, assignCluster(cents, scaledVec(v))) }
-        .toDF("vec_id", "cluster_id")
+      codes.select(col("vec_id"), col("code").as("cluster_id"))
         .write.mode("overwrite").parquet(assignPath)
-    }: Unit
+    }
     (centroidsPath, assignPath)
   }
 
@@ -1357,18 +1289,9 @@ object Similarity {
       .as[(Long, Array[Float])]
       .flatMap { case (q, v) => topClusters(cents, scaledVec(v), NProbe).map(c => (q, c)) }
       .toDF("q_id", "cluster_id")
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    s.read.parquet(aPath)
+    refineCandidates(s, d, s.read.parquet(aPath)
       .join(broadcast(probes), "cluster_id")
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(emb(s, d).select(col("vec_id"), col("embedding")), "vec_id")
-      .join(broadcast(queriesDf(s, d)), "q_id")
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
+      .select(col("q_id"), col("vec_id")))
   }
 
   // ---- TRAINED PQ codebooks: the same sampled integer Lloyd's, run PER
@@ -1388,84 +1311,22 @@ object Similarity {
     out
   }
 
-  private def trainPqKmeans(s: SparkSession, d: String)
-    : (Array[Array[Array[Long]]], Array[Array[Long]]) = {
-    import s.implicits._
-    val sample = emb(s, d).filter(col("vec_id") % KmSampleMod === 0)
-      .select(col("vec_id"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, v) => (id, scaledVec(v)) }
-      .persist()
-    try {
-      val initVecs = sample.orderBy(col("_1")).limit(PqCw).collect().map(_._2)
-      var cents: Array[Array[Array[Long]]] =
-        Array.tabulate(PqSub)(m => initVecs.map(subSlice(_, m)))
-      var counts: Array[Array[Long]] = Array.fill(PqSub, PqCw)(0L)
-      var t = 0
-      while (t < KmIterations) {
-        val cs = cents
-        val agg = sample
-          .flatMap { case (_, e) =>
-            (0 until PqSub).iterator.map { m =>
-              val sub = subSlice(e, m)
-              ((m, assignCluster(cs(m), sub)), (1L, sub))
-            }
-          }
-          .groupByKey(_._1)
-          .mapValues(_._2)
-          .reduceGroups { (a: (Long, Array[Long]), b: (Long, Array[Long])) =>
-            val sums = new Array[Long](a._2.length)
-            var i = 0
-            while (i < sums.length) { sums(i) = a._2(i) + b._2(i); i += 1 }
-            (a._1 + b._1, sums)
-          }
-          .collect() // ≤ PqSub × PqCw rows — the codebook sync
-        val next = cents.map(_.map(_.clone()))
-        val cnt = Array.fill(PqSub, PqCw)(0L)
-        agg.foreach { case ((m, j), (n, sums)) =>
-          cnt(m)(j) = n
-          next(m)(j) = sums.map(_ / n)
-        }
-        cents = next
-        counts = cnt
-        t += 1
-      }
-      (cents, counts)
-    } finally { sample.unpersist(); () }
-  }
-
   private[operators] val pqKmeansBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  // the codeword count is baked into the dir: the Staging marker
-  // fingerprints SOURCES, so a config change must change the path or a
-  // stale codebook would satisfy the marker
-  def pqKmeansStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/pq_kmeans_cw${PqCw}_it${KmIterations}_m${KmSampleMod}_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  private def pqKmeansStage = s"pq_kmeans_cw${PqCw}_it${KmIterations}_m${KmSampleMod}"
+
+  def pqKmeansStageDir(sfDir: String): String = stageDir(pqKmeansStage, sfDir)
 
   /** Stages the trained PQ index: the PqSub×PqCw×PqSubDim codebook (with
     * member counts) and the one-pass integer code table. */
   def ensurePqKmeansStaged(s: SparkSession, d: String): (String, String) = {
-    val dir = pqKmeansStageDir(d)
-    val codebookPath = dir + "/codebook"
-    val codesPath = dir + "/codes"
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      pqKmeansBuildCount.incrementAndGet()
-      val (cents, counts) = trainPqKmeans(s, d)
-      import s.implicits._
-      val rows = for { m <- 0 until PqSub; j <- 0 until PqCw; i <- 0 until PqSubDim }
-        yield (m, j, i, cents(m)(j)(i), counts(m)(j))
-      rows.toDF("m", "codeword", "dim", "c_val", "n_members")
-        .coalesce(1).write.mode("overwrite").parquet(codebookPath)
-      emb(s, d).select(col("vec_id"), col("embedding"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (id, v) =>
-          val e = scaledVec(v)
-          (0 until PqSub).iterator.map(m => (id, m, assignCluster(cents(m), subSlice(e, m))))
-        }
-        .toDF("vec_id", "m", "code")
-        .write.mode("overwrite").parquet(codesPath)
-    }: Unit
+    val Seq(codebookPath, codesPath) = stage(d, pqKmeansStage, pqKmeansBuildCount,
+        "codebook", "codes") { case Seq(codebookPath, codesPath) =>
+      val (book, codes) =
+        lloyd(s, d, PqCw, PqSub)(e => Array.tabulate(PqSub)(m => subSlice(e, m)))
+      book.coalesce(1).write.mode("overwrite").parquet(codebookPath)
+      codes.write.mode("overwrite").parquet(codesPath)
+    }
     (codebookPath, codesPath)
   }
 
@@ -1496,24 +1357,12 @@ object Similarity {
       .as[(Long, Array[Float])]
       .flatMap { case (q, v) =>
         val e = scaledVec(v)
-        for { m <- 0 until PqSub; j <- 0 until PqCw } yield {
-          val sub = subSlice(e, m)
-          val c = cents(m)(j)
-          var d2 = 0L
-          var i = 0
-          while (i < PqSubDim) { val df = sub(i) - c(i); d2 += df * df; i += 1 }
-          (q, m, j, d2)
-        }
+        for { m <- 0 until PqSub; j <- 0 until PqCw }
+          yield (q, m, j, sqL2(subSlice(e, m), cents(m)(j)))
       }
       .toDF("q_id", "m", "code", "lut_d")
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("approx_d").asc, col("vec_id").asc)
-    s.read.parquet(codesPath)
-      .join(broadcast(lut), Seq("m", "code"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("lut_d")).as("approx_d"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
+    adcRanked(s.read.parquet(codesPath), lut, Seq("m", "code"), sum)
+      .filter(col("rank") <= K)
       .select(col("q_id"), col("rank"), col("vec_id"), col("approx_d"))
       .orderBy("q_id", "rank")
   }
@@ -1525,22 +1374,23 @@ object Similarity {
     * (method, query): the minimum approx-list rank holding a true
     * top-K neighbor (0 = total miss) and rr_milli = 1000 div rank —
     * integer division, so the whole row hash-checks; the same staged
-    * two-small-tables overlay economics as [[annRecall]]. */
-  def annMrr(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val exact = stagedExactTopK(s, d).select(col("q_id"), col("vec_id"))
-    val qs = exact.select(col("q_id")).distinct()
+    * two-small-tables overlay economics as [[annRecall]]. The k = [[K]]
+    * leg of [[annMrrAtK]]. */
+  def annMrr(s: SparkSession, d: String): DataFrame =
+    mrrAt(s, d, K).orderBy("method", "q_id")
+
+  private def mrrAt(s: SparkSession, d: String, k: Int): DataFrame = {
+    val truth = truthAt(s, d, k)
     val first = stagedEvalResults(s, d)
-      .join(exact, Seq("q_id", "vec_id"))
+      .join(truth, Seq("q_id", "vec_id"))
       .groupBy(col("method"), col("q_id")).agg(min(col("rank")).as("fr"))
-    evalMethods.toDF("method").crossJoin(qs)
+    methodsDf(s).crossJoin(truth.select(col("q_id")).distinct())
       .join(first, Seq("method", "q_id"), "left")
       .select(col("method"), col("q_id"),
         coalesce(col("fr"), lit(0)).cast("int").as("first_hit_rank"))
       .withColumn("rr_milli",
         when(col("first_hit_rank") > 0,
           expr("1000 div first_hit_rank")).otherwise(lit(0L)))
-      .orderBy("method", "q_id")
   }
 
   /** Truth depths for the recall/MRR sweep: below, at, and far above the
@@ -1556,48 +1406,21 @@ object Similarity {
     * leg per k over the SAME two staged tables ([[stagedExactTopKDeep]],
     * [[stagedEvalResults]]) — the sweep multiplies overlay rows, not
     * corpus work; nothing here touches an embedding. */
-  def annRecallAtK(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ex = stagedExactTopKDeep(s, d)
-      .select(col("q_id"), col("vec_id"), col("rank").as("trank"))
-    val res = stagedEvalResults(s, d).select(col("method"), col("q_id"), col("vec_id"))
-    val qs = ex.select(col("q_id")).distinct()
-    RecallKs.map { k =>
-      val hits = res.join(ex.filter(col("trank") <= k), Seq("q_id", "vec_id"))
-        .groupBy(col("method"), col("q_id")).agg(count(lit(1)).as("n_hit"))
-      evalMethods.toDF("method").crossJoin(qs)
-        .join(hits, Seq("method", "q_id"), "left")
-        .select(lit(k).as("k"), col("method"), col("q_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-        .withColumn("recall", col("n_hit").cast("double") / lit(k.toDouble))
-    }.reduce(_ unionByName _)
+  def annRecallAtK(s: SparkSession, d: String): DataFrame =
+    overRecallKs(recallAt(s, d, _))
+
+  /** One `leg(k)` per truth depth in [[RecallKs]], tagged with its k. */
+  private def overRecallKs(leg: Int => DataFrame): DataFrame =
+    RecallKs.map(k => leg(k).select(lit(k).as("k"), col("*")))
+      .reduce(_ unionByName _)
       .orderBy("k", "method", "q_id")
-  }
 
   /** `v_ann_mrr_k` — the MRR overlay swept over the same truth depths:
     * per (k, method, query), the minimum RESULT-list rank holding a true
     * top-k neighbor (0 = miss) and its integer reciprocal. Same staged
     * inputs, same one-leg-per-k economics as [[annRecallAtK]]. */
-  def annMrrAtK(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val ex = stagedExactTopKDeep(s, d)
-      .select(col("q_id"), col("vec_id"), col("rank").as("trank"))
-    val res = stagedEvalResults(s, d)
-      .select(col("method"), col("q_id"), col("vec_id"), col("rank"))
-    val qs = ex.select(col("q_id")).distinct()
-    RecallKs.map { k =>
-      val first = res.join(ex.filter(col("trank") <= k), Seq("q_id", "vec_id"))
-        .groupBy(col("method"), col("q_id")).agg(min(col("rank")).as("fr"))
-      evalMethods.toDF("method").crossJoin(qs)
-        .join(first, Seq("method", "q_id"), "left")
-        .select(lit(k).as("k"), col("method"), col("q_id"),
-          coalesce(col("fr"), lit(0)).cast("int").as("first_hit_rank"))
-        .withColumn("rr_milli",
-          when(col("first_hit_rank") > 0,
-            expr("1000 div first_hit_rank")).otherwise(lit(0L)))
-    }.reduce(_ unionByName _)
-      .orderBy("k", "method", "q_id")
-  }
+  def annMrrAtK(s: SparkSession, d: String): DataFrame =
+    overRecallKs(mrrAt(s, d, _))
 
   // ---- Graph ANN: a two-layer navigable-small-world (NSW) — the graph
   // family (HNSW/NSW) that is today's default single-node ANN, re-shaped
@@ -1647,10 +1470,7 @@ object Similarity {
     * instead of trusting the comment above. */
   private[operators] val nswProbeJobs = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  // p1 = edge-payload schema v1 (dst's scaled vector carried on the edge)
-  def nswStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/nsw_m${NswM}_l${NswLayerMod}_b${NswBeamW}_p1_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  private[operators] val nswBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Scaled-integer vector column — the same mapping as [[scaledVec]]. */
   private def scaledCol(c: Column): Column =
@@ -1660,42 +1480,53 @@ object Similarity {
   private def intD2(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (acc, v) => acc + v)
 
-  /** Stage both edge layers once per corpus. Each edge CARRIES its
+  /** The M nearest out-edges per src among candidate pairs carrying both
+    * scaled vectors (src, dst, sv_s, sv_d): exact integer d2, ties on
+    * dst asc, rank in `rn`. Shared by the staged layers and the insert
+    * batch. */
+  private def nearestM(pairs: DataFrame): DataFrame = {
+    val wSrc = Window.partitionBy(col("src")).orderBy(col("d2").asc, col("dst").asc)
+    pairs.withColumn("d2", intD2(col("sv_s"), col("sv_d")))
+      .withColumn("rn", row_number().over(wSrc)).filter(col("rn") <= NswM)
+  }
+
+  /** Writes both edge layers over the scaled vectors `sv` (vec_id, sv):
+    * layer 0 from shared (band, bkey) buckets of `bands` (vec_id, band,
+    * bkey), layer 1 over the coarse layer. Each edge CARRIES its
     * destination's scaled vector (the adjacency-with-payload trick every
     * graph-ANN store uses): beam expansion then scores candidates from
     * the edge row alone, so a probe touches the corpus exactly twice —
     * once to seed, once for the final float re-rank — instead of once
     * per beam step. The ×M payload duplication is the standard storage
     * trade for corpus-scan-free traversal. */
+  private def writeNswEdges(sv: DataFrame, bands: DataFrame, e0Path: String, e1Path: String): Unit = {
+    val svS = sv.select(col("vec_id").as("src"), col("sv").as("sv_s"))
+    val svD = sv.select(col("vec_id").as("dst"), col("sv").as("sv_d"))
+    def topM(pairs: DataFrame): DataFrame =
+      nearestM(pairs.join(svS, "src").join(svD, "dst")).select("src", "dst", "d2", "sv_d")
+    // layer 0: candidates from shared LSH buckets, never all-pairs
+    topM(bands.as("x")
+      .join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
+          col("x.vec_id") =!= col("y.vec_id"))
+      .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst")).distinct())
+      .write.mode("overwrite").parquet(e0Path)
+    // layer 1: the constant-sized coarse layer; bounded all-pairs
+    val coarse = sv.filter(col("vec_id") % NswLayerMod === 0)
+    topM(coarse.select(col("vec_id").as("src"))
+      .join(coarse.select(col("vec_id").as("dst")), col("src") =!= col("dst")))
+      .write.mode("overwrite").parquet(e1Path)
+  }
+
+  /** Stages both edge layers of the corpus graph once per corpus; layer
+    * 0 reads the staged band index. p1 = edge-payload schema v1 (dst's
+    * scaled vector carried on the edge). */
   def ensureNswStaged(s: SparkSession, d: String): (String, String) = {
-    val dir = nswStageDir(d)
-    val e0Path = dir + "/edges0"
-    val e1Path = dir + "/edges1"
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      val sv = emb(s, d).select(col("vec_id"), scaledCol(col("embedding")).as("sv"))
-      val svS = sv.select(col("vec_id").as("src"), col("sv").as("sv_s"))
-      val svD = sv.select(col("vec_id").as("dst"), col("sv").as("sv_d"))
-      val wSrc = Window.partitionBy(col("src")).orderBy(col("d2").asc, col("dst").asc)
-      def topM(pairs: DataFrame): DataFrame =
-        pairs.join(svS, "src").join(svD, "dst")
-          .select(col("src"), col("dst"),
-            intD2(col("sv_s"), col("sv_d")).as("d2"), col("sv_d"))
-          .withColumn("rn", row_number().over(wSrc)).filter(col("rn") <= NswM)
-          .select("src", "dst", "d2", "sv_d")
-      // layer 0: candidates from shared LSH buckets, never all-pairs
-      val bands = stagedCorpusBands(s, d)
-      topM(bands.as("x")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-            col("x.vec_id") =!= col("y.vec_id"))
-        .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst")).distinct())
-        .write.mode("overwrite").parquet(e0Path)
-      // layer 1: the constant-sized coarse layer; bounded all-pairs
-      val coarse = sv.filter(col("vec_id") % NswLayerMod === 0)
-      topM(coarse.select(col("vec_id").as("src"))
-        .join(coarse.select(col("vec_id").as("dst")), col("src") =!= col("dst")))
-        .write.mode("overwrite").parquet(e1Path)
-    }: Unit
+    val Seq(e0Path, e1Path) = stage(d, s"nsw_m${NswM}_l${NswLayerMod}_b${NswBeamW}_p1",
+        nswBuildCount, "edges0", "edges1") { case Seq(e0Path, e1Path) =>
+      writeNswEdges(emb(s, d).select(col("vec_id"), scaledCol(col("embedding")).as("sv")),
+        stagedCorpusBands(s, d), e0Path, e1Path)
+    }
     (e0Path, e1Path)
   }
 
@@ -1736,7 +1567,7 @@ object Similarity {
     * pruned postings scan either way. The corpus is touched exactly
     * twice: the ENTRY-LAYER scoring (layer-2 predicate pushed to the
     * scan — HNSW's upper-layer descent collapsed into one bounded job,
-    * see the family comment) and the final exact-cosine re-rank of the
+    * see the family comment) and the final exact refine of the
     * visited set. `l2Filter` selects the entry layer (an arithmetic
     * predicate — base-only for the incremental graph). */
   private def nswProbe(s: SparkSession, d: String,
@@ -1785,19 +1616,8 @@ object Similarity {
       visited ++= uni.map(t => (t._1, t._2))
       beam = topW(uni, NswBeamW)
     }
-    // second corpus touch: exact float re-rank of the visited set
-    val visitedDf = visited.toSeq.sorted.toDF("q_id", "vec_id")
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    emb(s, d).select(col("vec_id"), col("embedding"))
-      .join(broadcast(visitedDf), Seq("vec_id"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .join(broadcast(queriesDf(s, d)), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
+    // second corpus touch: exact refine of the visited set
+    refineCandidates(s, d, visited.toSeq.sorted.toDF("q_id", "vec_id"))
   }
 
   // ---- Incremental NSW maintenance: the graph-index counterpart of
@@ -1815,47 +1635,20 @@ object Similarity {
 
   private[operators] val incNswBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  // p1 = payload schema v1 (bands carry scaled base vectors)
-  def incNswStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/incnsw_m${NswM}_l${NswLayerMod}_p1_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** Stages the BASE half: the band index WITH vector payload plus the
     * base-only edge layers (the [[ensureNswStaged]] build restricted to
-    * non-delta vectors). Built once per corpus fingerprint. */
+    * non-delta vectors). p1 = payload schema v1 (bands carry scaled base
+    * vectors). */
   def ensureIncNswStaged(s: SparkSession, d: String): (String, String, String) = {
-    val dir = incNswStageDir(d)
-    val bandsP = dir + "/bands"
-    val e0P = dir + "/edges0"
-    val e1P = dir + "/edges1"
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      incNswBuildCount.incrementAndGet()
+    val Seq(bandsP, e0P, e1P) = stage(d, s"incnsw_m${NswM}_l${NswLayerMod}_p1",
+        incNswBuildCount, "bands", "edges0", "edges1") { case Seq(bandsP, e0P, e1P) =>
       val base = emb(s, d).filter(!isDeltaVec)
       base.select(col("vec_id"), scaledCol(col("embedding")).as("sv"),
-          posexplode(lshBandKeysNative(col("embedding"))).as(Seq("band", "bkey")))
+          posexplode(lshBandKeys(col("embedding"))).as(Seq("band", "bkey")))
         .write.mode("overwrite").parquet(bandsP)
-      val svb = base.select(col("vec_id"), scaledCol(col("embedding")).as("sv"))
-      val svS = svb.select(col("vec_id").as("src"), col("sv").as("sv_s"))
-      val svD = svb.select(col("vec_id").as("dst"), col("sv").as("sv_d"))
-      val wSrc = Window.partitionBy(col("src")).orderBy(col("d2").asc, col("dst").asc)
-      def topM(pairs: DataFrame): DataFrame =
-        pairs.join(svS, "src").join(svD, "dst")
-          .select(col("src"), col("dst"),
-            intD2(col("sv_s"), col("sv_d")).as("d2"), col("sv_d"))
-          .withColumn("rn", row_number().over(wSrc)).filter(col("rn") <= NswM)
-          .select("src", "dst", "d2", "sv_d")
-      val bands = s.read.parquet(bandsP).select(col("vec_id"), col("band"), col("bkey"))
-      topM(bands.as("x")
-        .join(bands.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-            col("x.vec_id") =!= col("y.vec_id"))
-        .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst")).distinct())
-        .write.mode("overwrite").parquet(e0P)
-      val coarse = svb.filter(col("vec_id") % NswLayerMod === 0)
-      topM(coarse.select(col("vec_id").as("src"))
-        .join(coarse.select(col("vec_id").as("dst")), col("src") =!= col("dst")))
-        .write.mode("overwrite").parquet(e1P)
-    }: Unit
+      writeNswEdges(base.select(col("vec_id"), scaledCol(col("embedding")).as("sv")),
+        s.read.parquet(bandsP).select(col("vec_id"), col("band"), col("bkey")), e0P, e1P)
+    }
     (bandsP, e0P, e1P)
   }
 
@@ -1874,21 +1667,16 @@ object Similarity {
       .select(col("vec_id").as("dst"), col("sv").as("sv_d"), col("band"), col("bkey"))
     val delta = emb(s, d).filter(isDeltaVec)
       .select(col("vec_id").as("src"), scaledCol(col("embedding")).as("sv_s"),
-        posexplode(lshBandKeysNative(col("embedding"))).as(Seq("band", "bkey")))
-    val wSrc = Window.partitionBy(col("src")).orderBy(col("d2").asc, col("dst").asc)
+        posexplode(lshBandKeys(col("embedding"))).as(Seq("band", "bkey")))
     // pinned: the O(delta×M) insert-edge batch feeds THREE union legs of
     // an edge table the probe scans once per beam round — unpinned, the
     // band join + window would re-execute per scan
-    val dEdges = delta.join(baseBands, Seq("band", "bkey"))
+    val dEdges = graft.QueryDsl.pin(nearestM(delta.join(baseBands, Seq("band", "bkey"))
       .select(col("src"), col("sv_s"), col("dst"), col("sv_d"))
       // dedupe shared-band repeats on the KEY PAIR only: the payload
       // vectors are functions of src/dst, and hashing the long arrays
       // through a 4-column distinct would shuffle the payload twice
-      .dropDuplicates("src", "dst")
-      .select(col("src"), col("dst"),
-        intD2(col("sv_s"), col("sv_d")).as("d2"), col("sv_d"), col("sv_s"))
-      .withColumn("rn", row_number().over(wSrc)).filter(col("rn") <= NswM)
-      .localCheckpoint()
+      .dropDuplicates("src", "dst")))
     require(incNswBuildCount.get() == builds,
       "the insert must not rebuild the staged base graph")
     val edges0 = s.read.parquet(e0P).select(col("src"), col("dst"), col("sv_d"))
@@ -1929,67 +1717,45 @@ object Similarity {
 
   private[operators] val incAnnBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def incAnnStageDir(sfDir: String): String =
-    "/tmp/graft_stage/incann_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** Nearest-frozen-centroid assignment — the ONLY per-vector work an
-    * ingest batch pays. Deterministic: cosine desc, label asc tie-break. */
-  private def assignNearest(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("a_cos").desc, col("c_label").asc)
-    vecs.select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("embedding"), col("c_label"),
-        cosine(col("embedding"), col("centroid")).as("a_cos"))
-      .withColumn("ar", row_number().over(w)).filter(col("ar") === 1)
+    * ingest batch pays: (vec_id, embedding, c_label). */
+  private def assignNearest(vecs: DataFrame, cents: DataFrame): DataFrame =
+    nearestCentroids(vecs.select(col("vec_id"), col("embedding")),
+      "vec_id", "embedding", cents, 1)
       .select(col("vec_id"), col("embedding"), col("c_label"))
-  }
 
-  /** Stages the BASE half of the incremental IVF index: centroids
-    * trained on base vectors only (frozen thereafter) + base postings
-    * (vec_id, embedding, assigned label), label-partitioned. Built once
-    * per corpus across queries and JVMs (graft.Staging). */
-  def ensureIncAnnStaged(s: SparkSession, d: String): (String, String) = {
-    val dir = incAnnStageDir(d)
-    val centroidsPath = dir + "/centroids"
-    val postingsPath = dir + "/postings"
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      incAnnBuildCount.incrementAndGet()
-      centroidArraysOf(emb(s, d).filter(!isDeltaVec))
-        .write.mode("overwrite").parquet(centroidsPath)
-      assignNearest(emb(s, d).filter(!isDeltaVec), s.read.parquet(centroidsPath))
-        .write.mode("overwrite").partitionBy("c_label").parquet(postingsPath)
-    }: Unit
+  /** Stages an IVF index of `vecs` under the stage dir `name`: centroids
+    * from `vecs` (frozen thereafter) plus every vector's posting
+    * (vec_id, embedding, assigned label), label-partitioned. Returns
+    * (centroidsPath, postingsPath). */
+  private def stageIvf(s: SparkSession, d: String, name: String,
+      builds: java.util.concurrent.atomic.AtomicInteger, vecs: => DataFrame): (String, String) = {
+    val Seq(centroidsPath, postingsPath) = stage(d, name, builds, "centroids", "postings") {
+      case Seq(centroidsPath, postingsPath) =>
+        centroidArraysOf(vecs).write.mode("overwrite").parquet(centroidsPath)
+        assignNearest(vecs, s.read.parquet(centroidsPath))
+          .write.mode("overwrite").partitionBy("c_label").parquet(postingsPath)
+    }
     (centroidsPath, postingsPath)
   }
 
-  private[operators] val rebalBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Stages the BASE half of the incremental IVF index: centroids
+    * trained on base vectors only + base postings. */
+  def ensureIncAnnStaged(s: SparkSession, d: String): (String, String) =
+    stageIvf(s, d, "incann", incAnnBuildCount, emb(s, d).filter(!isDeltaVec))
 
-  def rebalStageDir(sfDir: String): String =
-    "/tmp/graft_stage/rebal_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  private[operators] val rebalBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Stages the REBUILT index the rebalance decision's rebuild leg
     * produces: the quantizer retrained on base+delta plus its full
     * posting assignment. A retrain is a pure corpus function — identical
-    * inputs, identical codebook — so re-paying the sampled k-means and
+    * inputs, identical codebook — so re-paying the centroid build and
     * the full re-assignment per query run is waste; the decision rule
     * itself stays live in [[annRebalance]] (metadata-plane counts every
     * run) and the retrained-vs-frozen movement REQUIRE runs against this
-    * staged codebook. Build-once per corpus (graft.Staging), same
-    * discipline as [[ensureIncAnnStaged]]. */
-  def ensureRebalancedStaged(s: SparkSession, d: String): (String, String) = {
-    val dir = rebalStageDir(d)
-    val centroidsPath = dir + "/centroids"
-    val postingsPath = dir + "/postings"
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      rebalBuildCount.incrementAndGet()
-      centroidArraysOf(emb(s, d))
-        .write.mode("overwrite").parquet(centroidsPath)
-      assignNearest(emb(s, d), s.read.parquet(centroidsPath))
-        .write.mode("overwrite").partitionBy("c_label").parquet(postingsPath)
-    }: Unit
-    (centroidsPath, postingsPath)
-  }
+    * staged codebook. */
+  def ensureRebalancedStaged(s: SparkSession, d: String): (String, String) =
+    stageIvf(s, d, "rebal", rebalBuildCount, emb(s, d))
 
   /** `v_incremental_ann` — IVF probe over the INCREMENTALLY MAINTAINED
     * index: the delta batch assigns against the frozen base-trained
@@ -2001,35 +1767,17 @@ object Similarity {
   def incrementalAnn(s: SparkSession, d: String): DataFrame = {
     val (cPath, pPath) = ensureIncAnnStaged(s, d)
     val cents = s.read.parquet(cPath)
-    // the arriving batch: one pass over the delta slice, nothing else
-    val deltaPostings = assignNearest(emb(s, d).filter(isDeltaVec), cents)
-    val postings = s.read.parquet(pPath)
-      .select(col("vec_id"), col("embedding"), col("c_label"))
-      .unionByName(deltaPostings)
-    incAnnProbe(s, d, cents, postings)
+    ivfProbe(s, d, cents, appendPostings(s, d, pPath, cents, isDeltaVec))
   }
 
-  /** The probe half, shared with the inline full-rebuild twin. */
-  private def incAnnProbe(s: SparkSession, d: String,
-      cents: DataFrame, postings: DataFrame): DataFrame = {
-    val probeW = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_cos").desc, col("c_label").asc)
-    val probed = queriesDf(s, d)
-      .crossJoin(broadcast(cents))
-      .select(col("q_id"), col("q_emb"), col("c_label"),
-        cosine(col("q_emb"), col("centroid")).as("c_cos"))
-      .withColumn("pr", row_number().over(probeW)).filter(col("pr") <= NProbe)
-      .select(col("q_id"), col("q_emb"), col("c_label"))
-    val rankW = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    postings.join(broadcast(probed), "c_label")
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        cosineF(col("embedding"), col("q_emb")).as("cosine"))
-      .withColumn("rank", row_number().over(rankW)).filter(col("rank") <= K)
-      .select(col("q_id"), col("rank"), col("vec_id"), col("cosine"))
-      .orderBy("q_id", "rank")
-  }
+  /** The staged postings plus the `arriving` batch assigned against the
+    * frozen `cents` — one pass over the batch, nothing else. */
+  private def appendPostings(s: SparkSession, d: String, pPath: String,
+      cents: DataFrame, arriving: Column): DataFrame =
+    s.read.parquet(pPath)
+      .select(col("vec_id"), col("embedding"), col("c_label"))
+      .unionByName(assignNearest(emb(s, d).filter(arriving), cents))
+
 
   // gate at 3x the expected same-distribution noise: E||Δc||² ≈
   // σ²d·(1/n_a + 1/n_b) with σ²d ≈ E||v||² ≈ 1 for this unit-scale
@@ -2056,17 +1804,11 @@ object Similarity {
     * aggregation pass per slice — O(dim) state, nothing corpus-sized
     * on the driver. */
   def embedDrift(s: SparkSession, d: String): DataFrame = {
-    def centRow(vecs: DataFrame, shiftDim0: Boolean): DataFrame = {
-      val sums = (0 until Dim).map { i =>
+    def centRow(vecs: DataFrame, shiftDim0: Boolean): DataFrame =
+      vecs.agg(count(lit(1)).as("n"), scaledSums { i =>
         val base = col("embedding").getItem(i).cast("double")
-        val v = if (i == 0 && shiftDim0) base + lit(0.5) else base
-        sum(floor(v * lit(CentroidScale))).as(s"s$i")
-      }
-      vecs.agg(count(lit(1)).as("n"), sums: _*)
-        .select(col("n"), array((0 until Dim).map(i =>
-          col(s"s$i").cast("double") / (col("n").cast("double") * lit(CentroidScale))): _*)
-          .as("cv"))
-    }
+        if (i == 0 && shiftDim0) base + lit(0.5) else base
+      }: _*).select(col("n"), scaledMean.as("cv"))
     def scenario(name: String, shifted: Boolean): DataFrame = {
       val a = centRow(emb(s, d).filter(col("vec_id") % 2 === 0), shiftDim0 = false)
         .select(col("n").as("n_a"), col("cv").as("ca"))
@@ -2130,9 +1872,7 @@ object Similarity {
       val builds = incAnnBuildCount.get()
       val (nCentroids, nPostings) =
         if (decision == "append") {
-          val postings = s.read.parquet(pPath)
-            .select(col("vec_id"), col("embedding"), col("c_label"))
-            .unionByName(assignNearest(emb(s, d).filter(isDelta), frozen))
+          val postings = appendPostings(s, d, pPath, frozen, isDelta)
           require(incAnnBuildCount.get() == builds,
             "append path must not rebuild the staged index")
           (frozen.count(), postings.count())
@@ -2165,8 +1905,8 @@ object Similarity {
     * append ≡ rebuild row-for-row); NOT the production shape: it
     * re-trains nothing but re-assigns every base vector per run. */
   private[operators] def incrementalAnnInline(s: SparkSession, d: String): DataFrame = {
-    val cents = centroidArraysOf(emb(s, d).filter(!isDeltaVec)).localCheckpoint()
-    incAnnProbe(s, d, cents, assignNearest(emb(s, d), cents))
+    val cents = graft.QueryDsl.pin(centroidArraysOf(emb(s, d).filter(!isDeltaVec)))
+    ivfProbe(s, d, cents, assignNearest(emb(s, d), cents))
   }
 
   // ---- Diversity-aware selection: MMR rerank + greedy k-center coreset.
@@ -2198,16 +1938,7 @@ object Similarity {
     val cand = stagedExactTopKDeep(s, d).filter(col("rank") <= MmrPool)
       .select(col("q_id"), col("vec_id"), col("cosine").as("rel"))
       .coalesce(1).localCheckpoint() // bounded: Q × MmrPool rows
-    val candV = emb(s, d).select(col("vec_id"), col("embedding"))
-      .join(broadcast(cand.select(col("q_id"), col("vec_id"))), Seq("vec_id"))
-    val aSide = candV.select(col("q_id"), col("vec_id").as("a_id"),
-      col("embedding").as("a_emb"))
-    val bSide = candV.select(col("q_id"), col("vec_id").as("b_id"),
-      col("embedding").as("b_emb"))
-    val pairs = aSide.join(bSide, Seq("q_id"))
-      .filter(col("a_id") =!= col("b_id"))
-      .select(col("q_id"), col("a_id"), col("b_id"),
-        cosineF(col("a_emb"), col("b_emb")).as("sim"))
+    val pairs = listPairSims(s, d, cand, Seq("q_id"), col("a_id") =!= col("b_id"))
       .coalesce(1).localCheckpoint() // bounded: Q × MmrPool × (MmrPool−1) rows
     val w = Window.partitionBy(col("q_id"))
     var picked = cand
@@ -2237,23 +1968,31 @@ object Similarity {
       .orderBy("q_id", "step")
   }
 
+  /** Pairwise exact cosines inside each `keys` group of the bounded
+    * (keys…, vec_id) `lists`: ONE corpus scan attaches the members'
+    * vectors (lists broadcast, semi-join side); rows (keys…, a_id, b_id,
+    * sim) for the member pairs passing `pair`. */
+  private def listPairSims(s: SparkSession, d: String, lists: DataFrame,
+      keys: Seq[String], pair: Column): DataFrame = {
+    val withV = emb(s, d).select(col("vec_id"), col("embedding"))
+      .join(broadcast(lists.select((keys :+ "vec_id").map(col): _*)), Seq("vec_id"))
+    def side(p: String): DataFrame = withV.select(keys.map(col) ++
+      Seq(col("vec_id").as(s"${p}_id"), col("embedding").as(s"${p}_emb")): _*)
+    side("a").join(side("b"), keys).filter(pair)
+      .select(keys.map(col) ++ Seq(col("a_id"), col("b_id"),
+        cosineF(col("a_emb"), col("b_emb")).as("sim")): _*)
+  }
+
   // The MMR selection is a pure corpus function (fixed probe set, staged
   // pool, deterministic greedy) — the eval overlay reads it STAGED (the
   // stagedEvalResults discipline) instead of re-running the greedy chain
   // per overlay; the live unroll stays measured in `v_mmr_rerank` itself.
   private[operators] val mmrBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  def mmrStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/mmr_p${MmrPool}_k${MmrK}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  private[operators] def ensureMmrStaged(s: SparkSession, d: String): String = {
-    val dir = mmrStageDir(d)
-    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet")) {
-      mmrBuildCount.incrementAndGet()
-      mmrRerank(s, d).write.mode("overwrite").parquet(dir + "/picks")
-    }: Unit
-    dir + "/picks"
-  }
+  private[operators] def ensureMmrStaged(s: SparkSession, d: String): String =
+    stage(d, s"mmr_p${MmrPool}_k${MmrK}", mmrBuildCount, "picks") { ps =>
+      mmrRerank(s, d).write.mode("overwrite").parquet(ps.head)
+    }.head
 
   /** `v_mmr_gain` — the eval overlay for [[mmrRerank]] (the recall/MRR
     * harness discipline): per method, mean relevance and mean intra-list
@@ -2271,16 +2010,7 @@ object Similarity {
       .select(lit("topk").as("method"), col("q_id"), col("vec_id"),
         col("cosine").as("rel"))
     val lists = mmr.unionByName(topk).coalesce(1).localCheckpoint() // 2×Q×K rows
-    val withV = emb(s, d).select(col("vec_id"), col("embedding"))
-      .join(broadcast(lists.select(col("method"), col("q_id"), col("vec_id"))),
-        Seq("vec_id"))
-    val aSide = withV.select(col("method"), col("q_id"),
-      col("vec_id").as("a_id"), col("embedding").as("a_emb"))
-    val bSide = withV.select(col("method"), col("q_id"),
-      col("vec_id").as("b_id"), col("embedding").as("b_emb"))
-    val pairSim = aSide.join(bSide, Seq("method", "q_id"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("method"), cosineF(col("a_emb"), col("b_emb")).as("sim"))
+    val pairSim = listPairSims(s, d, lists, Seq("method", "q_id"), col("a_id") < col("b_id"))
     // davg (not davg4) audited r21 against the quality-mean grid-tie
     // class: that bug requires values CONSTRUCTED on the 1e-4 decimal
     // grid (rational arithmetic landing exactly on k·1e-4 + 5e-5, where
@@ -2343,6 +2073,7 @@ object Similarity {
       .toDF("step", "vec_id", "mind2")
       .orderBy("step")
   }
+
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "v_incremental_ann" -> (incrementalAnn _),
