@@ -25,7 +25,7 @@ object ScaleFixture {
       "graft-scale-fixture")
     new java.io.File(out).mkdirs()
 
-    val docs = spark.read.parquet(s"$src/documents.parquet")
+    val docs = Tables.parquet(spark, s"$src/documents.parquet")
     val maxDoc = docs.agg(max("doc_id")).head().getLong(0) + 1
     (0 until k).map { r =>
       if (r == 0) docs
@@ -42,7 +42,7 @@ object ScaleFixture {
       .repartition(8, col("doc_id"))
       .write.mode("overwrite").parquet(s"$out/documents.parquet")
 
-    val orders = spark.read.parquet(s"$src/orders.parquet")
+    val orders = Tables.parquet(spark, s"$src/orders.parquet")
     val maxOrd = orders.agg(max("o_orderkey")).head().getLong(0) + 1
     val maxCust = orders.agg(max("o_custkey")).head().getLong(0) + 1
     (0 until k).map { r =>
@@ -56,7 +56,7 @@ object ScaleFixture {
 
     Seq("customer", "supplier", "part", "nation", "region", "lineitem",
       "events", "embeddings").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      Tables.parquet(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     }
     println(s"SCALE_FIXTURE k=$k out=$out")

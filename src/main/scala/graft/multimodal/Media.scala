@@ -106,7 +106,7 @@ object Media {
   private def stagedPayloads(
       s: SparkSession, d: String, tpe: String): Dataset[(Long, Array[Byte])] = {
     import s.implicits._
-    s.read.parquet(ensureMediaStaged(s, d) + "/payloads")
+    Tables.parquet(s, ensureMediaStaged(s, d) + "/payloads")
       .filter(col("media_type") === tpe)
       .select(col("media_id").as("_1"), col("bytes").as("_2"))
       .as[(Long, Array[Byte])]
@@ -115,7 +115,7 @@ object Media {
   private def stagedCompressed(
       s: SparkSession, d: String, sub: String): Dataset[(Long, Array[Byte])] = {
     import s.implicits._
-    s.read.parquet(ensureMediaStaged(s, d) + "/" + sub)
+    Tables.parquet(s, ensureMediaStaged(s, d) + "/" + sub)
       .select(col("media_id").as("_1"), col("bytes").as("_2"))
       .as[(Long, Array[Byte])]
   }
@@ -132,7 +132,7 @@ object Media {
     * batches bound peak decode memory; no shuffle, no driver. */
   def mediaFeatures(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(ensureMediaStaged(s, d) + "/payloads")
+    Tables.parquet(s, ensureMediaStaged(s, d) + "/payloads")
       .select(col("media_id").as("_1"), col("media_type").as("_2"), col("bytes").as("_3"))
       .as[(Long, String, Array[Byte])]
       .mapPartitions(_.grouped(BatchSize).flatMap(_.map { case (id, tpe, bytes) =>
@@ -1032,7 +1032,7 @@ object Media {
     // board flagged exactly this, slope 28.6 with a flat sentinel). The
     // explicit-count repartition buys full parallelism; at real scale the
     // payload files exceed maxPartitionBytes and split naturally.
-    s.read.parquet(ensureAviStaged(s, d))
+    Tables.parquet(s, ensureAviStaged(s, d))
       .repartition(s.sparkContext.defaultParallelism, col("media_id"))
       .select(col("media_id").as("_1"), col("bytes").as("_2"))
       .as[(Long, Array[Byte])]
@@ -1398,7 +1398,7 @@ object Media {
 
   def mediaPolicy(s: SparkSession, d: String): DataFrame = {
     val stage = ensureMediaPolicyStaged(s, d)
-    val items = s.read.parquet(stage + "/items")
+    val items = Tables.parquet(s, stage + "/items")
     val ex = items.as("p").join(items.as("q"),
         col("p.modality") === col("q.modality") &&
           col("p.payload_md5") === col("q.payload_md5") &&
@@ -1406,11 +1406,11 @@ object Media {
       .groupBy(col("p.modality").as("modality"), col("p.media_id").as("media_id"))
       .agg(count(lit(1)).as("n_exact"),
         min(when(col("q.media_id") < col("p.media_id"), col("q.media_id"))).as("exact_lo"))
-    val nd = s.read.parquet(stage + "/pairs_image")
+    val nd = Tables.parquet(s, stage + "/pairs_image")
       .select(lit("image").as("modality"), col("id_a"), col("id_b"), col("hamming"))
-      .unionByName(s.read.parquet(stage + "/pairs_audio")
+      .unionByName(Tables.parquet(s, stage + "/pairs_audio")
         .select(lit("audio").as("modality"), col("id_a"), col("id_b"), col("hamming")))
-      .unionByName(s.read.parquet(stage + "/pairs_video")
+      .unionByName(Tables.parquet(s, stage + "/pairs_video")
         .select(lit("video").as("modality"), col("id_a"), col("id_b"), col("hamming")))
     val ends = nd.select(col("modality"), col("id_a").as("media_id"),
         col("id_b").as("partner"), col("hamming"))

@@ -123,7 +123,7 @@ object BpeTrain {
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
       bpeStageBuildCount.incrementAndGet()
       wordCounts(s, d).write.mode("overwrite").parquet(dir + "/wordcounts")
-      val wc = s.read.parquet(dir + "/wordcounts")
+      val wc = Tables.parquet(s, dir + "/wordcounts")
       val merges = trainedMergesOver(wc)
       merges.toDF("step", "merge_left", "merge_right", "n")
         .coalesce(1).write.mode("overwrite").parquet(dir + "/merges")
@@ -150,7 +150,7 @@ object BpeTrain {
   }
 
   private def stagedMerges(s: SparkSession, d: String): Vector[(Int, String, String, Long)] =
-    s.read.parquet(ensureBpeStaged(s, d) + "/merges")
+    Tables.parquet(s, ensureBpeStaged(s, d) + "/merges")
       .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       .sortBy(_._1).toVector
 
@@ -208,8 +208,8 @@ object BpeTrain {
     * totals come from the usual word-count join. */
   def wordpiece(s: SparkSession, d: String): DataFrame = {
     val staged = ensureBpeStaged(s, d)
-    s.read.parquet(staged + "/docwords")
-      .join(s.read.parquet(staged + "/wp_vocab"), Seq("w"))
+    Tables.parquet(s, staged + "/docwords")
+      .join(Tables.parquet(s, staged + "/wp_vocab"), Seq("w"))
       .groupBy(col("doc_id"))
       .agg(sum(col("c")).as("n_words"),
         sum(col("c") * length(col("w"))).as("n_chars"),
@@ -233,8 +233,8 @@ object BpeTrain {
     * corpus is touched once, exactly like training. */
   def bpeApply(s: SparkSession, d: String): DataFrame = {
     val staged = ensureBpeStaged(s, d)
-    s.read.parquet(staged + "/docwords")
-      .join(s.read.parquet(staged + "/bpe_vocab"), Seq("w"))
+    Tables.parquet(s, staged + "/docwords")
+      .join(Tables.parquet(s, staged + "/bpe_vocab"), Seq("w"))
       .groupBy(col("doc_id"))
       .agg(
         sum(col("c")).as("n_words"),
@@ -254,7 +254,7 @@ object BpeTrain {
     * Oracle = the unrolled train chain evaluated at every prefix. */
   def bpeCurve(s: SparkSession, d: String): DataFrame = {
     val merges = stagedMerges(s, d)
-    var df = s.read.parquet(ensureBpeStaged(s, d) + "/wordcounts")
+    var df = Tables.parquet(s, ensureBpeStaged(s, d) + "/wordcounts")
       .select(col("cnt"), symbolize(col("w")).as("s"))
     val points = (0 to BpeMerges).map { k =>
       if (k > 0) {

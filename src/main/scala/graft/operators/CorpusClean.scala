@@ -329,7 +329,7 @@ object CorpusClean {
     // re-aggregation (Σ over docs ≡ counting the raw token stream — the
     // same c1-from-c2 identity the LM stage uses) and the per-doc
     // scoring consumes it directly; the probe never touches documents
-    val perDocCounts = s.read.parquet(ensureDsirStaged(s, d))
+    val perDocCounts = Tables.parquet(s, ensureDsirStaged(s, d))
     val target = perDocCounts.filter(col("lang") === "en")
       .groupBy(col("b")).agg(sum(col("c")).as("np"))
     val raw = perDocCounts.groupBy(col("b")).agg(sum(col("c")).as("nq"))

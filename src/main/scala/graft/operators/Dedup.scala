@@ -417,7 +417,7 @@ object Dedup {
   }
 
   private[operators] def stagedDupClusters(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureClustersStaged(s, d))
+    Tables.parquet(s, ensureClustersStaged(s, d))
 
   /** `d_split_leakage` — LEAKAGE-SAFE SPLIT ASSIGNMENT: train/val/test
     * is decided per DUP CLUSTER, not per document, so a document and
@@ -727,7 +727,7 @@ object Dedup {
     * [[spanDedupInline]] (spec-asserted); the gram index builds once per
     * corpus via [[ensureDupGramsStaged]]. */
   def spanDedup(s: SparkSession, d: String): DataFrame = {
-    val postings = s.read.parquet(ensureDupGramsStaged(s, d))
+    val postings = Tables.parquet(s, ensureDupGramsStaged(s, d))
     val dups = postings.groupBy(col("doc_id")).agg(sum(col("n")).as("dup_n"))
     docs(s, d)
       .filter(size(words) >= SpanN)
@@ -766,7 +766,7 @@ object Dedup {
   }
 
   private[operators] def stagedNeardupPairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensurePairsStaged(s, d))
+    Tables.parquet(s, ensurePairsStaged(s, d))
 
   /** Cross-source SYNDICATION matrix: the verified near-dup pair table
     * joined to each side's source and aggregated to unordered source
@@ -862,7 +862,7 @@ object Dedup {
   }
 
   private[operators] def stagedBaseSigs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureBaseIndexStaged(s, d)._1)
+    Tables.parquet(s, ensureBaseIndexStaged(s, d)._1)
 
   private[operators] def stagedBaseBands(s: SparkSession, d: String): DataFrame = {
     ensureBaseIndexStaged(s, d)
@@ -1143,7 +1143,7 @@ object Dedup {
   }
 
   private[operators] def stagedRankedShingles(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureRankedStaged(s, d))
+    Tables.parquet(s, ensureRankedStaged(s, d))
 
   /** The (df, token)-ranked shingle table over an arbitrary
     * (doc_id, text) frame: per doc, its distinct word-5-gram shingles
@@ -1360,7 +1360,7 @@ object Dedup {
       lshTuningInline(s, d).write.mode("overwrite").parquet(dir + "/sweep")
     }
     if (built) lshTuningBuildCount.incrementAndGet()
-    s.read.parquet(dir + "/sweep").orderBy("bands")
+    Tables.parquet(s, dir + "/sweep").orderBy("bands")
   }
 
   private[operators] def lshTuningInline(s: SparkSession, d: String): DataFrame = {

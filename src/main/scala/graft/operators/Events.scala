@@ -876,7 +876,7 @@ object Events {
       daily(Tables.events(s, d).filter(col("ts") < boundary))
         .write.mode("overwrite").parquet(path)
     }: Unit
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .unionByName(daily(Tables.events(s, d).filter(col("ts") >= boundary)))
       .orderBy("day", "event_type")
   }

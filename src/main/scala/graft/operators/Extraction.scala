@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Tables
 import graft.extract.NportKernel
 import graft.sources.{DocStage, FilingDocs, FilingIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -181,7 +182,7 @@ object Extraction {
     // real + decoys both read the STAGED extraction (two cheap parquet
     // scans; before staging this re-ran the render+parse kernel — the
     // most expensive stage in the repo — inside the sink job)
-    val holdings = s.read.parquet(ensureHoldingsStaged(s, d))
+    val holdings = Tables.parquet(s, ensureHoldingsStaged(s, d))
       .select(outCols.map(col): _*)
     val real = holdings.withColumn("filing_seq", lit(2L))
     val decoys = holdings

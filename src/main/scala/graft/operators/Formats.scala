@@ -307,7 +307,7 @@ object Formats {
     val fA = link("m0", "A")
     val fC = link("m12", "C") // B's rows + the % 3 == 2 arrivals
     publishVersions(base, Seq(fA, link("m1", "B")), Seq(fA, fC))
-    Seq(1, 2).map(v => s.read.parquet(ManifestLog.read(base, v): _*).withColumn("version", lit(v)))
+    Seq(1, 2).map(v => Tables.parquet(s, ManifestLog.read(base, v): _*).withColumn("version", lit(v)))
       .reduce(_ unionByName _)
       .groupBy(col("version"))
       .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
@@ -425,7 +425,7 @@ object Formats {
     }
     require(after.keys.exists(_.contains(s"o_orderstatus=$restated")),
       "the restated partition must still exist")
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .groupBy(col("o_orderstatus"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
       .orderBy("o_orderstatus")
@@ -516,7 +516,7 @@ object Formats {
       s: SparkSession, base: String, n: Int,
       tornSummaryTxn: Option[Int] = None): (DataFrame, DataFrame) = {
     def tableAt(t: String, txn: Int) =
-      s.read.parquet(ManifestLog.read(s"$base/$t", ManifestLog.readTxn(base, txn)(t)): _*)
+      Tables.parquet(s, ManifestLog.read(s"$base/$t", ManifestLog.readTxn(base, txn)(t)): _*)
     (tableAt("fact", n), tableAt("summary", tornSummaryTxn.getOrElse(n)))
   }
 
@@ -566,7 +566,7 @@ object Formats {
       ingest.filter(col("o_orderkey") % 3 =!= 0)
         .write.mode("overwrite").parquet(s"$dataDir/B")
       // v2: ONE compacted file, %3==1 rows corrected, row_id CARRIED
-      s.read.parquet(s"$dataDir/A", s"$dataDir/B")
+      Tables.parquet(s, s"$dataDir/A", s"$dataDir/B")
         .withColumn("cents",
           when(col("o_orderkey") % 3 === 1, col("cents") + 500).otherwise(col("cents")))
         .write.mode("overwrite").parquet(s"$dataDir/AB2")
@@ -574,8 +574,8 @@ object Formats {
 
   def rowTracking(s: SparkSession, d: String): DataFrame = {
     val staged = ensureRowTrackStaged(s, d)
-    val v1 = s.read.parquet(s"$staged/data/A", s"$staged/data/B")
-    val v2 = s.read.parquet(s"$staged/data/AB2")
+    val v1 = Tables.parquet(s, s"$staged/data/A", s"$staged/data/B")
+    val v2 = Tables.parquet(s, s"$staged/data/AB2")
     require(v1.inputFiles.toSet.intersect(v2.inputFiles.toSet).isEmpty,
       "v2 must be a full rewrite — no shared data files with v1")
     val onlyV1 = v1.select("row_id").exceptAll(v2.select("row_id")).limit(1).count()
@@ -628,7 +628,7 @@ object Formats {
     require(srcV2.forall(_.contains("/src_data/")),
       "clone manifest must reference the source's data files by path")
     Seq("src" -> 2, "src" -> 3, "clone" -> 1, "clone" -> 2).map { case (table, v) =>
-      s.read.parquet(ManifestLog.read(s"$base/$table", v): _*)
+      Tables.parquet(s, ManifestLog.read(s"$base/$table", v): _*)
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
         .select(lit(table).as("tbl"), lit(v).as("version"),
           col("n_rows"), col("total_cents"))
@@ -677,7 +677,7 @@ object Formats {
     // checked on the file system: a failing Spark read would prove the
     // same but log a PATH_NOT_FOUND error on every run
     require(!srcData.exists(), "fixture error: the source data must really be gone")
-    s.read.parquet(cA, cB)
+    Tables.parquet(s, cA, cB)
       .groupBy((col("o_orderkey") % 2).cast("int").as("slice"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
       .orderBy("slice")
@@ -708,7 +708,7 @@ object Formats {
       require(ManifestLog.exists(base, v), s"history must survive the restore: v$v missing")
     }
     (1 to 4).map { v =>
-      s.read.parquet(ManifestLog.read(base, v): _*)
+      Tables.parquet(s, ManifestLog.read(base, v): _*)
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
         .select(lit(v).as("version"), col("n_rows"), col("total_cents"))
     }.reduce(_ unionByName _).orderBy("version")
@@ -761,7 +761,7 @@ object Formats {
         .withColumn("cents", col("cents") + 500)) // rewrite: +5.00 correction
       w("C", o.filter(col("o_orderkey") % 3 === 2)) // append
       // v1 = A∪B materialized once (the aggregate the refresh maintains)
-      s.read.parquet(s"$dataDir/A", s"$dataDir/B").groupBy(col("o_orderstatus"))
+      Tables.parquet(s, s"$dataDir/A", s"$dataDir/B").groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("total_cents"))
         .write.mode("overwrite").parquet(s"$dataDir/mv1")
     }
@@ -770,15 +770,15 @@ object Formats {
     val link = stagedLinker(ensureMvSlicesStaged(s, d), TempPaths.runDir(s, "mvrefresh"))
     val Seq(fB, fB2, fC, mv1Path) = Seq("B", "B2", "C", "mv1").map(n => link(n, n))
     // CDF v1→v2: removed file B → deletes; added B2, C → inserts
-    val deltas = s.read.parquet(fB)
+    val deltas = Tables.parquet(s, fB)
       .select(col("o_orderstatus"), col("cents"), lit(-1L).as("w"))
-      .unionByName(s.read.parquet(fB2, fC)
+      .unionByName(Tables.parquet(s, fB2, fC)
         .select(col("o_orderstatus"), col("cents"), lit(1L).as("w")))
     val changed = Seq("/data/B/", "/data/B2/", "/data/C/")
     require(deltas.inputFiles.nonEmpty &&
       deltas.inputFiles.forall(f => changed.exists(f.contains)),
       "refresh delta must read only the changed files, never the base")
-    applyMvDelta(s.read.parquet(mv1Path), deltas)
+    applyMvDelta(Tables.parquet(s, mv1Path), deltas)
   }
 
   /** `k_timetravel_ts` — `TIMESTAMP AS OF` through the catalog: commits
@@ -858,7 +858,7 @@ object Formats {
       val (files, replayed) = ManifestLog.resolve(base, v)
       require(replayed == expectReplay,
         s"v$v replayed $replayed actions, expected $expectReplay — checkpoint not consulted")
-      s.read.parquet(files: _*)
+      Tables.parquet(s, files: _*)
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
         .select(lit(v).as("version"), lit(replayed).as("actions_replayed"),
           col("n_rows"), col("total"))
@@ -1009,9 +1009,9 @@ object Formats {
     val (lastV, finalFiles) = ManifestLog.latest(base)
     require(ManifestLog.read(base, 1) == v1Before, "v1 mutated — snapshot isolation broken")
     val conflicts = results.values().stream().mapToInt(_.attempts).sum() - results.size()
-    val fin = s.read.parquet(finalFiles: _*)
+    val fin = Tables.parquet(s, finalFiles: _*)
     fin.agg(count(lit(1)).as("final_rows"), dsum(col("o_totalprice")).as("final_total"))
-      .crossJoin(s.read.parquet(ManifestLog.read(base, 1): _*)
+      .crossJoin(Tables.parquet(s, ManifestLog.read(base, 1): _*)
         .agg(count(lit(1)).as("v1_rows")))
       .select(lit(lastV).as("n_versions"), lit(conflicts).as("n_conflicts"),
         col("v1_rows"), col("final_rows"), col("final_total"))
@@ -1059,9 +1059,9 @@ object Formats {
     require(ManifestLog.read(base, 1) == v1Before, "v1 mutated — snapshot isolation broken")
     val conflicts = results.values().stream().mapToInt(_.attempts).sum() - results.size()
     require(conflicts == 1, s"exactly one rebase expected, got $conflicts")
-    s.read.parquet(finalFiles: _*)
+    Tables.parquet(s, finalFiles: _*)
       .agg(count(lit(1)).as("final_rows"), dsum(col("o_totalprice")).as("final_total"))
-      .crossJoin(s.read.parquet(ManifestLog.read(base, 1): _*)
+      .crossJoin(Tables.parquet(s, ManifestLog.read(base, 1): _*)
         .agg(count(lit(1)).as("v1_rows")))
       .select(lit(lastV).as("n_versions"), lit(conflicts).as("n_conflicts"),
         col("v1_rows"), col("final_rows"), col("final_total"))
@@ -1152,11 +1152,11 @@ object Formats {
     require(ManifestLog.read(base, 1) == v1Before, "v1 mutated — snapshot isolation broken")
     val (lastV, finalFiles) = ManifestLog.latest(base)
     require(finalFiles == Seq(fC2), s"final state must be the re-planned compact, got $finalFiles")
-    s.read.parquet(finalFiles: _*)
+    Tables.parquet(s, finalFiles: _*)
       .agg(count(lit(1)).as("final_rows"),
         sum((col("o_custkey") % 7 === 3).cast("long")).as("subject_rows_final"),
         dsum(col("o_totalprice")).as("final_total"))
-      .crossJoin(s.read.parquet(ManifestLog.read(base, 1): _*)
+      .crossJoin(Tables.parquet(s, ManifestLog.read(base, 1): _*)
         .agg(count(lit(1)).as("v1_rows"),
           sum((col("o_custkey") % 7 === 3).cast("long")).as("subject_rows_v1")))
       .select(lit(lastV).as("n_versions"), lit(aborted).as("n_aborts"),
@@ -1191,7 +1191,7 @@ object Formats {
     val targetDay = ev.agg(min(col("day"))).head().getDate(0).toString
     def filtered(v: Int): DataFrame = {
       val Array(path, spec) = ManifestLog.read(base, v).head.split("\\|")
-      val agg = s.read.parquet(path).filter(col("day") === lit(targetDay))
+      val agg = Tables.parquet(s, path).filter(col("day") === lit(targetDay))
         .groupBy().agg(count(lit(1)).as("n"), dsum(col("value")).as("total"))
         .select(lit(v).as("version"), col("n"), col("total"))
       val rows = agg.collect()
@@ -1230,8 +1230,8 @@ object Formats {
         col("o_totalprice").cast("string"), // double → string: incompatible
         col("o_orderpriority")) // added
       .write.mode("overwrite").parquet(s"$base/v2")
-    val v1 = s.read.parquet(s"$base/v1").schema.map(f => f.name -> f.dataType).toMap
-    val v2 = s.read.parquet(s"$base/v2").schema.map(f => f.name -> f.dataType).toMap
+    val v1 = Tables.parquet(s, s"$base/v1").schema.map(f => f.name -> f.dataType).toMap
+    val v2 = Tables.parquet(s, s"$base/v2").schema.map(f => f.name -> f.dataType).toMap
     import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, IntegerType, LongType}
     def widened(a: DataType, b: DataType): Boolean =
       (a == IntegerType && b == LongType) || (a == FloatType && b == DoubleType)
@@ -1308,9 +1308,9 @@ object Formats {
     val removedFiles = (v1 -- v2).toSeq.sorted
     val addedFiles = (v2 -- v1).toSeq.sorted
     // the delta read: shared files never enter the plan
-    val removed = s.read.parquet(removedFiles: _*)
+    val removed = Tables.parquet(s, removedFiles: _*)
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("old_price"))
-    val added = s.read.parquet(addedFiles: _*)
+    val added = Tables.parquet(s, addedFiles: _*)
       .select(col("o_orderkey").as("k"), col("o_totalprice").as("new_price"))
     removed.join(added, Seq("k"), "full_outer")
       .select(col("k"),
@@ -1352,7 +1352,7 @@ object Formats {
     require(!new java.io.File(fB).exists() && !new java.io.File(fC).exists(),
       "vacuum left unreferenced files behind")
     def audit(v: Int): DataFrame =
-      s.read.parquet(ManifestLog.read(base, v): _*)
+      Tables.parquet(s, ManifestLog.read(base, v): _*)
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
         .select(lit(v).as("version"), col("n_rows"), col("total"),
           lit(deadFiles.length).as("n_files_deleted"),
@@ -1423,7 +1423,7 @@ object Formats {
       "vacuum deleted the checkpoint the oldest retained version resolves through")
     val out = retained.map { v =>
       val (files, replayed) = resolvedRetained(v)
-      s.read.parquet(files: _*)
+      Tables.parquet(s, files: _*)
         .agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("total"))
         .select(lit(v).as("version"), lit(replayed).as("actions_replayed"),
           col("n_rows"), col("total"),
@@ -1477,7 +1477,7 @@ object Formats {
         if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(s"$dataDir/b=$b")))
           emptyBucket.coalesce(1).write.mode("overwrite").parquet(s"$dataDir/b=$b")
       }
-      val subjects = s.read.parquet(dataDir)
+      val subjects = Tables.parquet(s, dataDir)
         .select(col("user_id")).distinct().orderBy("user_id").limit(2)
         .collect().map(_.getLong(0)) // 2 rows — the erasure queue, bounded
       java.nio.file.Files.write(
@@ -1678,14 +1678,14 @@ object Formats {
     // min user_id must not index files(-k)
     val tb = Math.floorMod(target, GdprBuckets.toLong).toInt
     val rewritten = s"$base/data/b${tb}_gdpr"
-    s.read.parquet(files(tb)).filter(col("user_id") =!= target)
+    Tables.parquet(s, files(tb)).filter(col("user_id") =!= target)
       .write.mode("overwrite").parquet(rewritten)
     val v2files = files.updated(tb, rewritten)
     require(ManifestLog.publish(base, 2, v2files), s"v2 exists under $base")
     require(v2files.toSet.intersect(files.toSet).size == GdprBuckets - 1,
       "erasure rewrote more than the subject's bucket")
     def audit(v: Int): DataFrame =
-      s.read.parquet(ManifestLog.read(base, v): _*)
+      Tables.parquet(s, ManifestLog.read(base, v): _*)
         .agg(count(lit(1)).as("n_rows"),
           sum(when(col("user_id") === target, 1L).otherwise(0L)).as("n_subject_rows"),
           dsum(col("value")).as("sum_value"))
@@ -1703,12 +1703,12 @@ object Formats {
     * data. */
   private[operators] def readEntry(s: SparkSession, entry: String): DataFrame =
     ManifestLog.entryPaths(entry) match {
-      case Seq(p) => s.read.parquet(p)
+      case Seq(p) => Tables.parquet(s, p)
       case Seq(p, dv) =>
-        s.read.parquet(p)
+        Tables.parquet(s, p)
           .withColumn("__dv_file", col("_metadata.file_name"))
           .withColumn("__dv_pos", col("_metadata.row_index"))
-          .join(broadcast(s.read.parquet(dv)),
+          .join(broadcast(Tables.parquet(s, dv)),
             Seq("__dv_file", "__dv_pos"), "left_anti")
           .drop("__dv_file", "__dv_pos")
     }
@@ -1745,7 +1745,7 @@ object Formats {
     }
     val before = fingerprint()
     val dvPath = s"$base/dv/b${tb}_v2"
-    s.read.parquet(files(tb))
+    Tables.parquet(s, files(tb))
       .select(col("_metadata.file_name").as("__dv_file"),
         col("_metadata.row_index").as("__dv_pos"), col("user_id"))
       .filter(col("user_id") === target)
@@ -1795,13 +1795,13 @@ object Formats {
       val tb = Math.floorMod(subject, GdprBuckets.toLong).toInt
       val (path, prevDv) = parseEntry(prev(tb))
       val dvPath = s"$base/dv/b${tb}_v$v"
-      val newPositions = s.read.parquet(path)
+      val newPositions = Tables.parquet(s, path)
         .select(col("_metadata.file_name").as("__dv_file"),
           col("_metadata.row_index").as("__dv_pos"), col("user_id"))
         .filter(col("user_id") === subject)
         .drop("user_id")
       // the published bitmap is cumulative per file; the feed diffs them
-      prevDv.map(p => s.read.parquet(p).unionByName(newPositions))
+      prevDv.map(p => Tables.parquet(s, p).unionByName(newPositions))
         .getOrElse(newPositions)
         .write.mode("overwrite").parquet(dvPath)
       val next = prev.updated(tb, s"$path|dv=$dvPath")
@@ -1818,10 +1818,10 @@ object Formats {
       val (path, fromDv) = parseEntry(changed.head._1)
       val (_, toDv) = parseEntry(changed.head._2)
       val deltaBm = fromDv match {
-        case Some(p) => s.read.parquet(toDv.get).exceptAll(s.read.parquet(p))
-        case None    => s.read.parquet(toDv.get)
+        case Some(p) => Tables.parquet(s, toDv.get).exceptAll(Tables.parquet(s, p))
+        case None    => Tables.parquet(s, toDv.get)
       }
-      s.read.parquet(path)
+      Tables.parquet(s, path)
         .withColumn("__dv_file", col("_metadata.file_name"))
         .withColumn("__dv_pos", col("_metadata.row_index"))
         .join(broadcast(deltaBm), Seq("__dv_file", "__dv_pos"), "left_semi")

@@ -48,7 +48,7 @@ object Layout {
   }
 
   private[operators] def stagedEvents(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureLayout(s, d))
+    Tables.parquet(s, ensureLayout(s, d))
 
   private val From = "2024-01-10"
   private val To = "2024-01-12"
@@ -120,7 +120,7 @@ object Layout {
   def zorderPrune(s: SparkSession, d: String): DataFrame =
     // both predicates are RAW-COLUMN ranges (ts, not to_date(ts)) so they
     // push down to the parquet reader — a function of a column never does
-    s.read.parquet(ensureZOrder(s, d))
+    Tables.parquet(s, ensureZOrder(s, d))
       .filter(col("user_id").between(UserFrom, UserTo) &&
         col("ts") >= lit(s"$From 00:00:00").cast("timestamp") &&
         col("ts") < date_add(lit(To).cast("date"), 1).cast("timestamp"))
@@ -186,7 +186,7 @@ object Layout {
     * 2-D Z-order and the unclustered layout). Answers are
     * layout-independent — the oracle reads the ORIGINAL events table. */
   def hilbertPrune(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureHilbert(s, d))
+    Tables.parquet(s, ensureHilbert(s, d))
       .filter(col("user_id").between(UserFrom, UserTo) &&
         col("ts") >= lit(s"$From 00:00:00").cast("timestamp") &&
         col("ts") < date_add(lit(To).cast("date"), 1).cast("timestamp") &&
@@ -226,8 +226,8 @@ object Layout {
       // into CompactFiles size-bounded outputs (maxRecordsPerFile caps a
       // file even if a partition is larger — the size-bounding half of
       // real compaction; repartition sets the floor)
-      val rows = s.read.parquet(frag).count()
-      s.read.parquet(frag)
+      val rows = Tables.parquet(s, frag).count()
+      Tables.parquet(s, frag)
         .repartition(CompactFiles)
         .write.option("maxRecordsPerFile", (rows / CompactFiles + 1).toString)
         .mode("overwrite").parquet(comp)
@@ -240,7 +240,7 @@ object Layout {
     * as the original table (oracle), far fewer files than the fragmented
     * one (spec). */
   def compactionQuery(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureCompaction(s, d)._2)
+    Tables.parquet(s, ensureCompaction(s, d)._2)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), countDistinct(col("user_id")).as("n_users"),
         dsum(col("value")).as("total_value"))
@@ -365,7 +365,7 @@ object Layout {
         .write.mode("overwrite").parquet(s"$dir/data")
       // o_orderdate is TIMESTAMP_NTZ; the NTZ→instant cast is exact
       // under the session's pinned UTC zone (the Tables.normalizeTs rule)
-      val stats = s.read.parquet(s"$dir/data")
+      val stats = Tables.parquet(s, s"$dir/data")
         .groupBy(input_file_name().as("path"))
         .agg(unix_micros(min(col("o_orderdate")).cast("timestamp")).as("min_us"),
           unix_micros(max(col("o_orderdate")).cast("timestamp")).as("max_us"))
@@ -402,7 +402,7 @@ object Layout {
     val live = manifest.collect { case (p, mn, mx) if mx >= loUs && mn < hiUs => p }
     require(live.nonEmpty && live.size < manifest.size,
       s"stats pruning skipped nothing: ${live.size}/${manifest.size} files live")
-    s.read.parquet(live: _*)
+    Tables.parquet(s, live: _*)
       .filter(unix_micros(col("o_orderdate").cast("timestamp")) >= loUs
         && unix_micros(col("o_orderdate").cast("timestamp")) < hiUs)
       .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("month"))
@@ -444,7 +444,7 @@ object Layout {
         16, 10).cast("long"), lit(bits))
       val p2 = pmod(conv(substring(md5(col("event_id").cast("string").cast("binary")), 9, 8),
         16, 10).cast("long"), lit(bits))
-      val stats = s.read.parquet(s"$dir/data")
+      val stats = Tables.parquet(s, s"$dir/data")
         .select(input_file_name().as("path"), col("event_id"),
           explode(array(p1, p2)).as("p"))
         .groupBy(col("path"))
@@ -523,7 +523,7 @@ object Layout {
       import s.implicits._
       probes.toDF("event_id")
     }
-    s.read.parquet(live: _*)
+    Tables.parquet(s, live: _*)
       .join(broadcast(probeDf), "event_id")
       .groupBy(col("event_id"))
       .agg(count(lit(1)).as("n_rows"), dsum(col("value")).as("total_value"))

@@ -200,7 +200,7 @@ object Pipeline {
     // below re-read the tiny parquet instead of pinning — the r20 shape's
     // localCheckpoint existed to avoid re-running the verdict chains,
     // which now run at staging build time only
-    val flags = s.read.parquet(ensureTextVerdictsStaged(s, d))
+    val flags = Tables.parquet(s, ensureTextVerdictsStaged(s, d))
       .select(col("doc_id"), col("source"),
         (col("action") === "suppress").cast("int").as("anon_suppressed"),
         ((col("action") =!= "suppress") && (col("verdict") =!= "keep"))
@@ -258,7 +258,7 @@ object Pipeline {
     * documents join supplies one string column; the rollup is a map-side-
     * combining groupBy to O(sources × modalities) rows. */
   def releaseBoard(s: SparkSession, d: String): DataFrame = {
-    val text = s.read.parquet(ensureTextVerdictsStaged(s, d))
+    val text = Tables.parquet(s, ensureTextVerdictsStaged(s, d))
       .select(col("source"), lit("text").as("modality"),
         (col("action") === "suppress").cast("int").as("pb"),
         ((col("action") =!= "suppress") && (col("verdict") === "drop"))

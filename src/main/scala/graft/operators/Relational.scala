@@ -506,8 +506,8 @@ object Relational {
     // isolated A/B — the aggregate is also the stats barrier that keeps
     // the two registry probes planned as broadcast joins; without it the
     // scoring leg degrades. Documented in OPTIMIZATION_r21.md.
-    val cand = s.read.parquet(vaP).as("x")
-      .join(s.read.parquet(vbP).as("y"), col("x.variant") === col("y.variant"))
+    val cand = Tables.parquet(s, vaP).as("x")
+      .join(Tables.parquet(s, vbP).as("y"), col("x.variant") === col("y.variant"))
       .select(col("x.key").as("a_key"), col("y.key").as("b_key"))
       .distinct()
     val sName = when(col("a_name") === col("b_name"), 24)

@@ -202,7 +202,7 @@ object Similarity {
 
   /** The full depth-[[AnnTruthDepth]] truth table (q_id, rank, vec_id, cosine). */
   private[operators] def stagedExactTopKDeep(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureAnnTruthStaged(s, d))
+    Tables.parquet(s, ensureAnnTruthStaged(s, d))
 
   private[operators] def stagedExactTopK(s: SparkSession, d: String): DataFrame =
     stagedExactTopKDeep(s, d).filter(col("rank") <= K)
@@ -241,7 +241,7 @@ object Similarity {
     }.head
 
   private[operators] def stagedEvalResults(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureAnnEvalStaged(s, d))
+    Tables.parquet(s, ensureAnnEvalStaged(s, d))
 
   /** Recall of ranked lists `res` (q_id, vec_id, plus the leg column of
     * the one-column `legs`) against `truth`: per (leg, query) the hit
@@ -376,7 +376,7 @@ object Similarity {
   }
 
   private[operators] def stagedCentroids(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureAnnStaged(s, d)._1)
+    Tables.parquet(s, ensureAnnStaged(s, d)._1)
 
   /** The bands half of the index as the catalog's BUCKETED table — reads
     * carry the (band, bkey) co-location that a bare parquet-path read
@@ -429,7 +429,7 @@ object Similarity {
     * batch), never O(index). */
   def annDelete(s: SparkSession, d: String): DataFrame = {
     val (cPath, pPath) = ensureIncAnnStaged(s, d)
-    val staged = s.read.parquet(pPath)
+    val staged = Tables.parquet(s, pPath)
       .select(col("vec_id"), col("embedding"), col("c_label"))
     val tombs = emb(s, d).filter(isTombVec).select(col("vec_id"))
     // bounded probe: one row suffices to witness merge-on-read
@@ -438,7 +438,7 @@ object Similarity {
     require(stillThere > 0,
       "staged postings no longer contain tombstoned ids — index was rewritten")
     val live = staged.join(broadcast(tombs), Seq("vec_id"), "left_anti")
-    ivfProbe(s, d, s.read.parquet(cPath), live)
+    ivfProbe(s, d, Tables.parquet(s, cPath), live)
   }
 
   // ---- LSH-bucketed ANN: signed random projections (SRP / SimHash for
@@ -895,7 +895,7 @@ object Similarity {
   /** The staged code table IS the compressed index: PqSub codes per
     * vector, no floats — built once per sf dir. */
   private[operators] def stagedPqCodes(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(stage(d, "pqcodes", pqBuildCount, "codes") { ps =>
+    Tables.parquet(s, stage(d, "pqcodes", pqBuildCount, "codes") { ps =>
       pqCodesInline(s, d).write.mode("overwrite").parquet(ps.head)
     }.head)
 
@@ -1009,7 +1009,7 @@ object Similarity {
       rbPath: String, codesPath: String): Unit = {
     val resid = residualsOver(vecs, cents)
     residualCodebook(resid).write.mode("overwrite").parquet(rbPath)
-    encodeResiduals(resid, vecs.sparkSession.read.parquet(rbPath))
+    encodeResiduals(resid, Tables.parquet(vecs.sparkSession, rbPath))
       .write.mode("overwrite").partitionBy("c_label").parquet(codesPath)
   }
 
@@ -1064,7 +1064,7 @@ object Similarity {
   def annIvfPq(s: SparkSession, d: String): DataFrame = {
     val (rbPath, codesPath) = ensureIvfPqStaged(s, d)
     ivfPqProbe(s, d, stagedCentroids(s, d),
-      s.read.parquet(rbPath), s.read.parquet(codesPath))
+      Tables.parquet(s, rbPath), Tables.parquet(s, codesPath))
   }
 
   // ---- Incremental IVF-PQ maintenance: the delta-ingest discipline
@@ -1092,7 +1092,7 @@ object Similarity {
       case Seq(centsPath, rbPath, codesPath) =>
         val base = emb(s, d).filter(!isDeltaVec)
         centroidArraysOf(base).write.mode("overwrite").parquet(centsPath)
-        writeIvfPq(base, s.read.parquet(centsPath), rbPath, codesPath)
+        writeIvfPq(base, Tables.parquet(s, centsPath), rbPath, codesPath)
     }
     (centsPath, rbPath, codesPath)
   }
@@ -1106,15 +1106,15 @@ object Similarity {
   def incrementalIvfPq(s: SparkSession, d: String): DataFrame = {
     val (centsPath, rbPath, codesPath) = ensureIncIvfPqStaged(s, d)
     val builds = incIvfPqBuildCount.get()
-    val cents = s.read.parquet(centsPath)
-    val rb = s.read.parquet(rbPath)
+    val cents = Tables.parquet(s, centsPath)
+    val rb = Tables.parquet(s, rbPath)
     // the ingest: delta-only residual + encode, pinned (it feeds a code
     // table the probe scans once per ADC join leg)
     val dCodes = graft.QueryDsl.pin(encodeResiduals(
       residualsOver(emb(s, d).filter(isDeltaVec), cents), rb))
     require(incIvfPqBuildCount.get() == builds,
       "the ingest must not rebuild the staged base index")
-    val codes = s.read.parquet(codesPath)
+    val codes = Tables.parquet(s, codesPath)
       .select(col("vec_id"), col("m"), col("code"), col("c_label"))
       .unionByName(dCodes.select(col("vec_id"), col("m"), col("code"), col("c_label")))
     ivfPqProbe(s, d, cents, rb, codes)
@@ -1268,7 +1268,7 @@ object Similarity {
     * rounds, final member counts. One row per (cluster, dimension). */
   def kmeansTrain(s: SparkSession, d: String): DataFrame = {
     val (cPath, _) = ensureKmeansStaged(s, d)
-    s.read.parquet(cPath)
+    Tables.parquet(s, cPath)
       .select(col("cluster_id"), col("dim"), col("c_val"), col("n_members"))
       .orderBy("cluster_id", "dim")
   }
@@ -1280,7 +1280,7 @@ object Similarity {
   def annIvfTrained(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (cPath, aPath) = ensureKmeansStaged(s, d)
-    val rows = s.read.parquet(cPath)
+    val rows = Tables.parquet(s, cPath)
       .select(col("cluster_id"), col("dim"), col("c_val")).collect() // k×dim, bounded
     val cents = Array.ofDim[Long](KmClusters, Dim)
     rows.foreach(r => cents(r.getInt(0))(r.getInt(1)) = r.getLong(2))
@@ -1289,7 +1289,7 @@ object Similarity {
       .as[(Long, Array[Float])]
       .flatMap { case (q, v) => topClusters(cents, scaledVec(v), NProbe).map(c => (q, c)) }
       .toDF("q_id", "cluster_id")
-    refineCandidates(s, d, s.read.parquet(aPath)
+    refineCandidates(s, d, Tables.parquet(s, aPath)
       .join(broadcast(probes), "cluster_id")
       .select(col("q_id"), col("vec_id")))
   }
@@ -1335,7 +1335,7 @@ object Similarity {
     * per-subspace unrolled Lloyd's. */
   def pqKmeansTrain(s: SparkSession, d: String): DataFrame = {
     val (cbPath, _) = ensurePqKmeansStaged(s, d)
-    s.read.parquet(cbPath)
+    Tables.parquet(s, cbPath)
       .select(col("m"), col("codeword"), col("dim"), col("c_val"), col("n_members"))
       .orderBy("m", "codeword", "dim")
   }
@@ -1348,7 +1348,7 @@ object Similarity {
   def annPqTrained(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (cbPath, codesPath) = ensurePqKmeansStaged(s, d)
-    val cbRows = s.read.parquet(cbPath)
+    val cbRows = Tables.parquet(s, cbPath)
       .select(col("m"), col("codeword"), col("dim"), col("c_val")).collect() // bounded
     val cents = Array.fill(PqSub, PqCw)(new Array[Long](PqSubDim))
     cbRows.foreach(r => cents(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getLong(3))
@@ -1361,7 +1361,7 @@ object Similarity {
           yield (q, m, j, sqL2(subSlice(e, m), cents(m)(j)))
       }
       .toDF("q_id", "m", "code", "lut_d")
-    adcRanked(s.read.parquet(codesPath), lut, Seq("m", "code"), sum)
+    adcRanked(Tables.parquet(s, codesPath), lut, Seq("m", "code"), sum)
       .filter(col("rank") <= K)
       .select(col("q_id"), col("rank"), col("vec_id"), col("approx_d"))
       .orderBy("q_id", "rank")
@@ -1536,8 +1536,8 @@ object Similarity {
     * (the d_pagerank pattern) over the identically rebuilt edges. */
   def annNsw(s: SparkSession, d: String): DataFrame = {
     val (e0Path, e1Path) = ensureNswStaged(s, d)
-    val edges0 = s.read.parquet(e0Path).select(col("src"), col("dst"), col("sv_d"))
-    val edges1 = s.read.parquet(e1Path).select(col("src"), col("dst"), col("sv_d"))
+    val edges0 = Tables.parquet(s, e0Path).select(col("src"), col("dst"), col("sv_d"))
+    val edges1 = Tables.parquet(s, e1Path).select(col("src"), col("dst"), col("sv_d"))
     // the entry layer is an arithmetic predicate — pushed to the scan,
     // no literal list, no pre-probe collect
     nswProbe(s, d, edges0, edges1, col("vec_id") % NswLayerMod2 === 0)
@@ -1647,7 +1647,7 @@ object Similarity {
           posexplode(lshBandKeys(col("embedding"))).as(Seq("band", "bkey")))
         .write.mode("overwrite").parquet(bandsP)
       writeNswEdges(base.select(col("vec_id"), scaledCol(col("embedding")).as("sv")),
-        s.read.parquet(bandsP).select(col("vec_id"), col("band"), col("bkey")), e0P, e1P)
+        Tables.parquet(s, bandsP).select(col("vec_id"), col("band"), col("bkey")), e0P, e1P)
     }
     (bandsP, e0P, e1P)
   }
@@ -1663,7 +1663,7 @@ object Similarity {
   def incrementalNsw(s: SparkSession, d: String): DataFrame = {
     val (bandsP, e0P, e1P) = ensureIncNswStaged(s, d)
     val builds = incNswBuildCount.get()
-    val baseBands = s.read.parquet(bandsP)
+    val baseBands = Tables.parquet(s, bandsP)
       .select(col("vec_id").as("dst"), col("sv").as("sv_d"), col("band"), col("bkey"))
     val delta = emb(s, d).filter(isDeltaVec)
       .select(col("vec_id").as("src"), scaledCol(col("embedding")).as("sv_s"),
@@ -1679,11 +1679,11 @@ object Similarity {
       .dropDuplicates("src", "dst")))
     require(incNswBuildCount.get() == builds,
       "the insert must not rebuild the staged base graph")
-    val edges0 = s.read.parquet(e0P).select(col("src"), col("dst"), col("sv_d"))
+    val edges0 = Tables.parquet(s, e0P).select(col("src"), col("dst"), col("sv_d"))
       .unionByName(dEdges.select(col("src"), col("dst"), col("sv_d")))
       .unionByName(dEdges.select(col("dst").as("src"),
         col("src").as("dst"), col("sv_s").as("sv_d"))) // back-links
-    val edges1 = s.read.parquet(e1P).select(col("src"), col("dst"), col("sv_d"))
+    val edges1 = Tables.parquet(s, e1P).select(col("src"), col("dst"), col("sv_d"))
     // entry layer = BASE-only layer-2 nodes (the frozen graph owns the
     // entry structure; inserts reach the beam via back-links)
     nswProbe(s, d, edges0, edges1,
@@ -1733,7 +1733,7 @@ object Similarity {
     val Seq(centroidsPath, postingsPath) = stage(d, name, builds, "centroids", "postings") {
       case Seq(centroidsPath, postingsPath) =>
         centroidArraysOf(vecs).write.mode("overwrite").parquet(centroidsPath)
-        assignNearest(vecs, s.read.parquet(centroidsPath))
+        assignNearest(vecs, Tables.parquet(s, centroidsPath))
           .write.mode("overwrite").partitionBy("c_label").parquet(postingsPath)
     }
     (centroidsPath, postingsPath)
@@ -1766,7 +1766,7 @@ object Similarity {
     * same centroids — the oracle IS that rebuild. */
   def incrementalAnn(s: SparkSession, d: String): DataFrame = {
     val (cPath, pPath) = ensureIncAnnStaged(s, d)
-    val cents = s.read.parquet(cPath)
+    val cents = Tables.parquet(s, cPath)
     ivfProbe(s, d, cents, appendPostings(s, d, pPath, cents, isDeltaVec))
   }
 
@@ -1774,7 +1774,7 @@ object Similarity {
     * frozen `cents` — one pass over the batch, nothing else. */
   private def appendPostings(s: SparkSession, d: String, pPath: String,
       cents: DataFrame, arriving: Column): DataFrame =
-    s.read.parquet(pPath)
+    Tables.parquet(s, pPath)
       .select(col("vec_id"), col("embedding"), col("c_label"))
       .unionByName(assignNearest(emb(s, d).filter(arriving), cents))
 
@@ -1853,7 +1853,7 @@ object Similarity {
   def annRebalance(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (cPath, pPath) = ensureIncAnnStaged(s, d)
-    val frozen = s.read.parquet(cPath)
+    val frozen = Tables.parquet(s, cPath)
     def scenario(name: String, isDelta: Column): (String, Long, Long, Long, String, Long, Long) = {
       // both regime counts in ONE corpus pass (conditional sums), not
       // two. Symmetric when/when (no otherwise): a NULL predicate row
@@ -1882,13 +1882,13 @@ object Similarity {
           // REQUIRE stays live against the staged codebook, and the
           // posting count is a parquet-metadata read
           val (rcPath, rpPath) = ensureRebalancedStaged(s, d)
-          val retrained = s.read.parquet(rcPath)
+          val retrained = Tables.parquet(s, rcPath)
           val moved = retrained.as("r")
             .join(frozen.as("f"), col("r.c_label") === col("f.c_label"))
             .filter(col("r.centroid") =!= col("f.centroid")).limit(1).count()
           require(moved > 0,
             "rebuild must retrain: no centroid moved vs the frozen quantizer")
-          (retrained.count(), s.read.parquet(rpPath).count())
+          (retrained.count(), Tables.parquet(s, rpPath).count())
         }
       (name, baseN, deltaN, ratioPct, decision, nCentroids, nPostings)
     }
@@ -2004,7 +2004,7 @@ object Similarity {
     * scan attaches member embeddings, means are decimal-exact
     * ([[graft.QueryDsl.davg]]). */
   def mmrGain(s: SparkSession, d: String): DataFrame = {
-    val mmr = s.read.parquet(ensureMmrStaged(s, d))
+    val mmr = Tables.parquet(s, ensureMmrStaged(s, d))
       .select(lit("mmr").as("method"), col("q_id"), col("vec_id"), col("rel"))
     val topk = stagedExactTopK(s, d)
       .select(lit("topk").as("method"), col("q_id"), col("vec_id"),

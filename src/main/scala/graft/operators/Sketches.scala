@@ -67,7 +67,7 @@ object Sketches {
     * and the sketch's bound — no more rows-only entry. All-integer
     * arithmetic; nothing FP crosses engines. */
   def approxDistinct(s: SparkSession, d: String): DataFrame = {
-    val truth = s.read.parquet(ensureDistinctTruthStaged(s, d))
+    val truth = Tables.parquet(s, ensureDistinctTruthStaged(s, d))
     Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"))
       .agg(approx_count_distinct(col("l_orderkey"), rsd = 0.02).as("approx_orders"))

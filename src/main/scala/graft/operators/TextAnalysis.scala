@@ -479,10 +479,10 @@ object TextAnalysis {
   }
 
   private def stagedTrainGrams(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureGramsStaged(s, d) + "/train")
+    Tables.parquet(s, ensureGramsStaged(s, d) + "/train")
 
   private def stagedHeldGrams(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(ensureGramsStaged(s, d) + "/held")
+    Tables.parquet(s, ensureGramsStaged(s, d) + "/held")
 
   def decontaminate(s: SparkSession, d: String): DataFrame =
     stagedTrainGrams(s, d)
@@ -702,7 +702,7 @@ object TextAnalysis {
   def packWrite(s: SparkSession, d: String): DataFrame = {
     val outDir = graft.TempPaths.scratch(s, "pack_write")
     packChunks(s, d).write.mode("overwrite").partitionBy("shard").parquet(outDir)
-    s.read.parquet(outDir)
+    Tables.parquet(s, outDir)
       .select(col("shard").cast("bigint").as("shard"), col("chunk_id"), col("seg_pos"),
         col("doc_id"), col("seg_start"), col("seg_len"), col("chunk_tokens"))
       .orderBy("shard", "chunk_id", "seg_pos")
@@ -1034,10 +1034,10 @@ object TextAnalysis {
     val staged = ensureLmStaged(s, d)
     // per-doc DISTINCT val bigrams ≡ the staged pair-count rows (words
     // are space-split, so "w1 w2" is bijective with the (w1, w2) key)
-    val valPairs = s.read.parquet(staged + "/pairs")
+    val valPairs = Tables.parquet(s, staged + "/pairs")
       .filter(col("doc_id") % 10 === 8)
       .select(col("doc_id"), concat_ws(" ", col("w1"), col("w2")).as("bg"))
-    val trainBigrams = s.read.parquet(staged + "/big")
+    val trainBigrams = Tables.parquet(s, staged + "/big")
       .select(concat_ws(" ", col("w1"), col("w2")).as("bg"))
     val novel = valPairs
       .join(trainBigrams, Seq("bg"), "left_anti")
@@ -1131,7 +1131,7 @@ object TextAnalysis {
   private[operators] def searchCandidates(s: SparkSession, d: String): DataFrame = {
     val needles = SearchNeedle.sliding(3).toSeq.distinct
     val firstBytes = needles.map(_.charAt(0).toInt).distinct
-    s.read.parquet(ensurePostingsStaged(s, d))
+    Tables.parquet(s, ensurePostingsStaged(s, d))
       .filter(col("a0").isin(firstBytes: _*) && col("trigram").isin(needles: _*))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("hits")) // postings are distinct per (trigram, doc)
@@ -1199,7 +1199,7 @@ object TextAnalysis {
     val allTris = needleTris.map(_._2).distinct
     val firstBytes = allTris.map(_.charAt(0).toInt).distinct
     val needleMap = needleTris.toDF("needle", "trigram")
-    val candidates = s.read.parquet(ensurePostingsStaged(s, d))
+    val candidates = Tables.parquet(s, ensurePostingsStaged(s, d))
       .filter(col("a0").isin(firstBytes: _*) && col("trigram").isin(allTris: _*))
       .join(broadcast(needleMap), "trigram")
       .groupBy(col("needle"), col("doc_id"))
@@ -1389,7 +1389,7 @@ object TextAnalysis {
       bigramPairs(s, d)
         .groupBy(col("doc_id"), col("w1"), col("w2")).agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(dir + "/pairs")
-      s.read.parquet(dir + "/pairs").filter(col("doc_id") % 10 < 8)
+      Tables.parquet(s, dir + "/pairs").filter(col("doc_id") % 10 < 8)
         .groupBy(col("w1"), col("w2")).agg(sum(col("c")).as("c2"))
         .write.mode("overwrite").parquet(dir + "/big")
     }: Unit
@@ -1399,11 +1399,11 @@ object TextAnalysis {
   def lmBigram(s: SparkSession, d: String): DataFrame = {
     def lb(c: org.apache.spark.sql.Column) = length(bin(c)).cast("long")
     val staged = ensureLmStaged(s, d)
-    val big = s.read.parquet(staged + "/big") // (w1, w2, c2) staged
+    val big = Tables.parquet(s, staged + "/big") // (w1, w2, c2) staged
     val ctx = big.groupBy(col("w1")).agg(sum(col("c2")).as("c1"))
     val uni = ctx.select(col("w1").as("w2"), col("c1").as("u2"))
     val tot = ctx.agg(sum(col("c1")).as("n_train")) // 1 row
-    s.read.parquet(staged + "/pairs") // (doc_id, w1, w2, c) staged
+    Tables.parquet(s, staged + "/pairs") // (doc_id, w1, w2, c) staged
       .join(big, Seq("w1", "w2"), "left")
       .join(broadcast(ctx), Seq("w1"), "left")
       .join(broadcast(uni), Seq("w2"), "left")

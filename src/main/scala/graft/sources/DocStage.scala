@@ -100,9 +100,7 @@ object DocStage {
     path
   }
 
-  /** The compacted corpus as a `(doc_id, value)` frame, read with the
-    * schema [[ensureCompacted]] writes: a given schema skips the parquet
-    * footer-inference job a schemaless read runs on every call. */
+  /** The compacted corpus as a `(doc_id, value)` frame. */
   def compactedDocs(s: SparkSession, sfDir: String): DataFrame =
-    s.read.schema("doc_id BIGINT, value STRING").parquet(ensureCompacted(s, sfDir))
+    graft.Tables.parquet(s, ensureCompacted(s, sfDir))
 }

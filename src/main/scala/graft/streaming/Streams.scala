@@ -1764,7 +1764,7 @@ object Streams {
         .writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val ss = batch.sparkSession
-          val gen = ss.read.parquet(current)
+          val gen = graft.Tables.parquet(ss, current)
           val touched = batch.filter(col("op").isin("D", "U")).select(col("k"))
           val survivors = gen.join(touched, Seq("k"), "left_anti")
           val added = batch.filter(col("op").isin("U", "I"))
@@ -1782,7 +1782,7 @@ object Streams {
         q.processAllAvailable()
       } finally q.stop()
     }
-    s.read.parquet(current).orderBy("k")
+    graft.Tables.parquet(s, current).orderBy("k")
   }
 
   /** `e_idempotent_sink` — EXACTLY-ONCE output from an at-least-once
@@ -1838,7 +1838,7 @@ object Streams {
     replayB1.write.mode("overwrite").parquet(s"$base/tmp/crashed")
     require(committed.size() == 2, s"expected 2 committed batches, got ${committed.size()}")
     import scala.jdk.CollectionConverters._
-    s.read.parquet(committed.asScala.toSeq.sorted: _*)
+    graft.Tables.parquet(s, committed.asScala.toSeq.sorted: _*)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("event_id")).as("id_sum"))
       .orderBy("user_id")
@@ -1876,7 +1876,7 @@ object Streams {
           val w = Window.partitionBy(col("user_id"))
             .orderBy(col("us").desc, col("event_id").desc)
           val merged = current match {
-            case Some(p) => batch.sparkSession.read.parquet(p).unionByName(batch)
+            case Some(p) => graft.Tables.parquet(batch.sparkSession, p).unionByName(batch)
             case None => batch
           }
           val next = s"$base/gen$id"
@@ -1897,7 +1897,7 @@ object Streams {
         }
       } finally q.stop()
     }
-    s.read.parquet(current.getOrElse(sys.error("upsert replay produced no generation")))
+    graft.Tables.parquet(s, current.getOrElse(sys.error("upsert replay produced no generation")))
       .select(col("user_id"), col("event_id").as("last_event_id"),
         col("us").as("last_us"), col("value").as("last_value"))
       .orderBy("user_id")
@@ -1935,12 +1935,11 @@ object Streams {
     // three batches paid a full events scan + distinct shuffle + broadcast
     // build, which made this the replay phase's critical chain (36.8 s
     // contended vs ~5.5 s solo; the next-heaviest replays finished ~24 s).
-    // localCheckpoint computes the dim ONCE; per-batch plans read the
-    // pinned blocks. Production equivalent: a dim table is storage, not a
+    // The pin computes the dim ONCE; per-batch plans read the pinned
+    // blocks. Production equivalent: a dim table is storage, not a
     // per-batch aggregation — the pin restores the honest shape.
-    val dim = graft.Tables.events(s, d).select(col("user_id")).distinct()
-      .select(col("user_id"), (col("user_id") % 5).as("tier"))
-      .localCheckpoint()
+    val dim = graft.QueryDsl.pin(graft.Tables.events(s, d).select(col("user_id")).distinct()
+      .select(col("user_id"), (col("user_id") % 5).as("tier")))
     val rows = graft.Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))
       .as[(Long, Long, java.sql.Timestamp, Double)]
@@ -1983,10 +1982,10 @@ object Streams {
   def streamStaticEnrichReplay(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val dim = graft.Tables.events(s, d).select(col("user_id")).distinct()
+    // computed once, not per micro-batch (see pipeline replay)
+    val dim = graft.QueryDsl.pin(graft.Tables.events(s, d).select(col("user_id")).distinct()
       .select(col("user_id"), (col("user_id") % 5).as("tier"),
-        md5(col("user_id").cast("string").cast("binary")).as("segment"))
-      .localCheckpoint() // computed once, not per micro-batch (see pipeline replay)
+        md5(col("user_id").cast("string").cast("binary")).as("segment")))
     val rows = graft.Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"))
       .as[(Long, Long, String)].collect().sortBy(_._1)
@@ -2010,7 +2009,7 @@ object Streams {
         q.processAllAvailable()
       } finally q.stop()
     }
-    s.read.parquet(s"$base/out").orderBy("event_id")
+    graft.Tables.parquet(s, s"$base/out").orderBy("event_id")
   }
 
   /** `e_stream_enrich_scd` — stream-static enrich where the DIM CHANGES
@@ -2049,7 +2048,7 @@ object Streams {
       val q = in.toDS().toDF("event_id", "user_id")
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val dim = batch.sparkSession.read.parquet(dimPtr.get())
+          val dim = graft.Tables.parquet(batch.sparkSession, dimPtr.get())
           batch.join(broadcast(dim), "user_id")
             .select(col("event_id"), col("user_id"), col("tier"), col("dim_ver"))
             .write.mode("append").parquet(s"$base/out"): Unit
@@ -2064,7 +2063,7 @@ object Streams {
         q.processAllAvailable()
       } finally q.stop()
     }
-    s.read.parquet(s"$base/out").orderBy("event_id")
+    graft.Tables.parquet(s, s"$base/out").orderBy("event_id")
   }
 
   // ---- STREAMING AS-OF ENRICH: the unbounded form of
@@ -2753,8 +2752,8 @@ object Streams {
     // signature payload — the bands+withSig join used to plan the
     // compute-dense MinHash subtree twice (half the replay's cost at
     // sf0.1 was batch prep, not streaming)
-    val sig = graft.operators.Dedup.withSig(s, d)
-      .select(col("doc_id"), col("sig")).localCheckpoint()
+    val sig = graft.QueryDsl.pin(graft.operators.Dedup.withSig(s, d)
+      .select(col("doc_id"), col("sig")))
     val rows = graft.operators.Dedup.bandsFrom(sig)
       .join(sig.select(col("doc_id"),
         transform(col("sig"), v => coalesce(v, lit(-1L))).as("sigArr")), "doc_id")
