@@ -21,9 +21,12 @@ object GraftSession {
       // .events converts to TimestampType micros).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", s"${64L * 1024 * 1024}")
-      // many-small-files sources (the wholetext doc corpus): the default
-      // 4 MiB per-file open cost packs only ~32 files per split →
+      // small-file scans (small-file parquet stages and run dirs, and any
+      // caller's own wholetext read of the per-doc corpus; the engine reads
+      // that corpus through DocDirV2, which packs its own splits): the
+      // default 4 MiB per-file open cost packs only ~32 files per split →
       // thousands of near-empty tasks. 64 KiB reflects the real open cost.
+      // It moves split packing for every file scan, so it stays as is.
       // Session-level on purpose: queries must not mutate shared conf.
       .config("spark.sql.files.openCostInBytes", s"${64L * 1024}")
       // managed tables (bucketed-join staging) land in /tmp, not the repo

@@ -27,22 +27,29 @@ object Extraction {
 
   private val outCols = Seq("reporting_date", "issuer", "shares", "value_usd", "pct_net_assets")
 
-  /** X2/G1/I1 — render in a map, extract in a flatMap: 1 doc → N holding
-    * rows with the filing's scalar date attached. Unsorted — for
+  /** The kernel over a `(doc_id, value)` document frame: 1 doc → N
+    * holding rows with the filing's scalar date attached. Unsorted — for
     * downstream pipelines (the CSV sink repartitions by date itself). */
-  private[graft] def extractedHoldings(s: SparkSession, d: String): DataFrame = {
+  private def holdingsOf(docs: DataFrame): DataFrame = {
+    val s = docs.sparkSession
     import s.implicits._
-    FilingDocs.docs(s, d)
-      .flatMap { case (_, doc) => NportKernel.extractRows(doc) }
+    docs.select(col("value")).as[String]
+      .flatMap(NportKernel.extractRows)
       .toDF()
       .select(outCols.map(col): _*)
   }
 
+  /** X2/G1/I1 — the kernel in a flatMap over the rendered corpus
+    * ([[DocStage.rendered]], staged once per fixture: the fixture render
+    * is staging cost, the parse + extract stays live in every call). */
+  private[graft] def extractedHoldings(s: SparkSession, d: String): DataFrame =
+    holdingsOf(DocStage.rendered(s, d))
+
   /** [[extractedHoldings]] with the oracle-determinism total sort. The
     * extracted frame is PINNED before the sort (QueryDsl.sortedPinned):
-    * the range sort samples its child, and r20's shape re-ran the whole
-    * render+parse kernel — the repo's most expensive stage — once for the
-    * sampler and once for the shuffle. */
+    * the range sort samples its child, and an unpinned child would run
+    * the parse + extract kernel once for the sampler and once for the
+    * shuffle. */
   def extractHoldings(s: SparkSession, d: String): DataFrame =
     graft.QueryDsl.sortedPinned(extractedHoldings(s, d), outCols.map(col): _*)
 
@@ -54,12 +61,10 @@ object Extraction {
   /** The unsorted Generator-form frame — split out so the plan-shape spec
     * can see the Generate node (the public query pins the frame, which
     * hides the subtree behind an RDD scan). */
-  private[graft] def extractHoldingsGenRaw(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    FilingDocs.docs(s, d).toDF("doc_id", "doc")
-      .select(graft.functions.ExtractHoldingsGen(col("doc")))
+  private[graft] def extractHoldingsGenRaw(s: SparkSession, d: String): DataFrame =
+    DocStage.rendered(s, d)
+      .select(graft.functions.ExtractHoldingsGen(col("value")))
       .select(outCols.map(col): _*)
-  }
 
   def extractHoldingsGen(s: SparkSession, d: String): DataFrame =
     graft.QueryDsl.sortedPinned(extractHoldingsGenRaw(s, d), outCols.map(col): _*)
@@ -69,7 +74,7 @@ object Extraction {
   def reportingDates(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     graft.QueryDsl.sortedPinned(
-      FilingDocs.docs(s, d)
+      DocStage.rendered(s, d).as[(Long, String)]
         .flatMap { case (id, doc) =>
           NportKernel.extract(doc)._1.map(date => (id, date))
         }
@@ -77,42 +82,22 @@ object Extraction {
       col("doc_id"))
   }
 
-  /** S2+I1 — the same extraction driven from a document-directory source:
-    * one file per filing, `wholetext` read (one row per file), then the
-    * kernel flatMap. Output (and oracle) identical to [[extractHoldings]] —
-    * the source changes, the semantics don't. */
-  def docSourceHoldings(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val dir = DocStage.ensureStaged(s, d)
-    // split packing for this many-small-files corpus is tuned session-wide
-    // (spark.sql.files.openCostInBytes in GraftSession.configure) — a
-    // conf.set here would leak into every later query in a shared session
-    graft.QueryDsl.sortedPinned(
-      s.read.option("wholetext", "true").text(dir)
-        .select(col("value"))
-        .as[String]
-        .flatMap(NportKernel.extractRows)
-        .toDF()
-        .select(outCols.map(col): _*),
-      outCols.map(col): _*)
-  }
+  /** S2+I1 — the same extraction driven from the document-directory
+    * source: one file per filing, read by [[graft.sources.DocDirV2]] (one
+    * row per file), then the kernel flatMap. Output (and oracle)
+    * identical to [[extractHoldings]] over the staged slice — the source
+    * changes, the semantics don't. */
+  def docSourceHoldings(s: SparkSession, d: String): DataFrame =
+    graft.QueryDsl.sortedPinned(holdingsOf(DocStage.stagedDocs(s, d)), outCols.map(col): _*)
 
-  /** S2+K — [[docSourceHoldings]] over the COMPACTED corpus (a few
-    * parquet files instead of one file per doc): identical rows, same
-    * oracle, ~docs/4 fewer file opens — the layout fix for the
-    * many-small-files scan demonstrated on the extraction path itself. */
+  /** S2+K — [[docSourceHoldings]] over the same rows in a few parquet
+    * files ([[DocStage.compactedDocs]]) instead of one file per doc:
+    * identical rows, same oracle. */
   /** The unsorted compacted-corpus frame — split out so DocCompactionSpec
     * can read the executed scan's `numFiles` metric (the public query
     * pins the frame, which hides the scan behind an RDD). */
-  private[graft] def docSourceCompactedRaw(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    DocStage.compactedDocs(s, d)
-      .select(col("value"))
-      .as[String]
-      .flatMap(NportKernel.extractRows)
-      .toDF()
-      .select(outCols.map(col): _*)
-  }
+  private[graft] def docSourceCompactedRaw(s: SparkSession, d: String): DataFrame =
+    holdingsOf(DocStage.compactedDocs(s, d))
 
   def docSourceCompactedHoldings(s: SparkSession, d: String): DataFrame =
     graft.QueryDsl.sortedPinned(docSourceCompactedRaw(s, d), outCols.map(col): _*)
@@ -164,16 +149,18 @@ object Extraction {
     "/tmp/graft_stage/holdings_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
 
   /** The extracted holdings table, staged build-once per corpus
-    * fingerprint (a pure function of the orders-derived filings): the
+    * fingerprint: the kernel run once over [[DocStage.rendered]]. The
     * SINK demonstrations consume it so they measure the sink, not a
-    * re-run of the render+parse kernel — which stays live, measured,
+    * re-run of the parse + extract kernel — which stays live, measured,
     * and oracle-checked in `x_extract_holdings`/`x_extract_holdings_gen`. */
   def ensureHoldingsStaged(s: SparkSession, d: String): String = {
     val dir = holdingsStageDir(d)
     val path = dir + "/holdings"
+    // ensured before, not inside, this build, as in DocStage.ensureStaged
+    val docs = DocStage.rendered(s, d)
     graft.Staging.ensure(dir, Seq(s"$d/orders.parquet")) {
       holdingsStageBuildCount.incrementAndGet()
-      extractedHoldings(s, d).write.mode("overwrite").parquet(path)
+      holdingsOf(docs).write.mode("overwrite").parquet(path)
     }: Unit
     path
   }
@@ -210,11 +197,12 @@ object Extraction {
     *
     *  1. S1 — the staged submissions index names WHICH funds to fetch
     *     (the reference's fetch list): the NPORT-P ciks, broadcast.
-    *  2. S2 — the staged doc corpus stands in for the per-doc HTTP
-    *     fetch (HttpFetchSpec proves fetch+extract over loopback HTTP ≡
-    *     this corpus scan row-for-row); doc identity parses from the
-    *     file name and the fetch list applies as a broadcast semi-join —
-    *     the fetch frontier never transits the driver.
+    *  2. S2 — the staged one-file-per-doc corpus stands in for the
+    *     per-doc HTTP fetch (HttpFetchSpec proves fetch+extract over
+    *     loopback HTTP ≡ this corpus scan row-for-row); [[graft.sources.DocDirV2]]
+    *     parses doc identity from the file name and the fetch list
+    *     applies as a broadcast semi-join — the fetch frontier never
+    *     transits the driver.
     *  3. X1+X2 — the NPORT kernel, doc linkage kept.
     *  4. DEDUP POLICY — the feed carries crawler RETRY traffic (every
     *     doc effectively fetched twice); exact dedup folds the copies
@@ -239,12 +227,9 @@ object Extraction {
     * of distinct dates, which the per-date pack window needed anyway.
     * Nothing is cached and nothing reaches the driver but the chunks. */
   def pipelineE2e(s: SparkSession, d: String): DataFrame =
-    // the pipeline COMPOSES the layout fix: it reads the compacted
-    // corpus (4 parquet files, doc_id carried as a column), not the
-    // one-file-per-doc layout whose tax x_doc_source exists to
-    // demonstrate — production never leaves a crawl in per-doc small
-    // files before a full-corpus pass
-    pipelineE2eFromDocs(s, d, DocStage.compactedDocs(s, d))
+    // the fetch stands in as the per-doc directory a crawl leaves, one
+    // file per filing, read by DocDirV2 (doc_id from the file name)
+    pipelineE2eFromDocs(s, d, DocStage.stagedDocs(s, d))
 
   /** Stages 1 + 3-6 of [[pipelineE2e]] over an explicit (doc_id, value)
     * document set — the seam HttpFetchSpec uses to prove the ONLINE form

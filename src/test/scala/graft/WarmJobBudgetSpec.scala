@@ -23,9 +23,9 @@ class WarmJobBudgetSpec extends AnyFunSuite {
     assert(sites.size <= 17, s"${sites.size} jobs:\n${sites.mkString("\n")}")
   }
 
-  test("x_extract_holdings runs at most 5 jobs warm") {
+  test("x_extract_holdings runs at most 4 jobs warm") {
     val sites = warmSites("x_extract_holdings")
-    assert(sites.size <= 5, s"${sites.size} jobs:\n${sites.mkString("\n")}")
+    assert(sites.size <= 4, s"${sites.size} jobs:\n${sites.mkString("\n")}")
   }
 
   test("no warm call of a timed benchmark query runs a parquet footer job") {
