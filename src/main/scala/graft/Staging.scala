@@ -32,32 +32,53 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * file count), bounded I/O — so probing an already-staged artifact stays
   * effectively free while a same-size-same-mtime regeneration is still
   * caught.
+  *
+  * It is also the one owner of the two facts every stager shares: WHERE a
+  * stage lives ([[dir]], the only naming rule under [[Root]]) and WHETHER
+  * it built ([[buildsSnapshot]], the only build count — a build-once check
+  * counts the log's records for its stage dir).
   */
 object Staging {
 
   private val dirLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
+  /** The root every stage dir lives under. */
+  val Root = "/tmp/graft_stage"
+
+  /** The stage dir of artifact `name` over the fixture dir `sfDir`: every
+    * character of `sfDir` outside `[A-Za-z0-9.]` becomes `_`. A `name`
+    * spells every constant its build depends on (the `_v1`/`p8v2` suffix
+    * discipline), since the marker fingerprints only the sources. */
+  def dir(name: String, sfDir: String): String =
+    s"$Root/${name}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+
   /** One staging build that ran in this JVM: the staged dir and the build's
     * wall seconds. The log exists so the bench can PRICE staging instead of
     * hiding it (r21 verdict: three headline "wins" were work relocated into
-    * build-once staging the board never reported) — Bench drains it at
-    * start and publishes `staging_total`/`stages_built` in the headline. */
+    * build-once staging the board never reported) — Bench publishes the
+    * records added during its run as `staging_total`/`stages_built`.
+    * `sec` excludes the builds nested inside this one (a build that runs
+    * another cold [[ensure]]), which carry their own records, so the sum
+    * of `sec` is the staging paid, whatever nests. */
   final case class BuildRecord(dir: String, sec: Double)
 
   private val buildsLog = new java.util.concurrent.ConcurrentLinkedQueue[BuildRecord]()
 
-  /** Every build that ran in this JVM since the last [[resetBuildLog]].
-    * The log's scope is this JVM only: a build finished by another
-    * process (the cross-process file-lock path), or one that landed
-    * between the marker pre-check and the lock, returns false here and
-    * is not recorded, so `staging_total` counts only the staging this
+  /** Wall seconds of the builds that finished inside the build now
+    * running on this thread. */
+  private val nestedSec = ThreadLocal.withInitial[Double](() => 0.0)
+
+  /** Every build that ran in this JVM, in order. The log only grows, so a
+    * reader takes its own window (`drop(sizeAtStart)`) or counts the
+    * records of one dir. Its scope is this JVM only: a build finished by
+    * another process (the cross-process file-lock path), or one that
+    * landed between the marker pre-check and the lock, returns false here
+    * and is not recorded, so `staging_total` counts only the staging this
     * process paid for. */
   def buildsSnapshot: Seq[BuildRecord] = {
     import scala.jdk.CollectionConverters._
     buildsLog.iterator().asScala.toVector
   }
-
-  def resetBuildLog(): Unit = buildsLog.clear()
 
   /** Fingerprint of the source files an artifact is derived from: md5 over
     * the sorted (relative path, size, mtime-millis, content-witness) lines
@@ -115,10 +136,10 @@ object Staging {
   /** Ensures `dir` holds a staging built from the CURRENT content of
     * `sources`, running `build` (at most once per fingerprint across
     * threads, JVMs, and processes) when the marker is absent or records a
-    * different fingerprint. Returns true iff `build` ran in this call —
-    * callers keep their build counters (the specs' build-once assertions)
-    * by incrementing on true. `build` is responsible for clearing its own
-    * stale output files (overwrite-mode writes already do).
+    * different fingerprint. Returns true iff `build` ran in this call; a
+    * build that ran is also logged ([[buildsSnapshot]]). `build` is
+    * responsible for clearing its own stale output files (overwrite-mode
+    * writes already do).
     *
     * `version` is a CODE-VERSION token folded into the recorded
     * fingerprint: the source fingerprint alone cannot see a change to the
@@ -146,9 +167,13 @@ object Staging {
           // re-check under the lock: another thread/process may have built
           if (readMarker(marker).contains(fp)) return false
           Files.deleteIfExists(marker) // a stale marker must not survive a failed build
+          val outer = nestedSec.get()
+          nestedSec.set(0.0)
           val t0 = System.nanoTime()
-          build
-          buildsLog.add(BuildRecord(dir, (System.nanoTime() - t0) / 1e9)): Unit
+          val inner = try { build; nestedSec.get() } finally nestedSec.set(outer)
+          val wall = (System.nanoTime() - t0) / 1e9
+          buildsLog.add(BuildRecord(dir, wall - inner)): Unit
+          nestedSec.set(outer + wall)
           publish(marker, fp)
           true
         } finally lock.release()

@@ -71,11 +71,7 @@ object Media {
       .union(gifTable(s, d).map { case (id, b) => (id, "video", b) })
   }
 
-  private[graft] val mediaStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def mediaStageDir(sfDir: String): String =
-    "/tmp/graft_stage/media_mixed_v3_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def mediaStageDir(sfDir: String): String = graft.Staging.dir("media_mixed_v3", sfDir)
 
   /** EVERY encoded media payload staged ONCE per corpus fingerprint as
     * binary-column parquet — how media actually lands in a lake (payload
@@ -88,7 +84,6 @@ object Media {
   private def ensureMediaStaged(s: SparkSession, d: String): String = {
     val dir = mediaStageDir(d)
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      mediaStageBuildCount.incrementAndGet()
       // partitioned by modality: a single-modality decode query prunes
       // to its own directory instead of filtering the three-way union
       // (the IVF-PQ code-table discipline at the payload layer)
@@ -1003,11 +998,7 @@ object Media {
     * (frame count, dimensions) AND codec payloads are both verified by
     * data — this retires the fallback-shape note on `m_frame_sample`
     * for video. */
-  private[graft] val aviStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def aviStageDir(sfDir: String): String =
-    "/tmp/graft_stage/avi_mjpeg_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def aviStageDir(sfDir: String): String = graft.Staging.dir("avi_mjpeg_v1", sfDir)
 
   /** The AVI payloads staged once per corpus fingerprint: the MUX side
     * (per-frame JPEG encode + RIFF container write) is a pure corpus
@@ -1017,7 +1008,6 @@ object Media {
   private def ensureAviStaged(s: SparkSession, d: String): String = {
     val dir = aviStageDir(d)
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      aviStageBuildCount.incrementAndGet()
       aviTable(s, d).toDF("media_id", "bytes")
         .write.mode("overwrite").parquet(dir + "/payloads")
     }: Unit
@@ -1355,11 +1345,7 @@ object Media {
     * count. The oracle recomputes payload equality closed-form from the
     * generators ((b, x) injective below the 65521 modulus — every SF here
     * keeps ids under it). */
-  private[graft] val mediaPolicyStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def mediaPolicyStageDir(sfDir: String): String =
-    "/tmp/graft_stage/media_policy_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def mediaPolicyStageDir(sfDir: String): String = graft.Staging.dir("media_policy_v1", sfDir)
 
   /** The policy ledger's INPUTS staged once per corpus fingerprint (r21):
     * the item DIGEST table (modality, media_id, payload_md5 — 32-byte
@@ -1381,7 +1367,6 @@ object Media {
     import s.implicits._
     val dir = mediaPolicyStageDir(d)
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet"), MediaPolicyStageVersion) {
-      mediaPolicyStageBuildCount.incrementAndGet()
       dhashImageTable(s, d).map { case (id, p) => ("image", id, p) }
         .union(mirrorImageTable(s, d).map { case (id, p) => ("image", id, p) })
         .union(audioFpTable(s, d).map { case (id, p) => ("audio", id, p) })

@@ -109,19 +109,14 @@ object BpeTrain {
   // rewrite chain over the O(vocab) table, t_tokenizer_eval aggregates
   // both runtimes' accounting. ----
 
-  private[operators] val bpeStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Merge count / word-length cap / WpK baked into the dir name. */
   def bpeStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/bpe_m${BpeMerges}w${MaxWordLen}k${WpK}_v1_" +
-      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+    graft.Staging.dir(s"bpe_m${BpeMerges}w${MaxWordLen}k${WpK}_v1", sfDir)
 
   private def ensureBpeStaged(s: SparkSession, d: String): String = {
     import s.implicits._
     val dir = bpeStageDir(d)
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      bpeStageBuildCount.incrementAndGet()
       wordCounts(s, d).write.mode("overwrite").parquet(dir + "/wordcounts")
       val wc = Tables.parquet(s, dir + "/wordcounts")
       val merges = trainedMergesOver(wc)

@@ -116,14 +116,11 @@ object Bucketing {
 
   private val SpjBuckets = 8
 
-  private def spjDir(sfDir: String): String =
-    "/tmp/graft_stage/spj_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** Stage both join sides as bucket-directory layouts (`bucket=i` dirs
     * of `k,v` lines, i = k mod [[SpjBuckets]]) — the ingest-time write
     * whose grouping the SPJ connector reports back to the planner. */
   def ensureSpjStaged(s: SparkSession, d: String): String = {
-    val dir = spjDir(d)
+    val dir = graft.Staging.dir("spj", d)
     graft.Staging.ensure(dir,
       Seq(s"$d/orders.parquet", s"$d/customer.parquet")) {
       Tables.orders(s, d)

@@ -292,12 +292,8 @@ object CorpusClean {
     * 1-row broadcast — nothing corpus-sized crosses the wire twice, and
     * B is the constant that keeps the distribution tables driver-free at
     * any corpus size. */
-  private[operators] val dsirStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Bigram features + bucket hash are baked into the dir version. */
-  def dsirStageDir(sfDir: String): String =
-    s"/tmp/graft_stage/dsir_b${DsirBuckets}_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def dsirStageDir(sfDir: String): String = graft.Staging.dir(s"dsir_b${DsirBuckets}_v1", sfDir)
 
   /** The (doc_id, lang, bucket, count) featurization — the single
     * corpus-explode+hash pass everything in DSIR derives from, staged
@@ -308,7 +304,6 @@ object CorpusClean {
     val dir = dsirStageDir(d)
     val path = dir + "/counts"
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      dsirStageBuildCount.incrementAndGet()
       val bigrams = when(size(words) >= 2, transform(
           sequence(lit(0), size(words) - 2),
           i => array_join(slice(words, i + lit(1), lit(2)), "_")))

@@ -249,11 +249,10 @@ object Dedup {
     * join + min-aggregation; rounds ≈ component DIAMETER (tiny for dup
     * clusters — near-dup components are dense perturbation balls, not
     * chains); the driver sees only a changed-row COUNT per round, never
-    * data. A per-round pin truncates the growing lineage:
-    * `localCheckpoint` by default, or a RELIABLE `checkpoint(dir)` via
-    * [[dupClustersWith]]'s `reliableDir` for cluster runs that must
-    * survive executor loss (CheckpointModeSpec proves both modes
-    * bit-identical). Pair lists
+    * data. A per-round pin ([[graft.QueryDsl.pin]]) truncates the growing
+    * lineage: `localCheckpoint` under a local master, a RELIABLE
+    * `checkpoint` on a cluster or under `spark.graft.pin.mode=reliable`
+    * (CheckpointModeSpec proves both modes row-identical). Pair lists
     * under-remove transitive chains (a~b, b~c but no a~c candidate);
     * clusters are the principled keep-one-per-group resolution: cluster
     * id = min reachable doc_id, `is_rep` marks the kept document.
@@ -263,28 +262,8 @@ object Dedup {
     * large-star/small-star formulation converges in O(log²n) rounds
     * regardless of diameter, at the cost of two neighborhood
     * aggregations per round instead of one. */
-  def dupClusters(s: SparkSession, d: String): DataFrame =
-    dupClustersWith(s, d, reliableDir = None)
-
-  /** Per-round lineage pin for the iterative operators. Default =
-    * `localCheckpoint` (executor-local blocks: fastest, but an executor
-    * loss mid-run kills the job — fine single-JVM). `reliableDir` switches
-    * every pin to a RELIABLE `checkpoint` into that directory (HDFS/object
-    * store on a cluster), which survives executor loss — the form a
-    * long-running 100 TB CC job uses. Results are bit-identical either way
-    * (CheckpointModeSpec asserts it); only failure-recovery differs. */
-  private def pinner(
-      s: SparkSession, reliableDir: Option[String]): DataFrame => DataFrame =
-    reliableDir match {
-      case Some(dir) =>
-        s.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.localCheckpoint()
-    }
-
-  private[operators] def dupClustersWith(
-      s: SparkSession, d: String, reliableDir: Option[String]): DataFrame = {
-    val pin = pinner(s, reliableDir)
+  def dupClusters(s: SparkSession, d: String): DataFrame = {
+    import graft.QueryDsl.pin
     val pairs = stagedNeardupPairs(s, d).select(col("a"), col("b"))
     val edges = pin(pairs.select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst"))))
@@ -355,9 +334,8 @@ object Dedup {
     * (same domain as the label-propagation form). Convergence is an
     * edge-set equality check per round — two counts and one limit-1
     * difference, never edge data on the driver. */
-  private[operators] def ccTwoPhase(
-      pairs: DataFrame, maxRounds: Int = 16,
-      pin: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  private[operators] def ccTwoPhase(pairs: DataFrame, maxRounds: Int = 16): DataFrame = {
+    import graft.QueryDsl.pin
     var edges = pin(pairs
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .filter(col("u") =!= col("v")).distinct())
@@ -397,10 +375,7 @@ object Dedup {
   // path is hash-identical to the inline pipeline (the d_dup_clusters
   // oracle proves the pipeline; DedupScaleSpec proves staged ≡ inline). ----
 
-  private[operators] val clusterBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def clusterStageDir(sfDir: String): String =
-    "/tmp/graft_stage/clusters_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def clusterStageDir(sfDir: String): String = graft.Staging.dir("clusters", sfDir)
 
   /** Ensures the dup-cluster table for `d` is staged; returns its path.
     * Builds at most once per sf dir across queries and JVM runs. */
@@ -410,7 +385,6 @@ object Dedup {
     // fingerprinted marker + atomic publish + cross-process lock
     // (graft.Staging): a regenerated documents fixture rebuilds the table
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      clusterBuildCount.incrementAndGet()
       dupClusters(s, d).write.mode("overwrite").parquet(path)
     }: Unit
     path
@@ -685,17 +659,12 @@ object Dedup {
   // closed-form (len(words) − n + 1), dup coverage is one bounded
   // aggregate over the staged postings. ----
 
-  private[operators] val dupGramBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def dupGramStageDir(sfDir: String): String =
-    "/tmp/graft_stage/dupgrams_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def dupGramStageDir(sfDir: String): String = graft.Staging.dir("dupgrams", sfDir)
 
   def ensureDupGramsStaged(s: SparkSession, d: String): String = {
     val dir = dupGramStageDir(d)
     val path = dir + "/postings"
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      dupGramBuildCount.incrementAndGet()
       val gramsCol = transform(
         sequence(lit(0), size(words) - SpanN),
         i => array_join(slice(words, i + lit(1), lit(SpanN)), " "))
@@ -750,16 +719,12 @@ object Dedup {
   // stays INLINE so the generating pipeline keeps an honest benchmark
   // entry. ----
 
-  private[operators] val pairsBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def pairsStageDir(sfDir: String): String =
-    "/tmp/graft_stage/ndpairs_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def pairsStageDir(sfDir: String): String = graft.Staging.dir("ndpairs", sfDir)
 
   def ensurePairsStaged(s: SparkSession, d: String): String = {
     val dir = pairsStageDir(d)
     val path = dir + "/pairs"
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      pairsBuildCount.incrementAndGet()
       neardupPairs(s, d).write.mode("overwrite").parquet(path)
     }: Unit
     path
@@ -813,11 +778,9 @@ object Dedup {
   private val DeltaRem = 7L
   private val isDeltaDoc: Column = pmod(col("doc_id"), lit(DeltaMod)) === lit(DeltaRem)
 
-  private[operators] val baseIndexBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private val BaseBandBuckets = 16
 
-  def baseIndexStageDir(sfDir: String): String =
-    "/tmp/graft_stage/dedupbase_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def baseIndexStageDir(sfDir: String): String = graft.Staging.dir("dedupbase", sfDir)
 
   private[operators] def baseBandsTable(sfDir: String): String =
     ("graft_dedup_base_bands_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
@@ -836,7 +799,6 @@ object Dedup {
     val bandsPath = dir + "/bands"
     val table = baseBandsTable(d)
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      baseIndexBuildCount.incrementAndGet()
       val baseSig = graft.QueryDsl.pin(
         sigOf(s, docs(s, d).filter(!isDeltaDoc)).select(col("doc_id"), col("sig")))
       baseSig.write.mode("overwrite").parquet(sigsPath)
@@ -994,8 +956,8 @@ object Dedup {
     // discipline): every peel round joins against it twice, and without
     // the pin each round would replay the staged-pairs scan through a
     // lineage that deepens by two joins per round
-    val edges = nd.union(nd.select(col("b"), col("a")))
-      .toDF("src", "dst").localCheckpoint()
+    val edges = graft.QueryDsl.pin(nd.union(nd.select(col("b"), col("a")))
+      .toDF("src", "dst"))
     def degreesAmong(active: DataFrame): DataFrame = {
       val surviving = edges
         .join(active.withColumnRenamed("doc_id", "src"), "src")
@@ -1009,7 +971,7 @@ object Dedup {
     for (r <- 1 to KCoreRounds) {
       // pin each round's degree table: both the removed and surviving
       // halves read it, and the next round builds on the survivor half
-      val deg = degreesAmong(active).localCheckpoint()
+      val deg = graft.QueryDsl.pin(degreesAmong(active))
       val out = deg.filter(col("deg") < KCoreK)
         .select(col("doc_id"), lit(r).as("removed_round"))
       removed = if (removed == null) out else removed.union(out)
@@ -1047,8 +1009,8 @@ object Dedup {
     * cost ∝ duplicate-graph edges (≪ corpus), constant round count. */
   def communities(s: SparkSession, d: String): DataFrame = {
     val nd = stagedNeardupPairs(s, d).select(col("a"), col("b"))
-    val edges = nd.union(nd.select(col("b"), col("a")))
-      .toDF("src", "dst").localCheckpoint()
+    val edges = graft.QueryDsl.pin(nd.union(nd.select(col("b"), col("a")))
+      .toDF("src", "dst"))
     var labels = edges.select(col("src").as("doc_id")).distinct()
       .select(col("doc_id"), col("doc_id").as("lbl"))
     for (_ <- 1 to LpaRounds) {
@@ -1058,12 +1020,11 @@ object Dedup {
       // pin each round's labels: the next round's join and the vote
       // union both read them, and lineage would deepen by two joins
       // per round otherwise (the kCore discipline)
-      labels = neigh.union(labels)
+      labels = graft.QueryDsl.pin(neigh.union(labels)
         .groupBy(col("doc_id"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("doc_id"))
         .agg(max(struct(col("c"), (-col("lbl")).as("nl"))).as("m"))
-        .select(col("doc_id"), (-col("m").getField("nl")).as("lbl"))
-        .localCheckpoint()
+        .select(col("doc_id"), (-col("m").getField("nl")).as("lbl")))
     }
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("n_members"))
     labels.join(sizes, "lbl")
@@ -1127,16 +1088,12 @@ object Dedup {
   // containment needs is recovered by exploding `toks` — exactly the
   // distinct per-doc shingle stream, no separate artifact. ----
 
-  private[operators] val rankedBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def rankedStageDir(sfDir: String): String =
-    "/tmp/graft_stage/ranked5_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def rankedStageDir(sfDir: String): String = graft.Staging.dir("ranked5", sfDir)
 
   def ensureRankedStaged(s: SparkSession, d: String): String = {
     val dir = rankedStageDir(d)
     val path = dir + "/ranked"
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      rankedBuildCount.incrementAndGet()
       rankedShinglesOver(docs(s, d)).write.mode("overwrite").parquet(path)
     }: Unit
     path
@@ -1348,18 +1305,13 @@ object Dedup {
     * every read of the table, so the 5-config band self-join sweep runs
     * under the Staging protocol and queries read the staged 5-row
     * result (it was the biggest recomputed line left on the bench). */
-  def lshTuningStageDir(sfDir: String): String =
-    "/tmp/graft_stage/lshtuning_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  private[operators] val lshTuningBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
+  def lshTuningStageDir(sfDir: String): String = graft.Staging.dir("lshtuning", sfDir)
 
   def lshTuning(s: SparkSession, d: String): DataFrame = {
     val dir = lshTuningStageDir(d)
-    val built = graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
+    graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
       lshTuningInline(s, d).write.mode("overwrite").parquet(dir + "/sweep")
-    }
-    if (built) lshTuningBuildCount.incrementAndGet()
+    }: Unit
     Tables.parquet(s, dir + "/sweep").orderBy("bands")
   }
 

@@ -838,11 +838,7 @@ object Events {
       .orderBy("user_id", "event_type", "us", "event_id")
   }
 
-  private[operators] val rollupBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def rollupStageDir(sfDir: String): String =
-    "/tmp/graft_stage/rollup_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def rollupStageDir(sfDir: String): String = graft.Staging.dir("rollup", sfDir)
 
   /** INCREMENTAL ROLLUP — materialized-view maintenance, the lambda shape:
     * daily (day, event_type) aggregates for every SEALED day (all days
@@ -872,7 +868,6 @@ object Events {
       .groupBy(to_date(col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"), dsum(col("value")).as("sum_value"))
     graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
-      rollupBuildCount.incrementAndGet()
       daily(Tables.events(s, d).filter(col("ts") < boundary))
         .write.mode("overwrite").parquet(path)
     }: Unit

@@ -134,6 +134,21 @@ object Extraction {
     FilingIndex.filingIndexV2(s, d)
       .orderBy("cik", "accession_number")
 
+  /** The extracted holdings table, staged build-once per corpus
+    * fingerprint: the kernel run once over [[DocStage.rendered]]. The
+    * SINK demonstrations consume it so they measure the sink, not a
+    * re-run of the parse + extract kernel — which stays live, measured,
+    * and oracle-checked in `x_extract_holdings`/`x_extract_holdings_gen`. */
+  def ensureHoldingsStaged(s: SparkSession, d: String): String = {
+    val dir = graft.Staging.dir("holdings_v1", d)
+    val path = dir + "/holdings"
+    val docs = DocStage.rendered(s, d)
+    graft.Staging.ensure(dir, Seq(s"$d/orders.parquet")) {
+      holdingsOf(docs).write.mode("overwrite").parquet(path)
+    }: Unit
+    path
+  }
+
   /** K1+G2 through the correctness gate: extract → union a decoy
     * SUPERSEDED filing per date (lower filing_seq) → CSV sink (LWW +
     * one-file-per-date partitioned write) → CSV source read-back. The
@@ -142,29 +157,6 @@ object Extraction {
     * (commas-in-numbers quoting, null vs value). Explicit read schema
     * keeps the recovered partition column a STRING (type inference would
     * make it DATE). */
-  private[operators] val holdingsStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def holdingsStageDir(sfDir: String): String =
-    "/tmp/graft_stage/holdings_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  /** The extracted holdings table, staged build-once per corpus
-    * fingerprint: the kernel run once over [[DocStage.rendered]]. The
-    * SINK demonstrations consume it so they measure the sink, not a
-    * re-run of the parse + extract kernel — which stays live, measured,
-    * and oracle-checked in `x_extract_holdings`/`x_extract_holdings_gen`. */
-  def ensureHoldingsStaged(s: SparkSession, d: String): String = {
-    val dir = holdingsStageDir(d)
-    val path = dir + "/holdings"
-    // ensured before, not inside, this build, as in DocStage.ensureStaged
-    val docs = DocStage.rendered(s, d)
-    graft.Staging.ensure(dir, Seq(s"$d/orders.parquet")) {
-      holdingsStageBuildCount.incrementAndGet()
-      holdingsOf(docs).write.mode("overwrite").parquet(path)
-    }: Unit
-    path
-  }
-
   def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
     // real + decoys both read the STAGED extraction (two cheap parquet
     // scans; before staging this re-ran the render+parse kernel — the

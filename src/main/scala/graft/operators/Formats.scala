@@ -537,13 +537,6 @@ object Formats {
     *
     * Scale shape: id minting is shuffle-free; the lineage join is
     * row_id-equi — shuffled co-partitioned, never all-pairs. */
-  private[operators] def rowTrackStageBuildCount =
-    sliceStageBuildCounts.computeIfAbsent("rowtrack_i1k3v1",
-      _ => new java.util.concurrent.atomic.AtomicInteger(0))
-
-  /** Mint salt + slice/correction rules baked into the dir name. */
-  def rowTrackStageDir(sfDir: String): String = sliceStageDir("rowtrack_i1k3v1", sfDir)
-
   /** Build-once staged versions for [[rowTracking]]: the v1 ingest (ids
     * minted EXACTLY once — the row-tracking premise — and their
     * uniqueness REQUIREd at mint time) and the v2 full rewrite (row_id
@@ -1067,14 +1060,6 @@ object Formats {
         col("v1_rows"), col("final_rows"), col("final_total"))
   }
 
-  private[operators] def occGdprStageBuildCount =
-    sliceStageBuildCounts.computeIfAbsent("occ_gdpr_k3s7v1",
-      _ => new java.util.concurrent.atomic.AtomicInteger(0))
-
-  /** Slice rules (orderkey%3 split, custkey%7===3 subject) baked into
-    * the dir name per the stage-dir-constants discipline. */
-  def occGdprStageDir(sfDir: String): String = sliceStageDir("occ_gdpr_k3s7v1", sfDir)
-
   /** Build-once staged slices for [[occGdprAbort]]: all six file sets the
     * OCC race manipulates (A/B/C and their erased twins) are pure
     * functions of orders — fixed slice rules, fixed subject — so they
@@ -1436,13 +1421,9 @@ object Formats {
 
   private val GdprBuckets = 8
 
-  private[operators] def gdprStageBuildCount =
-    sliceStageBuildCounts.computeIfAbsent("gdpr_base_b8v1",
-      _ => new java.util.concurrent.atomic.AtomicInteger(0))
-
   /** Bucket count is baked into the dir name per the stage-dir-constants
     * discipline (a config change can never reuse a stale staged base). */
-  def gdprStageDir(sfDir: String): String = sliceStageDir("gdpr_base_b8v1", sfDir)
+  def gdprStageDir(sfDir: String): String = graft.Staging.dir("gdpr_base_b8v1", sfDir)
 
   /** Build-once staged base for the EVENTS side of the erasure family
     * (`k_gdpr_delete`, `k_delete_vectors`, `k_dv_cdf`): the user_id%8
@@ -1558,25 +1539,14 @@ object Formats {
   // OCC races, retention GC) replays live per run over run-owned names —
   // a run's vacuum can only ever unlink run-local links. ----
 
-  private[operators] val sliceStageBuildCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
-
-  def sliceStageDir(key: String, sfDir: String): String =
-    s"/tmp/graft_stage/${key}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** Ensure the named slice set is staged (build runs at most once per
     * corpus fingerprint); returns the stage dir whose `data/` holds the
     * slices. `key` bakes the slice rules in per the stage-dir-constants
     * discipline. */
   private def ensureSliceStage(s: SparkSession, d: String, key: String,
       source: String)(build: String => Unit): String = {
-    val dir = sliceStageDir(key, d)
-    val counter = sliceStageBuildCounts
-      .computeIfAbsent(key, _ => new java.util.concurrent.atomic.AtomicInteger(0))
-    graft.Staging.ensure(dir, Seq(s"$d/$source")) {
-      counter.incrementAndGet()
-      build(dir + "/data")
-    }: Unit
+    val dir = graft.Staging.dir(key, d)
+    graft.Staging.ensure(dir, Seq(s"$d/$source"))(build(dir + "/data")): Unit
     dir
   }
 
@@ -1870,7 +1840,7 @@ object Formats {
       s"manifest row total ${total.orNull} != input count")
     require(parts.map(_.split(" ")(1).toLong).sum == total.get,
       "per-file counts do not sum to the manifest total")
-    s.read.text(s"$target/part-*.fw")
+    s.read.option("pathGlobFilter", "part-*.fw").text(target)
       .select(
         trim(substring(col("value"), 1, 12)).cast("bigint").as("o_orderkey"),
         trim(substring(col("value"), 13, 4)).as("o_orderstatus"),

@@ -21,10 +21,7 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  def layoutDir(sfDir: String): String =
-    "/tmp/graft_stage/layout_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  private[operators] val buildCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  def layoutDir(sfDir: String): String = graft.Staging.dir("layout", sfDir)
 
   /** Stage events partitioned by event_date, ts-sorted within partitions.
     * `repartition(event_date)` puts each day wholly in one task so each
@@ -36,14 +33,13 @@ object Layout {
     // fingerprinted marker + atomic publish + cross-process lock
     // (graft.Staging): a regenerated events fixture rebuilds the layout
     // instead of silently serving stale staged data
-    val built = graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
+    graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
       Tables.events(s, d)
         .withColumn("event_date", to_date(col("ts")))
         .repartition(col("event_date"))
         .sortWithinPartitions(col("ts"), col("event_id"))
         .write.partitionBy("event_date").mode("overwrite").parquet(dir)
-    }
-    if (built) buildCount.incrementAndGet()
+    }: Unit
     dir
   }
 
@@ -75,11 +71,6 @@ object Layout {
   // The Z-value is 16+16 bits of pure codegen'd bitwise arithmetic — no
   // UDF, no HOF — built once at stage time; queries never touch it. ----
 
-  private[operators] val zBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def zorderDir(sfDir: String): String =
-    "/tmp/graft_stage/zorder_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** Morton interleave of two 16-bit values (a in even bits, b in odd):
     * 32 shift/mask/or terms, all codegen'd integer ops. */
   private def zValue(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column)
@@ -93,8 +84,8 @@ object Layout {
     * Z-value so each output file owns one Z-range (a (user, date)
     * rectangle), sort within partitions so row groups subdivide it. */
   def ensureZOrder(s: SparkSession, d: String): String = {
-    val dir = zorderDir(d)
-    val built = graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
+    val dir = graft.Staging.dir("zorder", d)
+    graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
       val day = datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
       Tables.events(s, d)
         .withColumn("zv",
@@ -103,8 +94,7 @@ object Layout {
         .sortWithinPartitions(col("zv"))
         .drop("zv")
         .write.mode("overwrite").parquet(dir)
-    }
-    if (built) zBuildCount.incrementAndGet()
+    }: Unit
     dir
   }
 
@@ -142,11 +132,9 @@ object Layout {
   // discipline as [[ensureZOrder]]: range-partition + sort by the curve
   // key, drop it, answers never change (oracle reads original parquet). ----
 
-  private[operators] val hilbertBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private val HilbertBits = 8
 
-  def hilbertDir(sfDir: String): String =
-    "/tmp/graft_stage/hilbert_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def hilbertDir(sfDir: String): String = graft.Staging.dir("hilbert", sfDir)
 
   // deterministic small code per event type (alphabetical rank; unseen
   // types collapse into the top slot — at 100 TB this column is a
@@ -162,7 +150,7 @@ object Layout {
   /** Stage events Hilbert-ordered on (user_id, day, event_type). */
   def ensureHilbert(s: SparkSession, d: String): String = {
     val dir = hilbertDir(d)
-    val built = graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
+    graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
       val day = datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
       Tables.events(s, d)
         .withColumn("hv", graft.functions.GraftFunctions.hilbert_index3(
@@ -173,8 +161,7 @@ object Layout {
         .sortWithinPartitions(col("hv"))
         .drop("hv")
         .write.mode("overwrite").parquet(dir)
-    }
-    if (built) hilbertBuildCount.incrementAndGet()
+    }: Unit
     dir
   }
 
@@ -207,19 +194,15 @@ object Layout {
   // the same rows. Compaction must never change ANSWERS — the oracle
   // reads the original parquet. ----
 
-  private[operators] val compactBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private val FragmentFiles = 256
   private val CompactFiles = 4
 
-  def compactionDir(sfDir: String): String =
-    "/tmp/graft_stage/compact_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** Returns (fragmentedPath, compactedPath), building both once. */
   def ensureCompaction(s: SparkSession, d: String): (String, String) = {
-    val dir = compactionDir(d)
+    val dir = graft.Staging.dir("compact", d)
     val frag = dir + "/fragmented"
     val comp = dir + "/compacted"
-    val built = graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
+    graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
       Tables.events(s, d).repartition(FragmentFiles)
         .write.mode("overwrite").parquet(frag)
       // the compaction pass itself: read the fragmented table, rewrite
@@ -231,8 +214,7 @@ object Layout {
         .repartition(CompactFiles)
         .write.option("maxRecordsPerFile", (rows / CompactFiles + 1).toString)
         .mode("overwrite").parquet(comp)
-    }
-    if (built) compactBuildCount.incrementAndGet()
+    }: Unit
     (frag, comp)
   }
 
@@ -348,10 +330,7 @@ object Layout {
 
   private val StatsFiles = 8
 
-  def statsIndexDir(sfDir: String): String =
-    "/tmp/graft_stage/statsidx_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
-  private[operators] val statsBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  def statsIndexDir(sfDir: String): String = graft.Staging.dir("statsidx", sfDir)
 
   /** Stage orders range-partitioned by date into [[StatsFiles]] files and
     * record each file's (min, max) `o_orderdate` in a manifest — ONE
@@ -359,7 +338,7 @@ object Layout {
     * the write itself), metadata-plane text after that. */
   def ensureStatsIndex(s: SparkSession, d: String): String = {
     val dir = statsIndexDir(d)
-    val built = graft.Staging.ensure(dir, Seq(s"$d/orders.parquet")) {
+    graft.Staging.ensure(dir, Seq(s"$d/orders.parquet")) {
       Tables.orders(s, d)
         .repartitionByRange(StatsFiles, col("o_orderdate"), col("o_orderkey"))
         .write.mode("overwrite").parquet(s"$dir/data")
@@ -374,8 +353,7 @@ object Layout {
         java.nio.file.Paths.get(s"$dir/stats_manifest.txt"),
         stats.map(r => s"${r.getString(0)}\t${r.getLong(1)}\t${r.getLong(2)}")
           .mkString("\n").getBytes("UTF-8")): Unit
-    }
-    if (built) statsBuildCount.incrementAndGet()
+    }: Unit
     dir
   }
 
@@ -410,13 +388,6 @@ object Layout {
       .orderBy("month")
   }
 
-  // v2 = BITS header + write-time per-file sizing; the format version
-  // lives in the dir name (the repo's stage-dir-constants discipline)
-  // so a stage built by an earlier code revision (headerless manifest)
-  // is never reused with the new parser
-  def bloomIndexDir(sfDir: String): String =
-    "/tmp/graft_stage/bloomidx_v2_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   private val BloomIdxFiles = 16
   // sized at write time: ~24 bits per expected element per file (fp ~
   // 0.7% with 2 hashes), floor 16k -- a FIXED m saturates the moment the
@@ -425,7 +396,6 @@ object Layout {
   private val BloomIdxMinBits = 16384
   private def bloomBitsFor(perFile: Long): Long =
     math.max(BloomIdxMinBits.toLong, (perFile * 24 + 63) / 64 * 64)
-  private[operators] val bloomIdxBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Stage events into [[BloomIdxFiles]] files hash-partitioned by
     * USER (arrival-shaped placement — event ids land everywhere), and
@@ -434,8 +404,12 @@ object Layout {
     * `k_portable_bloom_join` hash family). One stats pass at write
     * time; the manifest is O(files × m bits) metadata. */
   def ensureBloomIndex(s: SparkSession, d: String): String = {
-    val dir = bloomIndexDir(d)
-    val built = graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
+    // v2 = BITS header + write-time per-file sizing; the format version
+    // lives in the dir name (the repo's stage-dir-constants discipline)
+    // so a stage built by an earlier code revision (headerless manifest)
+    // is never reused with the new parser
+    val dir = graft.Staging.dir("bloomidx_v2", d)
+    graft.Staging.ensure(dir, Seq(s"$d/events.parquet")) {
       val ev = Tables.events(s, d).select(col("event_id"), col("user_id"), col("value"))
       val bits = bloomBitsFor(ev.count() / BloomIdxFiles)
       ev.repartition(BloomIdxFiles, col("user_id"))
@@ -457,8 +431,7 @@ object Layout {
             s"${r.getString(0)}\t${r.getLong(1)}\t${r.getLong(2)}\t" +
               r.getSeq[Long](3).mkString(",")).toIndexedSeq)
           .mkString("\n").getBytes("UTF-8")): Unit
-    }
-    if (built) bloomIdxBuildCount.incrementAndGet()
+    }: Unit
     dir
   }
 

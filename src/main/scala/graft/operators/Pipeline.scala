@@ -158,11 +158,7 @@ object Pipeline {
     * staged pair/cluster tables; the released-side scan is the corpus
     * read the publish step pays anyway. avg_quality is a null for a
     * source with zero released docs — mirrored LEFT JOIN in the oracle. */
-  private[graft] val textVerdictStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def textVerdictStageDir(sfDir: String): String =
-    "/tmp/graft_stage/text_verdicts_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def textVerdictStageDir(sfDir: String): String = graft.Staging.dir("text_verdicts_v1", sfDir)
 
   /** The per-doc TEXT VERDICT frame (doc_id, source, k-anonymity action,
     * dedup-policy verdict) staged once per corpus fingerprint (r21) — the
@@ -182,7 +178,6 @@ object Pipeline {
   private def ensureTextVerdictsStaged(s: SparkSession, d: String): String = {
     val dir = textVerdictStageDir(d)
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet"), TextVerdictStageVersion) {
-      textVerdictStageBuildCount.incrementAndGet()
       val anon = CorpusClean.kAnonymity(s, d)
         .select(col("lang"), col("source"), col("len_bucket"), col("action"))
       Tables.documents(s, d)

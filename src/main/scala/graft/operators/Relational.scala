@@ -473,11 +473,7 @@ object Relational {
       expr("concat(substr(name, 1, i), substr(name, i + 2))").as("variant"))
     .distinct()
 
-  private[operators] val linkageStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def linkageStageDir(sfDir: String): String =
-    "/tmp/graft_stage/linkvar_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def linkageStageDir(sfDir: String): String = graft.Staging.dir("linkvar_v1", sfDir)
 
   /** Stage both registries' deletion-variant blocking indexes once per
     * corpus fingerprint (pure functions of the customer table): a
@@ -489,7 +485,6 @@ object Relational {
     val dir = linkageStageDir(d)
     val (aP, bP) = (dir + "/va", dir + "/vb")
     graft.Staging.ensure(dir, Seq(s"$d/customer.parquet")) {
-      linkageStageBuildCount.incrementAndGet()
       linkageVariantsOver(linkageRegistryA(s, d)).write.mode("overwrite").parquet(aP)
       linkageVariantsOver(linkageRegistryB(s, d)).write.mode("overwrite").parquet(bP)
     }: Unit

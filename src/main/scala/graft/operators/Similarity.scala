@@ -140,23 +140,18 @@ object Similarity {
   private def corpusPostings(s: SparkSession, d: String): DataFrame =
     emb(s, d).select(col("vec_id"), col("embedding"), col("label").as("c_label"))
 
-  private def stageDir(name: String, sfDir: String): String =
-    s"/tmp/graft_stage/${name}_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** Build-once staging of one index under the stage dir `name`
     * (graft.Staging: fingerprinted marker, cross-process lock, atomic
     * publish), fingerprinted on the corpus parquet, so a regenerated
     * fixture rebuilds it. `build` writes the `parts` paths under the dir;
-    * `builds` counts the builds that ran (the specs' build-once
-    * evidence). Returns the part paths. The Staging marker fingerprints
-    * only the SOURCES, so every constant a build depends on is spelled in
-    * `name`: a changed constant can never reuse a stale index. */
-  private def stage(d: String, name: String, builds: java.util.concurrent.atomic.AtomicInteger,
-      parts: String*)(build: Seq[String] => Unit): Seq[String] = {
-    val dir = stageDir(name, d)
+    * returns the part paths. The Staging marker fingerprints only the
+    * SOURCES, so every constant a build depends on is spelled in `name`:
+    * a changed constant can never reuse a stale index. */
+  private def stage(d: String, name: String, parts: String*)(
+      build: Seq[String] => Unit): Seq[String] = {
+    val dir = graft.Staging.dir(name, d)
     val paths = parts.map(p => s"$dir/$p")
-    if (graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet"))(build(paths)))
-      builds.incrementAndGet(): Unit
+    graft.Staging.ensure(dir, Seq(s"$d/embeddings.parquet"))(build(paths)): Unit
     paths
   }
 
@@ -184,8 +179,6 @@ object Similarity {
   // parquet instead. Longs round-trip parquet exactly; the cosine column
   // is staged but the overlays join on (q_id, vec_id) only. ----
 
-  private[operators] val annTruthBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The staged truth is built DEEPER than the serving depth [[K]]: the
     * recall-at-K sweep grades the fixed depth-K result lists against the
     * true top-1/5/25, and the deeper prefix costs nothing extra in the
@@ -196,7 +189,7 @@ object Similarity {
   private[operators] val AnnTruthDepth = 25
 
   def ensureAnnTruthStaged(s: SparkSession, d: String): String =
-    stage(d, s"anntruth_k$AnnTruthDepth", annTruthBuildCount, "topk") { ps =>
+    stage(d, s"anntruth_k$AnnTruthDepth", "topk") { ps =>
       cosineTopKAt(s, d, AnnTruthDepth).write.mode("overwrite").parquet(ps.head)
     }.head
 
@@ -219,8 +212,6 @@ object Similarity {
   // a method = one more entry in [[evalProbes]], at its own cost, with
   // ZERO added cost in the overlays.
 
-  private[operators] val annEvalBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The graded methods, in method order, each with its probe. */
   private val evalProbes: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "ivf" -> (annIvf _), "ivf_kmeans" -> (annIvfTrained _), "ivfpq" -> (annIvfPq _),
@@ -233,7 +224,7 @@ object Similarity {
   // layer-2 entry (staged rows are a function of each method's probe
   // DEFINITION, so a probe change must version the dir)
   def ensureAnnEvalStaged(s: SparkSession, d: String): String =
-    stage(d, "anneval_v3", annEvalBuildCount, "results") { ps =>
+    stage(d, "anneval_v3", "results") { ps =>
       evalProbes.map { case (m, run) =>
         run(s, d).select(lit(m).as("method"), col("q_id"), col("rank"), col("vec_id"))
       }.reduce(_.unionByName(_))
@@ -325,13 +316,12 @@ object Similarity {
   // one DDL statement — bucket ids are encoded in the file names, so
   // registration restores full co-location without rewriting anything.
 
-  private[operators] val annBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private val BandBuckets = 16
 
   // "ann2": the v2 layout (bucketed bands). The bumped prefix makes a
   // stale v1 staging (plain parquet, non-bucket file names) invisible —
   // registering bucket metadata over non-bucketed files would fail reads.
-  def annStageDir(sfDir: String): String = stageDir("ann2", sfDir)
+  def annStageDir(sfDir: String): String = graft.Staging.dir("ann2", sfDir)
 
   private[operators] def annBandsTable(sfDir: String): String =
     ("graft_ann_bands_" + sfDir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
@@ -350,7 +340,7 @@ object Similarity {
   def ensureAnnStaged(s: SparkSession, d: String): (String, String) = {
     val bandsTable = annBandsTable(d)
     val Seq(centroidsPath, bandsPath) =
-      stage(d, "ann2", annBuildCount, "centroids", "bands") { case Seq(centroidsPath, bandsPath) =>
+      stage(d, "ann2", "centroids", "bands") { case Seq(centroidsPath, bandsPath) =>
         centroidArrays(s, d).write.mode("overwrite").parquet(centroidsPath)
         // bucketed external table: DROP forgets metadata only (external
         // location), so clear any half-built files by hand first
@@ -890,12 +880,10 @@ object Similarity {
     encodePq(emb(s, d).filter(col("embedding").isNotNull), "embedding",
       stagedCentroids(s, d), "c_label", "centroid")
 
-  private[operators] val pqBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The staged code table IS the compressed index: PqSub codes per
     * vector, no floats — built once per sf dir. */
   private[operators] def stagedPqCodes(s: SparkSession, d: String): DataFrame =
-    Tables.parquet(s, stage(d, "pqcodes", pqBuildCount, "codes") { ps =>
+    Tables.parquet(s, stage(d, "pqcodes", "codes") { ps =>
       pqCodesInline(s, d).write.mode("overwrite").parquet(ps.head)
     }.head)
 
@@ -974,9 +962,6 @@ object Similarity {
 
   private[operators] val IvfPqRb = 8L
 
-  private[operators] val ivfPqBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** The residual frame over explicit (vectors, centroids) inputs —
     * (vec_id, c_label = the list, r = v − centroid, componentwise);
     * shared by the build-once index and the incremental ingest (which
@@ -1017,7 +1002,7 @@ object Similarity {
     * staged label centroids. */
   def ensureIvfPqStaged(s: SparkSession, d: String): (String, String) = {
     val Seq(rbPath, codesPath) = stage(d, s"ivfpq_m${PqSub}_rb${IvfPqRb}_v1",
-        ivfPqBuildCount, "rcodebook", "codes") { case Seq(rbPath, codesPath) =>
+        "rcodebook", "codes") { case Seq(rbPath, codesPath) =>
       writeIvfPq(emb(s, d), stagedCentroids(s, d), rbPath, codesPath)
     }
     (rbPath, codesPath)
@@ -1081,14 +1066,11 @@ object Similarity {
   // filtered to the base slice) and the hashes must agree. Probe q_id 7
   // IS a freshly-ingested vector (the incremental-ann convention). ----
 
-  private[operators] val incIvfPqBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Stages the BASE half: base-only coarse centroids, base-only
     * residual codebook, base code table (list-partitioned). */
   def ensureIncIvfPqStaged(s: SparkSession, d: String): (String, String, String) = {
     val Seq(centsPath, rbPath, codesPath) = stage(d, s"incivfpq_m${PqSub}_rb${IvfPqRb}_v1",
-        incIvfPqBuildCount, "centroids", "rcodebook", "codes") {
+        "centroids", "rcodebook", "codes") {
       case Seq(centsPath, rbPath, codesPath) =>
         val base = emb(s, d).filter(!isDeltaVec)
         centroidArraysOf(base).write.mode("overwrite").parquet(centsPath)
@@ -1100,20 +1082,17 @@ object Similarity {
   /** `v_incremental_ivfpq` — probe over the incrementally maintained
     * composite: the delta batch takes residuals against the FROZEN base
     * centroids, argmin-encodes against the FROZEN base codebook (one
-    * bounded pass over the delta — REQUIREd not to rebuild the staged
-    * base), and its code rows APPEND to the staged base codes; the
-    * shared probe runs over the union. */
+    * bounded pass over the delta, never a rebuild of the staged base),
+    * and its code rows APPEND to the staged base codes; the shared probe
+    * runs over the union. */
   def incrementalIvfPq(s: SparkSession, d: String): DataFrame = {
     val (centsPath, rbPath, codesPath) = ensureIncIvfPqStaged(s, d)
-    val builds = incIvfPqBuildCount.get()
     val cents = Tables.parquet(s, centsPath)
     val rb = Tables.parquet(s, rbPath)
     // the ingest: delta-only residual + encode, pinned (it feeds a code
     // table the probe scans once per ADC join leg)
     val dCodes = graft.QueryDsl.pin(encodeResiduals(
       residualsOver(emb(s, d).filter(isDeltaVec), cents), rb))
-    require(incIvfPqBuildCount.get() == builds,
-      "the ingest must not rebuild the staged base index")
     val codes = Tables.parquet(s, codesPath)
       .select(col("vec_id"), col("m"), col("code"), col("c_label"))
       .unionByName(dCodes.select(col("vec_id"), col("m"), col("code"), col("c_label")))
@@ -1243,16 +1222,14 @@ object Similarity {
     } finally { sample.unpersist(); () }
   }
 
-  private[operators] val kmeansBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def kmeansStage = s"kmeans_k${KmClusters}_it${KmIterations}_m${KmSampleMod}"
 
-  def kmeansStageDir(sfDir: String): String = stageDir(kmeansStage, sfDir)
+  def kmeansStageDir(sfDir: String): String = graft.Staging.dir(kmeansStage, sfDir)
 
   /** Stages the trained index: the k×dim codebook (with member counts)
     * and the one-pass corpus assignment table. */
   def ensureKmeansStaged(s: SparkSession, d: String): (String, String) = {
-    val Seq(centroidsPath, assignPath) = stage(d, kmeansStage, kmeansBuildCount,
+    val Seq(centroidsPath, assignPath) = stage(d, kmeansStage,
         "centroids", "assign") { case Seq(centroidsPath, assignPath) =>
       val (book, codes) = lloyd(s, d, KmClusters, 1)(e => Array(e))
       book.select(col("codeword").as("cluster_id"), col("dim"), col("c_val"), col("n_members"))
@@ -1311,16 +1288,14 @@ object Similarity {
     out
   }
 
-  private[operators] val pqKmeansBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private def pqKmeansStage = s"pq_kmeans_cw${PqCw}_it${KmIterations}_m${KmSampleMod}"
 
-  def pqKmeansStageDir(sfDir: String): String = stageDir(pqKmeansStage, sfDir)
+  def pqKmeansStageDir(sfDir: String): String = graft.Staging.dir(pqKmeansStage, sfDir)
 
   /** Stages the trained PQ index: the PqSub×PqCw×PqSubDim codebook (with
     * member counts) and the one-pass integer code table. */
   def ensurePqKmeansStaged(s: SparkSession, d: String): (String, String) = {
-    val Seq(codebookPath, codesPath) = stage(d, pqKmeansStage, pqKmeansBuildCount,
+    val Seq(codebookPath, codesPath) = stage(d, pqKmeansStage,
         "codebook", "codes") { case Seq(codebookPath, codesPath) =>
       val (book, codes) =
         lloyd(s, d, PqCw, PqSub)(e => Array.tabulate(PqSub)(m => subSlice(e, m)))
@@ -1470,8 +1445,6 @@ object Similarity {
     * instead of trusting the comment above. */
   private[operators] val nswProbeJobs = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private[operators] val nswBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Scaled-integer vector column — the same mapping as [[scaledVec]]. */
   private def scaledCol(c: Column): Column =
     transform(c, x => floor(x.cast("double") * lit(CentroidScale)).cast("long"))
@@ -1523,7 +1496,7 @@ object Similarity {
     * scaled vector carried on the edge). */
   def ensureNswStaged(s: SparkSession, d: String): (String, String) = {
     val Seq(e0Path, e1Path) = stage(d, s"nsw_m${NswM}_l${NswLayerMod}_b${NswBeamW}_p1",
-        nswBuildCount, "edges0", "edges1") { case Seq(e0Path, e1Path) =>
+        "edges0", "edges1") { case Seq(e0Path, e1Path) =>
       writeNswEdges(emb(s, d).select(col("vec_id"), scaledCol(col("embedding")).as("sv")),
         stagedCorpusBands(s, d), e0Path, e1Path)
     }
@@ -1633,15 +1606,13 @@ object Similarity {
   // decision). The probe is the SAME beam traversal; back-links are
   // what make inserted vectors retrievable. ----
 
-  private[operators] val incNswBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Stages the BASE half: the band index WITH vector payload plus the
     * base-only edge layers (the [[ensureNswStaged]] build restricted to
     * non-delta vectors). p1 = payload schema v1 (bands carry scaled base
     * vectors). */
   def ensureIncNswStaged(s: SparkSession, d: String): (String, String, String) = {
     val Seq(bandsP, e0P, e1P) = stage(d, s"incnsw_m${NswM}_l${NswLayerMod}_p1",
-        incNswBuildCount, "bands", "edges0", "edges1") { case Seq(bandsP, e0P, e1P) =>
+        "bands", "edges0", "edges1") { case Seq(bandsP, e0P, e1P) =>
       val base = emb(s, d).filter(!isDeltaVec)
       base.select(col("vec_id"), scaledCol(col("embedding")).as("sv"),
           posexplode(lshBandKeys(col("embedding"))).as(Seq("band", "bkey")))
@@ -1656,13 +1627,11 @@ object Similarity {
     * graph: the delta batch band-hashes (one narrow pass over the
     * delta), candidates come from the staged payload-carrying band
     * index, the top-M per delta vector append as forward + back edge
-    * rows, and the shared beam probe runs over base ∪ appended edges.
-    * REQUIREs the staged graph was not rebuilt by the insert. The
-    * oracle rebuilds the same base graph + insert edges from scratch in
+    * rows, and the shared beam probe runs over base ∪ appended edges;
+    * the insert never rebuilds the staged graph. The oracle rebuilds the same base graph + insert edges from scratch in
     * SQL — append ≡ rebuild-with-frozen-base, hash-checked. */
   def incrementalNsw(s: SparkSession, d: String): DataFrame = {
     val (bandsP, e0P, e1P) = ensureIncNswStaged(s, d)
-    val builds = incNswBuildCount.get()
     val baseBands = Tables.parquet(s, bandsP)
       .select(col("vec_id").as("dst"), col("sv").as("sv_d"), col("band"), col("bkey"))
     val delta = emb(s, d).filter(isDeltaVec)
@@ -1677,8 +1646,6 @@ object Similarity {
       // vectors are functions of src/dst, and hashing the long arrays
       // through a 4-column distinct would shuffle the payload twice
       .dropDuplicates("src", "dst")))
-    require(incNswBuildCount.get() == builds,
-      "the insert must not rebuild the staged base graph")
     val edges0 = Tables.parquet(s, e0P).select(col("src"), col("dst"), col("sv_d"))
       .unionByName(dEdges.select(col("src"), col("dst"), col("sv_d")))
       .unionByName(dEdges.select(col("dst").as("src"),
@@ -1715,8 +1682,6 @@ object Similarity {
   // the erased slice for v_ann_delete — disjoint from the delta slice
   private val isTombVec: Column = pmod(col("vec_id"), lit(10)) === lit(4)
 
-  private[operators] val incAnnBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Nearest-frozen-centroid assignment — the ONLY per-vector work an
     * ingest batch pays: (vec_id, embedding, c_label). */
   private def assignNearest(vecs: DataFrame, cents: DataFrame): DataFrame =
@@ -1729,8 +1694,8 @@ object Similarity {
     * (vec_id, embedding, assigned label), label-partitioned. Returns
     * (centroidsPath, postingsPath). */
   private def stageIvf(s: SparkSession, d: String, name: String,
-      builds: java.util.concurrent.atomic.AtomicInteger, vecs: => DataFrame): (String, String) = {
-    val Seq(centroidsPath, postingsPath) = stage(d, name, builds, "centroids", "postings") {
+      vecs: => DataFrame): (String, String) = {
+    val Seq(centroidsPath, postingsPath) = stage(d, name, "centroids", "postings") {
       case Seq(centroidsPath, postingsPath) =>
         centroidArraysOf(vecs).write.mode("overwrite").parquet(centroidsPath)
         assignNearest(vecs, Tables.parquet(s, centroidsPath))
@@ -1742,9 +1707,7 @@ object Similarity {
   /** Stages the BASE half of the incremental IVF index: centroids
     * trained on base vectors only + base postings. */
   def ensureIncAnnStaged(s: SparkSession, d: String): (String, String) =
-    stageIvf(s, d, "incann", incAnnBuildCount, emb(s, d).filter(!isDeltaVec))
-
-  private[operators] val rebalBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
+    stageIvf(s, d, "incann", emb(s, d).filter(!isDeltaVec))
 
   /** Stages the REBUILT index the rebalance decision's rebuild leg
     * produces: the quantizer retrained on base+delta plus its full
@@ -1755,7 +1718,7 @@ object Similarity {
     * run) and the retrained-vs-frozen movement REQUIRE runs against this
     * staged codebook. */
   def ensureRebalancedStaged(s: SparkSession, d: String): (String, String) =
-    stageIvf(s, d, "rebal", rebalBuildCount, emb(s, d))
+    stageIvf(s, d, "rebal", emb(s, d))
 
   /** `v_incremental_ann` — IVF probe over the INCREMENTALLY MAINTAINED
     * index: the delta batch assigns against the frozen base-trained
@@ -1840,8 +1803,8 @@ object Similarity {
 
   /** `v_ann_rebalance` — two arriving-batch scenarios decided and
     * EXECUTED: the small batch (the `v_incremental_ann` delta slice,
-    * 10%) must take the append path WITHOUT retraining (REQUIREd: the
-    * staged build counter does not move), the large batch (two thirds
+    * 10%) must take the append path WITHOUT retraining (it reads the
+    * frozen staged index and never rebuilds it), the large batch (two thirds
     * of the corpus) must take the rebuild path and actually produce a
     * RETRAINED quantizer (REQUIREd: at least one retrained centroid
     * differs from the frozen staged one — a rebuild that reuses the old
@@ -1849,7 +1812,7 @@ object Similarity {
     * maintenance job logs: counts, ratio, decision, and the executed
     * index's posting/centroid cardinalities. The rebuild's retrain is
     * STAGED ([[ensureRebalancedStaged]] — build-once per corpus); the
-    * decision inputs and both REQUIREs execute on every run. */
+    * decision inputs and the movement REQUIRE execute on every run. */
   def annRebalance(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val (cPath, pPath) = ensureIncAnnStaged(s, d)
@@ -1869,12 +1832,9 @@ object Similarity {
       // by definition a rebuild — and the 0-denominator ratio is moot
       val ratioPct = if (baseN == 0) 100L else deltaN * 100L / baseN
       val decision = if (ratioPct <= RebalanceThresholdPct) "append" else "rebuild"
-      val builds = incAnnBuildCount.get()
       val (nCentroids, nPostings) =
         if (decision == "append") {
           val postings = appendPostings(s, d, pPath, frozen, isDelta)
-          require(incAnnBuildCount.get() == builds,
-            "append path must not rebuild the staged index")
           (frozen.count(), postings.count())
         } else {
           // the rebuild leg reads the STAGED retrained index (a pure
@@ -1987,10 +1947,8 @@ object Similarity {
   // pool, deterministic greedy) — the eval overlay reads it STAGED (the
   // stagedEvalResults discipline) instead of re-running the greedy chain
   // per overlay; the live unroll stays measured in `v_mmr_rerank` itself.
-  private[operators] val mmrBuildCount = new java.util.concurrent.atomic.AtomicInteger(0)
-
   private[operators] def ensureMmrStaged(s: SparkSession, d: String): String =
-    stage(d, s"mmr_p${MmrPool}_k${MmrK}", mmrBuildCount, "picks") { ps =>
+    stage(d, s"mmr_p${MmrPool}_k${MmrK}", "picks") { ps =>
       mmrRerank(s, d).write.mode("overwrite").parquet(ps.head)
     }.head
 

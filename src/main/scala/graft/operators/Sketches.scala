@@ -30,12 +30,6 @@ object Sketches {
         countDistinct(col("l_orderkey")).as("exact_orders"))
       .orderBy("l_returnflag")
 
-  private[operators] val distinctTruthBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def distinctTruthStageDir(sfDir: String): String =
-    "/tmp/graft_stage/distinct_truth_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   /** The gate's TRUTH side staged build-once per corpus fingerprint:
     * exact distinct order keys per flag is a pure corpus function (the
     * anntruth discipline — the exact-top-k table the ANN recall gates
@@ -45,9 +39,8 @@ object Sketches {
     * corpus regenerations). The SKETCH leg — the operator under test —
     * stays live. */
   def ensureDistinctTruthStaged(s: SparkSession, d: String): String = {
-    val dir = distinctTruthStageDir(d)
+    val dir = graft.Staging.dir("distinct_truth_v1", d)
     graft.Staging.ensure(dir, Seq(s"$d/lineitem.parquet")) {
-      distinctTruthBuildCount.incrementAndGet()
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(countDistinct(col("l_orderkey")).as("exact_orders"))

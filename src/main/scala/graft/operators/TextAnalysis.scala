@@ -460,16 +460,11 @@ object TextAnalysis {
     * corpus functions — the LM family's staged-table discipline applies
     * verbatim. The split predicate (content-hash bucket 98/2) is part of
     * the staged derivation, hence the version token. */
-  private[operators] val gramStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def gramStageDir(sfDir: String): String =
-    "/tmp/graft_stage/grams5_v1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def gramStageDir(sfDir: String): String = graft.Staging.dir("grams5_v1", sfDir)
 
   private def ensureGramsStaged(s: SparkSession, d: String): String = {
     val dir = gramStageDir(d)
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet"), "md5grams:k5:b98") {
-      gramStageBuildCount.incrementAndGet()
       gramSide(s, d, gramBucket < 98)
         .write.mode("overwrite").parquet(dir + "/train")
       gramSide(s, d, gramBucket >= 98).select(col("g5")).distinct()
@@ -1095,11 +1090,7 @@ object TextAnalysis {
 
   private[operators] val SearchNeedle = "slow scan"
 
-  private[operators] val postingsBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  def postingsStageDir(sfDir: String): String =
-    "/tmp/graft_stage/trigram_p1_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def postingsStageDir(sfDir: String): String = graft.Staging.dir("trigram_p1", sfDir)
 
   /** Build-once trigram postings: one (trigram, doc_id) row per DISTINCT
     * character trigram per document — ~len distinct trigrams per doc, so
@@ -1114,7 +1105,6 @@ object TextAnalysis {
     val dir = postingsStageDir(d)
     val path = dir + "/postings"
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      postingsBuildCount.incrementAndGet()
       docs(s, d)
         .filter(length(col("text")) >= 3) // sequence(1, len-2) must ascend
         .select(col("doc_id"), col("text"),
@@ -1351,15 +1341,11 @@ object TextAnalysis {
     * the bigram key — the corpus-sized shuffle the honest corpus-wide
     * dictionary requires ([[bigramNovelty]]'s argument); context/
     * backoff tables and the train total are broadcast-sized. */
-  private[operators] val lmStageBuildCount =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** Train-split constant (doc_id % 10 < 8) and pair definition are
     * baked into the dir name per the stage-dir-constants discipline
     * (v2: the per-doc pair-count probe table rides along with the
     * train counts). */
-  def lmStageDir(sfDir: String): String =
-    "/tmp/graft_stage/lm_bigram_p8v2_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+  def lmStageDir(sfDir: String): String = graft.Staging.dir("lm_bigram_p8v2", sfDir)
 
   /** Adjacent-word pairs of every document — the probe-side explode
     * (shared by the staged train build, which filters it to the train
@@ -1385,7 +1371,6 @@ object TextAnalysis {
   private def ensureLmStaged(s: SparkSession, d: String): String = {
     val dir = lmStageDir(d)
     graft.Staging.ensure(dir, Seq(s"$d/documents.parquet")) {
-      lmStageBuildCount.incrementAndGet()
       bigramPairs(s, d)
         .groupBy(col("doc_id"), col("w1"), col("w2")).agg(count(lit(1)).as("c"))
         .write.mode("overwrite").parquet(dir + "/pairs")

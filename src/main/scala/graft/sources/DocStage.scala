@@ -35,13 +35,9 @@ object DocStage {
     * predicate. */
   val DocSliceMod = 2L
 
-  private def key(sfDir: String): String = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   // h2 = the % 2 slice is baked into the layout (stage-dir discipline:
   // a slice-rule change can never reuse a stale staged corpus)
-  def stageDir(sfDir: String): String = "/tmp/graft_stage/docs_h2_" + key(sfDir)
-
-  private def renderedDir(sfDir: String): String = "/tmp/graft_stage/docs_rendered_v1_" + key(sfDir)
+  def stageDir(sfDir: String): String = graft.Staging.dir("docs_h2", sfDir)
 
   /** Files the rendered table is written as: one scan task each. */
   private val RenderedFiles = 4
@@ -49,7 +45,7 @@ object DocStage {
   /** The full rendered corpus as `(doc_id, value)`, rendered from
     * [[FilingDocs.docs]] on first use and read back from parquet. */
   def rendered(s: SparkSession, sfDir: String): DataFrame = {
-    val dir = renderedDir(sfDir)
+    val dir = graft.Staging.dir("docs_rendered_v1", sfDir)
     val path = dir + "/docs"
     graft.Staging.ensure(dir, Seq(s"$sfDir/orders.parquet")) {
       FilingDocs.docs(s, sfDir).toDF("doc_id", "value")
@@ -67,8 +63,6 @@ object DocStage {
   def ensureStaged(s: SparkSession, sfDir: String): String = {
     import s.implicits._
     val dir = stageDir(sfDir)
-    // ensured before, not inside, this build: a nested build's seconds
-    // would be logged twice (once more inside this build's own record)
     val docs = rendered(s, sfDir)
     // the per-file writes don't clear stale output themselves, so the
     // build starts from an empty dir

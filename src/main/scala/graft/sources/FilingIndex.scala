@@ -52,13 +52,6 @@ object FilingIndex {
             .as("primaryDocument")).as("recent")).as("filings"))).as("value"))
   }
 
-  // "index3": the v3 layout (cik-RANGE-partitioned files + stats
-  // sidecar). The bumped prefix makes a stale hash-partitioned staging
-  // invisible — its files span the whole cik range, so the sidecar would
-  // never prune anything.
-  def stageDir(sfDir: String): String =
-    "/tmp/graft_stage/index3_" + sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-
   private val StageFiles = 8
 
   /** Stage the fixture once per sf dir (Spark text writer, JSON Lines),
@@ -70,7 +63,11 @@ object FilingIndex {
     * against pushed cik predicates. Fingerprinted marker + atomic
     * publish + cross-process lock (graft.Staging). */
   def ensureStaged(s: SparkSession, sfDir: String): String = {
-    val dir = stageDir(sfDir)
+    // "index3": the v3 layout (cik-RANGE-partitioned files + stats
+    // sidecar). The bumped prefix makes a stale hash-partitioned staging
+    // invisible — its files span the whole cik range, so the sidecar
+    // would never prune anything.
+    val dir = graft.Staging.dir("index3", sfDir)
     graft.Staging.ensure(dir, Seq(s"$sfDir/orders.parquet")) {
       indexJson(s, sfDir)
         .withColumn("cik_key",

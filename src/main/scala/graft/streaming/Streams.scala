@@ -563,7 +563,7 @@ object Streams {
       .getOrElse(Array.empty).map(_.getPath.getName).sorted
     require(manifests.length >= 2,
       s"expected one epoch manifest per micro-batch, got: ${manifests.mkString(", ")}")
-    s.read.text(s"$target/part-*.fw")
+    s.read.option("pathGlobFilter", "part-*.fw").text(target)
       .select(
         trim(substring(col("value"), 1, 12)).cast("bigint").as("o_orderkey"),
         trim(substring(col("value"), 13, 4)).as("o_orderstatus"),

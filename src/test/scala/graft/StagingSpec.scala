@@ -152,6 +152,21 @@ class StagingSpec extends AnyFunSuite {
     assert(Staging.buildsSnapshot.count(_.dir == dir) == before + 1)
   }
 
+  test("a nested build is logged once: the outer record excludes the inner build") {
+    val (src, outer) = freshDirs()
+    val inner = outer + "_inner"
+    writeSrc(src, "a.parquet", "v1")
+    val t0 = System.nanoTime()
+    Staging.ensure(outer, Seq(src)) {
+      Staging.ensure(inner, Seq(src)) { Thread.sleep(200) }: Unit
+    }
+    val wall = (System.nanoTime() - t0) / 1e9
+    val mine = Staging.buildsSnapshot.filter(b => b.dir == outer || b.dir == inner)
+    assert(mine.map(_.dir) == Seq(inner, outer), "one record per build, inner first")
+    assert(mine.map(_.sec).sum < wall * 1.1,
+      s"the inner build's seconds are logged twice: $mine against $wall s of wall time")
+  }
+
   test("a missing source root still fingerprints (and changes on creation)") {
     val (src, dir) = freshDirs()
     val before = Staging.fingerprint(Seq(src))

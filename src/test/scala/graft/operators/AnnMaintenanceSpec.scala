@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,11 +43,15 @@ class AnnMaintenanceSpec extends AnyFunSuite {
 
   test("rebalance retrain is staged build-once; the movement REQUIRE stays live") {
     Similarity.queries("v_ann_rebalance")(s, sf).collect()
-    val builds = Similarity.rebalBuildCount.get()
+    val rebalDir = StageBuilds.dirOf(Similarity.ensureRebalancedStaged(s, sf)._1)
+    val baseDir = StageBuilds.dirOf(Similarity.ensureIncAnnStaged(s, sf)._1)
+    val builds = (StageBuilds(rebalDir), StageBuilds(baseDir))
     // warm re-run: decision + REQUIREs execute, the k-means does not
     Similarity.queries("v_ann_rebalance")(s, sf).collect()
-    assert(Similarity.rebalBuildCount.get() == builds,
+    assert(StageBuilds(rebalDir) == builds._1,
       "a warm rebalance re-ran the staged retrain")
+    assert(StageBuilds(baseDir) == builds._2,
+      "the append leg rebuilt the frozen base index")
     // the staged codebook genuinely differs from the frozen base one
     val (fPath, _) = Similarity.ensureIncAnnStaged(s, sf)
     val (rPath, _) = Similarity.ensureRebalancedStaged(s, sf)

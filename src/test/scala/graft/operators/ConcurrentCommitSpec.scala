@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, Staging, TestSpark}
 import graft.sources.{CommitResult, ManifestLog}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -119,9 +119,9 @@ class ConcurrentCommitSpec extends AnyFunSuite {
 
   test("the OCC race's pure-corpus slices stage once; the protocol replays per run") {
     Formats.occGdprAbort(TestSpark.spark, TestSpark.sf).collect()
-    val builds = Formats.occGdprStageBuildCount.get()
+    val builds = StageBuilds(Staging.dir("occ_gdpr_k3s7v1", TestSpark.sf))
     val r2 = Formats.occGdprAbort(TestSpark.spark, TestSpark.sf).collect().head
-    assert(Formats.occGdprStageBuildCount.get() == builds,
+    assert(StageBuilds(Staging.dir("occ_gdpr_k3s7v1", TestSpark.sf)) == builds,
       "second run rebuilt the staged OCC slices")
     // the protocol itself provably re-ran: a fresh abort + re-plan landed
     assert(r2.getAs[Int]("n_aborts") == 1 && r2.getAs[Int]("n_versions") == 3)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -180,10 +180,10 @@ class CorpusCleanSpec extends AnyFunSuite {
 
   test("dsir featurization is staged build-once; the probe never re-explodes the corpus") {
     CorpusClean.ensureDsirStaged(s, sf)
-    val builds = CorpusClean.dsirStageBuildCount.get()
+    val builds = StageBuilds(CorpusClean.dsirStageDir(sf))
     val df = CorpusClean.dsir(s, sf)
     df.collect()
-    assert(CorpusClean.dsirStageBuildCount.get() == builds,
+    assert(StageBuilds(CorpusClean.dsirStageDir(sf)) == builds,
       "a dsir probe rebuilt the staged featurization")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("dsir_b"), s"probe does not read the staged counts:\n$plan")

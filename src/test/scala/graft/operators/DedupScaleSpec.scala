@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Tables, TestSpark}
+import graft.{StageBuilds, Tables, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scale property that justifies MinHash+LSH: candidate pairs come
@@ -69,10 +69,10 @@ class DedupScaleSpec extends AnyFunSuite {
 
   test("dup-cluster staging is build-once and bit-identical to the inline pipeline") {
     Dedup.ensureClustersStaged(s, sf)
-    val builds = Dedup.clusterBuildCount.get()
+    val builds = StageBuilds(Dedup.clusterStageDir(sf))
     Dedup.ensureClustersStaged(s, sf)
     Dedup.ensureClustersStaged(s, sf)
-    assert(Dedup.clusterBuildCount.get() == builds,
+    assert(StageBuilds(Dedup.clusterStageDir(sf)) == builds,
       "repeat ensureClustersStaged rebuilt the cluster table")
     val staged = Dedup.stagedDupClusters(s, sf)
     val inline = Dedup.dupClusters(s, sf)
@@ -82,9 +82,10 @@ class DedupScaleSpec extends AnyFunSuite {
 
   test("LSH tuning sweep is build-once and the staged table ≡ the inline sweep") {
     Dedup.lshTuning(s, sf).collect()
-    val builds = Dedup.lshTuningBuildCount.get()
+    val builds = StageBuilds(Dedup.lshTuningStageDir(sf))
     val staged = Dedup.lshTuning(s, sf)
-    assert(Dedup.lshTuningBuildCount.get() == builds, "warm tuning query rebuilt the sweep")
+    assert(StageBuilds(Dedup.lshTuningStageDir(sf)) == builds,
+      "warm tuning query rebuilt the sweep")
     val inline = Dedup.lshTuningInline(s, sf)
     assert(staged.collect().map(_.toSeq).toSeq == inline.orderBy("bands").collect().map(_.toSeq).toSeq,
       "staged tuning sweep diverges from the inline computation")
@@ -93,10 +94,10 @@ class DedupScaleSpec extends AnyFunSuite {
 
   test("dup-gram staging is build-once and span dedup ≡ the inline explode pipeline") {
     Dedup.ensureDupGramsStaged(s, sf)
-    val builds = Dedup.dupGramBuildCount.get()
+    val builds = StageBuilds(Dedup.dupGramStageDir(sf))
     Dedup.ensureDupGramsStaged(s, sf)
     Dedup.ensureDupGramsStaged(s, sf)
-    assert(Dedup.dupGramBuildCount.get() == builds,
+    assert(StageBuilds(Dedup.dupGramStageDir(sf)) == builds,
       "repeat ensureDupGramsStaged rebuilt the postings")
     val staged = Dedup.spanDedup(s, sf)
     val inline = Dedup.spanDedupInline(s, sf)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Erasure-pass contract: bounded write amplification (only the subject's
@@ -26,11 +26,11 @@ class GdprDeleteSpec extends AnyFunSuite {
 
   test("the bucketed base stages ONCE per corpus across the whole erasure family") {
     Formats.gdprDelete(s, sf).collect() // forces the stage to exist
-    val builds = Formats.gdprStageBuildCount.get()
+    val builds = StageBuilds(Formats.gdprStageDir(sf))
     Formats.deleteVectors(s, sf).collect()
     Formats.dvCdf(s, sf).collect()
     Formats.gdprDelete(s, sf).collect()
-    assert(Formats.gdprStageBuildCount.get() == builds,
+    assert(StageBuilds(Formats.gdprStageDir(sf)) == builds,
       "erasure consumers rebuilt the staged bucketed base")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import graft.functions.HilbertIndex3
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -91,8 +91,8 @@ class HilbertSpec extends AnyFunSuite {
   test("hilbert staging is build-once (marker): repeat ensure is a no-op") {
     val sf = TestSpark.sf
     Layout.ensureHilbert(s, sf)
-    val builds = Layout.hilbertBuildCount.get()
+    val builds = StageBuilds(Layout.hilbertDir(sf))
     Layout.ensureHilbert(s, sf)
-    assert(Layout.hilbertBuildCount.get() == builds)
+    assert(StageBuilds(Layout.hilbertDir(sf)) == builds)
   }
 }

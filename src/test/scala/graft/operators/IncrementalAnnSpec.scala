@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,11 +23,11 @@ class IncrementalAnnSpec extends AnyFunSuite {
   }
 
   test("staged build runs at most once across repeated probes") {
-    Similarity.ensureIncAnnStaged(s, sf)
-    val before = Similarity.incAnnBuildCount.get()
+    val dir = StageBuilds.dirOf(Similarity.ensureIncAnnStaged(s, sf)._1)
+    val before = StageBuilds(dir)
     Similarity.incrementalAnn(s, sf).collect()
     Similarity.incrementalAnn(s, sf).collect()
-    assert(Similarity.incAnnBuildCount.get() == before,
+    assert(StageBuilds(dir) == before,
       "probe re-built the staged base index")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -54,9 +54,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("base index builds at most once across ingests") {
     Dedup.incrementalDedup(s, sf).count(): Unit
-    val before = Dedup.baseIndexBuildCount.get()
+    val before = StageBuilds(Dedup.baseIndexStageDir(sf))
     Dedup.incrementalDedup(s, sf).count(): Unit
-    assert(Dedup.baseIndexBuildCount.get() == before,
+    assert(StageBuilds(Dedup.baseIndexStageDir(sf)) == before,
       "second ingest rebuilt the base index")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The graph-insert contract: repeated probes never rebuild the staged
@@ -14,10 +14,11 @@ class IncrementalNswSpec extends AnyFunSuite {
   test("probe-after-insert reuses the staged base graph") {
     val first = Similarity.queries("v_incremental_nsw")(s, sf).collect()
       .map(_.toString).toSeq
-    val builds = Similarity.incNswBuildCount.get()
+    val dir = StageBuilds.dirOf(Similarity.ensureIncNswStaged(s, sf)._1)
+    val builds = StageBuilds(dir)
     val second = Similarity.queries("v_incremental_nsw")(s, sf).collect()
       .map(_.toString).toSeq
-    assert(Similarity.incNswBuildCount.get() == builds,
+    assert(StageBuilds(dir) == builds,
       "second probe must reuse the staged base graph")
     assert(first == second, "probe must be deterministic")
     assert(first.nonEmpty)

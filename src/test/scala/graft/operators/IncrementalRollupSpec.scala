@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Tables, TestSpark}
+import graft.{StageBuilds, Tables, TestSpark}
 import graft.QueryDsl.dsum
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,9 +15,9 @@ class IncrementalRollupSpec extends AnyFunSuite {
 
   test("staged + hot tail equals the full recompute, and builds once") {
     val first = Events.incrementalRollup(s, sf).collect()
-    val builds = Events.rollupBuildCount.get()
+    val builds = StageBuilds(Events.rollupStageDir(sf))
     val second = Events.incrementalRollup(s, sf).collect()
-    assert(Events.rollupBuildCount.get() == builds,
+    assert(StageBuilds(Events.rollupStageDir(sf)) == builds,
       "second query must reuse the staged rollup, not rebuild it")
     assert(first.toSeq == second.toSeq, "staged reuse changed the answer")
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -44,12 +44,12 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("index builds once; probe prunes the code table to the probed lists") {
-    Similarity.ensureIvfPqStaged(s, sf)
-    val before = Similarity.ivfPqBuildCount.get()
+    val dir = StageBuilds.dirOf(Similarity.ensureIvfPqStaged(s, sf)._1)
+    val before = StageBuilds(dir)
     val df = Similarity.annIvfPq(s, sf)
     val rows = df.collect()
     assert(rows.nonEmpty)
-    assert(Similarity.ivfPqBuildCount.get() == before, "probe rebuilt the index")
+    assert(StageBuilds(dir) == before, "probe rebuilt the index")
     val second = Similarity.annIvfPq(s, sf).collect()
     assert(rows.map(_.toString).toSeq == second.map(_.toString).toSeq,
       "probe must be deterministic")
@@ -101,10 +101,10 @@ class IvfPqSpec extends AnyFunSuite {
       "staged base codes must cover exactly the base slice")
     assert(staged.filter(pmod(col("vec_id"), lit(10)) === 7).count() == 0,
       "a delta vector leaked into the staged base codes")
-    val builds = Similarity.incIvfPqBuildCount.get()
+    val builds = StageBuilds(StageBuilds.dirOf(codesPath))
     val first = Similarity.incrementalIvfPq(s, sf).collect().map(_.toString).toSeq
     val second = Similarity.incrementalIvfPq(s, sf).collect().map(_.toString).toSeq
-    assert(Similarity.incIvfPqBuildCount.get() == builds,
+    assert(StageBuilds(StageBuilds.dirOf(codesPath)) == builds,
       "probe-after-ingest must reuse the staged base index")
     assert(first == second, "probe must be deterministic")
     assert(first.nonEmpty)

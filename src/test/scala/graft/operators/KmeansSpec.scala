@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Trained-quantizer contract: the sampled integer-exact Lloyd's build
@@ -14,11 +14,11 @@ class KmeansSpec extends AnyFunSuite {
 
   test("k-means staging is build-once: second ensure is a no-op") {
     Similarity.ensureKmeansStaged(s, sf)
-    val builds = Similarity.kmeansBuildCount.get()
+    val builds = StageBuilds(Similarity.kmeansStageDir(sf))
     Similarity.ensureKmeansStaged(s, sf)
     Similarity.kmeansTrain(s, sf).collect()
     Similarity.annIvfTrained(s, sf).collect()
-    assert(Similarity.kmeansBuildCount.get() == builds,
+    assert(StageBuilds(Similarity.kmeansStageDir(sf)) == builds,
       "probe or re-ensure re-trained the codebook")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
@@ -41,10 +41,10 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("layout staging is build-once (marker): repeat ensure is a no-op") {
+    val dir = Layout.ensureLayout(s, sf)
+    val builds = StageBuilds(dir)
     Layout.ensureLayout(s, sf)
-    val builds = Layout.buildCount.get()
-    Layout.ensureLayout(s, sf)
-    assert(Layout.buildCount.get() == builds)
+    assert(StageBuilds(dir) == builds)
   }
 
   private def scanRows(df: org.apache.spark.sql.DataFrame): Long = {
@@ -83,10 +83,10 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("zorder staging is build-once (marker): repeat ensure is a no-op") {
+    val dir = Layout.ensureZOrder(s, sf)
+    val builds = StageBuilds(dir)
     Layout.ensureZOrder(s, sf)
-    val builds = Layout.zBuildCount.get()
-    Layout.ensureZOrder(s, sf)
-    assert(Layout.zBuildCount.get() == builds)
+    assert(StageBuilds(dir) == builds)
   }
 
   test("compaction: same rows, ~64x fewer files opened by the scan") {
@@ -108,9 +108,10 @@ class LayoutSpec extends AnyFunSuite {
 
   test("bloom index: build-once staging; every probe found exactly once") {
     val r1 = Layout.bloomIndexLookup(s, sf).collect()
-    val builds = Layout.bloomIdxBuildCount.get()
+    val dir = Layout.ensureBloomIndex(s, sf)
+    val builds = StageBuilds(dir)
     val r2 = Layout.bloomIndexLookup(s, sf).collect()
-    assert(Layout.bloomIdxBuildCount.get() == builds,
+    assert(StageBuilds(dir) == builds,
       "repeat lookup rebuilt the bloom index")
     assert(r1.map(_.toSeq).toSeq == r2.map(_.toSeq).toSeq)
     // event ids are unique: each probe resolves to exactly one row — a

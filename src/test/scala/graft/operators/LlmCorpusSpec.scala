@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -364,10 +364,10 @@ class LlmCorpusSpec extends AnyFunSuite {
     val (tb, ts) = (expected.values.map(_._1).sum, expected.values.map(_._2).sum)
     val got = TextAnalysis.lmBigram(s, sf).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getInt(3)))).toMap
-    val builds = TextAnalysis.lmStageBuildCount.get()
+    val builds = StageBuilds(TextAnalysis.lmStageDir(sf))
     assert(TextAnalysis.lmBigram(s, sf).count() == got.size,
       "second run row count differs")
-    assert(TextAnalysis.lmStageBuildCount.get() == builds,
+    assert(StageBuilds(TextAnalysis.lmStageDir(sf)) == builds,
       "second run must reuse the staged bigram LM table")
     // the probe plan never re-explodes the corpus: every input file of
     // both LM consumers is a staged LM parquet, never documents.parquet

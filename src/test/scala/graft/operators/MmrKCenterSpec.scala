@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Diversity-selection invariants for the MMR rerank and the greedy
@@ -77,9 +77,10 @@ class MmrKCenterSpec extends AnyFunSuite {
 
   test("MMR stage builds once per corpus; overlay reruns don't re-run the greedy chain") {
     Similarity.mmrGain(s, sf).collect(): Unit
-    val builds = Similarity.mmrBuildCount.get()
+    val dir = StageBuilds.dirOf(Similarity.ensureMmrStaged(s, sf))
+    val builds = StageBuilds(dir)
     Similarity.mmrGain(s, sf).collect(): Unit
-    assert(Similarity.mmrBuildCount.get() == builds,
+    assert(StageBuilds(dir) == builds,
       "second mmrGain run rebuilt the staged MMR picks")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Trained-PQ contract: per-subspace codebooks of the declared shape,
@@ -15,10 +15,10 @@ class PqKmeansSpec extends AnyFunSuite {
 
   test("staging is build-once and the codebook has the declared shape") {
     Similarity.ensurePqKmeansStaged(s, sf)
-    val builds = Similarity.pqKmeansBuildCount.get()
+    val builds = StageBuilds(Similarity.pqKmeansStageDir(sf))
     val rows = Similarity.pqKmeansTrain(s, sf).collect()
     Similarity.annPqTrained(s, sf).collect()
-    assert(Similarity.pqKmeansBuildCount.get() == builds, "probe re-trained the codebook")
+    assert(StageBuilds(Similarity.pqKmeansStageDir(sf)) == builds, "probe re-trained the codebook")
     assert(rows.length == 8 * 16 * 8, s"codebook size ${rows.length}")
     val byM = rows.groupBy(_.getInt(0))
     assert(byM.keySet == (0 until 8).toSet)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, Staging, TestSpark}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
@@ -36,11 +36,11 @@ class PqSpec extends AnyFunSuite {
 
   test("index builds once; probe scans codes, not corpus floats") {
     Similarity.stagedPqCodes(s, sf).count() // warm the staging
-    val before = Similarity.pqBuildCount.get()
+    val before = StageBuilds(Staging.dir("pqcodes", sf))
     val df = Similarity.annPq(s, sf)
     val rows = df.collect()
     assert(rows.nonEmpty)
-    assert(Similarity.pqBuildCount.get() == before, "probe rebuilt the index")
+    assert(StageBuilds(Staging.dir("pqcodes", sf)) == before, "probe rebuilt the index")
     val scans = flatten(df.queryExecution.executedPlan)
       .collect { case f: FileSourceScanExec => f }
     val embScans = scans.filter(_.toString.contains("embeddings.parquet"))

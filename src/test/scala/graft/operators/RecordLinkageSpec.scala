@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Linkage contract on the deterministic noise model: the match class is
@@ -14,10 +14,10 @@ class RecordLinkageSpec extends AnyFunSuite {
   test("blocking index is staged build-once and probes read it back verbatim") {
     val sf = TestSpark.sf
     val (vaP, _) = Relational.ensureLinkageStaged(s, sf)
-    val builds = Relational.linkageStageBuildCount.get()
+    val builds = StageBuilds(Relational.linkageStageDir(sf))
     Relational.recordLinkage(s, sf).count()
     Relational.ensureLinkageStaged(s, sf)
-    assert(Relational.linkageStageBuildCount.get() == builds,
+    assert(StageBuilds(Relational.linkageStageDir(sf)) == builds,
       "a linkage run rebuilt the staged blocking index")
     // staged table ≡ the inline derivation (A side; B is the same code path)
     val a = graft.Tables.customer(s, sf)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Tables, TestSpark}
+import graft.{StageBuilds, Tables, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,12 +51,12 @@ class SetSimJoinSpec extends AnyFunSuite {
 
   test("ranked shingle table is staged build-once and shared with the containment join") {
     Dedup.ensureRankedStaged(s, sf)
-    val builds = Dedup.rankedBuildCount.get()
+    val builds = StageBuilds(Dedup.rankedStageDir(sf))
     // both consumers probe the same staged artifact — neither rebuilds
     Dedup.setSimJoin(s, sf).count()
     Dedup.containmentJoin(s, sf).count()
     Dedup.ensureRankedStaged(s, sf)
-    assert(Dedup.rankedBuildCount.get() == builds,
+    assert(StageBuilds(Dedup.rankedStageDir(sf)) == builds,
       "a consumer of the ranked shingle table rebuilt it")
     // the staged table is bit-identical to the inline derivation
     val staged = Dedup.stagedRankedShingles(s, sf)

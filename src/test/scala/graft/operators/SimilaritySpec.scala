@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** ANN quality + shape checks: the IVF path must return full result sets
@@ -115,10 +115,10 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("ANN index staging is build-once: second ensure is a no-op") {
     Similarity.ensureAnnStaged(s, sf)
-    val builds = Similarity.annBuildCount.get()
+    val builds = StageBuilds(Similarity.annStageDir(sf))
     Similarity.ensureAnnStaged(s, sf)
     Similarity.ensureAnnStaged(s, sf)
-    assert(Similarity.annBuildCount.get() == builds,
+    assert(StageBuilds(Similarity.annStageDir(sf)) == builds,
       "repeat ensureAnnStaged rebuilt the index")
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(Similarity.annStageDir(sf), "_STAGED")))
@@ -192,13 +192,13 @@ class SimilaritySpec extends AnyFunSuite {
   test("fresh-JVM path: lost catalog metadata re-registers bucketed bands without a rebuild") {
     import org.apache.spark.sql.functions.col
     Similarity.ensureAnnStaged(s, sf)
-    val builds = Similarity.annBuildCount.get()
+    val builds = StageBuilds(Similarity.annStageDir(sf))
     // simulate a new JVM: the in-memory catalog forgets the table but the
     // external files + marker survive
     s.sql(s"DROP TABLE IF EXISTS ${Similarity.annBandsTable(sf)}")
     val again = Similarity.stagedCorpusBands(s, sf)
     assert(again.count() > 0)
-    assert(Similarity.annBuildCount.get() == builds,
+    assert(StageBuilds(Similarity.annStageDir(sf)) == builds,
       "re-registration must restore metadata, not rebuild the index")
     // restored table carries the bucket spec, not just the rows
     val bucketSpec = s.sql(s"DESCRIBE TABLE EXTENDED ${Similarity.annBandsTable(sf)}")
@@ -217,14 +217,15 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("eval harness reads staged truth + results and builds each at most once") {
     Similarity.annRecall(s, sf).collect()
-    val (truthBefore, evalBefore) =
-      (Similarity.annTruthBuildCount.get(), Similarity.annEvalBuildCount.get())
+    val truthDir = StageBuilds.dirOf(Similarity.ensureAnnTruthStaged(s, sf))
+    val evalDir = StageBuilds.dirOf(Similarity.ensureAnnEvalStaged(s, sf))
+    val (truthBefore, evalBefore) = (StageBuilds(truthDir), StageBuilds(evalDir))
     val df = Similarity.annMrr(s, sf)
     df.collect()
     Similarity.annRecall(s, sf).collect()
-    assert(Similarity.annTruthBuildCount.get() == truthBefore,
+    assert(StageBuilds(truthDir) == truthBefore,
       "overlay re-ran the exact brute-force truth")
-    assert(Similarity.annEvalBuildCount.get() == evalBefore,
+    assert(StageBuilds(evalDir) == evalBefore,
       "overlay re-ran the method probes")
     // the grading plan touches only the two staged tables — never the
     // corpus (no embeddings.parquet scan anywhere in the overlay)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, Staging, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Build-once contracts for the round-17 staged slice sets: each staged
@@ -13,10 +13,7 @@ class SliceStageSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val sf = TestSpark.sf
 
-  private def buildCount(key: String): Int = {
-    val c = Formats.sliceStageBuildCounts.get(key)
-    if (c == null) 0 else c.get()
-  }
+  private def builds(key: String): Int = StageBuilds(Staging.dir(key, sf))
 
   test("txn-log slice sets build once across every consumer") {
     // prime every stage through one consumer each
@@ -29,7 +26,7 @@ class SliceStageSpec extends AnyFunSuite {
     Formats.dynamicOverwrite(s, sf).collect()
     val keys = Seq("ordersq4_v1", "ordersm3_v1", "orderst3_v1", "ordersqc_v1",
       "txnfacts_v1", "mvslices_v1", "dynovw_v1")
-    val before = keys.map(k => k -> buildCount(k)).toMap
+    val before = keys.map(k => k -> builds(k)).toMap
     // second consumers (different queries where the stage is shared)
     Formats.logHistory(s, sf).collect()     // ordersq4
     Formats.vacuumTtl(s, sf).collect()      // ordersq4
@@ -43,14 +40,14 @@ class SliceStageSpec extends AnyFunSuite {
     Formats.mvRefresh(s, sf).collect()      // mvslices, second run
     Formats.dynamicOverwrite(s, sf).collect() // dynovw, second run
     keys.foreach { k =>
-      assert(buildCount(k) == before(k), s"stage $k rebuilt by a consumer")
+      assert(builds(k) == before(k), s"stage $k rebuilt by a consumer")
     }
   }
 
   test("a run's GC deletes only run-local links, never the staged slices") {
     Formats.vacuumTtl(s, sf).collect() // its TTL vacuum deletes data files
     val staged = new java.io.File(
-      Formats.sliceStageDir("ordersq4_v1", sf) + "/data")
+      Staging.dir("ordersq4_v1", sf) + "/data")
     def parquetCount(d: java.io.File): Int =
       Option(d.listFiles).getOrElse(Array.empty)
         .map(f => if (f.isDirectory) parquetCount(f)
@@ -89,27 +86,27 @@ class SliceStageSpec extends AnyFunSuite {
 
   test("tokenizer and media stages build once across their consumers") {
     graft.operators.BpeTrain.bpeTrain(s, sf).collect()
-    val bpe0 = graft.operators.BpeTrain.bpeStageBuildCount.get()
+    val bpe0 = StageBuilds(BpeTrain.bpeStageDir(sf))
     graft.operators.BpeTrain.bpeApply(s, sf).collect()
     graft.operators.BpeTrain.wordpiece(s, sf).collect()
     graft.operators.BpeTrain.bpeCurve(s, sf).collect()
     graft.operators.BpeTrain.tokenizerEval(s, sf).collect()
-    assert(graft.operators.BpeTrain.bpeStageBuildCount.get() == bpe0,
+    assert(StageBuilds(BpeTrain.bpeStageDir(sf)) == bpe0,
       "a tokenizer consumer rebuilt the staged artifacts")
     graft.multimodal.Media.mediaFeatures(s, sf).collect()
-    val media0 = graft.multimodal.Media.mediaStageBuildCount.get()
+    val media0 = StageBuilds(graft.multimodal.Media.mediaStageDir(sf))
     graft.multimodal.Media.frameSamples(s, sf).collect()
     graft.multimodal.Media.resizeThumbs(s, sf).collect()
     graft.multimodal.Media.jpegDecode(s, sf).collect()
     graft.multimodal.Media.pngDecode(s, sf).collect()
     graft.multimodal.Media.wavDecode(s, sf).collect()
     graft.multimodal.Media.gifFrames(s, sf).collect()
-    assert(graft.multimodal.Media.mediaStageBuildCount.get() == media0,
+    assert(StageBuilds(graft.multimodal.Media.mediaStageDir(sf)) == media0,
       "a media consumer rebuilt the staged payloads")
     graft.multimodal.Media.aviFrames(s, sf).collect()
-    val avi0 = graft.multimodal.Media.aviStageBuildCount.get()
+    val avi0 = StageBuilds(graft.multimodal.Media.aviStageDir(sf))
     graft.multimodal.Media.aviFrames(s, sf).collect()
-    assert(graft.multimodal.Media.aviStageBuildCount.get() == avi0,
+    assert(StageBuilds(graft.multimodal.Media.aviStageDir(sf)) == avi0,
       "a second AVI run rebuilt the staged payloads")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -34,9 +34,9 @@ class StatsPruneSpec extends AnyFunSuite {
   }
 
   test("the stats index builds once per sf dir") {
-    val before = Layout.statsBuildCount.get()
+    val before = StageBuilds(Layout.statsIndexDir(sf))
     Layout.statsPrune(s, sf).collect()
     Layout.statsPrune(s, sf).collect()
-    assert(Layout.statsBuildCount.get() == before, "index rebuilt on a warm query")
+    assert(StageBuilds(Layout.statsIndexDir(sf)) == before, "index rebuilt on a warm query")
   }
 }

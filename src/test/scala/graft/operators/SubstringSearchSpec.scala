@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Tables, TestSpark}
+import graft.{StageBuilds, Tables, TestSpark}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,10 +16,10 @@ class SubstringSearchSpec extends AnyFunSuite {
   test("index path equals the brute-force contains scan, and builds once") {
     val first = TextAnalysis.substringSearch(s, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSeq
-    val builds = TextAnalysis.postingsBuildCount.get()
+    val builds = StageBuilds(TextAnalysis.postingsStageDir(sf))
     val second = TextAnalysis.substringSearch(s, sf).collect()
       .map(r => (r.getLong(0), r.getInt(1))).toSeq
-    assert(TextAnalysis.postingsBuildCount.get() == builds,
+    assert(StageBuilds(TextAnalysis.postingsStageDir(sf)) == builds,
       "second search must reuse the staged postings")
     assert(first == second)
     val brute = Tables.documents(s, sf)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{StageBuilds, TestSpark}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** BUILD-ONCE contract of the two policy stagings (r21 verdict item 2:
@@ -16,22 +16,22 @@ class TextVerdictStageSpec extends AnyFunSuite {
   test("text-verdict stage builds at most once across gate + board consumers") {
     // first consumer warms the stage (or finds it already warm)
     Pipeline.releaseGate(s, sf).write.format("noop").mode("overwrite").save()
-    val builds = Pipeline.textVerdictStageBuildCount.get()
+    val builds = StageBuilds(Pipeline.textVerdictStageDir(sf))
     // every further consumer — the gate again, and the cross-modal board,
     // which reads the same staged verdicts — must NOT rebuild
     Pipeline.releaseGate(s, sf).write.format("noop").mode("overwrite").save()
     Pipeline.releaseBoard(s, sf).write.format("noop").mode("overwrite").save()
-    assert(Pipeline.textVerdictStageBuildCount.get() == builds,
+    assert(StageBuilds(Pipeline.textVerdictStageDir(sf)) == builds,
       "warm consumer re-ran the kAnonymity+policy verdict chains")
   }
 
   test("gram stage builds at most once across its three consumers") {
     TextAnalysis.decontaminate(s, sf).write.format("noop").mode("overwrite").save()
-    val builds = TextAnalysis.gramStageBuildCount.get()
+    val builds = StageBuilds(TextAnalysis.gramStageDir(sf))
     TextAnalysis.decontaminate(s, sf).write.format("noop").mode("overwrite").save()
     TextAnalysis.decontaminateBloom(s, sf).write.format("noop").mode("overwrite").save()
     TextAnalysis.overlapFrac(s, sf).write.format("noop").mode("overwrite").save()
-    assert(TextAnalysis.gramStageBuildCount.get() == builds,
+    assert(StageBuilds(TextAnalysis.gramStageDir(sf)) == builds,
       "warm consumer re-ran the gram-md5 pass")
     // the probes read ONLY the staged gram tables, never documents.parquet
     assert(TextAnalysis.decontaminate(s, sf).inputFiles
@@ -45,11 +45,11 @@ class TextVerdictStageSpec extends AnyFunSuite {
   test("media-policy stage builds at most once across policy + board consumers") {
     graft.multimodal.Media.mediaPolicy(s, sf)
       .write.format("noop").mode("overwrite").save()
-    val builds = graft.multimodal.Media.mediaPolicyStageBuildCount.get()
+    val builds = StageBuilds(graft.multimodal.Media.mediaPolicyStageDir(sf))
     graft.multimodal.Media.mediaPolicy(s, sf)
       .write.format("noop").mode("overwrite").save()
     Pipeline.releaseBoard(s, sf).write.format("noop").mode("overwrite").save()
-    assert(graft.multimodal.Media.mediaPolicyStageBuildCount.get() == builds,
+    assert(StageBuilds(graft.multimodal.Media.mediaPolicyStageDir(sf)) == builds,
       "warm consumer re-ran the codec arms")
   }
 }
