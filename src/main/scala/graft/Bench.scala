@@ -204,7 +204,7 @@ object Bench {
     // IncrementalExecution per batch, driver-CPU-bound, single-threaded
     // PER QUERY) — across queries it parallelizes cleanly. Each replay
     // gets an ISOLATED session clone (newSession: own SQLConf, shared
-    // SparkContext/cache) because withReplayShuffle mutates session conf
+    // SparkContext/cache) because Replay.run scopes session confs
     // (shuffle partitions, checkpoint root) — clones make that per-thread
     // instead of a race. The memory sink registers its table in the
     // clone, and the returned DataFrame is bound to it, so the timed

@@ -98,6 +98,23 @@ object QueryDsl {
     } else df.localCheckpoint()
   }
 
+  /** Runs `body` with `confs` set on `s`, then puts every key back as it
+    * was: its previous value, or unset when it had none — also when
+    * `body` or a set throws. The one scoped-conf helper: streaming
+    * replays scope their state partitions, checkpoint root and
+    * state-store provider through it, and the operators that switch on a
+    * planner rule or write mode for one query scope it the same way. */
+  def withConfs[T](s: org.apache.spark.sql.SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.reverseIterator.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   /** Exact, order-independent sum of a double column, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 4))).cast(DoubleType)
 

@@ -97,8 +97,7 @@ case class BottomKCounts(
   }
 
   private def add(buf: java.util.TreeMap[(Long, Long), Long], key: (Long, Long), c: Long): Unit = {
-    val prev = buf.get(key)
-    buf.put(key, if (prev == null) c else prev + c)
+    buf.put(key, buf.getOrDefault(key, 0L) + c)
     if (buf.size > k) buf.pollLastEntry(): Unit
   }
 

@@ -151,22 +151,19 @@ object Bucketing {
     * parquet: layout and join strategy are physical only. */
   def spjJoin(s: SparkSession, d: String): DataFrame = {
     val dir = ensureSpjStaged(s, d)
-    val scoped = Seq(
+    graft.QueryDsl.withConfs(s,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    // the tables must resolve THROUGH the catalog: the planner can only
-    // prove two bucket(n, k) partitionings compatible by resolving the
-    // transform against the table catalog's FunctionCatalog (the Iceberg
-    // mechanism) — a bare TableProvider read has no catalog and falls
-    // back to shuffles (found empirically; the SPJ precondition worth
-    // documenting)
-    val cat = "graft_spj_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-    s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
-    s.conf.set(s"spark.sql.catalog.$cat.spj_path", dir)
-    s.conf.set(s"spark.sql.catalog.$cat.spj_buckets", SpjBuckets.toString)
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      // the tables must resolve THROUGH the catalog: the planner can only
+      // prove two bucket(n, k) partitionings compatible by resolving the
+      // transform against the table catalog's FunctionCatalog (the Iceberg
+      // mechanism) — a bare TableProvider read has no catalog and falls
+      // back to shuffles (found empirically; the SPJ precondition worth
+      // documenting)
+      val cat = "graft_spj_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+      s.conf.set(s"spark.sql.catalog.$cat", classOf[graft.sources.GraftCatalog].getName)
+      s.conf.set(s"spark.sql.catalog.$cat.spj_path", dir)
+      s.conf.set(s"spark.sql.catalog.$cat.spj_buckets", SpjBuckets.toString)
       val joined = s.table(s"$cat.orders_spj")
         .join(s.table(s"$cat.customer_spj"), col("o_k") === col("c_k"))
         .agg(count(lit(1)).as("n_rows"),
@@ -194,9 +191,6 @@ object Bucketing {
       require(exchanges.isEmpty,
         s"storage-partitioned join still shuffled (${exchanges.length} exchanges):\n$plan")
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), joined.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 

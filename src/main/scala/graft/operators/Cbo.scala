@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDsl.{dsum, sqlDsum}
+import graft.QueryDsl.{dsum, sqlDsum, withConfs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 
@@ -49,15 +49,12 @@ object Cbo {
 
   def cboReorder(s: SparkSession, d: String): DataFrame = {
     val t = ensureStats(s, d)
-    val scoped = Seq(
+    withConfs(s,
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.cbo.joinReorder.enabled" -> "true",
       // order must come from STATS, not from one side happening to fit
       // the broadcast threshold at fixture scale
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // the deliberately fact-first chain; revenue for one nation
       val df = s.sql(
         s"""SELECT n.n_name,
@@ -84,9 +81,6 @@ object Cbo {
       val rows = df.collect() // executes under the scoped confs
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), df.schema)
         .orderBy("n_name")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDsl.{dsum, sqlDsum}
+import graft.QueryDsl.{dsum, sqlDsum, withConfs}
 import graft.{Tables, TempPaths}
 import graft.sources.{CommitResult, ManifestLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -405,17 +405,10 @@ object Formats {
         .map(f => f.getPath -> f.length()).toMap
     }
     val before = files()
-    val prevMode = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
+    withConfs(s, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
       o.filter(col("o_orderstatus") === restated)
         .withColumn("cents", col("cents") + 900) // the correction
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    } finally {
-      prevMode match {
-        case Some(m) => s.conf.set("spark.sql.sources.partitionOverwriteMode", m)
-        case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
     }
     val after = files()
     val untouched = before.filter(!_._1.contains(s"o_orderstatus=$restated"))

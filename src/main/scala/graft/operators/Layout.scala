@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDsl.{dsum, sqlDsum}
+import graft.QueryDsl.{dsum, sqlDsum, withConfs}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -286,16 +286,13 @@ object Layout {
     * BloomJoinSpec additionally asserts it REDUCED the rows entering
     * the fact-side exchange. Results equal the plain join (oracle). */
   def bloomJoin(s: SparkSession, d: String): DataFrame = {
-    val scoped = Seq(
+    withConfs(s,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       // a broadcastABLE creation side makes the optimizer assume a
       // broadcast join (no fact shuffle to save) and decline injection;
       // at 100 TB the filtered dim genuinely can't broadcast — model that
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val urgent = Tables.orders(s, d)
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderpriority"))
@@ -312,9 +309,6 @@ object Layout {
         s"runtime bloom filter was not injected; executed plan:\n$plan")
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), joined.schema)
         .orderBy("l_returnflag")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDsl.{dsum, sqlDsum}
+import graft.QueryDsl.{dsum, sqlDsum, withConfs}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -91,16 +91,13 @@ object Skew {
     // metadata-count action, same class as the DPP totals head()
     val factBytes = Tables.lineitem(s, d).count() * 32L
     val advisory = math.max(4096L, factBytes / 24)
-    val scoped = Seq(
+    withConfs(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> s"${advisory}b",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> s"${advisory}b")
-    val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> s"${advisory}b") {
       val skewKey = when(col("l_orderkey") % 10 < 8, lit(0L))
         .otherwise(col("l_orderkey") % 10).as("skew_key")
       val fact = Tables.lineitem(s, d)
@@ -121,9 +118,6 @@ object Skew {
         s"OptimizeSkewedJoin did not fire; executed plan:\n$plan")
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), joined.schema)
         .orderBy("skew_key")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 
@@ -241,14 +235,11 @@ object Skew {
     * tiny test shuffles coalesce to ~1 partition — which is exactly
     * what the default does to same-shaped small stages in production. */
   def aqeCoalesce(s: SparkSession, d: String): DataFrame = {
-    val scoped = Seq(
+    withConfs(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m")
-    val prev = scoped.map { case (k, _) => k -> s.conf.getOption(k) }
-    scoped.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m") {
       val agg = Tables.orders(s, d)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
@@ -278,9 +269,6 @@ object Skew {
           agg.queryExecution.executedPlan)
       s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), agg.schema)
         .orderBy("o_orderpriority")
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
     }
   }
 

@@ -14,60 +14,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * tests, see StreamingSpec) and any `writeStream` sink. State is bounded:
   * the session aggregation evicts via watermark; the dedup operator evicts
   * via processing-time timeout — both are required for an unbounded run at
-  * cluster scale.
+  * cluster scale. The `e_*`/`d_*` replay queries below each run one replay
+  * through [[Replay]], the one start/feed/stop harness.
   */
 object Streams {
-
-  /** Replay-scoped shuffle-partition tuning. Streaming micro-batch cost
-    * has a term proportional to shuffle partitions × batches: every
-    * stateful operator commits one state-store delta PER PARTITION per
-    * micro-batch (plus maintenance snapshots), so a driver-fed replay at
-    * the session's 32 partitions pays 32 store commits per batch for a
-    * few thousand rows. 8-way state is ample for replay volume and cuts
-    * the per-batch store I/O 4× with NO semantic effect — state is
-    * keyed, results are re-sorted, and the conf is captured at stream
-    * START so the production transforms are untouched. (At cluster scale
-    * the state partition count is sized to keys/executors, not to this
-    * replay constant.) */
-  private val replayCkpts = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def withReplayShuffle[T](s: SparkSession)(body: => T): T =
-    withReplayShuffle(s, 2)(body)
-
-  /** Heavy replays (6-figure row counts through MULTIPLE state stores —
-    * the debounce processor, the dedup→window pipeline, the stream-stream
-    * joins) override the 2-partition default: their per-batch cost is
-    * state-store WORK (lookups/inserts per row), not store-commit
-    * overhead, so more state partitions = more threads on the shared
-    * local[N] scheduler. Light replays (a few rows per batch) keep 2 —
-    * for them partitions× store commits dominate. Production sizes state
-    * partitions to keys/executors; both constants are replay-harness
-    * tuning only. */
-  private def withReplayShuffle[T](s: SparkSession, partitions: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    // default checkpoint root on tmpfs: each micro-batch writes offset
-    // log + commit log + one state delta per partition; RAM-backing the
-    // harness metadata (KBs) removes the disk term. Measured honestly:
-    // replay wall time is dominated by per-micro-batch PLANNING (a
-    // fresh IncrementalExecution per batch — ~1s fixed at any replay
-    // volume), so this and the 2-partition state trim are modest wins,
-    // not order-of-magnitude ones; the planning term is Spark's, not
-    // ours, and amortizes away on a long-lived production stream.
-    // Unique subdir per replay — checkpoint dirs must never be shared.
-    val ckptKey = "spark.sql.streaming.checkpointLocation"
-    val prev = s.conf.get(key)
-    val prevCkpt = s.conf.getOption(ckptKey)
-    s.conf.set(key, partitions.toString)
-    s.conf.set(ckptKey,
-      graft.TempPaths.scratchShm(s, "replay_ckpt") + "/r" + replayCkpts.incrementAndGet())
-    try body finally {
-      s.conf.set(key, prev)
-      prevCkpt match {
-        case Some(v) => s.conf.set(ckptKey, v)
-        case None    => s.conf.unset(ckptKey)
-      }
-    }
-  }
 
   /** Streaming gap-sessionization: native `session_window` (30-min gap)
     * with a 1-hour watermark. Emits one row per closed session in append
@@ -103,38 +53,14 @@ object Streams {
     * MemoryStream is driver-fed by definition — it is Spark's test/replay
     * source, not a scale path; at scale the same `sessionAgg` transform
     * runs unchanged over readStream (Kafka/files). */
-  def sessionizeStream(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val batch = graft.Tables.events(s, d)
-      .select(col("user_id"), col("ts"), col("value"))
-      .as[(Long, java.sql.Timestamp, Double)]
-      .collect()
-    val maxMs = batch.iterator.map(_._2.getTime).max
-    val sentinelUser = -1L
-    val in = MemoryStream[(Long, java.sql.Timestamp, Double)]
-    val sink = "e_sessionize_stream_sink"
-    withReplayShuffle(s) {
-      val q = sessionAgg(in.toDF().toDF("user_id", "ts", "value"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-        // watermark advances at batch boundaries: the sentinel batch moves
-        // it 10 days past the data, closing every real session
-        in.addData((sentinelUser, new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    s.table(sink)
-      .filter(col("user_id") =!= sentinelUser)
+  def sessionizeStream(s: SparkSession, d: String): DataFrame =
+    sentinelFlush(s, d, "e_sessionize_stream_sink", Seq("user_id", "ts", "value"),
+        (t: java.sql.Timestamp) => (-1L, t, 0.0))(sessionAgg)
       .select(col("user_id"),
         unix_micros(col("session_start")).as("start_us"),
         unix_micros(col("session_end")).as("end_us"),
         col("n_events"), col("sum_value"))
       .orderBy("user_id", "start_us")
-  }
 
   /** Watermarked tumbling-window aggregation — THE canonical Structured
     * Streaming shape (count + sum per 1-hour window per event type,
@@ -170,40 +96,48 @@ object Streams {
         col("w.start").as("window_start"),
         col("event_type"), col("n_events"), col("sum_value"))
 
-  /** `e_window_agg_stream` / `e_sliding_agg_stream` — a windowed agg
-    * replayed over the events table. A far-future sentinel batch drives
-    * the watermark past every real window so append mode flushes them all
-    * (the sentinel's own window stays open and is filtered by type).
-    * Window starts are pure integer arithmetic on the timestamp, so the
-    * result is fully SQL-expressible and hash-checked against the batch
-    * GROUP BY. */
-  private def windowedReplay(
-      s: SparkSession, d: String, sink: String, agg: DataFrame => DataFrame): DataFrame = {
+  /** The SENTINEL-FLUSH replay of a watermarked aggregation `agg` over
+    * the events table's `cols` (key column first, event time second):
+    * the rows go in as one batch, then a far-future sentinel row
+    * (`sentinel` of the max event time + 10 days) as a second. The
+    * watermark advances at batch boundaries, so the sentinel batch moves
+    * it past every real window or session and append mode flushes them
+    * all; the sentinel's own window stays open, and sink rows keyed like
+    * the sentinel are dropped from the result. */
+  private def sentinelFlush[A <: Product : scala.reflect.runtime.universe.TypeTag](
+      s: SparkSession, d: String, sink: String, cols: Seq[String],
+      sentinel: java.sql.Timestamp => A)(agg: DataFrame => DataFrame): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val batch = graft.Tables.events(s, d)
-      .select(col("event_type"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .collect()
-    val maxMs = batch.iterator.map(_._2.getTime).max
-    val in = MemoryStream[(String, java.sql.Timestamp, Double)]
-    withReplayShuffle(s) {
-      val q = agg(in.toDF().toDF("event_type", "ts", "value"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(("sentinel", new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
+    val batch = graft.Tables.events(s, d).select(cols.map(col): _*).as[A].collect()
+    val maxMs = batch.iterator
+      .map(_.productElement(1).asInstanceOf[java.sql.Timestamp].getTime).max
+    val flush = sentinel(new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000))
+    val in = MemoryStream[A]
+    Replay.run(s)(Replay.memory(agg(in.toDF().toDF(cols: _*)), sink)) { q =>
+      Replay.feed(q, in, batch.toIndexedSeq, Seq(flush))
     }
-    s.table(sink)
-      .filter(col("event_type") =!= "sentinel")
+    s.table(sink).filter(col(cols.head) =!= flush.productElement(0))
+  }
+
+  /** `rows` as the two micro-batches most replays feed: the first
+    * ⌊n/2⌋ rows, then the rest. */
+  private def halves[A](rows: Array[A]): Seq[Seq[A]] = {
+    val (b1, b2) = rows.splitAt(rows.length / 2)
+    Seq(b1.toIndexedSeq, b2.toIndexedSeq)
+  }
+
+  /** `e_window_agg_stream` / `e_sliding_agg_stream` — a windowed agg
+    * replayed over the events table by [[sentinelFlush]]. Window starts
+    * are pure integer arithmetic on the timestamp, so the result is fully
+    * SQL-expressible and hash-checked against the batch GROUP BY. */
+  private def windowedReplay(
+      s: SparkSession, d: String, sink: String, agg: DataFrame => DataFrame): DataFrame =
+    sentinelFlush(s, d, sink, Seq("event_type", "ts", "value"),
+        (t: java.sql.Timestamp) => ("sentinel", t, 0.0))(agg)
       .select(unix_micros(col("window_start")).as("ws_us"),
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy("ws_us", "event_type")
-  }
 
   /** `e_dead_letter` — the streaming QUARANTINE split (dead-letter
     * queue): a wire-format stream (JSON lines, every 13th payload
@@ -229,31 +163,23 @@ object Streams {
       }
     val in = MemoryStream[String]
     val sink = "e_dead_letter_sink"
-    withReplayShuffle(s) {
-      val parsed = in.toDF().toDF("raw")
-        .select(col("raw"), from_json(col("raw"),
-          "event_id BIGINT, event_type STRING, value DOUBLE",
-          Map.empty[String, String]).as("p"))
-      // one pass, two fates: parsed rows aggregate, failures tally.
-      // from_json PERMISSIVE yields a null/null-field struct on failure
-      // — event_id null is the discriminator (never null in valid rows)
-      val split = parsed.select(
-        when(col("p.event_id").isNotNull, col("p.event_type"))
-          .otherwise(lit("__dead_letter__")).as("k"),
-        col("p.value"))
-      val q = split
+    val parsed = in.toDF().toDF("raw")
+      .select(col("raw"), from_json(col("raw"),
+        "event_id BIGINT, event_type STRING, value DOUBLE",
+        Map.empty[String, String]).as("p"))
+    // one pass, two fates: parsed rows aggregate, failures tally.
+    // from_json PERMISSIVE yields a null/null-field struct on failure
+    // — event_id null is the discriminator (never null in valid rows)
+    val split = parsed.select(
+      when(col("p.event_id").isNotNull, col("p.event_type"))
+        .otherwise(lit("__dead_letter__")).as("k"),
+      col("p.value"))
+    Replay.run(s)(Replay.memory(split
         .groupBy(col("k"))
         .agg(count(lit(1)).as("n"),
-          graft.QueryDsl.dsum(coalesce(col("value"), lit(0.0))).as("sum_value"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Complete).start()
-      try {
-        val (b1, b2) = payloads.splitAt(payloads.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+          graft.QueryDsl.dsum(coalesce(col("value"), lit(0.0))).as("sum_value")),
+        sink, OutputMode.Complete)) { q =>
+      Replay.feed(q, in, halves(payloads): _*)
     }
     s.table(sink).orderBy("k")
   }
@@ -285,31 +211,24 @@ object Streams {
       .sortBy(r => (tsMicros(r._2), r._1))
     val b1 = batch.take(batch.length / 2)
     val in = MemoryStream[(Long, java.sql.Timestamp)]
-    val sink = "e_late_data_audit_sink"
-    var dropped = 0L
-    withReplayShuffle(s) {
-      // dedup is the right probe: its late filter drops RAW input rows
-      // on the event-time column; an aggregation drops partially
-      // aggregated (window, key) rows — a count that depends on
-      // physical partitioning and is no oracle's business. Re-sent rows
-      // NEWER than the watermark fall to the dedup check instead
-      // (already-seen keys — a different counter), which is exactly the
-      // retries-suppressed vs data-lost-to-lateness distinction the
-      // audit exists to publish.
-      val q = in.toDF().toDF("event_id", "ts")
-        .withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable() // watermark advances to max(b1.ts) − 1 h
-        in.addData(b1.toIndexedSeq) // the retry: pre-watermark rows are late
-        q.processAllAvailable()
-        dropped = q.recentProgress.iterator
-          .flatMap(_.stateOperators.iterator)
-          .map(_.numRowsDroppedByWatermark).sum
-      } finally q.stop()
+    // dedup is the right probe: its late filter drops RAW input rows
+    // on the event-time column; an aggregation drops partially
+    // aggregated (window, key) rows — a count that depends on
+    // physical partitioning and is no oracle's business. Re-sent rows
+    // NEWER than the watermark fall to the dedup check instead
+    // (already-seen keys — a different counter), which is exactly the
+    // retries-suppressed vs data-lost-to-lateness distinction the
+    // audit exists to publish.
+    val deduped = in.toDF().toDF("event_id", "ts")
+      .withWatermark("ts", "1 hour")
+      .dropDuplicatesWithinWatermark("event_id")
+    val dropped = Replay.run(s)(Replay.memory(deduped, "e_late_data_audit_sink")) { q =>
+      // batch 1 advances the watermark to max(b1.ts) − 1 h; the retry's
+      // pre-watermark rows are late
+      Replay.feed(q, in, b1.toIndexedSeq, b1.toIndexedSeq)
+      q.recentProgress.iterator
+        .flatMap(_.stateOperators.iterator)
+        .map(_.numRowsDroppedByWatermark).sum
     }
     Seq((2L * b1.length, dropped))
       .toDF("n_input_rows", "n_late_dropped")
@@ -331,9 +250,6 @@ object Streams {
       .agg(expr("kmv_hashes(cast(user_id as string), 16)").as("hs"))
       .select(col("w.start").as("window_start"), col("event_type"), col("hs"))
 
-  /** `e_kmv_stream` — [[kmvWindowAgg]] replayed over the events table;
-    * same sentinel-flush shape as [[windowedReplay]], then the sketch
-    * arrays explode to (rank, hash) rows for the driver's row compare. */
   /** `e_bitmap_stream` — the DECLARATIVE aggregate
     * ([[graft.functions.BitmapAgg]]) inside watermarked streaming
     * aggregation state, completing the custom-aggregate streaming
@@ -346,33 +262,14 @@ object Streams {
     * set — flushed windows hash-check against a windowed bit_or
     * recompute, popcount = COUNT(DISTINCT user_id % 256) exactly. */
   def bitmapStream(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val batch = graft.Tables.events(s, d)
-      .select(col("event_type"), col("ts"), col("user_id"))
-      .as[(String, java.sql.Timestamp, Long)]
-      .collect()
-    val maxMs = batch.iterator.map(_._2.getTime).max
-    val in = MemoryStream[(String, java.sql.Timestamp, Long)]
-    val sink = "e_bitmap_stream_sink"
-    withReplayShuffle(s) {
-      val q = in.toDF().toDF("event_type", "ts", "user_id")
-        .withWatermark("ts", "1 hour")
+    val flushed = sentinelFlush(s, d, "e_bitmap_stream_sink",
+        Seq("event_type", "ts", "user_id"), (t: java.sql.Timestamp) => ("sentinel", t, 0L)) {
+      _.withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
         .agg(expr("bitmap_agg(pmod(user_id, 256), 256)").as("bw"))
         .select(col("w.start").as("window_start"), col("event_type"), col("bw"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(("sentinel",
-          new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), 0L))
-        q.processAllAvailable()
-      } finally q.stop()
     }
-    s.table(sink)
-      .filter(col("event_type") =!= "sentinel")
+    flushed
       .select(unix_micros(col("window_start")).as("ws_us"), col("event_type"),
         aggregate(col("bw"), lit(0L), (acc, w) => acc + bit_count(w)).as("popcnt"),
         posexplode(col("bw")).as(Seq("word_idx", "word")))
@@ -380,34 +277,15 @@ object Streams {
       .orderBy("ws_us", "event_type", "word_idx")
   }
 
-  def kmvStream(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val batch = graft.Tables.events(s, d)
-      .select(col("event_type"), col("ts"), col("user_id"))
-      .as[(String, java.sql.Timestamp, Long)]
-      .collect()
-    val maxMs = batch.iterator.map(_._2.getTime).max
-    val in = MemoryStream[(String, java.sql.Timestamp, Long)]
-    val sink = "e_kmv_stream_sink"
-    withReplayShuffle(s) {
-      val q = kmvWindowAgg(in.toDF().toDF("event_type", "ts", "user_id"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(("sentinel",
-          new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), 0L))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    s.table(sink)
-      .filter(col("event_type") =!= "sentinel")
+  /** `e_kmv_stream` — [[kmvWindowAgg]] replayed over the events table by
+    * [[sentinelFlush]], then the sketch arrays explode to (rank, hash)
+    * rows for the driver's row compare. */
+  def kmvStream(s: SparkSession, d: String): DataFrame =
+    sentinelFlush(s, d, "e_kmv_stream_sink", Seq("event_type", "ts", "user_id"),
+        (t: java.sql.Timestamp) => ("sentinel", t, 0L))(kmvWindowAgg)
       .select(unix_micros(col("window_start")).as("ws_us"), col("event_type"),
         posexplode(col("hs")).as(Seq("rank", "h")))
       .orderBy("ws_us", "event_type", "rank")
-  }
 
   /** `e_filing_stream` — the engine's CUSTOM V2 STREAMING SOURCE
     * ([[graft.sources.FilingIndexStream]], file-count offsets over an
@@ -443,49 +321,49 @@ object Streams {
     * ≥ ⌈files/2⌉ data batches. Data identical to the other two replays
     * (same oracle): a trigger changes scheduling, never answers. */
   def filingStreamBackfill(s: SparkSession, d: String): DataFrame = {
-    val staged = graft.sources.FilingIndex.ensureStaged(s, d)
-    val arrivals = graft.TempPaths.runDir(s, "filing_stream")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(arrivals))
-    val files = new java.io.File(staged).listFiles()
-      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .sortBy(_.getName)
+    val (files, arrivals) = filingArrivals(s, d)
     files.zipWithIndex.foreach { case (f, i) =>
       java.nio.file.Files.copy(f.toPath,
         java.nio.file.Paths.get(arrivals, f"backlog-$i%03d.jsonl")): Unit
     }
     val sink = "e_filing_stream_backfill_sink"
-    withReplayShuffle(s) {
-      val q = s.readStream
-        .format(classOf[graft.sources.FilingIndexStream].getName)
-        .option("maxFilesPerTrigger", 2)
-        .load(arrivals)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try {
-        require(q.awaitTermination(120000),
-          "AvailableNow backfill did not terminate on its own")
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        val floor = math.ceil(files.length.toDouble / 2).toInt
-        require(dataBatches >= floor && floor > 2,
-          s"backfill not paced: ${files.length} files drained in $dataBatches batches")
-      } finally q.stop()
+    Replay.run(s)(Replay.memory(
+        s.readStream
+          .format(classOf[graft.sources.FilingIndexStream].getName)
+          .option("maxFilesPerTrigger", 2)
+          .load(arrivals),
+        sink, trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow())) { q =>
+      require(q.awaitTermination(120000),
+        "AvailableNow backfill did not terminate on its own")
+      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+      val floor = math.ceil(files.length.toDouble / 2).toInt
+      require(dataBatches >= floor && floor > 2,
+        s"backfill not paced: ${files.length} files drained in $dataBatches batches")
     }
-    s.table(sink)
-      .groupBy(col("form_type"))
-      .agg(count(lit(1)).as("n_filings"), countDistinct(col("cik")).as("n_funds"))
-      .orderBy("form_type")
+    filingCounts(s.table(sink))
   }
 
-  private def filingStreamReplayWith(
-      s: SparkSession, d: String, maxFilesPerTrigger: Option[Int]): DataFrame = {
+  /** The staged filing-index files in name order, and a fresh empty
+    * arrivals dir for [[graft.sources.FilingIndexStream]] to watch. */
+  private def filingArrivals(s: SparkSession, d: String): (Array[java.io.File], String) = {
     val staged = graft.sources.FilingIndex.ensureStaged(s, d)
     val arrivals = graft.TempPaths.runDir(s, "filing_stream")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(arrivals))
     val files = new java.io.File(staged).listFiles()
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .sortBy(_.getName)
+    (files, arrivals)
+  }
+
+  private def filingCounts(filings: DataFrame): DataFrame =
+    filings
+      .groupBy(col("form_type"))
+      .agg(count(lit(1)).as("n_filings"), countDistinct(col("cik")).as("n_funds"))
+      .orderBy("form_type")
+
+  private def filingStreamReplayWith(
+      s: SparkSession, d: String, maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val (files, arrivals) = filingArrivals(s, d)
     // wave prefixes keep arrivals lexicographically AFTER everything
     // already present — the source's append-only contract
     def arrive(fs: Seq[java.io.File], wave: Int): Unit = fs.zipWithIndex.foreach {
@@ -494,31 +372,23 @@ object Streams {
           java.nio.file.Paths.get(arrivals, f"wave$wave%02d-$i%03d.jsonl")): Unit
     }
     val sink = "e_filing_stream_sink" + maxFilesPerTrigger.fold("")("_paced" + _)
-    withReplayShuffle(s) {
-      val reader = s.readStream
-        .format(classOf[graft.sources.FilingIndexStream].getName)
-      maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-      val q = reader.load(arrivals)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        arrive(files.take(files.length / 2).toSeq, 1)
-        q.processAllAvailable()
-        arrive(files.drop(files.length / 2).toSeq, 2)
-        q.processAllAvailable()
-        maxFilesPerTrigger.foreach { n =>
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          val floor = math.ceil(files.length.toDouble / n).toInt
-          require(dataBatches >= floor && floor > 2,
-            s"admission control did not pace: ${files.length} files / $n per trigger " +
-              s"drained in $dataBatches data batches (need ≥ $floor > 2)")
-        }
-      } finally q.stop()
+    val reader = s.readStream
+      .format(classOf[graft.sources.FilingIndexStream].getName)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    Replay.run(s)(Replay.memory(reader.load(arrivals), sink)) { q =>
+      arrive(files.take(files.length / 2).toSeq, 1)
+      Replay.fence(q)
+      arrive(files.drop(files.length / 2).toSeq, 2)
+      Replay.fence(q)
+      maxFilesPerTrigger.foreach { n =>
+        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        val floor = math.ceil(files.length.toDouble / n).toInt
+        require(dataBatches >= floor && floor > 2,
+          s"admission control did not pace: ${files.length} files / $n per trigger " +
+            s"drained in $dataBatches data batches (need ≥ $floor > 2)")
+      }
     }
-    s.table(sink)
-      .groupBy(col("form_type"))
-      .agg(count(lit(1)).as("n_filings"), countDistinct(col("cik")).as("n_funds"))
-      .orderBy("form_type")
+    filingCounts(s.table(sink))
   }
 
   /** `e_dsv2_stream_sink` — the CONNECTOR-LAYER exactly-once sink: the
@@ -541,19 +411,12 @@ object Streams {
       .sortBy(_._1)
     val target = graft.TempPaths.runDir(s, "dsv2_stream")
     val in = MemoryStream[(Long, String, Double, String)]
-    withReplayShuffle(s) {
-      val q = in.toDF()
+    Replay.run(s)(in.toDF()
         .toDF("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
         .writeStream.format("graft.sources.FixedWidthV2")
         .option("path", target)
-        .outputMode(OutputMode.Append).start()
-      try {
-        val (b1, b2) = batch.splitAt(batch.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+        .outputMode(OutputMode.Append).start()) { q =>
+      Replay.feed(q, in, halves(batch): _*)
     }
     // every epoch that carried data published a manifest
     val fs = new org.apache.hadoop.fs.Path(target)
@@ -591,38 +454,18 @@ object Streams {
       .select(col("w.start").as("window_start"), col("event_type"), col("sk"))
 
   /** `e_bottomk_stream` — [[bottomkWindowAgg]] replayed over the events
-    * table (sentinel-flush shape of [[kmvStream]]); sketch contents AND
-    * the per-window median estimate are hash-checked against the
-    * windowed recompute. */
+    * table by [[sentinelFlush]]; sketch contents AND the per-window
+    * median estimate are hash-checked against the windowed recompute. */
   def bottomkStream(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val batch = graft.Tables.events(s, d)
-      .select(col("event_type"), col("ts"), col("value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .collect()
-    val maxMs = batch.iterator.map(_._2.getTime).max
-    val in = MemoryStream[(String, java.sql.Timestamp, Double)]
-    val sink = "e_bottomk_stream_sink"
-    withReplayShuffle(s) {
-      val src = in.toDF().toDF("event_type", "ts", "value")
-        .withColumn("cents", floor(col("value").cast("double") * 100).cast("long"))
-      val q = bottomkWindowAgg(src)
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(("sentinel",
-          new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
+    val flushed = sentinelFlush(s, d, "e_bottomk_stream_sink",
+        Seq("event_type", "ts", "value"), (t: java.sql.Timestamp) => ("sentinel", t, 0.0)) {
+      src => bottomkWindowAgg(
+        src.withColumn("cents", floor(col("value").cast("double") * 100).cast("long")))
     }
     import org.apache.spark.sql.expressions.Window
     val wTot = Window.partitionBy("ws_us", "event_type")
     val wVal = Window.partitionBy("ws_us", "event_type").orderBy(col("v_cents"))
-    s.table(sink)
-      .filter(col("event_type") =!= "sentinel")
+    flushed
       .select(unix_micros(col("window_start")).as("ws_us"), col("event_type"),
         posexplode(col("sk")).as(Seq("rank", "e")))
       .select(col("ws_us"), col("event_type"), col("rank"),
@@ -651,39 +494,17 @@ object Streams {
       .agg(expr("topk_pairs(value, event_id, 3)").as("tk"))
       .select(col("w.start").as("window_start"), col("event_type"), col("tk"))
 
-  /** `e_topk_stream` — [[topkWindowAgg]] replayed over the events table;
-    * the sentinel flushes every real window, then the rank arrays explode
-    * to (rank, event_id, value) rows for the driver's row compare. */
-  def topkStream(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val batch = graft.Tables.events(s, d)
-      .select(col("event_type"), col("ts"), col("event_id"), col("value"))
-      .as[(String, java.sql.Timestamp, Long, Double)]
-      .collect()
-    val maxMs = batch.iterator.map(_._2.getTime).max
-    val in = MemoryStream[(String, java.sql.Timestamp, Long, Double)]
-    val sink = "e_topk_stream_sink"
-    withReplayShuffle(s) {
-      val q = topkWindowAgg(in.toDF().toDF("event_type", "ts", "event_id", "value"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        in.addData(batch.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(("sentinel",
-          new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), -1L, 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    s.table(sink)
-      .filter(col("event_type") =!= "sentinel")
+  /** `e_topk_stream` — [[topkWindowAgg]] replayed over the events table
+    * by [[sentinelFlush]], then the rank arrays explode to (rank,
+    * event_id, value) rows for the driver's row compare. */
+  def topkStream(s: SparkSession, d: String): DataFrame =
+    sentinelFlush(s, d, "e_topk_stream_sink", Seq("event_type", "ts", "event_id", "value"),
+        (t: java.sql.Timestamp) => ("sentinel", t, -1L, 0.0))(topkWindowAgg)
       .select(unix_micros(col("window_start")).as("ws_us"), col("event_type"),
         posexplode(col("tk")))
       .select(col("ws_us"), col("event_type"), (col("pos") + 1).cast("int").as("rank"),
         col("col.id").as("event_id"), col("col.value").as("value"))
       .orderBy("ws_us", "event_type", "rank")
-  }
 
   def windowAggStream(s: SparkSession, d: String): DataFrame =
     windowedReplay(s, d, "e_window_agg_stream_sink", windowAgg)
@@ -777,15 +598,11 @@ object Streams {
     val inClicks = MemoryStream[Ev]
     val inPurchases = MemoryStream[Ev]
     val sink = "e_stream_join_sink"
-    withReplayShuffle(s) {
-      val q = clickAttribution(namedEv(inClicks), namedEv(inPurchases))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        inClicks.addData(eventSide(s, d, "click").toIndexedSeq)
-        inPurchases.addData(eventSide(s, d, "purchase").toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+    Replay.run(s)(Replay.memory(
+        clickAttribution(namedEv(inClicks), namedEv(inPurchases)), sink)) { q =>
+      inClicks.addData(eventSide(s, d, "click").toIndexedSeq)
+      inPurchases.addData(eventSide(s, d, "purchase").toIndexedSeq)
+      Replay.fence(q)
     }
     s.table(sink).orderBy("user_id", "purchase_id", "click_id")
   }
@@ -798,73 +615,45 @@ object Streams {
     * on by default) then flushes the expired state — so ONE far-future
     * sentinel batch on BOTH streams suffices (two explicit rounds through
     * round 5 — half the replay harness cost); the trailing empty
-    * `processAllAvailable` is a fence that guarantees the flush batch has
-    * committed before the sink is read. The sentinels' own rows are
-    * filtered out of the result. Fully SQL-expressible (a BETWEEN left
-    * join), so the null-click rows are hash-checked too. */
-  def streamJoinOuterReplay(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val clicks = eventSide(s, d, "click")
-    val purchases = eventSide(s, d, "purchase")
-    val maxMs = (clicks.iterator ++ purchases.iterator).map(_._3.getTime).max
-    val sentinelUser = -1L
-    def sentinel(dayOff: Long): Ev =
-      (sentinelUser, -1L, new java.sql.Timestamp(maxMs + dayOff * 24 * 3600 * 1000), 0.0)
-    val inClicks = MemoryStream[Ev]
-    val inPurchases = MemoryStream[Ev]
-    val sink = "e_stream_join_outer_sink"
-    withReplayShuffle(s, 8) {
-      val q = clickAttributionOuter(namedEv(inClicks), namedEv(inPurchases))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        // sentinels RIDE IN the data batch: the watermark is computed at
-        // the batch boundary from the max event time seen, so one batch
-        // (data + far-future sentinel) advances it past every real row,
-        // and the engine's automatic no-data micro-batch flushes the
-        // expired state — one feed round instead of two, same rows out
-        // (rows are never late-dropped against the PREVIOUS watermark,
-        // which is still the epoch during this batch).
-        inClicks.addData((clicks :+ sentinel(10L)).toIndexedSeq)
-        inPurchases.addData((purchases :+ sentinel(10L)).toIndexedSeq)
-        q.processAllAvailable()
-        q.processAllAvailable() // fence: the no-data flush batch has committed
-      } finally q.stop()
-    }
-    s.table(sink)
-      .filter(col("user_id") =!= sentinelUser)
-      .orderBy("user_id", "purchase_id", "click_id")
-  }
+    * fence guarantees the flush batch has committed before the sink is
+    * read. The sentinels' own rows are filtered out of the result. Fully
+    * SQL-expressible (a BETWEEN left join), so the null-click rows are
+    * hash-checked too. */
+  def streamJoinOuterReplay(s: SparkSession, d: String): DataFrame =
+    orphanFlushJoin(s, d, "e_stream_join_outer_sink", clickAttributionOuter)
 
   /** `e_stream_join_full` — [[clickAttributionFull]] replayed the
     * [[streamJoinOuterReplay]] way (both-side sentinels push the
     * watermark so both orphan classes flush); the oracle is DuckDB's
     * native FULL OUTER interval join — matched rows, never-clicked
     * purchases, and never-converted clicks all hash-checked. */
-  def streamJoinFullReplay(s: SparkSession, d: String): DataFrame = {
+  def streamJoinFullReplay(s: SparkSession, d: String): DataFrame =
+    orphanFlushJoin(s, d, "e_stream_join_full_sink", clickAttributionFull)
+
+  private def orphanFlushJoin(s: SparkSession, d: String, sink: String,
+      join: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val clicks = eventSide(s, d, "click")
     val purchases = eventSide(s, d, "purchase")
     val maxMs = (clicks.iterator ++ purchases.iterator).map(_._3.getTime).max
     val sentinelUser = -1L
-    def sentinel(dayOff: Long): Ev =
-      (sentinelUser, -1L, new java.sql.Timestamp(maxMs + dayOff * 24 * 3600 * 1000), 0.0)
+    val sentinel: Ev =
+      (sentinelUser, -1L, new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), 0.0)
     val inClicks = MemoryStream[Ev]
     val inPurchases = MemoryStream[Ev]
-    val sink = "e_stream_join_full_sink"
-    withReplayShuffle(s, 8) {
-      val q = clickAttributionFull(namedEv(inClicks), namedEv(inPurchases))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        // sentinels ride in the data batch — see [[streamJoinOuterReplay]]
-        inClicks.addData((clicks :+ sentinel(10L)).toIndexedSeq)
-        inPurchases.addData((purchases :+ sentinel(10L)).toIndexedSeq)
-        q.processAllAvailable()
-        q.processAllAvailable() // fence: the no-data flush batch has committed
-      } finally q.stop()
+    Replay.run(s, 8)(Replay.memory(join(namedEv(inClicks), namedEv(inPurchases)), sink)) { q =>
+      // sentinels RIDE IN the data batch: the watermark is computed at
+      // the batch boundary from the max event time seen, so one batch
+      // (data + far-future sentinel) advances it past every real row,
+      // and the engine's automatic no-data micro-batch flushes the
+      // expired state — one feed round instead of two, same rows out
+      // (rows are never late-dropped against the PREVIOUS watermark,
+      // which is still the epoch during this batch).
+      inClicks.addData((clicks :+ sentinel).toIndexedSeq)
+      inPurchases.addData((purchases :+ sentinel).toIndexedSeq)
+      Replay.fence(q)
+      Replay.fence(q) // the no-data flush batch has committed
     }
     s.table(sink)
       .filter(col("user_id") =!= sentinelUser)
@@ -878,32 +667,8 @@ object Streams {
     * replayed through [[dedupStream]] in two micro-batches — dedup must
     * hold across batches via state, not just within one. Output = one row
     * per distinct key: SQL-expressible, full oracle. */
-  def dedupStreamReplay(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val keyed = graft.Tables.events(s, d)
-      .select((col("event_id") % 997).as("k"))
-      .select(col("k"), md5(col("k").cast("string").cast("binary")).as("payload"))
-      .as[(Long, String)]
-      .collect()
-    val in = MemoryStream[(Long, String)]
-    val sink = "d_dedup_stream_sink"
-    withReplayShuffle(s) {
-      val q = dedupStream(in.toDS(),
-          timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
-        .toDF("dedup_key", "payload")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        val (b1, b2) = keyed.splitAt(keyed.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    s.table(sink).orderBy("dedup_key")
-  }
+  def dedupStreamReplay(s: SparkSession, d: String): DataFrame =
+    dedupReplayWith(s, d, "d_dedup_stream_sink", rocksdb = false)
 
   /** `d_dedup_stream_rocksdb` — the SAME exact-dedup state machine on
     * the RocksDB state-store provider: the knob that makes streaming
@@ -917,45 +682,36 @@ object Streams {
     * conf is captured at stream START, so scoping it around the replay
     * is race-free; asserted in-operator so a green row certifies
     * RocksDB actually held the state. */
-  def dedupStreamRocksdbReplay(s: SparkSession, d: String): DataFrame = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val out = try {
-      import s.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val keyed = graft.Tables.events(s, d)
-        .select((col("event_id") % 997).as("k"))
-        .select(col("k"), md5(col("k").cast("string").cast("binary")).as("payload"))
-        .as[(Long, String)]
-        .collect()
-      val in = MemoryStream[(Long, String)]
-      val sink = "d_dedup_stream_rocksdb_sink"
-      withReplayShuffle(s) {
-        val q = dedupStream(in.toDS(),
-            timeout = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)
-          .toDF("dedup_key", "payload")
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append).start()
-        try {
-          val (b1, b2) = keyed.splitAt(keyed.length / 2)
-          in.addData(b1.toIndexedSeq)
-          q.processAllAvailable()
-          in.addData(b2.toIndexedSeq)
-          q.processAllAvailable()
-          val providers = q.lastProgress.stateOperators
-          require(providers.nonEmpty && providers.forall(
-              _.customMetrics.containsKey("rocksdbGetCount")),
-            "state did not run on the RocksDB provider")
-        } finally q.stop()
+  def dedupStreamRocksdbReplay(s: SparkSession, d: String): DataFrame =
+    dedupReplayWith(s, d, "d_dedup_stream_rocksdb_sink", rocksdb = true)
+
+  private def dupKeyed(s: SparkSession, d: String): Array[(Long, String)] = {
+    import s.implicits._
+    graft.Tables.events(s, d)
+      .select((col("event_id") % 997).as("k"))
+      .select(col("k"), md5(col("k").cast("string").cast("binary")).as("payload"))
+      .as[(Long, String)]
+      .collect()
+  }
+
+  private def dedupReplayWith(
+      s: SparkSession, d: String, sink: String, rocksdb: Boolean): DataFrame = {
+    import s.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val keyed = dupKeyed(s, d)
+    val in = MemoryStream[(Long, String)]
+    Replay.run(s, rocksdb = rocksdb)(Replay.memory(
+        dedupStream(in.toDS(), timeout = GroupStateTimeout.NoTimeout)
+          .toDF("dedup_key", "payload"), sink)) { q =>
+      Replay.feed(q, in, halves(keyed): _*)
+      if (rocksdb) {
+        val providers = q.lastProgress.stateOperators
+        require(providers.nonEmpty && providers.forall(
+            _.customMetrics.containsKey("rocksdbGetCount")),
+          "state did not run on the RocksDB provider")
       }
-      s.table(sink).orderBy("dedup_key")
-    } finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
     }
-    out
+    s.table(sink).orderBy("dedup_key")
   }
 
   /** `d_dedup_stream_wm` — the ENGINE-NATIVE streaming dedup next to the
@@ -973,11 +729,7 @@ object Streams {
   def dedupStreamWmReplay(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val keyed = graft.Tables.events(s, d)
-      .select((col("event_id") % 997).as("k"))
-      .select(col("k"), md5(col("k").cast("string").cast("binary")).as("payload"))
-      .as[(Long, String)]
-      .collect()
+    val keyed = dupKeyed(s, d)
     val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val rows = keyed.zipWithIndex.map { case ((k, p), i) =>
       (k, p, new java.sql.Timestamp(base.getTime + i * 1000L))
@@ -990,20 +742,11 @@ object Streams {
     val delayHours = math.max(6L, rows.length.toLong / 3600L + 2L)
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
     val sink = "d_dedup_stream_wm_sink"
-    withReplayShuffle(s) {
-      val q = in.toDS().toDF("dedup_key", "payload", "ts")
+    Replay.run(s)(Replay.memory(in.toDS().toDF("dedup_key", "payload", "ts")
         .withWatermark("ts", s"$delayHours hours")
         .dropDuplicatesWithinWatermark("dedup_key")
-        .select(col("dedup_key"), col("payload"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+        .select(col("dedup_key"), col("payload")), sink)) { q =>
+      Replay.feed(q, in, halves(rows): _*)
     }
     s.table(sink).orderBy("dedup_key")
   }
@@ -1161,22 +904,11 @@ object Streams {
     val sentinelUser = -1L
     val in = MemoryStream[(Long, Long, java.sql.Timestamp, String)]
     val sink = "e_funnel_stream_sink"
-    withReplayShuffle(s) {
-      val q = funnelStream(
-          in.toDF().toDF("user_id", "event_id", "ts", "event_type").as[FunnelEv])
-        .toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData((sentinelUser, -1L,
-          new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), "noop"))
-        q.processAllAvailable()
-      } finally q.stop()
+    Replay.run(s)(Replay.memory(funnelStream(
+        in.toDF().toDF("user_id", "event_id", "ts", "event_type").as[FunnelEv]).toDF(),
+        sink)) { q =>
+      Replay.feed(q, in, halves(rows) :+ Seq((sentinelUser, -1L,
+        new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), "noop")): _*)
     }
     s.table(sink)
       .filter(col("user_id") =!= sentinelUser)
@@ -1327,25 +1059,6 @@ object Streams {
   // replay's fixed inter-batch wait
   private[streaming] val RlTtlMs = 500L
 
-  /** Commit fence for PROCESSING-TIME streams: `processAllAvailable`
-    * never returns under TimeMode.ProcessingTime, because the engine
-    * keeps scheduling non-idle micro-batches to fire timers/TTL and the
-    * no-new-data signal the fence waits on is never raised (the
-    * ProcessingTimeTimeout/idle-MemoryStream trap in TTL form). The
-    * limiter emits exactly one row per input row, so "batch committed"
-    * is observable from the SINK: poll until the expected row count
-    * lands. Monotone-append sink ⇒ the poll is race-free. */
-  private[streaming] def awaitSinkRows(
-      s: SparkSession, q: org.apache.spark.sql.streaming.StreamingQuery,
-      sink: String, n: Long): Unit = {
-    val deadline = System.nanoTime() + 300L * 1000L * 1000L * 1000L
-    while (s.table(sink).count() < n) {
-      if (!q.isActive) q.awaitTermination() // surface the stream's failure
-      if (System.nanoTime() > deadline) sys.error(s"sink $sink stuck below $n rows")
-      Thread.sleep(50L)
-    }
-  }
-
   // ---- STREAMING CUSUM — the level-shift detector
   // (operators/Events.scala `e_cusum`) as a long-lived stateful stream,
   // and the FOURTH state surface of the transformWithState family:
@@ -1453,31 +1166,14 @@ object Streams {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val in = MemoryStream[(String, Int, java.sql.Date, Long)]
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      withReplayShuffle(s) {
-        val q = in.toDS()
-          .map { case (t, i, dy, n) => CuEv(t, i, dy, n) }
-          .groupByKey(_.event_type)
-          .transformWithState(new CusumProcessor,
-            org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-          .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append).start()
-        try {
-          val (b1, b2) = rows.splitAt(splitAt)
-          in.addData(b1.toIndexedSeq); q.processAllAvailable()
-          in.addData(b2.toIndexedSeq); q.processAllAvailable()
-        } finally q.stop()
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
+    Replay.run(s, rocksdb = true)(Replay.memory(in.toDS()
+        .map { case (t, i, dy, n) => CuEv(t, i, dy, n) }
+        .groupByKey(_.event_type)
+        .transformWithState(new CusumProcessor,
+          org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
+        .toDF(), sink)) { q =>
+      val (b1, b2) = rows.splitAt(splitAt)
+      Replay.feed(q, in, b1, b2)
     }
     s.table(sink)
       .select(col("event_type"), col("day"), col("n"), col("cusum_s"), col("alarm"))
@@ -1570,38 +1266,22 @@ object Streams {
     val maxMs = rows.iterator.map(_._4.getTime).max
     val in = MemoryStream[(Long, String, Long, java.sql.Timestamp)]
     val sink = "e_debounce_stream_sink"
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      withReplayShuffle(s, 8) {
-        val q = in.toDF().toDF("user_id", "event_type", "event_id", "ts")
-          .withWatermark("ts", "0 seconds")
-          .as[DbEv]
-          .groupByKey(e => (e.user_id, e.event_type))
-          .transformWithState(new DebounceProcessor,
-            org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-          .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append).start()
-        try {
-          // two DATA batches (bursts spanning the boundary must stay open
-          // in state — the cross-batch property under test); the sentinel
-          // rides in the second, and the automatic no-data micro-batch
-          // fires every remaining timer (fenced below).
-          val (b1, b2) = rows.splitAt(rows.length / 2)
-          in.addData(b1.toIndexedSeq)
-          q.processAllAvailable()
-          in.addData((b2 :+ ((-1L, "sentinel", -1L,
-            new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000)))).toIndexedSeq)
-          q.processAllAvailable()
-          q.processAllAvailable() // fence: the timer-flush batch has committed
-        } finally q.stop()
-      }
-    } finally prevProvider match {
-      case Some(v) => s.conf.set(providerKey, v)
-      case None    => s.conf.unset(providerKey)
+    Replay.run(s, 8, rocksdb = true)(Replay.memory(in.toDF()
+        .toDF("user_id", "event_type", "event_id", "ts")
+        .withWatermark("ts", "0 seconds")
+        .as[DbEv]
+        .groupByKey(e => (e.user_id, e.event_type))
+        .transformWithState(new DebounceProcessor,
+          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+        .toDF(), sink)) { q =>
+      // two DATA batches (bursts spanning the boundary must stay open
+      // in state — the cross-batch property under test); the sentinel
+      // rides in the second, and the automatic no-data micro-batch
+      // fires every remaining timer (fenced below).
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      Replay.feed(q, in, b1.toIndexedSeq, (b2 :+ ((-1L, "sentinel", -1L,
+        new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000)))).toIndexedSeq)
+      Replay.fence(q) // the timer-flush batch has committed
     }
     s.table(sink)
       .filter(col("user_id") =!= -1L)
@@ -1621,42 +1301,23 @@ object Streams {
       .collect()
       .sortBy(r => (r._3, r._2))
     val in = MemoryStream[(Long, Long, Long)]
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    // provider is captured at STREAM START (not mutable mid-query);
-    // scope RocksDB to this query and restore the session default after
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      withReplayShuffle(s) {
-        val q = in.toDS()
-          .map { case (u, e, us) => RlEv(u, e, us) }
-          .groupByKey(_.user_id)
-          .transformWithState(processor, timeMode, OutputMode.Append())
-          .toDF()
-          .writeStream.format("memory").queryName(sink)
-          .outputMode(OutputMode.Append).start()
-        try {
-          // ProcessingTime mode (the TTL variant) cannot use the
-          // processAllAvailable fence — see [[awaitSinkRows]]
-          val poll = interBatchSleepMs > 0
-          val (b1, b2) = rows.splitAt(rows.length / 2)
-          in.addData(b1.toIndexedSeq)
-          if (poll) awaitSinkRows(s, q, sink, b1.length.toLong)
-          else q.processAllAvailable()
-          // TTL variant: wall-clock gap ≥ 3×TTL AFTER batch 1 commits, so
-          // batch-1 state is expired — never marginal — at batch 2
-          if (interBatchSleepMs > 0) Thread.sleep(interBatchSleepMs)
-          in.addData(b2.toIndexedSeq)
-          if (poll) awaitSinkRows(s, q, sink, rows.length.toLong)
-          else q.processAllAvailable()
-        } finally q.stop()
-      }
-    } finally {
-      prevProvider match {
-        case Some(p) => s.conf.set(providerKey, p)
-        case None => s.conf.unset(providerKey)
-      }
+    Replay.run(s, rocksdb = true)(Replay.memory(in.toDS()
+        .map { case (u, e, us) => RlEv(u, e, us) }
+        .groupByKey(_.user_id)
+        .transformWithState(processor, timeMode, OutputMode.Append())
+        .toDF(), sink)) { q =>
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      if (interBatchSleepMs > 0) {
+        // ProcessingTime mode (the TTL variant) cannot use the fence —
+        // see [[Replay.awaitSinkRows]]. The wall-clock gap ≥ 3×TTL AFTER
+        // batch 1 commits makes batch-1 state expired — never marginal —
+        // at batch 2
+        in.addData(b1.toIndexedSeq)
+        Replay.awaitSinkRows(s, q, sink, b1.length.toLong)
+        Thread.sleep(interBatchSleepMs)
+        in.addData(b2.toIndexedSeq)
+        Replay.awaitSinkRows(s, q, sink, rows.length.toLong)
+      } else Replay.feed(q, in, b1.toIndexedSeq, b2.toIndexedSeq)
     }
     s.table(sink).orderBy("user_id", "event_id")
   }
@@ -1682,8 +1343,7 @@ object Streams {
     val in = MemoryStream[(Long, Double, String)]
     val ledger = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Long)]()
     val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
-    withReplayShuffle(s) {
-      val q = in.toDF().toDF("o_orderkey", "o_totalprice", "o_orderpriority")
+    Replay.run(s)(in.toDF().toDF("o_orderkey", "o_totalprice", "o_orderpriority")
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val r = batch.agg(
@@ -1702,14 +1362,8 @@ object Streams {
           ledger.add((b, "max_le_100", r.getLong(0), r.getLong(4)))
           ()
         }
-        .start()
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+        .start()) { q =>
+      Replay.feed(q, in, halves(rows): _*)
     }
     import scala.jdk.CollectionConverters._
     ledger.asScala.toSeq
@@ -1759,8 +1413,7 @@ object Streams {
     base.write.mode("overwrite").parquet(s"$scratch/gen_base")
     @volatile var current: String = s"$scratch/gen_base"
     val in = MemoryStream[(String, Long, String)]
-    withReplayShuffle(s) {
-      val q = in.toDF().toDF("op", "k", "digest")
+    Replay.run(s)(in.toDF().toDF("op", "k", "digest")
         .writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val ss = batch.sparkSession
@@ -1773,14 +1426,8 @@ object Streams {
           survivors.unionByName(added).write.mode("overwrite").parquet(next)
           current = next
         }
-        .start()
-      try {
-        val (b1, b2) = ops.splitAt(ops.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+        .start()) { q =>
+      Replay.feed(q, in, halves(ops): _*)
     }
     graft.Tables.parquet(s, current).orderBy("k")
   }
@@ -1821,15 +1468,11 @@ object Streams {
       .as[(Long, Long)].collect().sortBy(_._2)
     val (b1, b2) = rows.splitAt(rows.length / 2)
     val in = MemoryStream[(Long, Long)]
-    withReplayShuffle(s) {
-      val q = in.toDS().toDF("user_id", "event_id")
+    Replay.run(s)(in.toDS().toDF("user_id", "event_id")
         .writeStream
         .foreachBatch { (batch: DataFrame, id: Long) => commitBatch(batch, id): Unit }
-        .start()
-      try {
-        in.addData(b1.toIndexedSeq); q.processAllAvailable()
-        in.addData(b2.toIndexedSeq); q.processAllAvailable()
-      } finally q.stop()
+        .start()) { q =>
+      Replay.feed(q, in, b1.toIndexedSeq, b2.toIndexedSeq)
     }
     // the retry: same batchId, same rows — must be a no-op
     val replayB1 = b1.toIndexedSeq.toDF("user_id", "event_id")
@@ -1869,8 +1512,7 @@ object Streams {
     val base = graft.TempPaths.runDir(s, "stream_upsert")
     val in = MemoryStream[(Long, Long, Long, Double)]
     @volatile var current: Option[String] = None
-    withReplayShuffle(s) {
-      val q = in.toDF().toDF("user_id", "event_id", "us", "value")
+    Replay.run(s)(in.toDF().toDF("user_id", "event_id", "us", "value")
         .writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           val w = Window.partitionBy(col("user_id"))
@@ -1885,17 +1527,12 @@ object Streams {
             .write.mode("overwrite").parquet(next)
           current = Some(next)
         }
-        .start()
-      try {
-        // one processAllAvailable per generation: without the fence the
-        // planner would coalesce all three addData blocks into ONE
-        // micro-batch and the generation chain (the thing this replay
-        // demonstrates) would collapse to a single merge
-        rows.grouped(math.max(1, rows.length / 3)).foreach { b =>
-          in.addData(b.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
+        .start()) { q =>
+      // one fence per generation: without it the planner would coalesce
+      // all three addData blocks into ONE micro-batch and the generation
+      // chain (the thing this replay demonstrates) would collapse to a
+      // single merge
+      Replay.feed(q, in, rows.grouped(math.max(1, rows.length / 3)).map(_.toIndexedSeq).toSeq: _*)
     }
     graft.Tables.parquet(s, current.getOrElse(sys.error("upsert replay produced no generation")))
       .select(col("user_id"), col("event_id").as("last_event_id"),
@@ -1948,29 +1585,21 @@ object Streams {
     val maxMs = rows.iterator.map(_._3.getTime).max
     val in = MemoryStream[(Long, Long, java.sql.Timestamp, Double)]
     val sink = "e_stream_pipeline_sink"
-    withReplayShuffle(s, 8) {
-      val q = in.toDF().toDF("event_id", "user_id", "ts", "value")
+    Replay.run(s, 8)(Replay.memory(in.toDF().toDF("event_id", "user_id", "ts", "value")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .join(broadcast(dim), "user_id")
         .groupBy(window(col("ts"), "6 hours").as("w"), col("tier"))
         .agg(count(lit(1)).as("n_events"), graft.QueryDsl.dsum(col("value")).as("sum_value"))
         .select(col("w.start").as("window_start"), col("tier"),
-          col("n_events"), col("sum_value"))
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        // every row sent twice in its batch — the dedup stage's job; the
-        // window-flush sentinel rides in the second data batch and the
-        // automatic no-data micro-batch closes every window (fenced).
-        in.addData(b1.toIndexedSeq ++ b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData((b2 ++ b2 :+ ((-1L, -1L,
-          new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), 0.0))).toIndexedSeq)
-        q.processAllAvailable()
-        q.processAllAvailable() // fence: the no-data flush batch has committed
-      } finally q.stop()
+          col("n_events"), col("sum_value")), sink)) { q =>
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      // every row sent twice in its batch — the dedup stage's job; the
+      // window-flush sentinel rides in the second data batch and the
+      // automatic no-data micro-batch closes every window (fenced).
+      Replay.feed(q, in, b1.toIndexedSeq ++ b1.toIndexedSeq, (b2 ++ b2 :+ ((-1L, -1L,
+        new java.sql.Timestamp(maxMs + 10L * 24 * 3600 * 1000), 0.0))).toIndexedSeq)
+      Replay.fence(q) // the no-data flush batch has committed
     }
     s.table(sink)
       .filter(col("tier") =!= -1L)
@@ -1991,23 +1620,16 @@ object Streams {
       .as[(Long, Long, String)].collect().sortBy(_._1)
     val base = graft.TempPaths.runDir(s, "stream_enrich")
     val in = MemoryStream[(Long, Long, String)]
-    withReplayShuffle(s) {
-      val q = in.toDS().toDF("event_id", "user_id", "event_type")
+    // the parquet sink's checkpoint is the run's fresh tmpfs root, so a
+    // second invocation never resumes this one's offsets
+    Replay.run(s)(in.toDS().toDF("event_id", "user_id", "event_type")
         .join(broadcast(dim), "user_id")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("tier"), col("segment"))
         .writeStream.format("parquet")
         .option("path", s"$base/out")
-        // checkpoint comes from withReplayShuffle's per-replay tmpfs
-        // default — unique per invocation, so no offset resume
-        .outputMode(OutputMode.Append).start()
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+        .outputMode(OutputMode.Append).start()) { q =>
+      Replay.feed(q, in, halves(rows): _*)
     }
     graft.Tables.parquet(s, s"$base/out").orderBy("event_id")
   }
@@ -2044,8 +1666,7 @@ object Streams {
       s"e_stream_enrich_scd oracle assumes dense event_ids 0..n-1; " +
         s"got [${rows.head._1}, ${rows.last._1}] over ${rows.length} rows")
     val in = MemoryStream[(Long, Long)]
-    withReplayShuffle(s) {
-      val q = in.toDS().toDF("event_id", "user_id")
+    Replay.run(s)(in.toDS().toDF("event_id", "user_id")
         .writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val dim = graft.Tables.parquet(batch.sparkSession, dimPtr.get())
@@ -2053,15 +1674,11 @@ object Streams {
             .select(col("event_id"), col("user_id"), col("tier"), col("dim_ver"))
             .write.mode("append").parquet(s"$base/out"): Unit
         }
-        .start() // checkpoint from withReplayShuffle's per-replay tmpfs default
-      try {
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        dimPtr.set(s"$base/dim/v2") // the atomic publish between batches
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+        .start()) { q =>
+      val (b1, b2) = rows.splitAt(rows.length / 2)
+      Replay.feed(q, in, b1.toIndexedSeq)
+      dimPtr.set(s"$base/dim/v2") // the atomic publish between batches
+      Replay.feed(q, in, b2.toIndexedSeq)
     }
     graft.Tables.parquet(s, s"$base/out").orderBy("event_id")
   }
@@ -2130,16 +1747,8 @@ object Streams {
     }
     val in = MemoryStream[AsofIn]
     val sink = "e_stream_asof_sink"
-    withReplayShuffle(s) {
-      val q = asofEnrichStream(in.toDS())
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        chunks.foreach { c =>
-          in.addData(c.toIndexedSeq)
-          q.processAllAvailable()
-        }
-      } finally q.stop()
+    Replay.run(s)(Replay.memory(asofEnrichStream(in.toDS()).toDF(), sink)) { q =>
+      Replay.feed(q, in, chunks.map(_.toIndexedSeq): _*)
     }
     s.table(sink).orderBy("user_id", "purchase_id")
   }
@@ -2194,59 +1803,40 @@ object Streams {
     import s.implicits._
     val sess = s.newSession()
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = sess.sqlContext
-    withReplayShuffle(sess) {
-      def ts(h: Int) = new java.sql.Timestamp(h * 3600000L)
-      // 1: watermark + windowed agg
-      val in1 = MemoryStream[(Long, java.sql.Timestamp, Double)]
-      val q1 = in1.toDF().toDF("user_id", "ts", "value")
+    def ts(h: Int) = new java.sql.Timestamp(h * 3600000L)
+    // 1: watermark + windowed agg
+    val in1 = MemoryStream[(Long, java.sql.Timestamp, Double)]
+    Replay.run(sess)(Replay.memory(in1.toDF().toDF("user_id", "ts", "value")
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-        .agg(count(lit(1)).as("n"))
-        .writeStream.format("memory").queryName("replay_warmup_agg")
-        .outputMode(OutputMode.Append).start()
-      try {
-        in1.addData(Seq((1L, ts(1), 1.0), (1L, ts(2), 2.0), (2L, ts(99), 0.0)))
-        q1.processAllAvailable()
-      } finally q1.stop()
-      // 2: stream-stream interval join
-      val in2a = MemoryStream[(Long, java.sql.Timestamp)]
-      val in2b = MemoryStream[(Long, java.sql.Timestamp)]
-      val q2 = in2a.toDF().toDF("k", "ts").withWatermark("ts", "1 hour").alias("a")
-        .join(in2b.toDF().toDF("k", "ts").withWatermark("ts", "1 hour").alias("b"),
-          expr("a.k = b.k AND b.ts BETWEEN a.ts - INTERVAL 1 HOUR AND a.ts"), "leftOuter")
-        .writeStream.format("memory").queryName("replay_warmup_join")
-        .outputMode(OutputMode.Append).start()
-      try {
-        in2a.addData(Seq((1L, ts(1)), (9L, ts(99))))
-        in2b.addData(Seq((1L, ts(1)), (9L, ts(99))))
-        q2.processAllAvailable()
-        q2.processAllAvailable()
-      } finally q2.stop()
-      // 3: transformWithState on RocksDB (the debounce machinery)
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = sess.conf.getOption(providerKey)
-      sess.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val in3 = MemoryStream[(Long, String, Long, java.sql.Timestamp)]
-        val q3 = in3.toDF().toDF("user_id", "event_type", "event_id", "ts")
-          .withWatermark("ts", "0 seconds")
-          .as[DbEv]
-          .groupByKey(e => (e.user_id, e.event_type))
-          .transformWithState(new DebounceProcessor,
-            org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
-          .toDF()
-          .writeStream.format("memory").queryName("replay_warmup_tws")
-          .outputMode(OutputMode.Append).start()
-        try {
-          in3.addData(Seq((1L, "a", 1L, ts(1)), (1L, "a", 2L, ts(99))))
-          q3.processAllAvailable()
-          q3.processAllAvailable()
-        } finally q3.stop()
-      } finally prevProvider match {
-        case Some(v) => sess.conf.set(providerKey, v)
-        case None    => sess.conf.unset(providerKey)
-      }
+        .agg(count(lit(1)).as("n")), "replay_warmup_agg")) { q =>
+      Replay.feed(q, in1, Seq((1L, ts(1), 1.0), (1L, ts(2), 2.0), (2L, ts(99), 0.0)))
+    }
+    // 2: stream-stream interval join
+    val in2a = MemoryStream[(Long, java.sql.Timestamp)]
+    val in2b = MemoryStream[(Long, java.sql.Timestamp)]
+    Replay.run(sess)(Replay.memory(
+        in2a.toDF().toDF("k", "ts").withWatermark("ts", "1 hour").alias("a")
+          .join(in2b.toDF().toDF("k", "ts").withWatermark("ts", "1 hour").alias("b"),
+            expr("a.k = b.k AND b.ts BETWEEN a.ts - INTERVAL 1 HOUR AND a.ts"), "leftOuter"),
+        "replay_warmup_join")) { q =>
+      in2a.addData(Seq((1L, ts(1)), (9L, ts(99))))
+      in2b.addData(Seq((1L, ts(1)), (9L, ts(99))))
+      Replay.fence(q)
+      Replay.fence(q)
+    }
+    // 3: transformWithState on RocksDB (the debounce machinery)
+    val in3 = MemoryStream[(Long, String, Long, java.sql.Timestamp)]
+    Replay.run(sess, rocksdb = true)(Replay.memory(in3.toDF()
+        .toDF("user_id", "event_type", "event_id", "ts")
+        .withWatermark("ts", "0 seconds")
+        .as[DbEv]
+        .groupByKey(e => (e.user_id, e.event_type))
+        .transformWithState(new DebounceProcessor,
+          org.apache.spark.sql.streaming.TimeMode.EventTime(), OutputMode.Append())
+        .toDF(), "replay_warmup_tws")) { q =>
+      Replay.feed(q, in3, Seq((1L, "a", 1L, ts(1)), (1L, "a", 2L, ts(99))))
+      Replay.fence(q)
     }
   }
 
@@ -2764,20 +2354,10 @@ object Streams {
       .sortBy(_._2)
     val in = MemoryStream[(String, Long, Seq[Long])]
     val sink = "d_lsh_dedup_stream_sink"
-    withReplayShuffle(s) {
-      val q = lshDedupStream(in.toDS(), numPerms, 0.5,
-          timeout = GroupStateTimeout.NoTimeout)
-        .toDF("doc_id", "flag")
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        // doc_id order across batches is the determinism contract
-        val (b1, b2) = rows.splitAt(rows.length / 2)
-        in.addData(b1.toIndexedSeq)
-        q.processAllAvailable()
-        in.addData(b2.toIndexedSeq)
-        q.processAllAvailable()
-      } finally q.stop()
+    Replay.run(s)(Replay.memory(lshDedupStream(in.toDS(), numPerms, 0.5,
+        timeout = GroupStateTimeout.NoTimeout).toDF("doc_id", "flag"), sink)) { q =>
+      // doc_id order across batches is the determinism contract
+      Replay.feed(q, in, halves(rows): _*)
     }
     s.table(sink)
       .groupBy(col("doc_id"))

@@ -24,44 +24,32 @@ class StreamingTtlSpec extends AnyFunSuite {
       ttl: Option[java.time.Duration], sleepMs: Long, sink: String): Map[Long, Int] = {
     import s.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(providerKey)
-    s.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[(Long, Long, Long)]
-      val proc = ttl match {
-        case Some(d) => new Streams.RateLimitProcessor(TTLConfig(d))
-        case None => new Streams.RateLimitProcessor()
-      }
-      val timeMode =
-        if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
-      val q = in.toDS()
+    val in = MemoryStream[(Long, Long, Long)]
+    val proc = ttl match {
+      case Some(d) => new Streams.RateLimitProcessor(TTLConfig(d))
+      case None => new Streams.RateLimitProcessor()
+    }
+    val timeMode =
+      if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
+    Replay.run(s, rocksdb = true)(Replay.memory(in.toDS()
         .map { case (u, e, us) => Streams.RlEv(u, e, us) }
         .groupByKey(_.user_id)
         .transformWithState(proc, timeMode, OutputMode.Append())
-        .toDF()
-        .writeStream.format("memory").queryName(sink)
-        .outputMode(OutputMode.Append).start()
-      try {
-        // ProcessingTime mode spins timer micro-batches forever, so the
-        // processAllAvailable fence never returns — poll the sink instead
-        // (Streams.awaitSinkRows); the None-mode run keeps the plain fence
-        def fence(n: Long): Unit =
-          if (ttl.isDefined) Streams.awaitSinkRows(s, q, sink, n)
-          else q.processAllAvailable()
-        in.addData(ev(1 to 7): _*)
-        fence(7L)
-        if (sleepMs > 0) Thread.sleep(sleepMs)
-        in.addData(ev(8 to 10): _*)
-        fence(10L)
-      } finally q.stop()
-      s.table(sink).collect()
-        .map(r => r.getAs[Long]("event_id") -> r.getAs[Int]("admitted")).toMap
-    } finally prev match {
-      case Some(p) => s.conf.set(providerKey, p)
-      case None => s.conf.unset(providerKey)
+        .toDF(), sink)) { q =>
+      // ProcessingTime mode spins timer micro-batches forever, so the
+      // processAllAvailable fence never returns — poll the sink instead
+      // (Replay.awaitSinkRows); the None-mode run keeps the plain fence
+      def fence(n: Long): Unit =
+        if (ttl.isDefined) Replay.awaitSinkRows(s, q, sink, n)
+        else Replay.fence(q)
+      in.addData(ev(1 to 7): _*)
+      fence(7L)
+      if (sleepMs > 0) Thread.sleep(sleepMs)
+      in.addData(ev(8 to 10): _*)
+      fence(10L)
     }
+    s.table(sink).collect()
+      .map(r => r.getAs[Long]("event_id") -> r.getAs[Int]("admitted")).toMap
   }
 
   test("TTL evicts idle state between batches: the exhausted budget re-admits") {
