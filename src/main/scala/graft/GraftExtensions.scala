@@ -10,8 +10,10 @@ import graft.functions.{BitmapAgg, BottomKCounts, CosineSimilarity, ExtractHoldi
 /** Engine extensions, injected via the standard
   * `spark.sql.extensions=graft.GraftExtensions` mechanism (GraftSession
   * sets it): custom expressions for SQL users
-  * (`SELECT cosine_similarity(a, b)`) and the planner strategy for the
-  * bounded-memory per-key top-k operator (graft.plans.TopK).
+  * (`SELECT cosine_similarity(a, b)`), the planner strategy for the
+  * bounded-memory per-key top-k operator (graft.plans.TopK), and the AQE
+  * rule that sorts small results in one partition
+  * (graft.plans.SinglePartitionSort).
   *
   * The reference's own semantics need no custom Rule/Strategy (SURVEY.md
   * §4) — the extension points here serve the engine's scale additions. */
@@ -19,6 +21,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => plans.TopKStrategy)
     ext.injectOptimizerRule(_ => plans.RewriteWindowTopK)
+    ext.injectQueryStagePrepRule(_ => plans.SinglePartitionSort)
     // SQL MERGE INTO support for snapshot-manifest relations: lowered at
     // parse time to the k_merge_upsert join/union plan (plans.GraftSqlParser)
     ext.injectParser((session, delegate) =>

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Shared helpers for oracle-checkable queries.
@@ -29,22 +30,31 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   */
 object QueryDsl {
 
-  /** Pin-then-sort for COMPUTE-DENSE frames (r21, guide §1.2/§2.4): the
-    * deterministic total ORDER BY every query ends in plans as a RANGE
-    * exchange, and range partitioning SAMPLES its child to pick bounds —
-    * so the child subtree executes TWICE (once in the sampling job, once
-    * in the shuffle map stage). Harmless when the child is a materialized
-    * AQE stage (post-aggregation sorts re-read shuffle output), but a
-    * compute-dense NARROW child — parse kernel, regex scan, MinHash,
-    * wholetext scan — pays its full cost twice. `localCheckpoint` pins
-    * the frame once so both the sampler and the shuffle read materialized
-    * rows (the candidatePairs/mediaPolicy pin precedent; on a
-    * multi-executor cluster the same pin is a reliable `checkpoint(dir)`
-    * or a staged table). Apply ONLY where the sort's child is expensive
+  /** Sort, pinning first when the frame is too big to sort in one
+    * partition. The deterministic total ORDER BY every query ends in
+    * plans as a RANGE exchange, and range partitioning SAMPLES its child
+    * to pick bounds — so the child subtree executes TWICE (once in the
+    * sampling job, once in the shuffle map stage). A compute-dense NARROW
+    * child — parse kernel, regex scan, MinHash, wholetext scan — would
+    * pay its full cost twice.
+    *
+    * When the frame fits one partition
+    * ([[graft.plans.SinglePartitionSort.fits]]) the sort plans without a
+    * range exchange at all (the [[graft.plans.SinglePartitionSort]] rule),
+    * nothing samples the child, and the frame is sorted as is. Otherwise
+    * `pin` (localCheckpoint, or a reliable checkpoint on a cluster)
+    * materializes the frame once so both the sampler and the shuffle
+    * read stored rows. Apply ONLY where the sort's child is expensive
     * narrow compute — a pin under a cheap child just adds a store+read
     * round trip. */
-  def sortedPinned(df: org.apache.spark.sql.DataFrame, cols: Column*): org.apache.spark.sql.DataFrame =
-    pin(df).orderBy(cols: _*)
+  def sortedPinned(df: org.apache.spark.sql.DataFrame, cols: Column*): org.apache.spark.sql.DataFrame = {
+    // judged under the frame's own session conf, which the planner rule
+    // will see, whatever session is active on this thread
+    val plan = df.queryExecution.optimizedPlan
+    val fits = SQLConf.withExistingConf(df.sparkSession.sessionState.conf)(
+      graft.plans.SinglePartitionSort.fits(plan))
+    (if (fits) df else pin(df)).orderBy(cols: _*)
+  }
 
   /** Whether the pin should be a RELIABLE `checkpoint(dir)` instead of
     * `localCheckpoint`. Pure so PinModeSpec can pin the decision table:

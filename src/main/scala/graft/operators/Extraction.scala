@@ -45,11 +45,11 @@ object Extraction {
   private[graft] def extractedHoldings(s: SparkSession, d: String): DataFrame =
     holdingsOf(DocStage.rendered(s, d))
 
-  /** [[extractedHoldings]] with the oracle-determinism total sort. The
-    * extracted frame is PINNED before the sort (QueryDsl.sortedPinned):
-    * the range sort samples its child, and an unpinned child would run
-    * the parse + extract kernel once for the sampler and once for the
-    * shuffle. */
+  /** [[extractedHoldings]] with the oracle-determinism total sort
+    * (QueryDsl.sortedPinned): a frame that fits one partition sorts there
+    * with no range sampler; a bigger one is PINNED first, since the range
+    * sort samples its child and an unpinned child would run the parse +
+    * extract kernel once for the sampler and once for the shuffle. */
   def extractHoldings(s: SparkSession, d: String): DataFrame =
     graft.QueryDsl.sortedPinned(extractedHoldings(s, d), outCols.map(col): _*)
 
@@ -59,8 +59,8 @@ object Extraction {
     * typed Dataset — no encoder boundary, column pruning flows through.
     * Same oracle as the flatMap form: identical output is the gate. */
   /** The unsorted Generator-form frame — split out so the plan-shape spec
-    * can see the Generate node (the public query pins the frame, which
-    * hides the subtree behind an RDD scan). */
+    * can see the Generate node (the public query pins a frame too big to
+    * sort in one partition, which hides the subtree behind an RDD scan). */
   private[graft] def extractHoldingsGenRaw(s: SparkSession, d: String): DataFrame =
     DocStage.rendered(s, d)
       .select(graft.functions.ExtractHoldingsGen(col("value")))
@@ -95,7 +95,8 @@ object Extraction {
     * identical rows, same oracle. */
   /** The unsorted compacted-corpus frame — split out so DocCompactionSpec
     * can read the executed scan's `numFiles` metric (the public query
-    * pins the frame, which hides the scan behind an RDD). */
+    * pins a frame too big to sort in one partition, which hides the scan
+    * behind an RDD). */
   private[graft] def docSourceCompactedRaw(s: SparkSession, d: String): DataFrame =
     holdingsOf(DocStage.compactedDocs(s, d))
 
@@ -214,9 +215,12 @@ object Extraction {
     * Every later key holds the date (the dedup key, the ledger window,
     * the pack window, the chunk aggregate), so nothing after the kernel
     * shuffles again: the retry self-union's second leg reuses the first
-    * leg's exchange, and the only other exchange is the final range
-    * sort over the chunk rows. Past the kernel, parallelism is the number
-    * of distinct dates, which the per-date pack window needed anyway.
+    * leg's exchange, and the only other exchange is the final sort's
+    * over the chunk rows: one partition when they fit one
+    * ([[graft.plans.SinglePartitionSort]]), so no range sampler re-runs
+    * the window chain, and a range split otherwise. Past the kernel,
+    * parallelism is the number of distinct dates, which the per-date
+    * pack window needed anyway.
     * Nothing is cached and nothing reaches the driver but the chunks. */
   def pipelineE2e(s: SparkSession, d: String): DataFrame =
     // the fetch stands in as the per-doc directory a crawl leaves, one

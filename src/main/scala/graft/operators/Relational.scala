@@ -510,11 +510,13 @@ object Relational {
       .otherwise(-8)
     val sNation = when(col("a_nation") === col("b_nation"), 6).otherwise(-6)
     val sSegment = when(col("a_segment") === col("b_segment"), 3).otherwise(-5)
-    // sortedPinned (r21): the trailing sort's range exchange samples its
-    // child, and here the child is the scoring pass — two broadcast
-    // probes + a levenshtein over EVERY candidate pair (1.79M at sf0.1)
-    // — which r20 therefore ran twice. The filter keeps ~1% of pairs, so
-    // the pin materializes a tiny frame and the scoring runs once.
+    // sortedPinned (r21): a trailing range sort samples its child, and
+    // here the child is the scoring pass — two broadcast probes + a
+    // levenshtein over EVERY candidate pair (1.79M at sf0.1) — which r20
+    // therefore ran twice. The filter keeps ~1% of pairs: when the
+    // estimate fits one partition the sort runs there with no sampler
+    // (plans.SinglePartitionSort) and nothing is pinned; otherwise the pin
+    // materializes the small frame and the scoring still runs once.
     graft.QueryDsl.sortedPinned(
       cand
         .join(a.select(col("key").as("a_key"), col("name").as("a_name"),

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.BasicFileAttributes
-import java.util.{Map => JMap}
+import java.util.{Map => JMap, OptionalLong}
 
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,9 +27,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * splits by a byte budget taken from that listing, and reads each file
   * whole with NIO in the partition reader. The doc id comes from the file
   * name; anything else in the directory (`_STAGED`, `.crc` sidecars,
-  * dotfiles) is skipped. Files and bytes read are reported as the scan's
-  * `files_read`/`bytes_read` metrics. Paths are opened with NIO, so the
-  * directory must be local or locally mounted on every executor.
+  * dotfiles) is skipped. The same listing gives the planner the scan's
+  * statistics (doc bytes and doc count). Files and bytes read are
+  * reported as the scan's `files_read`/`bytes_read` metrics. Paths are
+  * opened with NIO, so the directory must be local or locally mounted on
+  * every executor.
   */
 class DocDirV2 extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = DocDirV2.Schema
@@ -110,10 +112,16 @@ object DocDirV2 {
       () => DocScan(path, files)
   }
 
-  private[sources] case class DocScan(path: String, files: Vector[DocFile]) extends Scan with Batch {
+  private[sources] case class DocScan(path: String, files: Vector[DocFile])
+      extends Scan with Batch with SupportsReportStatistics {
     override def readSchema(): StructType = Schema
     override def toBatch: Batch = this
     override def description(): String = s"graft_doc_dir($path, ${files.size} files)"
+
+    override def estimateStatistics(): Statistics = new Statistics {
+      override def sizeInBytes(): OptionalLong = OptionalLong.of(files.map(_.bytes).sum)
+      override def numRows(): OptionalLong = OptionalLong.of(files.size.toLong)
+    }
 
     override def planInputPartitions(): Array[InputPartition] = {
       val slots = math.max(1, SparkSession.active.sparkContext.defaultParallelism)

@@ -30,8 +30,9 @@ class DocCompactionSpec extends AnyFunSuite {
     assert(a.length == b.length && a.sameElements(b),
       "compaction changed the extraction output")
     // scan metrics come off the RAW (unpinned) frame: the public query
-    // pins before its sort (QueryDsl.sortedPinned), which hides the scan
-    // subtree behind an RDD — the scan behavior under test is unchanged
+    // pins a frame too big to sort in one partition (QueryDsl.sortedPinned),
+    // which hides the scan subtree behind an RDD — the scan behavior under
+    // test is the same either way
     val raw = Extraction.docSourceCompactedRaw(s, sf)
     // execute the SAME QueryExecution whose plan is inspected (a noop
     // write runs a separate QueryExecution, so the inspected scan's

@@ -49,9 +49,9 @@ class ExtractionPipelineSpec extends AnyFunSuite {
 
   test("Generator form plans a Generate node and matches the flatMap form row-for-row") {
     // plan-shape assertions read the RAW (unpinned, unsorted) frames: the
-    // public queries pin before their sort (QueryDsl.sortedPinned), which
-    // hides the subtree behind an RDD scan — the plans under test are the
-    // ones the pin materializes
+    // public queries pin a frame too big to sort in one partition before
+    // their sort (QueryDsl.sortedPinned), which hides the subtree behind an
+    // RDD scan — the plans under test are the ones the sort or pin runs
     val optimized = Extraction.extractHoldingsGenRaw(s, sf).queryExecution.optimizedPlan
     assert(optimized.collect {
       case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g

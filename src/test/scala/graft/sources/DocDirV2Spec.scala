@@ -6,14 +6,14 @@ import java.nio.file.{Files, Path}
 import graft.TestSpark
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The document-directory source: the rows Spark's own `wholetext`
   * reader gives, only `doc_<id>.html` files read, every file in exactly
-  * one of at most `defaultParallelism` splits, and the reads counted in
-  * the scan's metrics. */
+  * one of at most `defaultParallelism` splits, the listing reported as the
+  * scan's statistics, and the reads counted in the scan's metrics. */
 class DocDirV2Spec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val sf = TestSpark.sf
@@ -98,5 +98,19 @@ class DocDirV2Spec extends AnyFunSuite {
     assert(scan.isDefined, s"expected a BatchScanExec in:\n${df.queryExecution.executedPlan}")
     assert(scan.get.metrics("files_read").value == docs.size)
     assert(scan.get.metrics("bytes_read").value == docs.map(_.bytes).sum)
+  }
+
+  test("statistics report the listed docs and bytes; the directory is listed once per loaded table") {
+    val dir = DocStage.ensureStaged(s, sf)
+    val docs = DocDirV2.list(dir)
+    val d = DocDirV2.read(s, dir)
+    // a self-union: two references to one loaded table, one scan each
+    val plan = d.union(d).queryExecution.optimizedPlan
+    val scans = plan.collect { case r: DataSourceV2ScanRelation => r.scan.asInstanceOf[DocDirV2.DocScan] }
+    assert(scans.size == 2, s"expected two scans in:\n$plan")
+    assert(scans(0).files eq scans(1).files, "the second scan listed the directory again")
+    val stats = d.queryExecution.optimizedPlan.stats
+    assert(stats.sizeInBytes == docs.map(_.bytes).sum)
+    assert(stats.rowCount.contains(BigInt(docs.size)))
   }
 }
