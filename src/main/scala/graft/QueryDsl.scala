@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
@@ -124,6 +126,15 @@ object QueryDsl {
       case (k, None)    => s.conf.unset(k)
     }
   }
+
+  /** A frame over rows already collected to the driver, as a
+    * `LocalRelation`. Its size is known, so a sort over it plans in one
+    * partition ([[graft.plans.SinglePartitionSort]]) with no range
+    * sampler job; a frame over `parallelize(rows)` is a `LogicalRDD`,
+    * which reports `Long.MaxValue` bytes and always range-sorts. */
+  def localRows(s: org.apache.spark.sql.SparkSession, rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
+    s.createDataFrame(rows.asJava, schema)
 
   /** Exact, order-independent sum of a double column, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(28, 4))).cast(DoubleType)

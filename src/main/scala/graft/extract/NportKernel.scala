@@ -26,9 +26,10 @@ final case class ExtractedHolding(
     pct_net_assets: Option[String])
 
 /** The X1/X2/X3 extraction kernel: NPORT-P XHTML → (reporting date,
-  * holdings). A pure function `String => (Option[String], Seq[Holding])`
-  * used inside `Dataset.flatMap` — executor-side, no driver round trips
-  * (the I1 inversion, SURVEY.md §3.3).
+  * holdings). A pure function `String => (Option[String], Seq[Holding])`;
+  * its one distributed caller is the `functions.ExtractHoldingsGen`
+  * Generator, which runs [[extractRows]] executor-side, no driver round
+  * trips (the I1 inversion, SURVEY.md §3.3).
   *
   * Semantics follow ETFQuarterlyHoldingsExtractor.py:64-132 exactly,
   * including unscoped document-order `find_next` navigation (a section
@@ -124,7 +125,8 @@ object NportKernel {
   }
 
   /** Pipeline shape: one row per holding, date attached; date-less or
-    * holding-less filings contribute nothing. For `Dataset.flatMap`. */
+    * holding-less filings contribute nothing. The rows the
+    * `ExtractHoldingsGen` Generator emits. */
   def extractRows(xhtml: String): Seq[ExtractedHolding] = {
     val (date, hs) = extract(xhtml)
     date match {

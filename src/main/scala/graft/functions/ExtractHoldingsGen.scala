@@ -10,20 +10,16 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The NPORT extraction kernel (X2, ETFQuarterlyHoldingsExtractor.py:84-131)
-  * as a Catalyst `Generator` — the explode-family form of the 1-doc→N-rows
-  * operator (SURVEY.md §4's optional polish next to the `Dataset.flatMap`
-  * form in operators.Extraction).
+  * as a Catalyst `Generator`: the one 1-doc→N-rows form of the operator.
+  * Every extraction query runs it through `operators.Extraction.holdingsOf`,
+  * and plain SQL calls it as `extract_holdings(doc)` (GraftExtensions).
   *
-  * Why a Generator and not just flatMap: the flatMap form forces the
-  * pipeline through a `Dataset[T]` encoder boundary — object
-  * serialization in, object serialization out — which breaks column-level
-  * reasoning (pruning, pushdown) around the extraction stage. A Generator
-  * stays inside the relational plan: upstream remains a columnar scan,
-  * downstream projections resolve against `elementSchema`, and Catalyst
-  * plans it as a `GenerateExec` over the document column with every other
-  * column pruned as usual. Same kernel, same rows (ExtractionPipelineSpec
-  * and the x_extract_holdings_gen oracle pin bit-identical output); only
-  * the plan shape differs.
+  * Why a Generator: it stays inside the relational plan. There is no
+  * `Dataset[T]` encoder boundary (object serialization in and out), so
+  * upstream remains a columnar scan, downstream projections resolve
+  * against `elementSchema`, and Catalyst plans a `GenerateExec` over the
+  * document column with every other column pruned as usual. The same
+  * plan serves DataFrame and SQL callers.
   *
   * CodegenFallback is deliberate: the per-row work is an XHTML parse —
   * microseconds to milliseconds — so per-row dispatch overhead is
@@ -47,8 +43,8 @@ case class ExtractHoldingsGen(child: Expression)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val doc = child.eval(input)
-    // null document ⇒ no rows: the same F2 null-guard semantics as the
-    // flatMap form (a fetch-failed filing contributes nothing, ref :150)
+    // null document ⇒ no rows: the F2 null guard (a fetch-failed filing
+    // contributes nothing, ref :150)
     if (doc == null) Nil
     else NportKernel.extractRows(doc.toString).map { h =>
       InternalRow(

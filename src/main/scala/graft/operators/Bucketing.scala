@@ -108,7 +108,7 @@ object Bucketing {
       org.apache.spark.sql.types.StructField("total_bal",
         org.apache.spark.sql.types.DoubleType)))
     def tag(rows: Array[org.apache.spark.sql.Row], m: String) =
-      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), schema)
+      graft.QueryDsl.localRows(s, rows.toIndexedSeq, schema)
         .select(lit(m).as("strategy"), col("n_name"), col("n_suppliers"), col("total_bal"))
     tag(bhj, "broadcast").unionByName(tag(smj, "shuffle"))
       .orderBy("strategy", "n_name")
@@ -190,7 +190,7 @@ object Bucketing {
       }
       require(exchanges.isEmpty,
         s"storage-partitioned join still shuffled (${exchanges.length} exchanges):\n$plan")
-      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), joined.schema)
+      graft.QueryDsl.localRows(s, rows.toIndexedSeq, joined.schema)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDsl.{dsum, sqlDsum, withConfs}
+import graft.QueryDsl.{dsum, localRows, sqlDsum, withConfs}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan}
 
@@ -79,7 +79,7 @@ object Cbo {
         "CBO did not reorder the chain to start from the selective end; " +
           s"innermost joins: ${innermost.map(tables)}; plan:\n$optimized")
       val rows = df.collect() // executes under the scoped confs
-      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), df.schema)
+      localRows(s, rows.toIndexedSeq, df.schema)
         .orderBy("n_name")
     }
   }

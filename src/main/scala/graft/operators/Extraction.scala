@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.Tables
-import graft.extract.NportKernel
+import graft.extract.{NportKernel, XmlLite}
+import graft.functions.ExtractHoldingsGen
 import graft.sources.{DocStage, FilingDocs, FilingIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -11,11 +12,13 @@ import org.apache.spark.sql.functions._
   * rows X1/X2/X3/G1/I1/S2 as oracle-checked queries.
   *
   * Pipeline shape (the §3.3 pandas→Spark inversion): a corpus of XHTML
-  * filings is a Dataset; the kernel runs inside `flatMap`, executor-side,
-  * one task per partition — the reference's sequential per-filing driver
-  * loop (ETFQuarterlyHoldingsExtractor.py:153-158) becomes a single
-  * distributed map stage. At 100 TB the corpus is just more partitions;
-  * nothing here touches the driver.
+  * filings is a frame of `(doc_id, value)` rows; the kernel runs as the
+  * [[ExtractHoldingsGen]] Generator, executor-side, one task per
+  * partition — the reference's sequential per-filing driver loop
+  * (ETFQuarterlyHoldingsExtractor.py:153-158) becomes a single
+  * distributed map stage. Every holdings query, the staged holdings and
+  * the flagship run it through one seam, [[holdingsOf]]. At 100 TB the
+  * corpus is just more partitions; nothing here touches the driver.
   *
   * Oracle strategy: the corpus is rendered deterministically from `orders`
   * ([[FilingDocs]]), so DuckDB verifies the full render→parse→extract
@@ -28,55 +31,39 @@ object Extraction {
   private val outCols = Seq("reporting_date", "issuer", "shares", "value_usd", "pct_net_assets")
 
   /** The kernel over a `(doc_id, value)` document frame: 1 doc → N
-    * holding rows with the filing's scalar date attached. Unsorted — for
-    * downstream pipelines (the CSV sink repartitions by date itself). */
-  private def holdingsOf(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    import s.implicits._
-    docs.select(col("value")).as[String]
-      .flatMap(NportKernel.extractRows)
-      .toDF()
-      .select(outCols.map(col): _*)
-  }
+    * holding rows with the filing's scalar date attached, as `doc_id`
+    * plus the five holding columns. A `GenerateExec` over the document
+    * column: no encoder boundary, so `doc_id` is pruned from the scan
+    * when no caller reads it. Unsorted — for downstream pipelines (the
+    * CSV sink repartitions by date itself). */
+  private def holdingsOf(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), ExtractHoldingsGen(col("value")))
 
-  /** X2/G1/I1 — the kernel in a flatMap over the rendered corpus
-    * ([[DocStage.rendered]], staged once per fixture: the fixture render
-    * is staging cost, the parse + extract stays live in every call). */
-  private[graft] def extractedHoldings(s: SparkSession, d: String): DataFrame =
-    holdingsOf(DocStage.rendered(s, d))
-
-  /** [[extractedHoldings]] with the oracle-determinism total sort
+  /** The five holding columns with the oracle-determinism total sort
     * (QueryDsl.sortedPinned): a frame that fits one partition sorts there
     * with no range sampler; a bigger one is PINNED first, since the range
     * sort samples its child and an unpinned child would run the parse +
     * extract kernel once for the sampler and once for the shuffle. */
+  private def sortedHoldings(holdings: DataFrame): DataFrame = {
+    val cols = outCols.map(col)
+    graft.QueryDsl.sortedPinned(holdings.select(cols: _*), cols: _*)
+  }
+
+  /** X2/G1/I1 — the kernel over the rendered corpus
+    * ([[DocStage.rendered]], staged once per fixture: the fixture render
+    * is staging cost, the parse + extract stays live in every call). */
   def extractHoldings(s: SparkSession, d: String): DataFrame =
-    graft.QueryDsl.sortedPinned(extractedHoldings(s, d), outCols.map(col): _*)
-
-  /** [[extractHoldings]] as a Catalyst `Generator` plan
-    * ([[graft.functions.ExtractHoldingsGen]]): the kernel runs inside a
-    * `GenerateExec` over the document column instead of a `flatMap` over a
-    * typed Dataset — no encoder boundary, column pruning flows through.
-    * Same oracle as the flatMap form: identical output is the gate. */
-  /** The unsorted Generator-form frame — split out so the plan-shape spec
-    * can see the Generate node (the public query pins a frame too big to
-    * sort in one partition, which hides the subtree behind an RDD scan). */
-  private[graft] def extractHoldingsGenRaw(s: SparkSession, d: String): DataFrame =
-    DocStage.rendered(s, d)
-      .select(graft.functions.ExtractHoldingsGen(col("value")))
-      .select(outCols.map(col): _*)
-
-  def extractHoldingsGen(s: SparkSession, d: String): DataFrame =
-    graft.QueryDsl.sortedPinned(extractHoldingsGenRaw(s, d), outCols.map(col): _*)
+    sortedHoldings(holdingsOf(DocStage.rendered(s, d)))
 
   /** X1 — scalar per-document extraction: one reporting date per filing;
-    * date-less filings are dropped (ref :80-82). */
+    * date-less filings are dropped (ref :80-82). Only the date is read:
+    * no holdings table is walked. */
   def reportingDates(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     graft.QueryDsl.sortedPinned(
       DocStage.rendered(s, d).as[(Long, String)]
         .flatMap { case (id, doc) =>
-          NportKernel.extract(doc)._1.map(date => (id, date))
+          NportKernel.reportingDate(XmlLite.parse(doc)).map(date => (id, date))
         }
         .toDF("doc_id", "reporting_date"),
       col("doc_id"))
@@ -84,24 +71,22 @@ object Extraction {
 
   /** S2+I1 — the same extraction driven from the document-directory
     * source: one file per filing, read by [[graft.sources.DocDirV2]] (one
-    * row per file), then the kernel flatMap. Output (and oracle)
-    * identical to [[extractHoldings]] over the staged slice — the source
-    * changes, the semantics don't. */
+    * row per file), then the kernel. Output (and oracle) identical to
+    * [[extractHoldings]] over the staged slice — the source changes, the
+    * semantics don't. */
   def docSourceHoldings(s: SparkSession, d: String): DataFrame =
-    graft.QueryDsl.sortedPinned(holdingsOf(DocStage.stagedDocs(s, d)), outCols.map(col): _*)
+    sortedHoldings(holdingsOf(DocStage.stagedDocs(s, d)))
 
   /** S2+K — [[docSourceHoldings]] over the same rows in a few parquet
     * files ([[DocStage.compactedDocs]]) instead of one file per doc:
-    * identical rows, same oracle. */
-  /** The unsorted compacted-corpus frame — split out so DocCompactionSpec
-    * can read the executed scan's `numFiles` metric (the public query
-    * pins a frame too big to sort in one partition, which hides the scan
-    * behind an RDD). */
+    * identical rows, same oracle. The unsorted frame is split out so
+    * DocCompactionSpec can read the executed scan's `numFiles` metric
+    * (a pinned frame would hide the scan behind an RDD). */
   private[graft] def docSourceCompactedRaw(s: SparkSession, d: String): DataFrame =
     holdingsOf(DocStage.compactedDocs(s, d))
 
   def docSourceCompactedHoldings(s: SparkSession, d: String): DataFrame =
-    graft.QueryDsl.sortedPinned(docSourceCompactedRaw(s, d), outCols.map(col): _*)
+    sortedHoldings(docSourceCompactedRaw(s, d))
 
   private def holdingsOracleFor(pred: String): String =
     s"""SELECT * FROM (
@@ -139,13 +124,14 @@ object Extraction {
     * fingerprint: the kernel run once over [[DocStage.rendered]]. The
     * SINK demonstrations consume it so they measure the sink, not a
     * re-run of the parse + extract kernel — which stays live, measured,
-    * and oracle-checked in `x_extract_holdings`/`x_extract_holdings_gen`. */
+    * and oracle-checked in `x_extract_holdings`. */
   def ensureHoldingsStaged(s: SparkSession, d: String): String = {
     val dir = graft.Staging.dir("holdings_v1", d)
     val path = dir + "/holdings"
     val docs = DocStage.rendered(s, d)
     graft.Staging.ensure(dir, Seq(s"$d/orders.parquet")) {
-      holdingsOf(docs).write.mode("overwrite").parquet(path)
+      holdingsOf(docs).select(outCols.map(col): _*)
+        .write.mode("overwrite").parquet(path)
     }: Unit
     path
   }
@@ -233,22 +219,14 @@ object Extraction {
     * the offline corpus scan. */
   private[graft] def pipelineE2eFromDocs(
       s: SparkSession, d: String, docs: DataFrame): DataFrame = {
-    import s.implicits._
     // no distinct: a left-semi join keeps each doc once however often
     // its cik repeats in the fetch list
     val nportCiks = FilingIndex.filingIndex(s, d)
       .select(col("cik").cast("long").as("doc_id"))
     val fetched = docs.join(broadcast(nportCiks), Seq("doc_id"), "leftsemi")
     // the pipeline's one shuffle: every key below contains reporting_date
-    val extracted = fetched.as[(Long, String)]
-      .flatMap { case (id, doc) =>
-        NportKernel.extractRows(doc).map(h =>
-          (id, h.reporting_date, h.issuer, h.shares, h.value_usd, h.pct_net_assets))
-      }
-      .toDF("doc_id", "reporting_date", "issuer", "shares", "value_usd", "pct_net_assets")
-      .repartition(col("reporting_date"))
-    val keyCols = Seq("doc_id", "reporting_date", "issuer", "shares",
-      "value_usd", "pct_net_assets")
+    val extracted = holdingsOf(fetched).repartition(col("reporting_date"))
+    val keyCols = "doc_id" +: outCols
     val byDate = Window.partitionBy(col("reporting_date"))
     // retry traffic in, exact dedup out — n_copies is the fold ledger
     val deduped = extracted.unionByName(extracted)
@@ -284,7 +262,6 @@ object Extraction {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "x_pipeline_e2e" -> (pipelineE2e _),
     "x_extract_holdings" -> (extractHoldings _),
-    "x_extract_holdings_gen" -> (extractHoldingsGen _),
     "x_reporting_date" -> (reportingDates _),
     "x_doc_source" -> (docSourceHoldings _),
     "x_doc_source_compacted" -> (docSourceCompactedHoldings _),
@@ -359,7 +336,6 @@ object Extraction {
   val oracle: Map[String, String] = Map(
     "x_pipeline_e2e" -> pipelineE2eOracle,
     "x_extract_holdings" -> holdingsOracle,
-    "x_extract_holdings_gen" -> holdingsOracle,
     "x_doc_source" -> docSourceOracle,
     "x_doc_source_compacted" -> docSourceOracle,
     "x_csv_roundtrip" -> holdingsOracle,

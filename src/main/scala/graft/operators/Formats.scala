@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDsl.{dsum, sqlDsum, withConfs}
+import graft.QueryDsl.{dsum, localRows, sqlDsum, withConfs}
 import graft.{Tables, TempPaths}
 import graft.sources.{CommitResult, ManifestLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -186,7 +186,7 @@ object Formats {
     val row = out.collect().head
     require(row.getLong(0) == row.getLong(1) && row.getLong(0) == row.getLong(2),
       s"CSV round trip sheared rows: ${row.mkString(", ")}")
-    s.createDataFrame(s.sparkContext.parallelize(Seq(row), 1), out.schema)
+    localRows(s, Seq(row), out.schema)
   }
 
   /** CDC MERGE apply — the companion to [[snapshotDiff]]'s detect: a
@@ -1182,7 +1182,7 @@ object Formats {
       else
         require(plan.contains("PartitionFilters: []"),
           s"v$v unpartitioned read claims partition pruning; plan:\n$plan")
-      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), agg.schema)
+      localRows(s, rows.toIndexedSeq, agg.schema)
     }
     filtered(1).unionByName(filtered(2)).orderBy("version")
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDsl.{dsum, sqlDsum, withConfs}
+import graft.QueryDsl.{dsum, localRows, sqlDsum, withConfs}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -307,7 +307,7 @@ object Layout {
       val plan = joined.queryExecution.executedPlan.toString
       require(plan.contains("might_contain"),
         s"runtime bloom filter was not injected; executed plan:\n$plan")
-      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), joined.schema)
+      localRows(s, rows.toIndexedSeq, joined.schema)
         .orderBy("l_returnflag")
     }
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.QueryDsl.{dsum, sqlDsum, withConfs}
+import graft.QueryDsl.{dsum, localRows, sqlDsum, withConfs}
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -116,7 +116,7 @@ object Skew {
       val plan = joined.queryExecution.executedPlan.toString
       require(plan.contains("skew=true"),
         s"OptimizeSkewedJoin did not fire; executed plan:\n$plan")
-      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), joined.schema)
+      localRows(s, rows.toIndexedSeq, joined.schema)
         .orderBy("skew_key")
     }
   }
@@ -267,7 +267,7 @@ object Skew {
         s"AQE did not coalesce the aggregation shuffle below the configured " +
           s"$configured (AQEShuffleRead partition counts: $counts):\n" +
           agg.queryExecution.executedPlan)
-      s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), agg.schema)
+      localRows(s, rows.toIndexedSeq, agg.schema)
         .orderBy("o_orderpriority")
     }
   }

@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions.col
   *
   *   - [[rendered]]: every filing rendered ONCE into `(doc_id, value)`
   *     parquet (a few files), which the extraction queries
-  *     (`x_extract_holdings`, `x_extract_holdings_gen`,
-  *     `x_reporting_date`) scan, so their timing is the kernel's, not the
-  *     fixture's;
+  *     (`x_extract_holdings`, `x_reporting_date`) scan, so their timing
+  *     is the kernel's, not the fixture's;
   *   - [[ensureStaged]]: a half-slice of the same rows as one
   *     `doc_<id>.html` file per filing — the layout the reference's
   *     per-filing crawl leaves (ETFQuarterlyHoldingsExtractor.py:58-63) —

@@ -315,7 +315,7 @@ object FilingIndex {
     val planned = FilingIndexV2.lastPlannedPartitions.get()
     require(planned > 0 && planned < onDisk,
       s"runtime filter pruned nothing: planned $planned of $onDisk files")
-    s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), agg.schema)
+    graft.QueryDsl.localRows(s, rows.toIndexedSeq, agg.schema)
       .orderBy("form_type")
   }
 
@@ -336,7 +336,7 @@ object FilingIndex {
     val plan = agg.queryExecution.executedPlan.toString
     require(plan.contains("agg_pushed=count_by_form"),
       s"COUNT was not pushed into the source; executed plan:\n$plan")
-    s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1), agg.schema)
+    graft.QueryDsl.localRows(s, rows.toIndexedSeq, agg.schema)
       .orderBy("form_type")
   }
 }

@@ -1,15 +1,41 @@
 package graft.operators
 
-import graft.TestSpark
+import graft.{QueryDsl, TestSpark}
+import graft.functions.ExtractHoldingsGen
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{GenerateExec, MapPartitionsExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** End-to-end pipeline tests (SURVEY.md §5.4): corpus render → flatMap
+/** End-to-end pipeline tests (SURVEY.md §5.4): corpus render → Generator
   * extraction, and source-equivalence between the in-plan corpus and the
   * staged wholetext document directory. */
 class ExtractionPipelineSpec extends AnyFunSuite {
   private lazy val s = TestSpark.spark
   private val sf = TestSpark.sf
+
+  // every executed node with its ancestors (innermost first), through
+  // AQE stages and cached relations, but not into a reused exchange:
+  // that subtree ran once, under the exchange it reuses
+  private def walk(p: SparkPlan, up: List[SparkPlan]): Seq[(SparkPlan, List[SparkPlan])] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => p.children
+    }
+    (p, up) +: kids.flatMap(walk(_, p :: up))
+  }
+
+  /** A kernel pass: the NPORT Generator's `GenerateExec`. */
+  private def isKernel(p: SparkPlan): Boolean = p match {
+    case g: GenerateExec => g.generator.isInstanceOf[ExtractHoldingsGen]
+    case _ => false
+  }
 
   test("extractHoldings: every row carries a date; date-less filings absent") {
     val rows = Extraction.extractHoldings(s, sf)
@@ -47,27 +73,21 @@ class ExtractionPipelineSpec extends AnyFunSuite {
     assert(a.nonEmpty && a == b)
   }
 
-  test("Generator form plans a Generate node and matches the flatMap form row-for-row") {
-    // plan-shape assertions read the RAW (unpinned, unsorted) frames: the
-    // public queries pin a frame too big to sort in one partition before
-    // their sort (QueryDsl.sortedPinned), which hides the subtree behind an
-    // RDD scan — the plans under test are the ones the sort or pin runs
-    val optimized = Extraction.extractHoldingsGenRaw(s, sf).queryExecution.optimizedPlan
-    assert(optimized.collect {
-      case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g
-    }.nonEmpty, s"expected a Generate node in:\n$optimized")
-    // the corpus RENDERER is typed (its one encoder boundary is shared by
-    // both forms); the EXTRACTION stage itself must stay relational — the
-    // flatMap form runs it as a typed MapPartitions in object-land
-    assert(optimized.collect {
-      case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m
-    }.isEmpty, s"Generator form must not run extraction as a typed flatMap:\n$optimized")
-    assert(Extraction.extractedHoldings(s, sf).queryExecution.optimizedPlan.collect {
-      case m: org.apache.spark.sql.catalyst.plans.logical.MapPartitions => m
-    }.nonEmpty, "flatMap form changed shape — comparison no longer meaningful")
-    val a = Extraction.extractHoldings(s, sf).collect().toSeq
-    val b = Extraction.extractHoldingsGen(s, sf).collect().toSeq
-    assert(a == b)
+  test("every holdings query plans one Generator and no flatMap") {
+    // the advisory size is scoped up so sortedPinned sorts the frame as
+    // is: a pinned frame would hide the kernel subtree behind an RDD scan
+    QueryDsl.withConfs(s, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1g") {
+      for (q <- Seq("x_extract_holdings", "x_doc_source", "x_doc_source_compacted",
+          "x_pipeline_e2e")) {
+        val df = Extraction.queries(q)(s, sf)
+        assert(df.collect().nonEmpty, s"$q returned no rows")
+        val plan = df.queryExecution.executedPlan
+        val nodes = walk(plan, Nil).map(_._1)
+        assert(nodes.count(isKernel) == 1, s"$q: expected one ExtractHoldingsGen pass in:\n$plan")
+        assert(!nodes.exists(_.isInstanceOf[MapPartitionsExec]),
+          s"$q runs a typed flatMap in:\n$plan")
+      }
+    }
   }
 
   test("extract_holdings is SQL-registered: plain spark.sql users get the generator") {
@@ -96,12 +116,6 @@ class ExtractionPipelineSpec extends AnyFunSuite {
   }
 
   test("flagship: one kernel pass, one hash exchange after it, no cached RDDs left") {
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    import org.apache.spark.sql.execution.{MapPartitionsExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-
     val cachedBefore = s.sparkContext.getPersistentRDDs.keySet
     val runs = (1 to 3).map { _ =>
       val df = Extraction.pipelineE2e(s, sf)
@@ -111,21 +125,8 @@ class ExtractionPipelineSpec extends AnyFunSuite {
     assert(s.sparkContext.getPersistentRDDs.keySet == cachedBefore,
       "x_pipeline_e2e left cached RDDs behind")
 
-    // every executed node with its ancestors (innermost first), through
-    // AQE stages and cached relations, but not into a reused exchange:
-    // that subtree ran once, under the exchange it reuses
-    def walk(p: SparkPlan, up: List[SparkPlan]): Seq[(SparkPlan, List[SparkPlan])] = {
-      val kids = p match {
-        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-        case q: QueryStageExec => Seq(q.plan)
-        case _: ReusedExchangeExec => Nil
-        case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-        case _ => p.children
-      }
-      (p, up) +: kids.flatMap(walk(_, p :: up))
-    }
     val plan = runs.last.queryExecution.executedPlan
-    val kernels = walk(plan, Nil).collect { case (_: MapPartitionsExec, up) => up }
+    val kernels = walk(plan, Nil).collect { case (p, up) if isKernel(p) => up }
     assert(kernels.size == 1, s"expected one kernel pass in:\n$plan")
     val hashExchanges = kernels.head.collect {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e

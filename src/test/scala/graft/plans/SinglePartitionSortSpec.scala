@@ -53,6 +53,17 @@ class SinglePartitionSortSpec extends AnyFunSuite {
     assert(pinJobs(orders).isEmpty, "sortedPinned pinned a frame that fits one partition")
   }
 
+  test("collected rows sort in one partition: no sampler, 2 jobs") {
+    // the shape of a query that checks its executed plan, then re-emits
+    // its collected rows for the final sort
+    val rows = orders.limit(200).collect().toIndexedSeq
+    val df = sorted(QueryDsl.localRows(s, rows, orders.schema))
+    val jobs = JobSites.of(s)(df.collect())
+    assert(exchanges(df) == Seq(SinglePartition), s"in:\n${df.queryExecution.executedPlan}")
+    assert(jobs.size == 2, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(df.collect().toSeq == rows.sortBy(r => (r.getLong(0), r.getLong(1))))
+  }
+
   test("a frame above the advisory size keeps the range sort and the pin") {
     QueryDsl.withConfs(s, Advisory -> "1") {
       val df = sorted(orders)
